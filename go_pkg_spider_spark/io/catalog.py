@@ -11,8 +11,10 @@ tables, matching the manifest's partition accounting.
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -48,22 +50,49 @@ class Catalog:
         table: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
+        replace_partitions: list | None = None,
     ) -> None:
         """partition_by: physical partition columns (parquet dir layout /
         Iceberg identity partition spec) — e.g. the IVF cell id, so a
-        probe-cell equi-join prunes whole partitions at the scan."""
+        probe-cell equi-join prunes whole partitions at the scan.
+
+        replace_partitions: values of the ONE partition_by column whose
+        partitions this write replaces (`mode` is then ignored); every
+        other partition is kept. A listed value with no rows in `df`
+        ends up empty — unlike dynamic partition overwrite, which only
+        touches the partitions the data happens to contain. Parquet:
+        delete each `<table>/<col>=<v>` dir, then write with dynamic
+        partition overwrite (not atomic; ManifestedRun's `running` row
+        covers the window). Not an append: an append job commits every
+        task dir it finds under `<table>/_temporary`, including those a
+        killed earlier job left there, which would duplicate rows; a
+        dynamic overwrite stages under its own per-job dir. Iceberg: one
+        `overwrite(col IN values)` commit, or create the table on its
+        first write."""
+        if replace_partitions is not None and len(partition_by or []) != 1:
+            raise ValueError("replace_partitions needs exactly one partition_by column")
         if self.use_iceberg:
             writer = df.writeTo(self._ident(table))
+            if replace_partitions is not None and self.exists(table):
+                writer.overwrite(F.col(partition_by[0]).isin(list(replace_partitions)))
+                return
             if partition_by:
-                from pyspark.sql import functions as F
-
                 writer = writer.partitionedBy(*[F.col(c) for c in partition_by])
-            if mode == "overwrite":
+            if mode == "overwrite" or replace_partitions is not None:
                 writer.createOrReplace()
             else:
                 writer.append()
         else:
-            w = df.write.mode(mode)
+            if replace_partitions is None:
+                w = df.write.mode(mode)
+            else:
+                for v in replace_partitions:
+                    # a missing dir is fine; any other failure must stop
+                    # the write, or surviving files sit next to new ones
+                    part = os.path.join(self._path(table), f"{partition_by[0]}={v}")
+                    if os.path.isdir(part):
+                        shutil.rmtree(part)
+                w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.parquet(self._path(table))
@@ -74,10 +103,15 @@ class Catalog:
         else:
             df.write.mode("append").parquet(self._path(table))
 
-    def read(self, table: str) -> DataFrame:
+    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+        """schema (parquet only; an Iceberg table carries its own): the
+        known table schema, partition columns included. It skips schema
+        inference, and a table dir holding no data files reads as empty
+        instead of failing."""
         if self.use_iceberg:
             return self.spark.read.table(self._ident(table))
-        return self.spark.read.parquet(self._path(table))
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self._path(table))
 
     def exists(self, table: str) -> bool:
         if self.use_iceberg:

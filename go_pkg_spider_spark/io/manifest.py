@@ -2,14 +2,20 @@
 map (/root/reference/spider_news.go:15, 162-167, 202-205) made durable
 and distributed (SURVEY.md §4.4).
 
-The input is processed in partition batches keyed by
-`pmod(hash(clip_id), num_buckets)`. After each batch commits its output,
-one manifest row per bucket records (bucket, input rows, kept rows,
-drop-reason histogram, wall-clock, status). Resume = read the manifest,
-skip DONE buckets — the left-anti-join / J6 shape, implemented as a
-bucket-set filter that PRUNES AT THE SCAN (a pushed-down `pmod(...)
-NOT IN (...)` predicate), never a row-level anti-join against 10^12
-processed ids.
+The input is split into buckets keyed by `pmod(hash(clip_id),
+num_buckets)`, and pending buckets are committed in WAVES of up to
+BUCKETS_PER_WAVE. A wave costs one input scan (a `bucket IN (wave)`
+filter), one transform, one partitioned write that replaces exactly the
+wave's `bucket=b` partitions, and one read of the committed
+`drop_reason` column for the metrics. One manifest row per bucket
+records (bucket, input rows, kept rows, drop-reason histogram,
+wall-clock, status). Resume = read the manifest, skip DONE buckets —
+the left-anti-join / J6 shape, implemented as a bucket-set filter,
+never a row-level anti-join against 10^12 processed ids. That filter
+prunes at the scan only when the input is itself bucket-partitioned on
+the key (an Iceberg `bucket(N, clip_id)` table); over a plain parquet
+input each wave re-reads the input, so a run makes
+ceil(pending / BUCKETS_PER_WAVE) scans, not one per bucket.
 
 Resume semantics (hardened round 6 — the same guarantee StageRunner got
 in round 5, io/stages.py):
@@ -19,22 +25,24 @@ in round 5, io/stages.py):
   invocation. The sig covers every knob that changes the output
   (pipeline kwargs, scrub-bank version) plus num_buckets itself —
   bucket ids don't even align across num_buckets changes, so any
-  change reruns everything.
-- Before a bucket's output dir is overwritten, a `running` row is
-  appended; the `done` row follows the commit. The manifest stays
-  append-only (cheap at 10^12 scale — one Iceberg append per bucket,
-  no manifest rewrite), and latest-row semantics make every crash
-  window safe: die mid-overwrite or before the done row and the
-  latest row says `running` → the bucket reruns whole.
+  change reruns everything. The wave size changes no output and is
+  not in the sig.
+- Before a wave's output partitions are replaced, one append writes a
+  `running` row for each of its buckets; one append of `done` rows
+  follows the commit. The manifest stays append-only (cheap at 10^12
+  scale — two Iceberg appends per wave, no manifest rewrite), and
+  latest-row semantics make every crash window safe: die mid-write or
+  before the done rows and the wave's latest rows say `running` → its
+  buckets rerun whole.
 - Rows from pre-params_sig manifests (no such column) never match the
   current sig → conservative rerun. Ties on (committed_at, seq) —
   only possible across processes writing in the same second — are
   treated as NOT done, also conservative.
 
 Idempotence: a bucket either committed (latest manifest row done with
-matching sig) or is re-run whole; output writes are per-bucket
-overwrite (dynamic partition overwrite in Iceberg), so re-running a
-half-written bucket is safe.
+matching sig) or is re-run whole; a wave's write replaces its buckets'
+partitions, including ones that come out empty (Catalog.write
+replace_partitions), so re-running a half-written wave is safe.
 """
 
 from __future__ import annotations
@@ -62,6 +70,7 @@ MANIFEST_SCHEMA = StructType(
         StructField("input_rows", LongType()),
         StructField("kept_rows", LongType()),
         StructField("drop_histogram", MapType(StringType(), LongType())),
+        # wall-clock of the wave that committed the bucket
         StructField("wall_sec", DoubleType()),
         StructField("run_id", StringType()),
         StructField("committed_at_unix", LongType()),
@@ -77,21 +86,28 @@ MANIFEST_SCHEMA = StructType(
 
 MANIFEST_TABLE = "pipeline_manifest"
 
+# buckets committed per input scan; also the most a crash makes a
+# rerun redo
+BUCKETS_PER_WAVE = 16
+
 
 def bucket_of(col, num_buckets: int):
     return F.pmod(F.hash(col), F.lit(num_buckets))
 
 
 class ManifestedRun:
-    """Drives the pipeline bucket-by-bucket with durable progress.
+    """Drives the pipeline wave-by-wave with durable per-bucket progress.
 
-    At 10^12 rows each bucket is a full Spark job over ~1/num_buckets of
-    the table (hundreds of GB); locally buckets are small but the
-    control flow is identical.
+    At 10^12 rows each wave is a full Spark job over
+    ~BUCKETS_PER_WAVE/num_buckets of the table (hundreds of GB);
+    locally waves are small but the control flow is identical. The
+    wave size trades scans per run against crash-rerun granularity: a
+    crash reruns at most one wave.
 
     `params` must contain every knob that changes the transform's
     output (pipeline kwargs, scrub-bank version, ...); num_buckets is
-    folded in automatically.
+    folded in automatically. The transform's output must keep
+    `key_col`: it is re-bucketed to route rows to their partitions.
     """
 
     def __init__(
@@ -113,9 +129,11 @@ class ManifestedRun:
         )
 
     def _manifest_df(self) -> DataFrame:
-        mdf = self.catalog.read(MANIFEST_TABLE)
-        # manifests from older job versions: missing columns read as
-        # NULL → params_sig never matches → conservative rerun
+        # the known schema skips inference. Manifests from older job
+        # versions: missing columns read as NULL (given the schema on
+        # parquet, by the loop on Iceberg) → params_sig never matches →
+        # conservative rerun
+        mdf = self.catalog.read(MANIFEST_TABLE, schema=MANIFEST_SCHEMA)
         for c in ("params_sig", "seq"):
             if c not in mdf.columns:
                 mdf = mdf.withColumn(
@@ -155,31 +173,26 @@ class ManifestedRun:
         done = self.done_buckets()
         return [b for b in range(self.num_buckets) if b not in done]
 
-    def _append_row(
+    def _append_rows(
         self,
-        bucket: int,
         status: str,
-        input_rows: int | None = None,
-        kept: int | None = None,
-        hist: dict | None = None,
+        buckets: list[int],
+        hists: dict[int, dict] | None = None,
         wall: float | None = None,
     ) -> None:
-        row = [
-            (
-                bucket,
-                status,
-                input_rows,
-                kept,
-                hist,
-                wall,
-                self.run_id,
-                int(time.time()),
-                self.params_sig,
-                time.time_ns(),
+        """One manifest append: a `status` row for each bucket. hists
+        maps bucket -> drop-reason histogram ("" counts kept rows); it
+        gives the row's input and kept counts."""
+        now, seq = int(time.time()), time.time_ns()
+        rows = []
+        for b in buckets:
+            hist = None if hists is None else hists[b]
+            counts = (None, None) if hist is None else (sum(hist.values()), hist.get("", 0))
+            rows.append(
+                (b, status, *counts, hist, wall, self.run_id, now, self.params_sig, seq)
             )
-        ]
         self.catalog.append(
-            self.spark.createDataFrame(row, MANIFEST_SCHEMA), MANIFEST_TABLE
+            self.spark.createDataFrame(rows, MANIFEST_SCHEMA), MANIFEST_TABLE
         )
 
     def run(self, clips: DataFrame, transform, output_table: str) -> dict:
@@ -197,26 +210,40 @@ class ManifestedRun:
 
     def _run_locked(self, clips: DataFrame, transform, output_table: str) -> dict:
         pending = self.pending_buckets()
-        summary = {"buckets_run": 0, "buckets_skipped": self.num_buckets - len(pending)}
-        for b in pending:
-            t0 = time.monotonic()
-            # supersede any stale done row BEFORE touching the output:
-            # from here until the done row lands, latest-row = running
-            # → any crash reruns the bucket
-            self._append_row(b, "running")
-            # bucket predicate prunes at the scan (partition/bucket
-            # pruning when the table is bucket-partitioned on the key)
-            part = clips.filter(bucket_of(F.col(self.key_col), self.num_buckets) == b)
-            out = transform(part)
-            self.catalog.write(out, f"{output_table}/bucket={b}", mode="overwrite")
-            # metrics from the committed output (one extra cheap scan of
-            # the just-written bucket, not the input)
-            written = self.catalog.read(f"{output_table}/bucket={b}")
-            hist_rows = written.groupBy("drop_reason").count().collect()
-            hist = {r.drop_reason or "": r["count"] for r in hist_rows}
-            input_rows = sum(hist.values())
-            kept = hist.get("", 0)
-            wall = time.monotonic() - t0
-            self._append_row(b, "done", input_rows, kept, hist, round(wall, 3))
-            summary["buckets_run"] += 1
-        return summary
+        step = BUCKETS_PER_WAVE
+        for i in range(0, len(pending), step):
+            self._commit_wave(clips, transform, output_table, pending[i : i + step])
+        return {
+            "buckets_run": len(pending),
+            "buckets_skipped": self.num_buckets - len(pending),
+        }
+
+    def _commit_wave(
+        self, clips: DataFrame, transform, output_table: str, wave: list[int]
+    ) -> None:
+        t0 = time.monotonic()
+        # supersede any stale done rows BEFORE touching the output:
+        # from here until the done rows land, latest-row = running
+        # → any crash reruns the whole wave
+        self._append_rows("running", wave)
+        bucket = bucket_of(F.col(self.key_col), self.num_buckets)
+        out = transform(clips.filter(bucket.isin(wave))).withColumn("bucket", bucket)
+        self.catalog.write(
+            out, output_table, partition_by=["bucket"], replace_partitions=wave
+        )
+        # metrics from the committed output: one read of the wave's
+        # partitions, drop_reason column only. Exact for any reason —
+        # decode_<token> reasons form an open set no fixed list covers.
+        # A bucket with no rows has no partition and keeps hist {}; the
+        # known schema lets a table with no data files at all read as
+        # empty.
+        hists: dict[int, dict] = {b: {} for b in wave}
+        for r in (
+            self.catalog.read(output_table, schema=out.schema)
+            .filter(F.col("bucket").isin(wave))
+            .groupBy("bucket", "drop_reason")
+            .count()
+            .collect()
+        ):
+            hists[r.bucket][r.drop_reason or ""] = r["count"]
+        self._append_rows("done", wave, hists, round(time.monotonic() - t0, 3))

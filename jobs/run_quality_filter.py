@@ -4,7 +4,9 @@ jobs/run_quality_filter.py ...`).
 Examples:
     # package
     zip -qr /tmp/pkg.zip go_pkg_spider_spark
-    # full run with manifest checkpointing + resume
+    # full run with manifest checkpointing + resume: pending buckets
+    # commit in waves of 16 (one input scan, one partitioned write and
+    # one metrics read per wave; a crash reruns at most the wave it hit)
     # (--driver-memory MUST be on the submit line: under spark-submit
     # the JVM starts before get_spark's conf applies, and the 1g
     # default OOMs on binary columnar batches)

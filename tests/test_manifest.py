@@ -9,9 +9,11 @@ from __future__ import annotations
 import json
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_pkg_spider_spark import pipeline
+from go_pkg_spider_spark.io import manifest
 from go_pkg_spider_spark.io.catalog import Catalog
 from go_pkg_spider_spark.io.manifest import (
     MANIFEST_SCHEMA,
@@ -30,8 +32,9 @@ def _sig(num_buckets, params=None):
 
 
 def _commit_one_bucket(spark, cat, clips, bucket, num_buckets, table="decisions"):
-    """Replicates exactly what ManifestedRun.run commits for one bucket —
-    used to simulate a crash after a partial run."""
+    """Commits one bucket the way a one-bucket wave of ManifestedRun.run
+    does (same `table/bucket=b` layout, same done row) — used to
+    simulate a crash after a partial run."""
     part = clips.filter(bucket_of(F.col("clip_id"), num_buckets) == bucket)
     cat.write(_transform(part), f"{table}/bucket={bucket}")
     hist = {
@@ -96,8 +99,17 @@ def test_manifest_metrics(spark, clips_path, tmp_path):
     assert len(rows) == 2
     assert sum(r.input_rows for r in rows) == clips.count()
     assert all(r.status == "done" and r.wall_sec > 0 for r in rows)
-    # drop-reason histogram is recorded per bucket
-    assert any("too_short" in (r.drop_histogram or {}) for r in rows)
+    # each bucket's histogram and counts equal its committed output's
+    for r in rows:
+        hist = {
+            x.drop_reason or "": x["count"]
+            for x in cat.read(f"decisions/bucket={r.bucket}")
+            .groupBy("drop_reason").count().collect()
+        }
+        assert r.drop_histogram == hist
+        assert r.input_rows == sum(hist.values())
+        assert r.kept_rows == hist.get("", 0)
+    assert any("too_short" in r.drop_histogram for r in rows)
     # every row carries the fingerprint resume will check
     assert all(r.params_sig == _sig(2) for r in rows)
 
@@ -155,7 +167,7 @@ def test_crash_mid_overwrite_reruns(spark, clips_path, tmp_path):
     run.run(clips, _transform, "decisions")
     # simulate: a rerun appended its running row, then crashed mid-write
     run2 = ManifestedRun(spark, cat, 2, "b")
-    run2._append_row(1, "running")
+    run2._append_rows("running", [1])
     resume = ManifestedRun(spark, cat, 2, "c")
     assert resume.pending_buckets() == [1]
 
@@ -194,3 +206,107 @@ def test_same_second_tie_is_not_done(spark, clips_path, tmp_path):
     run = ManifestedRun(spark, cat, 2, "r")
     # bucket 0 tied -> rerun; bucket 1 has a unique latest done row -> kept
     assert run.pending_buckets() == [0]
+
+
+def _latest_status(cat) -> dict[int, str]:
+    latest = {}
+    for r in cat.read(MANIFEST_TABLE).collect():
+        key = (r.committed_at_unix, r.seq)
+        if r.bucket not in latest or key > latest[r.bucket][0]:
+            latest[r.bucket] = (key, r.status)
+    return {b: st for b, (_, st) in latest.items()}
+
+
+def test_emptied_bucket_is_cleared(spark, clips_path, tmp_path):
+    """A pending bucket that gets no input rows still has its stale
+    output replaced (by nothing) and gets a done row with 0 input
+    rows — a dynamic partition overwrite alone would leave it as is."""
+    clips = spark.read.parquet(clips_path)
+    cat = Catalog(spark, str(tmp_path / "e"))
+    ManifestedRun(spark, cat, 3, "a", params={"min_chars": 64}).run(
+        clips, lambda df: pipeline.run_pipeline(df, min_chars=64), "decisions"
+    )
+    assert cat.read("decisions").filter(F.col("bucket") == 1).count() > 0
+
+    subset = clips.filter(bucket_of(F.col("clip_id"), 3) != 1)
+    s = ManifestedRun(spark, cat, 3, "b", params={"min_chars": 256}).run(
+        subset, lambda df: pipeline.run_pipeline(df, min_chars=256), "decisions"
+    )
+    assert s == {"buckets_run": 3, "buckets_skipped": 0}
+    out = cat.read("decisions")
+    assert out.filter(F.col("bucket") == 1).count() == 0
+    assert out.count() == subset.count()
+    done = cat.read(MANIFEST_TABLE).filter(
+        (F.col("run_id") == "b") & (F.col("status") == "done")
+    )
+    row = done.filter(F.col("bucket") == 1).collect()
+    assert [(r.input_rows, r.kept_rows, r.drop_histogram) for r in row] == [(0, 0, {})]
+    assert _latest_status(cat) == {0: "done", 1: "done", 2: "done"}
+
+
+def test_empty_input_commits_every_bucket(spark, clips_path, tmp_path):
+    """A wave whose every bucket is empty writes no partition at all;
+    its buckets are still committed, each with 0 input rows."""
+    clips = spark.read.parquet(clips_path).filter(F.lit(False))
+    cat = Catalog(spark, str(tmp_path / "z"))
+    s = ManifestedRun(spark, cat, 2, "z").run(clips, _transform, "decisions")
+    assert s == {"buckets_run": 2, "buckets_skipped": 0}
+    rows = cat.read(MANIFEST_TABLE).filter(F.col("status") == "done").collect()
+    assert sorted((r.bucket, r.input_rows) for r in rows) == [(0, 0), (1, 0)]
+
+
+def test_multi_wave_crash_then_resume(spark, clips_path, tmp_path, monkeypatch):
+    """5 buckets in waves of 2: a crash in wave 2 leaves wave 1 done,
+    wave 2's latest rows `running` and wave 3 without rows. Resume
+    runs exactly the unfinished buckets, and the output equals an
+    uninterrupted run's."""
+    monkeypatch.setattr(manifest, "BUCKETS_PER_WAVE", 2)
+    clips = spark.read.parquet(clips_path)
+    cat_a = Catalog(spark, str(tmp_path / "a"))
+    ManifestedRun(spark, cat_a, 5, "a").run(
+        clips, _transform, "decisions"
+    )
+
+    calls = []
+
+    def crash_on_second_wave(df):
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("simulated crash")
+        return _transform(df)
+
+    cat_b = Catalog(spark, str(tmp_path / "b"))
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        ManifestedRun(spark, cat_b, 5, "crash").run(
+            clips, crash_on_second_wave, "decisions"
+        )
+    assert _latest_status(cat_b) == {0: "done", 1: "done", 2: "running", 3: "running"}
+
+    resume = ManifestedRun(spark, cat_b, 5, "resume")
+    assert resume.pending_buckets() == [2, 3, 4]
+    s = resume.run(clips, _transform, "decisions")
+    assert s == {"buckets_run": 3, "buckets_skipped": 2}
+    assert _latest_status(cat_b) == {b: "done" for b in range(5)}
+
+    a_rows = sorted(tuple(r) for r in cat_a.read("decisions").collect())
+    b_rows = sorted(tuple(r) for r in cat_b.read("decisions").collect())
+    assert a_rows == b_rows and len(a_rows) == clips.count()
+
+
+def test_one_wave_costs_the_same_spark_jobs_for_more_buckets(spark, clips_path, tmp_path):
+    """The per-wave cost guard: a one-wave run starts a fixed number
+    of Spark jobs however many buckets the wave holds."""
+    clips = spark.read.parquet(clips_path)
+    sc = spark.sparkContext
+    jobs = {}
+    for n in (2, 4):
+        group = f"manifest-cost-{n}"
+        sc.setJobGroup(group, f"{n} buckets in one wave")
+        try:
+            ManifestedRun(spark, Catalog(spark, str(tmp_path / f"n{n}")), n, "j").run(
+                clips, _transform, "decisions"
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs[4] <= jobs[2]
