@@ -17,8 +17,8 @@ the key (an Iceberg `bucket(N, clip_id)` table); over a plain parquet
 input each wave re-reads the input, so a run makes
 ceil(pending / BUCKETS_PER_WAVE) scans, not one per bucket.
 
-Resume semantics (hardened round 6 — the same guarantee StageRunner got
-in round 5, io/stages.py):
+Resume semantics (the protocol StageRunner, io/stages.py, shares; the
+helpers at the top of this module serve both):
 
 - A bucket is reusable ONLY if its LATEST manifest row is `done` with
   the SAME parameter fingerprint (params_sig) as the current
@@ -29,15 +29,15 @@ in round 5, io/stages.py):
   not in the sig.
 - Before a wave's output partitions are replaced, one append writes a
   `running` row for each of its buckets; one append of `done` rows
-  follows the commit. The manifest stays append-only (cheap at 10^12
-  scale — two Iceberg appends per wave, no manifest rewrite), and
-  latest-row semantics make every crash window safe: die mid-write or
-  before the done rows and the wave's latest rows say `running` → its
-  buckets rerun whole.
+  follows the commit. The manifest is append-only (cheap at 10^12
+  scale — two Iceberg appends per wave, no code ever rewrites a
+  manifest), and latest-row semantics make every crash window safe:
+  die mid-write or before the done rows and the wave's latest rows
+  say `running` → its buckets rerun whole.
 - Rows from pre-params_sig manifests (no such column) never match the
   current sig → conservative rerun. Ties on (committed_at, seq) —
-  only possible across processes writing in the same second — are
-  treated as NOT done, also conservative.
+  only possible for legacy rows without seq — are treated as NOT
+  done, also conservative.
 
 Idempotence: a bucket either committed (latest manifest row done with
 matching sig) or is re-run whole; a wave's write replaces its buckets'
@@ -50,7 +50,7 @@ from __future__ import annotations
 import json
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -62,6 +62,52 @@ from pyspark.sql.types import (
 )
 
 from .catalog import Catalog
+
+
+def read_manifest(catalog: Catalog, table: str, schema: StructType) -> list[Row]:
+    """Every row of a manifest table, [] before its first append. The
+    known schema skips inference; columns an older job version did not
+    write read as NULL (given the schema on parquet, added here on
+    Iceberg), so such rows never match the current params_sig."""
+    if not catalog.exists(table):
+        return []
+    mdf = catalog.read(table, schema=schema)
+    for f in schema.fields:
+        if f.name not in mdf.columns:
+            mdf = mdf.withColumn(f.name, F.lit(None).cast(f.dataType))
+    return mdf.select(*schema.fieldNames()).collect()
+
+
+def latest_rows(rows, unit_col: str) -> dict:
+    """{unit: its latest row}, latest = max (committed_at_unix, seq), a
+    NULL seq (legacy rows) ordering first. A unit whose latest key is
+    shared by two rows is left out: the tie can't say which row
+    describes the output on disk, so callers treat it as not done."""
+    latest: dict = {}
+    tied: set = set()
+    for r in rows:
+        unit, key = r[unit_col], (r.committed_at_unix, -1 if r.seq is None else r.seq)
+        if unit not in latest or key > latest[unit][0]:
+            latest[unit] = (key, r)
+            tied.discard(unit)
+        elif key == latest[unit][0]:
+            tied.add(unit)
+    return {u: r for u, (_, r) in latest.items() if u not in tied}
+
+
+def append_rows(
+    catalog: Catalog, table: str, schema: StructType, rows: list[dict]
+) -> None:
+    """One manifest append of `rows` (column -> value; absent columns
+    are NULL), all stamped from one clock read: committed_at_unix in
+    seconds, seq in nanoseconds. seq orders same-second rows ACROSS
+    processes (a per-process counter can't: a crashed rerun's
+    `running` row must outrank an earlier run's `done`)."""
+    now_ns = time.time_ns()
+    stamp = {"committed_at_unix": now_ns // 1_000_000_000, "seq": now_ns}
+    data = [tuple({**r, **stamp}.get(f.name) for f in schema.fields) for r in rows]
+    catalog.append(catalog.spark.createDataFrame(data, schema), table)
+
 
 MANIFEST_SCHEMA = StructType(
     [
@@ -77,9 +123,7 @@ MANIFEST_SCHEMA = StructType(
         # parameter fingerprint the bucket's output embodies; resume
         # honors a done row only when this matches the current run's
         StructField("params_sig", StringType()),
-        # wall-clock nanoseconds at append: orders same-second rows
-        # ACROSS processes (a per-process counter can't — a crashed
-        # rerun's `running` row must outrank an earlier run's `done`)
+        # wall-clock nanoseconds at append (append_rows)
         StructField("seq", LongType()),
     ]
 )
@@ -128,45 +172,14 @@ class ManifestedRun:
             {**(params or {}), "num_buckets": num_buckets}, sort_keys=True
         )
 
-    def _manifest_df(self) -> DataFrame:
-        # the known schema skips inference. Manifests from older job
-        # versions: missing columns read as NULL (given the schema on
-        # parquet, by the loop on Iceberg) → params_sig never matches →
-        # conservative rerun
-        mdf = self.catalog.read(MANIFEST_TABLE, schema=MANIFEST_SCHEMA)
-        for c in ("params_sig", "seq"):
-            if c not in mdf.columns:
-                mdf = mdf.withColumn(
-                    c, F.lit(None).cast("string" if c == "params_sig" else "long")
-                )
-        return mdf
-
     def done_buckets(self) -> set[int]:
-        """Buckets whose LATEST manifest row (max (committed_at, seq))
-        is done with the current params_sig. A tie for latest — two
-        writers in the same second — is conservatively NOT done."""
-        if not self.catalog.exists(MANIFEST_TABLE):
-            return set()
-        rows = (
-            self._manifest_df()
-            .select("bucket", "status", "params_sig", "committed_at_unix", "seq")
-            .collect()
-        )
-        latest: dict = {}
-        tied: set[int] = set()
-        for r in rows:
-            key = (r.committed_at_unix, r.seq if r.seq is not None else -1)
-            if r.bucket not in latest or key > latest[r.bucket][0]:
-                latest[r.bucket] = (key, r)
-                tied.discard(r.bucket)
-            elif key == latest[r.bucket][0] and r is not latest[r.bucket][1]:
-                tied.add(r.bucket)
+        """Buckets whose latest manifest row is done with the current
+        params_sig."""
+        rows = read_manifest(self.catalog, MANIFEST_TABLE, MANIFEST_SCHEMA)
         return {
             b
-            for b, (_, r) in latest.items()
-            if b not in tied
-            and r.status == "done"
-            and r.params_sig == self.params_sig
+            for b, r in latest_rows(rows, "bucket").items()
+            if r.status == "done" and r.params_sig == self.params_sig
         }
 
     def pending_buckets(self) -> list[int]:
@@ -183,17 +196,16 @@ class ManifestedRun:
         """One manifest append: a `status` row for each bucket. hists
         maps bucket -> drop-reason histogram ("" counts kept rows); it
         gives the row's input and kept counts."""
-        now, seq = int(time.time()), time.time_ns()
         rows = []
         for b in buckets:
-            hist = None if hists is None else hists[b]
-            counts = (None, None) if hist is None else (sum(hist.values()), hist.get("", 0))
-            rows.append(
-                (b, status, *counts, hist, wall, self.run_id, now, self.params_sig, seq)
-            )
-        self.catalog.append(
-            self.spark.createDataFrame(rows, MANIFEST_SCHEMA), MANIFEST_TABLE
-        )
+            row = {"bucket": b, "status": status, "wall_sec": wall,
+                   "run_id": self.run_id, "params_sig": self.params_sig}
+            if hists is not None:
+                hist = hists[b]
+                row.update(drop_histogram=hist, input_rows=sum(hist.values()),
+                           kept_rows=hist.get("", 0))
+            rows.append(row)
+        append_rows(self.catalog, MANIFEST_TABLE, MANIFEST_SCHEMA, rows)
 
     def run(self, clips: DataFrame, transform, output_table: str) -> dict:
         """transform: DataFrame -> DataFrame with (keep, drop_reason).

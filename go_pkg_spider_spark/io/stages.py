@@ -1,19 +1,21 @@
 """Stage-manifested job runner — the shared resume machinery behind
-jobs/run_dedup.py and jobs/run_ann_index.py.
+jobs/run_dedup.py, jobs/run_ann_index.py and jobs/run_audio_dedup.py.
 
 A composed job is a linear chain of stages, each committing one derived
-table plus a manifest row. Resume semantics (hardened round 5, ADVICE
-r4):
+table. The stage manifest follows ManifestedRun's protocol
+(io/manifest.py), with a stage where that one has a bucket:
 
-- A committed stage is reusable ONLY if its LATEST manifest row is
-  `done` with the SAME parameter fingerprint (params_sig) as the
-  current invocation. Older rows never count: stage tables are
-  overwritten in place, so a historical same-sig row from before an
-  intervening different-sig run describes a table that no longer
-  exists (the A -> B -> A resume-staleness hole).
-- commit() purges a stage's manifest rows BEFORE rewriting its table:
-  a crash mid-overwrite leaves no row marking the half-written table
-  done, so resume reruns the stage.
+- commit() appends a `running` row for the stage, overwrites the
+  stage table, then appends a `done` row. The manifest is append-only;
+  nothing ever rewrites it.
+- A committed stage is reusable ONLY if its LATEST manifest row
+  (manifest.latest_rows) is `done` with the SAME parameter fingerprint
+  (params_sig) as the current invocation. Older rows never count:
+  stage tables are overwritten in place, so a historical same-sig row
+  from before an intervening different-sig run describes a table that
+  no longer exists (the A -> B -> A resume-staleness hole), and a
+  crash mid-commit leaves the latest row `running`, so resume reruns
+  the stage even when an older done row carries the same sig.
 - Once any stage reruns, every DOWNSTREAM stage reruns too (their
   inputs changed) — tracked via `upstream_reran`.
 - The params_sig covers EVERY knob that changes any stage's output;
@@ -30,7 +32,16 @@ import socket
 import time
 import uuid
 
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from .manifest import append_rows, latest_rows, read_manifest
 
 
 class LeaseHeldError(RuntimeError):
@@ -52,11 +63,13 @@ def _pid_alive(pid: int) -> bool:
 
 @contextlib.contextmanager
 def run_lease(root: str, run_id: str, ttl_sec: int = 6 * 3600):
-    """Single-writer guard for a manifested output root (VERDICT r5 #2):
-    StageRunner._invalidate collects-then-overwrites the manifest, so two
-    concurrent invocations on one root can interleave invalidate/commit
-    and drop each other's rows. The lease makes the second invocation
-    fail fast with LeaseHeldError instead.
+    """Single-writer guard for a manifested output root (VERDICT r5 #2).
+    The manifests are append-only, but the outputs are not: two
+    concurrent invocations on one root would both find the same stages
+    (or buckets) pending and overwrite the same tables, and a `done`
+    row one of them appends can then describe a table the other has
+    since rewritten. The lease makes the second invocation fail fast
+    with LeaseHeldError instead.
 
     Mechanics: create `<root>/_run_lock` with O_EXCL (atomic on POSIX
     filesystems). Takeover is allowed only when the holder is provably
@@ -193,30 +206,20 @@ def run_lease(root: str, run_id: str, ttl_sec: int = 6 * 3600):
             pass
 
 
-def manifest_schema():
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    return StructType(
-        [
-            StructField("stage", StringType(), False),
-            StructField("status", StringType(), False),
-            StructField("rows", LongType()),
-            StructField("metrics", MapType(StringType(), StringType())),
-            StructField("wall_sec", DoubleType()),
-            StructField("run_id", StringType()),
-            StructField("committed_at_unix", LongType()),
-            # strictly increasing across a process: breaks same-second
-            # committed_at ties when picking the latest row per stage
-            StructField("seq", LongType()),
-        ]
-    )
+STAGE_MANIFEST_SCHEMA = StructType(
+    [
+        StructField("stage", StringType(), False),
+        StructField("status", StringType(), False),
+        StructField("rows", LongType()),
+        # stage metrics plus the params_sig the stage table embodies
+        StructField("metrics", MapType(StringType(), StringType())),
+        StructField("wall_sec", DoubleType()),
+        StructField("run_id", StringType()),
+        StructField("committed_at_unix", LongType()),
+        # wall-clock nanoseconds at append (manifest.append_rows)
+        StructField("seq", LongType()),
+    ]
+)
 
 
 class StageRunner:
@@ -255,98 +258,54 @@ class StageRunner:
             "stage_rows": {},
             "metrics": {},
         }
-        self._seq = iter(range(1 << 62))
         self._done = self._done_stages()
 
-    def _manifest_df(self):
-        mdf = self.cat.read(self.manifest_table)
-        if "seq" not in mdf.columns:  # manifests from older job versions
-            mdf = mdf.withColumn("seq", F.lit(None).cast("long"))
-        return mdf
-
     def _done_stages(self) -> set[str]:
-        """Stages whose LATEST manifest row is done with the current
-        params_sig (max (committed_at, seq) per stage). A tie for
-        latest — only possible for pre-seq legacy rows committed in the
-        same second, or two same-second writers — is ambiguous about
-        which row describes the table on disk, so the stage is
-        conservatively treated as NOT done (rerun)."""
-        if not self.cat.exists(self.manifest_table):
-            return set()
-        rows = (
-            self._manifest_df()
-            .select("stage", "status", "metrics", "committed_at_unix", "seq")
-            .collect()
-        )
-        latest: dict = {}
-        tied: set[str] = set()
-        for r in rows:
-            key = (r.committed_at_unix, r.seq if r.seq is not None else -1)
-            if r.stage not in latest or key > latest[r.stage][0]:
-                latest[r.stage] = (key, r)
-                tied.discard(r.stage)
-            elif key == latest[r.stage][0] and r is not latest[r.stage][1]:
-                tied.add(r.stage)
+        """Stages whose latest manifest row is done with the stage's
+        params_sig."""
+        rows = read_manifest(self.cat, self.manifest_table, STAGE_MANIFEST_SCHEMA)
         return {
             s
-            for s, (_, r) in latest.items()
-            if s not in tied
-            and r.status == "done"
+            for s, r in latest_rows(rows, "stage").items()
+            if r.status == "done"
             and (r.metrics or {}).get("params_sig") == self._sig_for(s)
         }
 
     def _sig_for(self, stage: str) -> str:
         return self._stage_sigs.get(stage, self.params_sig)
 
-    def _invalidate(self, stage: str) -> None:
-        """Remove a stage's manifest rows BEFORE its table is rewritten.
-        The manifest is tiny — collect to the driver, then overwrite
-        (Spark can't overwrite a path it is concurrently reading)."""
-        if not self.cat.exists(self.manifest_table):
-            return
-        kept = (
-            self._manifest_df()
-            .select(*[f.name for f in manifest_schema().fields])
-            .filter(F.col("stage") != stage)
-            .collect()
-        )
-        self.cat.write(
-            self.spark.createDataFrame(kept, manifest_schema()),
+    def _append_row(self, stage: str, status: str, **cols) -> None:
+        append_rows(
+            self.cat,
             self.manifest_table,
-            mode="overwrite",
+            STAGE_MANIFEST_SCHEMA,
+            [{"stage": stage, "status": status, "run_id": self.run_id, **cols}],
         )
 
     def commit(
         self, stage: str, df, metrics_after=None, partition_by=None
     ) -> None:
-        """Invalidate the stage's manifest rows, write the stage table,
-        then append the fresh manifest row. metrics_after (optional
-        callable) runs AFTER the write — for metrics only observable
-        once the plan executed (e.g. a pyspark Observation).
-        partition_by: physical partition columns for the stage table
-        (e.g. the ANN index's cell id)."""
+        """Append a `running` row, write the stage table, then append
+        the `done` row: until the done row lands the stage's latest row
+        is `running`, so a crash anywhere in between reruns the stage.
+        metrics_after (optional callable) runs AFTER the write — for
+        metrics only observable once the plan executed (e.g. a pyspark
+        Observation). partition_by: physical partition columns for the
+        stage table (e.g. the ANN index's cell id)."""
         t0 = time.monotonic()
-        self._invalidate(stage)
+        sig = self._sig_for(stage)
+        self._append_row(stage, "running", metrics={"params_sig": sig})
         self.cat.write(df, stage, mode="overwrite", partition_by=partition_by)
         metrics = dict(metrics_after() if metrics_after else {})
-        metrics["params_sig"] = self._sig_for(stage)
+        metrics["params_sig"] = sig
         rows = self.cat.read(stage).count()
-        mdf = self.spark.createDataFrame(
-            [
-                (
-                    stage,
-                    "done",
-                    rows,
-                    metrics,
-                    round(time.monotonic() - t0, 3),
-                    self.run_id,
-                    int(time.time()),
-                    next(self._seq),
-                )
-            ],
-            manifest_schema(),
+        self._append_row(
+            stage,
+            "done",
+            rows=rows,
+            metrics=metrics,
+            wall_sec=round(time.monotonic() - t0, 3),
         )
-        self.cat.append(mdf, self.manifest_table)
         self.upstream_reran = True
         self.summary["stages_run"] += 1
         self.summary["stage_rows"][stage] = rows

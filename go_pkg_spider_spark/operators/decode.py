@@ -121,6 +121,16 @@ def _gather_s24(data: bytes, big_endian: bool = False) -> np.ndarray:
     return v - ((v >> 23) << 24)
 
 
+def _finite_floats(pcm: np.ndarray) -> np.ndarray:
+    """Raw float samples, rejected before any arithmetic when one is NaN
+    or Inf. isfinite reads a signalling NaN without raising the invalid
+    flag, so no later cast, downmix or divide warns, and the typed error
+    does not depend on the warnings filter."""
+    if not np.isfinite(pcm).all():
+        raise ValueError("nonfinite_samples")
+    return pcm
+
+
 def _downmix(pcm: np.ndarray, n_ch: int) -> np.ndarray:
     """Interleaved frames -> mono by per-frame mean (trailing partial
     frame dropped). ONE source of truth for every multi-channel path;
@@ -479,6 +489,8 @@ def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
             (fmt, bps)
         ]
         pcm = np.frombuffer(data[:usable], dtype=dtype)
+        if fmt == 3:
+            pcm = _finite_floats(pcm)
     pcm = _downmix(pcm, n_ch)
     # float32 halves the bandwidth of the hottest loop in the pipeline;
     # <=24-bit sources lose nothing (float32 has 24 mantissa bits).
@@ -514,7 +526,7 @@ def decode_au(blob: bytes) -> tuple[np.ndarray, int]:
         pcm, scale = np.frombuffer(data[:usable], dtype=">i2"), 32767.0
     elif enc == 6:
         usable = len(data) - (len(data) % 4)
-        pcm, scale = np.frombuffer(data[:usable], dtype=">f4"), 1.0
+        pcm, scale = _finite_floats(np.frombuffer(data[:usable], dtype=">f4")), 1.0
     else:
         raise ValueError("unsupported_au_encoding")
     if pcm.size == 0:
@@ -608,7 +620,7 @@ def decode_pcm_raw(blob: bytes, codec: str, sr_hz: int) -> tuple[np.ndarray, int
         pcm, scale = _gather_s24(blob), 8388607.0
     elif codec == "pcm_f32le":
         usable = len(blob) - (len(blob) % 4)
-        pcm, scale = np.frombuffer(blob[:usable], dtype="<f4"), 1.0
+        pcm, scale = _finite_floats(np.frombuffer(blob[:usable], dtype="<f4")), 1.0
     elif codec == "pcm_mulaw":
         pcm, scale = _ULAW_TABLE[np.frombuffer(blob, dtype=np.uint8)], 32767.0
     else:  # pcm_alaw
@@ -650,10 +662,11 @@ def decode_blob(
         if not (SR_MIN <= sr <= SR_MAX):
             return None, 0, "implausible_sample_rate"
         if codec in _FLOAT_SOURCE_CODECS and not np.isfinite(pcm).all():
-            # float payloads can carry NaN/Inf samples (and a finite
-            # float64 can overflow to inf in the float32 downcast, so
-            # this runs on the FINAL pcm); letting them through makes
-            # ok=true rows with NaN features — garbage the quality
+            # the raw float decoders reject NaN/Inf samples already
+            # (_finite_floats); this catches the rest on the FINAL pcm:
+            # a finite float64 overflowing to inf in the float32
+            # downcast, and library-decoded codecs. Letting them through
+            # makes ok=true rows with NaN features — garbage the quality
             # gates silently mis-handle. Int-sourced codecs cannot
             # produce non-finite values and skip the scan.
             return None, 0, "nonfinite_samples"

@@ -17,8 +17,9 @@ struct column with audio features, model_lang, ppl.
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, functions as F
+import numpy as np
+import pyarrow as pa
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -62,32 +63,11 @@ def _fused_row(b, c, s, mt, mk, pt) -> tuple:
     return (*audio, model_lang, ppl)
 
 
-@F.pandas_udf(FUSED_SCHEMA)
-def fused_model_udf(
-    blob: pd.Series,
-    codec: pd.Series,
-    sr_hz: pd.Series,
-    model_text: pd.Series,
-    marker: pd.Series,
-    ppl_text: pd.Series,
-) -> pd.DataFrame:
-    rows = [
-        _fused_row(b, c, int(s) if not pd.isna(s) else None, mt, mk, pt)
-        for b, c, s, mt, mk, pt in zip(
-            blob, codec, sr_hz, model_text, marker, ppl_text
-        )
-    ]
-    return pd.DataFrame(rows, columns=[f.name for f in FUSED_SCHEMA.fields])
-
-
 def _binary_views(arr):
     """Zero-copy per-row memoryviews over a pyarrow Binary array (None
     for null rows). to_pandas()/as_py() copy every ~100KB payload into a
     fresh Python bytes object — measured ~18ms per 256-row batch, about
     the cost of the decode work itself; the views cost ~0.07ms."""
-    import numpy as np
-    import pyarrow as pa
-
     n = len(arr)
     bufs = arr.buffers()
     if bufs[2] is None:
@@ -112,68 +92,40 @@ def _binary_views(arr):
     return out
 
 
-try:  # Spark >= 4.0 scalar Arrow UDF (no pandas materialization)
-    from pyspark.sql.functions import arrow_udf as _arrow_udf
-except ImportError:  # pragma: no cover — older runtimes
-    _arrow_udf = None
-
-if _arrow_udf is not None:
-    import pyarrow as _pa
-
-    @_arrow_udf(FUSED_SCHEMA)
-    def fused_model_arrow_udf(
-        blob: "_pa.Array",
-        codec: "_pa.Array",
-        sr_hz: "_pa.Array",
-        model_text: "_pa.Array",
-        marker: "_pa.Array",
-        ppl_text: "_pa.Array",
-    ) -> "_pa.Array":
-        """The fused stage on raw Arrow batches: the ~100KB binary
-        payloads are read as zero-copy memoryviews instead of being
-        materialized into a pandas Series of bytes objects (the
-        round-4 profile attributed ~85% of the stage to that
-        serialization). Same plan node (ArrowEvalPython), same row
-        semantics (_fused_row), no pandas on either side."""
-        rows = [
-            _fused_row(b, c, s, mt, mk, pt)
-            for b, c, s, mt, mk, pt in zip(
-                _binary_views(blob),
-                codec.to_pylist(),
-                sr_hz.to_pylist(),
-                model_text.to_pylist(),
-                marker.to_pylist(),
-                ppl_text.to_pylist(),
-            )
-        ]
-        cols = list(zip(*rows)) if rows else [[] for _ in FUSED_SCHEMA.fields]
-        arrow_types = [
-            _pa.bool_(), _pa.string(), _pa.int32(), _pa.int32(),
-            _pa.float64(), _pa.float64(), _pa.float64(), _pa.float64(),
-            _pa.float64(), _pa.string(), _pa.float64(),
-        ]
-        return _pa.StructArray.from_arrays(
-            [_pa.array(list(c), t) for c, t in zip(cols, arrow_types)],
-            names=[f.name for f in FUSED_SCHEMA.fields],
+@F.arrow_udf(FUSED_SCHEMA)
+def fused_model_arrow_udf(
+    blob: pa.Array,
+    codec: pa.Array,
+    sr_hz: pa.Array,
+    model_text: pa.Array,
+    marker: pa.Array,
+    ppl_text: pa.Array,
+) -> pa.Array:
+    """The fused stage on raw Arrow batches: the ~100KB binary payloads
+    are read as zero-copy memoryviews instead of being materialized
+    into a pandas Series of bytes objects (the round-4 profile
+    attributed ~85% of the stage to that serialization; the Arrow
+    transport won the round-5 A/B, BENCH/R5_NOTES.md). One plan node
+    (ArrowEvalPython), row semantics in _fused_row, no pandas on either
+    side."""
+    rows = [
+        _fused_row(b, c, s, mt, mk, pt)
+        for b, c, s, mt, mk, pt in zip(
+            _binary_views(blob),
+            codec.to_pylist(),
+            sr_hz.to_pylist(),
+            model_text.to_pylist(),
+            marker.to_pylist(),
+            ppl_text.to_pylist(),
         )
-else:  # pragma: no cover
-    fused_model_arrow_udf = None
-
-# measured winner (BENCH/R5_NOTES.md A/B at sf0.1): set by the bench
-DEFAULT_FUSED_IMPL = "arrow" if _arrow_udf is not None else "pandas"
-
-
-def fused_model_expr(blob, codec, sr_hz, model_text, marker, ppl_text, impl=None):
-    """The fused-stage expression with a selectable transport:
-    'arrow' (zero-copy scalar arrow_udf) or 'pandas' (pandas_udf).
-    Both produce identical rows (parity-pinned in test_pipeline)."""
-    impl = impl or DEFAULT_FUSED_IMPL
-    if impl not in ("arrow", "pandas"):
-        raise ValueError(f"fused_impl must be 'arrow' or 'pandas', got {impl!r}")
-    if impl == "arrow" and fused_model_arrow_udf is None:
-        raise RuntimeError(
-            "fused_impl='arrow' requires pyspark.sql.functions.arrow_udf "
-            "(Spark >= 4.0) — use fused_impl='pandas' on this runtime"
-        )
-    fn = fused_model_arrow_udf if impl == "arrow" else fused_model_udf
-    return fn(blob, codec, sr_hz, model_text, marker, ppl_text)
+    ]
+    cols = list(zip(*rows)) if rows else [[] for _ in FUSED_SCHEMA.fields]
+    arrow_types = [
+        pa.bool_(), pa.string(), pa.int32(), pa.int32(),
+        pa.float64(), pa.float64(), pa.float64(), pa.float64(),
+        pa.float64(), pa.string(), pa.float64(),
+    ]
+    return pa.StructArray.from_arrays(
+        [pa.array(list(c), t) for c, t in zip(cols, arrow_types)],
+        names=[f.name for f in FUSED_SCHEMA.fields],
+    )

@@ -61,7 +61,6 @@ def run_pipeline(
     min_chars: int = 64,
     max_chars: int = 1_000_000,
     with_features: bool = False,
-    fused_impl: str | None = None,
 ) -> DataFrame:
     df = with_charset(clips)
 
@@ -91,14 +90,13 @@ def run_pipeline(
     # + ppl (rows passing the lang-independent guards only)
     df = df.withColumn(
         "fused",
-        fused.fused_model_expr(
+        fused.fused_model_arrow_udf(
             F.col("bytes"),
             F.col("codec"),
             F.col("sr_hz"),
             F.when(needs_model, cleaned),
             F.when(needs_model, F.col("lang_res")["lang"]),
             F.when(pre_drop.isNull(), t),
-            impl=fused_impl,
         ),
     )
     df = df.withColumn("audio", F.struct(*[F.col("fused")[f.name].alias(f.name) for f in fused.DECODE_SCHEMA.fields]))

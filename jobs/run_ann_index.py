@@ -12,8 +12,8 @@ a 100 TB embedding corpus).
 
 Scale/resume design:
 - Stage-manifested via io/stages.StageRunner (the run_dedup machinery:
-  latest-row params_sig gate, invalidate-before-overwrite, downstream
-  rerun on any upstream rerun).
+  latest-row params_sig gate, append-only running -> done rows around
+  each overwrite, downstream rerun on any upstream rerun).
 - `centroids` commits the trained coarse quantizer in LONG form
   (cell, pos, val) — k x dim rounded doubles, the same bounded driver
   budget as the trainer itself (similarity.

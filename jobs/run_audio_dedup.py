@@ -265,35 +265,23 @@ def _require_fp_schema(spark, roots) -> None:
     fp_schema_v — a v3 root (pos<<16|value probes) silently yields
     ZERO subfp cross-matches against a v4 reader and every new dup
     would be labeled 'keep'. The in-root _FP_SCHEMA_V stage_params only
-    protects same-root resume, not cross-root reads. Roots without a
-    manifest or without a done fingerprints row are left to the
-    existing existence checks."""
-    import json as _json
-
+    protects same-root resume, not cross-root reads. A root whose
+    latest fingerprints row is not `done` (no manifest, a crash
+    mid-commit) is left to the existing existence checks."""
     from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import latest_rows, read_manifest
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
 
     for root in roots:
-        cat = Catalog(spark, root)
-        if not cat.exists(AUDIO_DEDUP_MANIFEST_TABLE):
-            continue
-        rows = [
-            r
-            for r in cat.read(AUDIO_DEDUP_MANIFEST_TABLE)
-            .filter("stage = 'fingerprints' AND status = 'done'")
-            .collect()
-        ]
-        if not rows:
-            continue
-        latest = max(
-            rows,
-            key=lambda r: (
-                r.committed_at_unix,
-                getattr(r, "seq", None) if getattr(r, "seq", None) is not None else -1,
-            ),
+        rows = read_manifest(
+            Catalog(spark, root), AUDIO_DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA
         )
+        latest = latest_rows(rows, "stage").get("fingerprints")
+        if latest is None or latest.status != "done":
+            continue
         sig = (latest.metrics or {}).get("params_sig")
         try:
-            v = _json.loads(sig).get("fp_schema_v") if sig else None
+            v = json.loads(sig).get("fp_schema_v") if sig else None
         except (TypeError, ValueError):
             v = None
         if v != _FP_SCHEMA_V:

@@ -12,15 +12,16 @@ what a user actually runs at 100 TB).
 Scale/resume design:
 - The chain is STAGE-manifested, not bucket-manifested: near-dup
   candidate pairs cross any bucketing of the input, so each stage runs
-  as one distributed job and commits its output table + a manifest row;
-  resume skips committed stages and reads their tables back (which also
-  cuts lineage — the components loop joins against materialized pairs,
+  as one distributed job and commits its output table between a
+  `running` and a `done` manifest row (io/stages.py); resume skips
+  committed stages and reads their tables back (which also cuts
+  lineage — the components loop joins against materialized pairs,
   never re-executing the minhash UDF). A committed stage is reusable
-  ONLY if its manifest row carries the same parameter fingerprint
-  (params_sig) as the current invocation — rerunning the same
-  output-root with a different threshold reruns the chain instead of
-  silently returning stale results — and once any stage reruns, all
-  downstream stages rerun. (The input PATH is the caller's
+  ONLY if its latest manifest row is done with the same parameter
+  fingerprint (params_sig) as the current invocation — rerunning the
+  same output-root with a different threshold reruns the chain
+  instead of silently returning stale results — and once any stage
+  reruns, all downstream stages rerun. (The input PATH is the caller's
   responsibility: point different inputs at different output roots.)
 - Stage outputs are the small derived tables (hash groups, pairs,
   labels, decisions) — never a copy of the corpus.
@@ -58,9 +59,9 @@ def run_dedup(
     max_bucket_size: int = 1024,
 ) -> dict:
     """Run (or resume) the dedup chain under the root's single-writer
-    lease (StageRunner's invalidate/commit sequence is not safe against
-    a concurrent invocation on the same root — the second one fails
-    fast with LeaseHeldError). Returns a summary dict with per-stage
+    lease (two concurrent invocations on one root would overwrite the
+    same stage tables — the second one fails fast with LeaseHeldError).
+    Returns a summary dict with per-stage
     rows/metrics and stages_run/stages_skipped counts."""
     from go_pkg_spider_spark.io.stages import run_lease
 

@@ -415,3 +415,36 @@ def test_append_rejects_cross_root_fp_schema_mismatch(spark, tmp_path):
             spark, _df(spark, build_increment_rows()), root,
             run_id="inc_bad", tier="subfp",
         )
+
+
+def test_fp_schema_guard_skips_root_whose_latest_fingerprints_row_is_running(
+    spark, tmp_path
+):
+    """The guard reads the LATEST fingerprints row. Once a later commit
+    crashed mid-write (latest row `running`), an older done row no
+    longer describes the table on disk, so the guard leaves the root to
+    the existence checks, as it does a root with no done row."""
+    import json
+
+    import jobs.run_audio_dedup as rad
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import append_rows
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+
+    root = str(tmp_path / "root")
+    old_sig = json.dumps({"fp_schema_v": rad._FP_SCHEMA_V - 1}, sort_keys=True)
+
+    def append(status):
+        append_rows(
+            Catalog(spark, root),
+            rad.AUDIO_DEDUP_MANIFEST_TABLE,
+            STAGE_MANIFEST_SCHEMA,
+            [{"stage": "fingerprints", "status": status,
+              "metrics": {"params_sig": old_sig}}],
+        )
+
+    append("done")
+    with pytest.raises(RuntimeError, match="fp_schema_v"):
+        rad._require_fp_schema(spark, [root])
+    append("running")
+    rad._require_fp_schema(spark, [root])

@@ -5,6 +5,7 @@ decode-reject paths."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from go_pkg_spider_spark import datagen
@@ -652,3 +653,30 @@ def test_zero_sample_rate_is_typed_error_not_crash():
     # AUDIO_FEATURES_SCHEMA: (clip_id, ok=err-string-or-NULL, ...)
     row = features_for_clip("x", blob, "aiff", None)
     assert row[0] == "x" and row[1] == "unsupported_aiff_format"
+
+
+@pytest.mark.filterwarnings("error::RuntimeWarning")
+def test_signalling_nan_is_nonfinite_under_any_warnings_filter():
+    """A float32 signalling NaN (0x7f800001) used to reach the no-op
+    `/ 1.0` scale, which warned; with warnings as errors the typed
+    nonfinite_samples row turned into decode_error. Every float source
+    now rejects it before any arithmetic, so neither happens."""
+    import struct
+
+    from go_pkg_spider_spark.fixtures.audio_fixtures import _au, _fmt_chunk, _riff
+
+    snan = b"\x01\x00\x80\x7f"  # little-endian float32 sNaN
+    snan64 = struct.pack("<Q", 0x7FF0000000000001)
+    cases = [
+        (snan * 8, "pcm_f32le"),
+        (_riff([(b"fmt ", _fmt_chunk(16000, bps=32, fmt=3)), (b"data", snan * 8)]), "wav"),
+        (_riff([(b"fmt ", _fmt_chunk(16000, bps=64, fmt=3)), (b"data", snan64 * 8)]), "wav"),
+        (
+            _riff([(b"fmt ", _fmt_chunk(16000, channels=2, bps=32, fmt=3)),
+                   (b"data", snan * 8)]),
+            "wav",
+        ),
+        (_au(snan[::-1] * 8, 16000, 6), "au"),
+    ]
+    for blob, codec in cases:
+        assert decode.decode_blob(blob, codec, 16000)[2] == "nonfinite_samples", codec

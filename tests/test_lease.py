@@ -1,7 +1,7 @@
 """Single-writer lease for manifested output roots (VERDICT r5 #2):
-StageRunner's _invalidate collect-then-overwrite is only safe with one
-writer per root; run_lease makes a second concurrent invocation fail
-fast instead of interleaving invalidate/commit."""
+the manifests are append-only, but two concurrent invocations on one
+root would overwrite the same stage tables or bucket partitions;
+run_lease makes the second one fail fast instead."""
 
 from __future__ import annotations
 

@@ -58,24 +58,12 @@ def test_deterministic(spark, clips_path):
     assert a == b
 
 
-def test_fused_transport_parity(spark, clips_path):
-    """The two fused-stage transports (scalar arrow_udf with zero-copy
-    blob views vs pandas_udf) must produce bit-identical pipeline
-    output (BENCH/R5_NOTES.md A/B — arrow is the measured default,
-    pandas the fallback for runtimes without arrow_udf)."""
-    df = spark.read.parquet(clips_path)
-    a = pipeline.run_pipeline(df, fused_impl="arrow").orderBy("clip_id").collect()
-    p = pipeline.run_pipeline(df, fused_impl="pandas").orderBy("clip_id").collect()
-    assert a == p
-
-
 def test_stereo_and_hires_flac_through_production_pipeline(spark):
     """Round 7: stereo-decorrelated and 24-bit FLAC clips must decode
     through the PRODUCTION surface (run_pipeline's fused Arrow UDF),
     not just the entry-query operators. The stereo clip's channels are
     m±d, so its decoded features must equal the mono twin clip's
-    EXACTLY; the 24-bit clip carries the same sine at hi-res width.
-    Checked on both fused transports."""
+    EXACTLY; the 24-bit clip carries the same sine at hi-res width."""
     import numpy as np
 
     from go_pkg_spider_spark.operators.flac import (
@@ -113,24 +101,19 @@ def test_stereo_and_hires_flac_through_production_pipeline(spark):
         ),
     ]
     df = spark.createDataFrame(rows, CLIPS_SCHEMA)
-    for impl in ("arrow", "pandas"):
-        out = {
-            r.clip_id: r
-            for r in pipeline.run_pipeline(df, with_features=True, fused_impl=impl)
-            .collect()
-        }
-        assert len(out) == 4
-        for cid in ("mono", "stereo-ms", "stereo-ls", "hires24"):
-            a = out[cid].audio
-            assert a.ok and a.err is None, (impl, cid, a)
-            assert a.n_samples == 2 * sr and a.sr_decoded == sr
-        # stereo m±d downmixes to EXACTLY the mono clip's samples
-        for cid in ("stereo-ms", "stereo-ls"):
-            assert out[cid].audio == out["mono"].audio, (impl, cid)
-        # 24-bit m<<8 is the same waveform within one 16-bit quantum
-        assert abs(out["hires24"].audio.rms - out["mono"].audio.rms) < 1e-4
-        # and the text-side decision is identical across payload forms
-        assert len({(out[c].keep, out[c].lang) for c in out}) == 1
+    out = {r.clip_id: r for r in pipeline.run_pipeline(df, with_features=True).collect()}
+    assert len(out) == 4
+    for cid in ("mono", "stereo-ms", "stereo-ls", "hires24"):
+        a = out[cid].audio
+        assert a.ok and a.err is None, (cid, a)
+        assert a.n_samples == 2 * sr and a.sr_decoded == sr
+    # stereo m±d downmixes to EXACTLY the mono clip's samples
+    for cid in ("stereo-ms", "stereo-ls"):
+        assert out[cid].audio == out["mono"].audio, cid
+    # 24-bit m<<8 is the same waveform within one 16-bit quantum
+    assert abs(out["hires24"].audio.rms - out["mono"].audio.rms) < 1e-4
+    # and the text-side decision is identical across payload forms
+    assert len({(out[c].keep, out[c].lang) for c in out}) == 1
 
 
 def test_no_shuffle_in_per_clip_path(spark, clips_path):
@@ -147,20 +130,3 @@ def test_salted_repartition_deterministic(spark, clips_path):
     out = pipeline.repartition_salted(df, 8)
     assert out.rdd.getNumPartitions() == 8
     assert out.count() == 300
-
-
-def test_fused_impl_knob_validates(spark):
-    """Typos must not silently degrade to the pandas transport, and an
-    arrow request on a runtime without arrow_udf must fail loudly."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from go_pkg_spider_spark.operators import fused
-
-    args = (F.lit(None).cast("binary"), F.lit("wav"), F.lit(16000),
-            F.lit("x"), F.lit(None).cast("string"), F.lit("x"))
-    with pytest.raises(ValueError, match="fused_impl"):
-        fused.fused_model_expr(*args, impl="Arrow")
-    if fused.fused_model_arrow_udf is None:
-        with pytest.raises(RuntimeError, match="arrow_udf"):
-            fused.fused_model_expr(*args, impl="arrow")

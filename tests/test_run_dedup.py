@@ -9,6 +9,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+from go_pkg_spider_spark.io.manifest import latest_rows
 from jobs.run_dedup import run_dedup
 
 
@@ -90,12 +91,15 @@ def test_dedup_job_param_change_invalidates_resume(spark, tmp_path):
     s4 = run_dedup(spark, docs, root, run_id="d", threshold=0.5)
     assert s4["stages_run"] == 4 and s4["stages_skipped"] == 0
     assert s4["decision_histogram"] == s1["decision_histogram"]
-    # the manifest holds exactly one row per stage (invalidate-before-
-    # write purges superseded rows)
+    # the manifest is append-only: superseded rows stay, and the latest
+    # row of every stage is run d's done row with run d's sig
     mrows = spark.read.parquet(f"{root}/dedup_manifest").collect()
-    assert sorted(r.stage for r in mrows) == [
-        "components", "decisions", "exact", "pairs",
-    ]
+    latest = latest_rows(mrows, "stage")
+    assert sorted(latest) == ["components", "decisions", "exact", "pairs"]
+    for stage, r in latest.items():
+        assert (r.status, r.run_id) == ("done", "d"), r
+        assert r.metrics["params_sig"] == s4["metrics"][stage]["params_sig"]
+    assert s4["metrics"]["pairs"]["params_sig"] != s2["metrics"]["pairs"]["params_sig"]
 
 
 def test_dedup_job_stratified_mix(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Adversarial-skew pipeline datapoint (round 8, VERDICT r7 #6): the
-salting design (pipeline.repartition_salted + io/bucketed) was
-test-pinned but the clips pipeline had no MEASURED skew run. This tool
+salting design (pipeline.repartition_salted) was test-pinned but the
+clips pipeline had no MEASURED skew run. This tool
 builds an sf0.1-scale corpus with a heavy long-transcript tail (1% of
 rows at 400x the transcript — CPU-dense, byte-light; see the module
 note below for why the tail is NOT byte-heavy), lays it out two ways,
