@@ -2246,8 +2246,9 @@ def audio_decode_docs(spark, sf_dir):
     odd-chunk RIFF walks, sub-frame clips, and the
     full typed-error family (empty/oversize/non-whitelisted/corrupt
     container/truncated FLAC) — pushed through the REAL production
-    operators (decode.decode_features_udf pandas UDF + audio_features.
-    extract_audio_features mapInPandas) and compared value-for-value
+    operators (the fused.fused_model_arrow_udf Arrow UDF, with NULL
+    langid/ppl inputs, + audio_features.extract_audio_features
+    mapInPandas) and compared value-for-value
     against the frozen expected-truth table. Reference analog: the
     transcode stage http.go:157-170 whose charset half is gated by
     charset_rules_docs; decode is not SQL-expressible, so the oracle
@@ -2256,16 +2257,17 @@ def audio_decode_docs(spark, sf_dir):
     sf_dir is unused: the fixture corpus IS the input."""
     from .fixtures.audio_fixtures import build_rows
     from .operators import audio_features as af
-    from .operators.decode import decode_features_udf
+    from .operators.fused import fused_model_arrow_udf
 
     df = spark.createDataFrame(
         build_rows(), "fid long, bytes binary, codec string, sr_hz int"
     )
+    no_text = F.lit(None).cast("string")
     dec = df.select(
         "fid",
-        decode_features_udf(F.col("bytes"), F.col("codec"), F.col("sr_hz")).alias(
-            "d"
-        ),
+        fused_model_arrow_udf(
+            F.col("bytes"), F.col("codec"), F.col("sr_hz"), no_text, no_text, no_text
+        ).alias("d"),
     ).select(
         "fid",
         F.col("d.ok").alias("ok"),

@@ -1,14 +1,14 @@
-"""Audio decode stage: binary `bytes` -> PCM features, Arrow-batched.
+"""Audio decode kernel: binary `bytes` -> PCM -> per-clip features.
 
 The Spark recast of the reference's response-decode stage
 (/root/reference/http.go:124-173: content-type whitelist ->
 charset-detect -> transcode). For audio: codec whitelist -> container
-parse -> PCM decode -> per-clip features. Runs as ONE pandas UDF so the
-blob is decoded exactly once per row (the reference's single-pass
-computeInfo idiom) and the PCM never leaves the stage — only scalar
-features cross the (potential) shuffle boundary downstream
-(SURVEY.md §4.3 spill-safety: PCM is ~100x input, never materialized as
-a column).
+parse -> PCM decode -> per-clip features. decode_blob + _features run
+inside the ONE fused Arrow UDF (operators/fused.py), so the blob is
+decoded exactly once per row (the reference's single-pass computeInfo
+idiom) and the PCM never leaves the stage — only scalar features cross
+the (potential) shuffle boundary downstream (SURVEY.md §4.3
+spill-safety: PCM is ~100x input, never materialized as a column).
 
 Codecs: 'wav' (RIFF + RF64/BW64 64-bit sizes: PCM 8/16/24/32-bit,
 IEEE float 32/64, G.711 A-law/µ-law tags, IMA ADPCM mono+stereo with
@@ -23,19 +23,17 @@ matching the reference's whitelist-means-decoded contract
 (http.go:141-170). The lossy-compressed family (mp3/vorbis/opus/aac)
 decodes through an import-gated library slot (soundfile / ffmpeg CLI)
 and degrades to TYPED no_codec:<codec> error rows when no library is
-installed — the operators/visual.py PIL/cv2 pattern (round 8).
+installed (round 8).
 """
 
 from __future__ import annotations
 
-import hashlib
 import shutil
 import struct
 import subprocess
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -46,13 +44,12 @@ from pyspark.sql.types import (
 )
 
 # Lossy-compressed codecs decode through an IMPORT-GATED library slot
-# (soundfile if importable, else the ffmpeg CLI if on PATH — the
-# operators/visual.py PIL/cv2 pattern): whitelisted because a real
-# crawl-derived audio corpus is predominantly compressed, but when no
-# codec library is installed the row becomes a TYPED error
-# (err="no_codec:<codec>") rather than the catch-all
-# codec_not_whitelisted — callers can tell "install a codec" apart
-# from "this codec is out of contract" (round 8, VERDICT r7 #1).
+# (soundfile if importable, else the ffmpeg CLI if on PATH):
+# whitelisted because a real crawl-derived audio corpus is
+# predominantly compressed, but when no codec library is installed the
+# row becomes a TYPED error (err="no_codec:<codec>") rather than the
+# catch-all codec_not_whitelisted — callers can tell "install a codec"
+# apart from "this codec is out of contract" (round 8, VERDICT r7 #1).
 COMPRESSED_CODECS = ("mp3", "vorbis", "opus", "aac")
 
 CODEC_WHITELIST = (  # the textContentTypes analog
@@ -91,17 +88,6 @@ except Exception:  # noqa: BLE001
 _FFMPEG_BIN = shutil.which("ffmpeg")  # CLI slot (absent in this sandbox)
 
 
-def _fake_pcm(blob: bytes) -> np.ndarray:
-    """DETERMINISTIC FAKE decode for compressed payloads: a short PCM
-    buffer seeded by the payload digest — a pure function of the bytes,
-    so tests can re-derive expectations (the visual.py _fake_pixels
-    twin). Tests-only: production callers never request it."""
-    seed = int.from_bytes(hashlib.md5(blob).digest()[:8], "little")
-    rng = np.random.default_rng(seed)
-    n = 800 + int(seed % 800)
-    return (rng.random(n, dtype=np.float64).astype(np.float32) - 0.5)
-
-
 def _gather_s24(data: bytes, big_endian: bool = False) -> np.ndarray:
     """3-byte packed signed 24-bit -> int64 samples (one byte-gather +
     sign extension). ONE source of truth for every 24-bit container
@@ -135,23 +121,26 @@ def _downmix(pcm: np.ndarray, n_ch: int) -> np.ndarray:
     """Interleaved frames -> mono by per-frame mean (trailing partial
     frame dropped). ONE source of truth for every multi-channel path;
     runs BEFORE the float32/scale conversion (the frozen fixtures pin
-    that op order)."""
+    that op order). Accumulates in float64, so the mean of finite
+    float32 samples is finite; a float32 accumulator overflows (and
+    warns) on samples near 3e38."""
     if n_ch <= 1:
         return pcm
-    return pcm[: (len(pcm) // n_ch) * n_ch].reshape(-1, n_ch).mean(axis=1)
+    return (
+        pcm[: (len(pcm) // n_ch) * n_ch]
+        .reshape(-1, n_ch)
+        .mean(axis=1, dtype=np.float64)
+    )
 
 
-def _decode_compressed(
-    blob: bytes, codec: str, sr_hz: int | None, allow_fake: bool = False
-) -> tuple[np.ndarray, int]:
+def _decode_compressed(blob: bytes, codec: str) -> tuple[np.ndarray, int]:
     """mp3/vorbis/opus/aac via the import-gated slots. soundfile decodes
     in-memory (its own normalization convention, /2^(n-1)); the ffmpeg
     fallback transcodes to a WAV pipe that our own decode_wav parses
     (16-bit quantization — the CLI slot's documented precision). With a
     slot installed, a failure means the payload is corrupt
     (decode_error); with NO slot installed the typed no_codec:<codec>
-    row tells the operator to install one. allow_fake is the tests-only
-    plumbing escape hatch, exactly visual.py's contract."""
+    row tells the operator to install one."""
     if _soundfile is not None:  # pragma: no cover — lib absent here
         import io
 
@@ -182,8 +171,6 @@ def _decode_compressed(
         if proc.returncode != 0 or len(proc.stdout) < 44:
             raise ValueError("decode_error")
         return decode_wav(proc.stdout)
-    if allow_fake:  # tests-only: exercises batch plumbing without codecs
-        return _fake_pcm(blob), int(sr_hz or 16000)
     raise ValueError(f"no_codec:{codec}")
 
 
@@ -631,13 +618,10 @@ def decode_pcm_raw(blob: bytes, codec: str, sr_hz: int) -> tuple[np.ndarray, int
 
 
 def decode_blob(
-    blob: bytes | None,
-    codec: str | None,
-    sr_hz: int | None,
-    allow_fake: bool = False,
+    blob: bytes | None, codec: str | None, sr_hz: int | None
 ) -> tuple[np.ndarray | None, int, str | None]:
-    """Returns (pcm, sr, err). allow_fake affects ONLY the compressed
-    codecs' library slot (tests-only plumbing, visual.py contract)."""
+    """Returns (pcm, sr, err); err is a snake_case token when pcm is
+    None."""
     if blob is None or len(blob) == 0:
         return None, 0, "empty_bytes"
     if len(blob) > MAX_CONTENT_LENGTH:
@@ -656,7 +640,7 @@ def decode_blob(
         elif codec == "aiff":
             pcm, sr = decode_aiff(blob)
         elif codec in COMPRESSED_CODECS:  # import-gated library slot
-            pcm, sr = _decode_compressed(blob, codec, sr_hz, allow_fake)
+            pcm, sr = _decode_compressed(blob, codec)
         else:  # pcm_s24le / pcm_f32le / pcm_mulaw / pcm_alaw
             pcm, sr = decode_pcm_raw(blob, codec, sr_hz or 16000)
         if not (SR_MIN <= sr <= SR_MAX):
@@ -693,32 +677,6 @@ def _features(pcm: np.ndarray, sr: int) -> tuple:
     dc = float(pcm.mean(dtype=np.float64))
     zcr = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0
     return n, sr, rms, peak, clip_ratio, dc, zcr
-
-
-@F.pandas_udf(DECODE_SCHEMA)
-def decode_features_udf(blob: pd.Series, codec: pd.Series, sr_hz: pd.Series) -> pd.DataFrame:
-    rows = []
-    for b, c, s in zip(blob, codec, sr_hz):
-        # nullable int columns arrive as float64 with NaN holes
-        pcm, sr, err = decode_blob(b, c, int(s) if not pd.isna(s) else None)
-        if pcm is None:
-            rows.append((False, err, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0))
-        else:
-            rows.append((True, None, *_features(pcm, sr)))
-    return pd.DataFrame(
-        rows,
-        columns=[f.name for f in DECODE_SCHEMA.fields],
-    )
-
-
-def with_decode_features(df: DataFrame, out_col: str = "audio") -> DataFrame:
-    """Attach the decode-feature struct. One projection; the 10 MiB /
-    whitelist guards are checked inside the batch (cheap) AND exposed as
-    pushdown-friendly predicates via `decode_prefilter` for jobs that
-    want to skip decode entirely for rejected rows."""
-    return df.withColumn(
-        out_col, decode_features_udf(F.col("bytes"), F.col("codec"), F.col("sr_hz"))
-    )
 
 
 def decode_prefilter() -> Column:
