@@ -20,7 +20,6 @@ cases.
 from __future__ import annotations
 
 import io
-import struct
 import wave
 
 import numpy as np
@@ -158,10 +157,6 @@ def make_row(i: int) -> tuple[str, bytes, int, int, str, str]:
     if r >= 96 and transcript:
         transcript = transcript * 40  # very long (skew)
     return (clip_id_for(i), blob, sr, dur_ms, codec, transcript)
-
-
-def expected_lang(i: int) -> str | None:
-    return POOL[i % len(POOL)][1]
 
 
 def generate_clips_df(spark, n_rows: int, num_partitions: int | None = None):

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import oracle_sql_gen
 from .functions import dates, langid, quality, rules, scrub, textnorm, tokens
-from .functions.textnorm import JAVA_PUNCT_SYM
 from .operators import dedup, similarity, stats
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -357,9 +356,6 @@ def lang_rules_docs(spark, sf_dir):
         ),
     )
     return d.select("doc_id", lang_rule.alias("lang_rule"))
-
-
-_DUCK_NOPUNCT = "regexp_replace(text, '\\pP', '', 'g')"
 
 
 @query(
@@ -1065,9 +1061,7 @@ def quantize_embeddings(spark, sf_dir):
 )
 def sessionize_events(spark, sf_dir):
     """Gap-based sessionization (30-min inactivity): lag-flag + running
-    sum + grouped agg, one shuffle on user_id. The streaming twin is the
-    applyInPandasWithState operator (streaming/jobs.stream_sessionize);
-    tests pin batch==streaming parity."""
+    sum + grouped agg, one shuffle on user_id."""
     e = _t(spark, sf_dir, "events").filter(F.col("user_id") % 25 == 0)
     return stats.sessionize(e, "user_id", "ts", "event_id", "value", gap_minutes=30)
 

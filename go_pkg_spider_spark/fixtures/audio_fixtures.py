@@ -21,13 +21,13 @@ Determinism rules:
   any canonicalization of identical doubles agrees); the only
   rounding is what the operators themselves do (centroid/rolloff to
   3, silence to 6).
-- HAND_CHECKED pins a handful of rows to arithmetic done BY HAND in
-  the comments (breaking the decode<->decode circularity the same
-  way the round-5 simtext hand-ratio rows do for difflib).
 
 tests/test_audio_fixtures.py re-derives EXPECTED from the live
 operators at test time — a silent decode-semantics change trips the
-test AND the driver gate.
+test AND the driver gate — and pins a handful of rows to arithmetic
+done BY HAND (HAND_CHECKED there), breaking the decode<->decode
+circularity the same way the round-5 simtext hand-ratio rows do for
+difflib.
 """
 
 from __future__ import annotations
@@ -598,25 +598,6 @@ def build_rows() -> list[tuple[int, bytes | None, str | None, int | None]]:
 
 # ------------------------------------------------------------ derivation
 
-EXPECTED_COLUMNS = (
-    "fid",
-    "ok",
-    "err",
-    "n_samples",
-    "sr_decoded",
-    "rms",
-    "peak",
-    "clip_ratio",
-    "dc_offset",
-    "zcr",
-    "n_frames",
-    "centroid_hz",
-    "rolloff_hz",
-    "silence_ratio",
-    "resampled_n",
-)
-
-
 def derive_expected() -> list[tuple]:
     """Recompute the expectation table from the LIVE operators (the
     drift alarm; EXPECTED below is this output frozen)."""
@@ -637,47 +618,6 @@ def derive_expected() -> list[tuple]:
         out.append((fid, *dec, n_frames, cent, roll, sil, rn))
     return out
 
-
-# Hand-derived values (documented arithmetic; see build_rows comments).
-# q15: int16 truncation of 0.5*32767 = 16383.5 -> 16383, then the
-# decode normalization DIVIDES IN FLOAT32 (decode.py:79), so the exact
-# constant is the float32-rounded quotient 16383/32767 =
-# 0.4999847412109375 (float64 division would give ...740745262 — one
-# float32 ulp away; the float32 rounding is part of the contract).
-_Q15 = float(np.float32(16383.0) / np.float32(32767.0))
-_Q25 = float(np.float32(8191.0) / np.float32(32767.0))  # trunc(0.25*32767)=8191
-_Q23 = float(np.float32(4194303.0) / np.float32(8388607.0))  # 24-bit +0.5
-_Q7 = float(np.float32(31.0) / np.float32(127.0))  # 8-bit +0.25
-HAND_CHECKED: dict[int, dict[str, float | int | bool]] = {
-    # silence: all-zero samples
-    8: {"ok": True, "rms": 0.0, "peak": 0.0, "dc_offset": 0.0, "zcr": 0.0,
-        "clip_ratio": 0.0, "n_samples": 4000, "silence_ratio": 1.0},
-    # const +0.5: every sample exactly 16383/32767 (float32-exact: 16383
-    # and 32767 are both < 2^24); mean/rms/peak all equal it
-    9: {"ok": True, "rms": _Q15, "peak": _Q15, "dc_offset": _Q15, "zcr": 0.0,
-        "n_samples": 2000},
-    # ±0.5 square: |x| = 16383/32767 everywhere → rms=peak=q15; sign
-    # flips every adjacent pair → zcr = 1.0; 2000 (+,-) pairs → dc = 0
-    10: {"ok": True, "rms": _Q15, "peak": _Q15, "dc_offset": 0.0, "zcr": 1.0,
-         "n_samples": 4000},
-    # full-scale: 1.0*32767 → 32767 → 1.0 exactly
-    11: {"ok": True, "rms": 1.0, "peak": 1.0, "clip_ratio": 1.0,
-         "dc_offset": 1.0, "zcr": 0.0, "n_samples": 4000},
-    # sub-frame clip: decodes fine but yields zero 25ms frames
-    14: {"ok": True, "n_samples": 320, "n_frames": 0, "silence_ratio": 1.0},
-    # single sample 0.25 → trunc(8191.75)=8191, float32 quotient
-    15: {"ok": True, "n_samples": 1, "peak": _Q25, "zcr": 0.0},
-    # odd data chunk: 1001 bytes → 500 samples
-    17: {"ok": True, "n_samples": 500},
-    # raw pcm odd byte count: 2001 bytes → 1000 samples
-    22: {"ok": True, "n_samples": 1000},
-    # 24-bit const +0.5: trunc(0.5*8388607)=4194303, float32 quotient
-    52: {"ok": True, "rms": _Q23, "peak": _Q23, "dc_offset": _Q23,
-         "zcr": 0.0, "n_samples": 2000, "sr_decoded": 16000},
-    # 8-bit const +0.25: trunc(0.25*127)=31, float32 quotient
-    54: {"ok": True, "rms": _Q7, "peak": _Q7, "dc_offset": _Q7,
-         "zcr": 0.0, "n_samples": 2000},
-}
 
 # FROZEN expectations (derive_expected() output; regenerate ONLY on an
 # intentional semantics change via tools/regen_audio_fixtures.py).

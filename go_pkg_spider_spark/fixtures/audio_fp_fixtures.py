@@ -23,12 +23,15 @@ Determinism: closed-form signals only (chirp/AM/hash-noise reuse the
 audio_fixtures conventions); the fingerprint kernel is rfft +
 reduceat + splitmix64 — no RNG, no library slots.
 
-`derive_expected()` recomputes EXPECTED from the live kernel, with
-the GROUPING recomputed by an INDEPENDENT brute-force union-find over
-all pairs — so the frozen truth cross-checks the production
-pigeonhole-block LSH path against exhaustive search (the block split
-guarantees recall at hamming <= 7; this is where that guarantee is
-actually verified). tests/test_audio_fp.py re-derives at test time.
+tests/test_audio_fp.py (`derive_expected`) recomputes EXPECTED from
+the live kernel at test time, with the GROUPING recomputed by an
+INDEPENDENT brute-force union-find over all pairs — so the frozen
+truth cross-checks the production pigeonhole-block LSH path against
+exhaustive search (the block split guarantees recall at hamming <= 7;
+this is where that guarantee is actually verified). The subfp,
+increment and snippet tables below are re-derived the same way in
+tests/test_audio_fp.py, test_audio_dedup_increment.py and
+test_audio_snippet.py.
 """
 
 from __future__ import annotations
@@ -36,9 +39,6 @@ from __future__ import annotations
 import numpy as np
 
 from .audio_fixtures import _aiff, _flac, _hashnoise, _i16, _wav, _wav24
-
-FP_GROUP_HAMMING = 7  # mirrors audio_fp.audio_neardup_groups default
-
 
 def _chirp(n: int, sr: int, f0: float, f1: float, amp: float = 0.6) -> np.ndarray:
     """Linear chirp sweeping f0 -> f1 over the clip (closed form)."""
@@ -95,52 +95,6 @@ def build_rows() -> list[tuple[int, bytes | None, str | None, int | None]]:
     add(_wav(_chirp(600, sr, 200.0, 2000.0), sr), "wav", sr)
 
     return rows
-
-
-EXPECTED_COLUMNS = (
-    "fid",
-    "err",
-    "n_subfp",
-    "fp64",
-    "fp_degenerate",
-    "group_id",
-)
-
-
-def derive_expected() -> list[tuple]:
-    """Recompute EXPECTED from the LIVE fingerprint kernel, grouping by
-    brute-force all-pairs hamming + union-find (independent of the
-    production pigeonhole-LSH path; the drift alarm AND the recall
-    cross-check)."""
-    from ..operators.audio_fp import fingerprint_for_clip
-
-    rows = [
-        fingerprint_for_clip(fid, blob, codec, sr_hz)
-        for fid, blob, codec, sr_hz in build_rows()
-    ]
-    # union-find over eligible rows (decoded, non-degenerate)
-    parent = {fid: fid for fid, err, _, _, deg in rows if err is None and not deg}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    elig = sorted(parent)
-    for i, a in enumerate(elig):
-        fa = next(r[3] for r in rows if r[0] == a)
-        for b in elig[i + 1 :]:
-            fb = next(r[3] for r in rows if r[0] == b)
-            if bin(fa ^ fb).count("1") <= FP_GROUP_HAMMING:
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    out = []
-    for fid, err, n_subfp, fp64, deg in rows:
-        gid = find(fid) if fid in parent else fid
-        out.append((fid, err, n_subfp, fp64, deg, gid))
-    return out
 
 
 def _noisy(sig: np.ndarray, snr_db: float) -> np.ndarray:
@@ -200,83 +154,18 @@ def build_subfp_rows() -> list[tuple[str, bytes | None, str | None, int | None]]
     ]
 
 
-SUBFP_EXPECTED_COLUMNS = (
-    "clip_id",
-    "err",
-    "n_subfp",
-    "fp_degenerate",
-    "subfp_group",
-    "fp64_group",
-)
-
-
-def derive_subfp_expected() -> list[tuple]:
-    """Recompute SUBFP_EXPECTED from the live kernels: BOTH tiers'
-    groupings by independent brute-force union-find over all pairs,
-    mirroring the production predicates exactly — fp64 tier: hamming
-    <= FP_GROUP_HAMMING; subfp tier: >= 1 shared encoded (cell, value)
-    probe AND bit-set Jaccard / overlap-ratio at the best scanned
-    alignment. The
-    frozen table therefore cross-checks probe-blocking recall AND the
-    measured fp64-misses-these contrast (drift alarm for either
-    tier)."""
-    from ..operators.audio_fp import (
-        FP_MIN_SHARED_SITES,
-        _fp_row_full,
-        probe_shared_sites,
-        subfp_match_stats,
-        subfp_pair_passes,
-    )
-
-    full = {
-        cid: _fp_row_full(cid, blob, codec, sr_hz)
-        for cid, blob, codec, sr_hz in build_subfp_rows()
-    }
-    elig = sorted(cid for cid, r in full.items() if r[1] is None and not r[4])
-
-    def union_find(match) -> dict[str, str]:
-        parent = {cid: cid for cid in full}
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for i, a in enumerate(elig):
-            for b in elig[i + 1 :]:
-                if match(full[a], full[b]):
-                    ra, rb = find(a), find(b)
-                    if ra != rb:
-                        parent[max(ra, rb)] = min(ra, rb)
-        return {cid: find(cid) for cid in full}
-
-    def subfp_match(ra, rb) -> bool:
-        hit = probe_shared_sites(ra[6], rb[6]) >= FP_MIN_SHARED_SITES
-        jac, ratio, shift = subfp_match_stats(ra[5], rb[5])
-        return hit and subfp_pair_passes(jac, ratio, shift)
-
-    def fp64_match(ra, rb) -> bool:
-        return bin(ra[3] ^ rb[3]).count("1") <= FP_GROUP_HAMMING
-
-    sub_g = union_find(subfp_match)
-    fp_g = union_find(fp64_match)
-    return [
-        (cid, r[1], r[2], r[4], sub_g[cid], fp_g[cid])
-        for cid, r in sorted(full.items())
-    ]
-
-
-# Frozen output of derive_subfp_expected() — the by-construction truth
-# for the audio_subfp_docs gate. a1/a2 (20/15 dB noisy twins), a3
-# (60% truncation) and a4 (200 ms start-crop) group with a0 ONLY at
-# the subfp tier; b1 (40% truncation of b0) is containment-guarded
-# out of both; t0 (700 ms crop of d0, past the shift-scan window)
-# stays out on Jaccard (measured 0.11 at best scan vs 0.875 for the
-# in-window a4) even though its overlap ratio (0.63) would pass.
-# Regenerated once in round 8 for the trim-robustness upgrade
-# (coarse-cell probes + shift-scan verify) — existing rows were
-# drift-free under the new kernels; a4/d0/t0 are the new pins.
+# Frozen output of derive_subfp_expected() (tests/test_audio_fp.py) —
+# the by-construction truth for the audio_subfp_docs gate. a1/a2
+# (20/15 dB noisy twins), a3 (60% truncation) and a4 (200 ms start-
+# crop) group with a0 ONLY at the subfp tier; b1 (40% truncation of
+# b0) is containment-guarded out of both; t0 (700 ms crop of d0, past
+# the shift-scan window) stays out on Jaccard (measured 0.11 at best
+# scan vs 0.875 for the in-window a4) even though its overlap ratio
+# (0.63) would pass. Regenerated once in round 8 for the trim-
+# robustness upgrade (coarse-cell probes + shift-scan verify) —
+# existing rows were drift-free under the new kernels; a4/d0/t0 are
+# the new pins.
+# Row: (clip_id, err, n_subfp, fp_degenerate, subfp_group, fp64_group).
 SUBFP_EXPECTED: list[tuple] = [
     ("a0", None, 29, False, "a0", "a0"),
     ("a1", None, 29, False, "a0", "a1"),
@@ -301,6 +190,7 @@ SUBFP_EXPECTED: list[tuple] = [
 # grouping at hamming 0. All ACTIVE rows are dense streams and their
 # fp64 values are bit-identical to the pre-abstention freeze; the
 # hand-pin arithmetic lives in tests/test_audio_fp.py.
+# Row: (fid, err, n_subfp, fp64, fp_degenerate, group_id).
 EXPECTED: list[tuple] = [
     (0, None, 29, -3708580224821936097, False, 0),
     (1, None, 29, -3708580224821936097, False, 0),
@@ -352,111 +242,12 @@ def build_increment_rows() -> list[tuple[str, bytes | None, str | None, int | No
     ]
 
 
-INCREMENT_EXPECTED_COLUMNS = (
-    "clip_id",
-    "err",
-    "n_subfp",
-    "fp_degenerate",
-    "group_id",
-    "decision",
-)
-
-
-def derive_increment_expected() -> list[tuple]:
-    """Recompute the incremental gate truth INDEPENDENTLY of the Spark
-    operators: committed groups = brute-force subfp union-find over
-    the base rows alone; increment labels = union-find over the batch
-    rows plus one node per reachable committed group (prefixed so the
-    committed group always wins the min-id label — the
-    assign_increment semantics re-derived from the predicates, not
-    from the production code path)."""
-    from ..operators.audio_fp import (
-        FP_MIN_SHARED_SITES,
-        _fp_row_full,
-        probe_shared_sites,
-        subfp_match_stats,
-        subfp_pair_passes,
-    )
-
-    def match(ra, rb) -> bool:
-        if probe_shared_sites(ra[6], rb[6]) < FP_MIN_SHARED_SITES:
-            return False
-        jac, ratio, shift = subfp_match_stats(ra[5], rb[5])
-        return subfp_pair_passes(jac, ratio, shift)
-
-    base_rows = {cid: r for cid, r in (
-        (cid, _fp_row_full(cid, b, c, s))
-        for cid, b, c, s in build_subfp_rows()
-        if cid in INCREMENT_BASE_IDS
-    )}
-    batch_rows = {
-        cid: _fp_row_full(cid, b, c, s)
-        for cid, b, c, s in build_increment_rows()
-    }
-
-    def eligible(rows):
-        return sorted(c for c, r in rows.items() if r[1] is None and not r[4])
-
-    # committed groups over the base alone (the batch job's truth)
-    parent = {cid: cid for cid in base_rows}
-
-    def find(p, x):
-        while p[x] != x:
-            p[x] = p[p[x]]
-            x = p[x]
-        return x
-
-    b_elig = eligible(base_rows)
-    for i, a in enumerate(b_elig):
-        for b in b_elig[i + 1:]:
-            ra, rb = find(parent, a), find(parent, b)
-            if ra != rb and match(base_rows[a], base_rows[b]):
-                parent[max(ra, rb)] = min(ra, rb)
-    base_group = {cid: find(parent, cid) for cid in base_rows}
-
-    # increment graph: batch nodes + prefixed committed-group nodes
-    nodes = {cid: cid for cid in batch_rows}
-    i_elig = eligible(batch_rows)
-    for i, a in enumerate(i_elig):
-        for b in i_elig[i + 1:]:
-            if match(batch_rows[a], batch_rows[b]):
-                ra, rb = find(nodes, a), find(nodes, b)
-                if ra != rb:
-                    nodes[max(ra, rb)] = min(ra, rb)
-    for a in i_elig:
-        for b in b_elig:
-            if match(batch_rows[a], base_rows[b]):
-                g = "\x00" + base_group[b]
-                nodes.setdefault(g, g)
-                ra, rb = find(nodes, a), find(nodes, g)
-                if ra != rb:
-                    nodes[max(ra, rb)] = min(ra, rb)
-
-    out = []
-    for cid in sorted(batch_rows):
-        err, n_subfp, deg = (
-            batch_rows[cid][1],
-            batch_rows[cid][2],
-            batch_rows[cid][4],
-        )
-        label = find(nodes, cid) if cid in i_elig else cid
-        group = label[1:] if label.startswith("\x00") else label
-        if err is not None:
-            decision = "error"
-        elif deg:
-            decision = "keep_degenerate"
-        elif group != cid:
-            decision = "drop_audio_dup"
-        else:
-            decision = "keep"
-        out.append((cid, err, n_subfp, deg, group, decision))
-    return out
-
-
-# Frozen output of derive_increment_expected() — the audio_increment
-# gate truth: a1/a2/a4 attach to the committed a0 group, t0 keeps
+# Frozen output of derive_increment_expected()
+# (tests/test_audio_dedup_increment.py) — the audio_increment gate
+# truth: a1/a2/a4 attach to the committed a0 group, t0 keeps
 # (past the scan window), x1 drops into the NEW x0 group founded by
 # the increment, z0/e1 stay degenerate/error singletons.
+# Row: (clip_id, err, n_subfp, fp_degenerate, group_id, decision).
 INCREMENT_EXPECTED: list[tuple] = [
     ("a1", None, 29, False, "a0", "drop_audio_dup"),
     ("a2", None, 29, False, "a0", "drop_audio_dup"),
@@ -530,64 +321,12 @@ def build_snippet_query_rows() -> list[tuple]:
     ]
 
 
-SNIPPET_EXPECTED_COLUMNS = ("qid", "clip_id", "jaccard", "pos")
-
-
-def derive_snippet_expected() -> list[tuple]:
-    """Brute-force snippet truth: every eligible query scored against
-    every eligible index clip with the production predicate (shared
-    distinct shingle keys >= FP_SNIPPET_MIN_SHARED, best-window
-    Jaccard >= FP_SNIPPET_JACCARD) — independent of the Spark
-    blocking/join path, so the gate cross-checks candidate recall."""
-    from ..operators.audio_fp import (
-        FP_SNIPPET_JACCARD,
-        FP_SNIPPET_MIN_SHARED,
-        _fp_row_full,
-        snippet_shingle_keys,
-        subfp_best_window,
-        unpack_subfps,
-    )
-
-    idx = {
-        cid: r
-        for cid, r in (
-            (cid, _fp_row_full(cid, b, c, s))
-            for cid, b, c, s in build_snippet_index_rows()
-        )
-    }
-    qs = {
-        cid: r
-        for cid, r in (
-            (cid, _fp_row_full(cid, b, c, s))
-            for cid, b, c, s in build_snippet_query_rows()
-        )
-    }
-
-    def elig(rows):
-        return sorted(c for c, r in rows.items() if r[1] is None and not r[4])
-
-    out = []
-    for qid in elig(qs):
-        qkeys = set(
-            int(k) for k in snippet_shingle_keys(unpack_subfps(qs[qid][5]))
-        )
-        for cid in elig(idx):
-            hkeys = set(
-                int(k)
-                for k in snippet_shingle_keys(unpack_subfps(idx[cid][5]))
-            )
-            if len(qkeys & hkeys) < FP_SNIPPET_MIN_SHARED:
-                continue
-            jac, pos = subfp_best_window(idx[cid][5], qs[qid][5])
-            if jac >= FP_SNIPPET_JACCARD:
-                out.append((qid, cid, round(jac, 6), pos))
-    return sorted(out)
-
-
-# Frozen output of derive_snippet_expected(): the three h0 cuts land
-# on h0 at the cut position (156 hops = 5 s; the sub-hop cut one hop
-# later), the h1 cut on h1 only (194 hops = 6.2 s); the
-# control/degenerate/error queries match nothing.
+# Frozen output of derive_snippet_expected()
+# (tests/test_audio_snippet.py): the three h0 cuts land on h0 at the
+# cut position (156 hops = 5 s; the sub-hop cut one hop later), the h1
+# cut on h1 only (194 hops = 6.2 s); the control/degenerate/error
+# queries match nothing.
+# Row: (qid, clip_id, jaccard, pos).
 SNIPPET_EXPECTED: list[tuple] = [
     ("q_exact", "h0", 1.0, 156),
     ("q_h1", "h1", 0.931034, 194),

@@ -33,7 +33,6 @@ CHARSET_LANG_MAP: dict[str, str] = {
 # charset provenance enum (/root/reference/charset.go:13-18)
 POS_HEADER = "header"
 POS_HTML = "html"
-POS_GUESS = "guess"
 POS_VALID = "valid"
 
 

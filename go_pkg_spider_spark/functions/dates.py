@@ -1,7 +1,7 @@
 """Publish-date extraction cascade — the reference's 14-regex family
 (/root/reference/extract/content.go:23-68) and its selection rules
-(getTime cascade :310-373, longest-wins A8 :674-691, max-plausible A10
-:574-585) as column expressions.
+(getTime cascade :310-373, longest-wins A8 :674-691) as column
+expressions.
 
 Date regexes are rewritten in the common Java/RE2 subset (no (?i) with
 CJK needed; en month names lowercased via F.lower before match).
@@ -9,9 +9,9 @@ Priority is a coalesce over ordered extraction results — exactly the
 reference's cascade ordering (zh-prefixed > full > short > en1 > en2 >
 enUS > no-year).
 
-Determinism: no-year dates need a year — the reference prepends the
-CURRENT year (content.go:461-466); we require an injected `run_date`
-(SURVEY.md §7: never current_date in the pipeline).
+Callers get the raw match and its normalized string
+(normalize_date_string), never a parsed timestamp: a no-year match
+stays year-less, so no current_date enters the pipeline (SURVEY.md §7).
 """
 
 from __future__ import annotations
@@ -49,10 +49,6 @@ _D_NOYEAR = (
 )
 ZH_PUBLISH_PREFIX = "(发布|创建|出版|发表|编辑)?(时间|日期)"
 _D_ZH_PREFIXED = ZH_PUBLISH_PREFIX + "[\\p{P} ]{1,8}" + _D_FULL
-# WeChat ct="1670000000" (content.go:56)
-_D_WX_UNIX = '[cC][tT][\\t ]{0,4}=[\\t ]{0,4}"(1[2-9][0-9]{8})"'
-# URL-path date 20221003 (content.go:59)
-URL_DATE = "(20[2-3][0-9])[/]?(0[1-9]|1[0-2])[/]?(0[1-9]|[1-2][0-9]|3[0-1])"
 
 
 def _first(text: Column, pattern: str, group: int = 0) -> Column:
@@ -112,21 +108,6 @@ def longest_date(text: Column) -> Column:
     )
 
 
-def nearest_date_to_anchor(text: Column, anchor: Column) -> Column:
-    """A9 nearest-argmin (content.go:522-541): the candidate minimizing
-    |instr(text,date) - instr(text,anchor)|."""
-    t = F.coalesce(text, F.lit(""))
-    cands = extract_all_full_dates(text)
-    anchor_pos = F.instr(t, anchor)
-    with_d = F.transform(
-        cands,
-        lambda x: F.struct(
-            F.abs(F.instr(t, x) - anchor_pos).alias("d"), x.alias("raw")
-        ),
-    )
-    return F.when(F.size(cands) > 0, F.array_min(with_d)["raw"])
-
-
 def normalize_date_string(raw: Column) -> Column:
     """F11 cleanup chain (content.go:235-254, 485-494): zh units ->
     ascii separators, strip spaces around T, drop :NNN(N) garbage tails
@@ -144,50 +125,3 @@ def normalize_date_string(raw: Column) -> Column:
     c = F.regexp_replace(c, r"([+-]\d{2}):?\d{2}$", "")  # RegexZone
     c = F.regexp_replace(c, r":\s*$", "")
     return F.trim(F.regexp_replace(c, r"\s{2,}", " "))
-
-
-def to_timestamp_cascade(raw: Column, run_date: str) -> Column:
-    """F12 str->timestamp with try-fallbacks; no-year shapes get the
-    injected run_date's year (NEVER current_date — determinism,
-    SURVEY.md §7)."""
-    n = normalize_date_string(raw)
-    # US M/D/YYYY -> YYYY-M-D reorder (RegexEnUsPublishDate shape)
-    n = F.regexp_replace(n, r"^(\d{1,2})/(\d{1,2})/(20\d{2})", "$3-$1-$2")
-    year = run_date[:4]
-    # no-year MM-DD (not followed by a third dash group = not a full date)
-    with_year = F.when(
-        n.rlike(r"^\d{1,2}-\d{1,2}(?![-0-9])"), F.concat(F.lit(year + "-"), n)
-    ).otherwise(n)
-    two_digit_year = F.when(
-        with_year.rlike(r"^\d{2}-\d{1,2}-\d{1,2}"), F.concat(F.lit("20"), with_year)
-    ).otherwise(with_year)
-    c = two_digit_year
-    return F.coalesce(
-        F.try_to_timestamp(c, F.lit("yyyy-M-d H:m:s")),
-        F.try_to_timestamp(c, F.lit("yyyy-M-d H:m")),
-        F.try_to_timestamp(c, F.lit("yyyy-M-d")),
-        F.try_to_timestamp(F.regexp_replace(c, "/", "-"), F.lit("yyyy-M-d H:m:s")),
-        F.try_to_timestamp(F.regexp_replace(c, "/", "-"), F.lit("yyyy-M-d")),
-    )
-
-
-def max_plausible_timestamp(text: Column, run_date: str) -> Column:
-    """A10 (content.go:574-585): among candidates pick the max timestamp
-    not in the future (<= run_date + 1 day). NOTE the reference has a
-    bug — its `maxTimestamp` accumulator is never updated, so it
-    effectively returns the FIRST plausible candidate; we implement the
-    documented INTENT (true max) and pin the decision in
-    tests/test_dates.py (SURVEY.md §7 'replicate-or-fix': fix, because
-    the bug makes the result order-dependent)."""
-    cands = extract_all_full_dates(text)
-    ts = F.transform(cands, lambda x: to_timestamp_cascade(x, run_date))
-    limit = F.to_timestamp(F.lit(run_date)) + F.expr("INTERVAL 1 DAY")
-    ok = F.filter(ts, lambda x: x.isNotNull() & (x <= limit))
-    return F.when(F.size(ok) > 0, F.array_max(ok))
-
-
-def wx_script_time(text: Column) -> Column:
-    """RegexWxScriptTime (content.go:56, converted at :1183-1184):
-    unix-seconds inside ct="..." -> timestamp."""
-    s = F.regexp_extract(F.coalesce(text, F.lit("")), _D_WX_UNIX, 1)
-    return F.when(s != "", F.timestamp_seconds(s.cast("long")))

@@ -13,8 +13,8 @@ Recasts:
       suffix dim with wildcard/exception semantics — the SURVEY §2.8
       'broadcast PSL suffix table + longest-suffix join' design, used
       when real-world coverage matters more than a literal-only plan.
-  `psl_split` is the pure-Python resolver (same algorithm) for tests
-  and driver-side use.
+  tests/test_psl.py checks it against a pure-Python resolver of the
+  same algorithm.
 - HostGovCountryMap + MetaFromHost (/root/reference/extract/meta.go:
   7-72, 75-183, J4): gov-TLD -> country/category plus the (tld, lang)
   conjunction rules as one F.when chain.
@@ -104,36 +104,6 @@ def load_psl() -> tuple[frozenset[str], frozenset[str], frozenset[str]]:
         frozenset(),
         frozenset(),
     )
-
-
-def psl_split(host: str) -> tuple[str, str, str] | None:
-    """Pure-Python DomainParse against the full PSL: returns
-    (subdomain, domain, tld) or None when the host has no registrable
-    domain (it IS a public suffix, or is a single label). Algorithm per
-    publicsuffix.org/list/: prevailing rule = matching exception (minus
-    its leftmost label) if any, else the longest matching rule, else
-    the implicit '*' (last label)."""
-    normal, wild, exc = load_psl()
-    labels = [x for x in (host or "").lower().strip().split(".") if x != ""]
-    n = len(labels)
-    if n == 0:
-        return None
-    suffix_len = 1
-    for k in range(1, n + 1):
-        cand = ".".join(labels[n - k :])
-        if cand in exc:
-            suffix_len = k - 1
-            break
-        if cand in normal:
-            suffix_len = max(suffix_len, k)
-        if k >= 2 and ".".join(labels[n - k + 1 :]) in wild:
-            suffix_len = max(suffix_len, k)
-    if n <= suffix_len:
-        return None
-    tld = ".".join(labels[n - suffix_len :])
-    domain = labels[n - suffix_len - 1]
-    sub = ".".join(labels[: n - suffix_len - 1])
-    return (sub, domain, tld)
 
 
 def psl_rules_df(spark) -> DataFrame:

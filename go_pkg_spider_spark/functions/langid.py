@@ -20,8 +20,6 @@ NEEDS_MODEL_* — never on the full table.
 
 from __future__ import annotations
 
-import math
-
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType

@@ -39,7 +39,6 @@ from .langid import SEED_CORPUS
 _ORDER = 3
 _ADD_K = 0.1
 _BACKOFF = math.log(0.4)
-_PAD = 2  # \x02 pad codepoint
 _KMUL = np.uint64(1 << 21)  # codepoint-key radix (> max codepoint)
 _model_cache: dict[str, tuple] = {}
 

@@ -82,15 +82,6 @@ def scrub(col: Column) -> Column:
     return c
 
 
-def scrub_hits(col: Column) -> Column:
-    """Per-class hit counts (struct) for metrics — same patterns, count
-    instead of replace. Cheap: shares the scan with `scrub` via CSE."""
-    fields = [
-        F.regexp_count(col, F.lit(pat)).alias(name) for name, pat, _ in SCRUB_BANK
-    ]
-    return F.struct(*fields)
-
-
 def oracle_scrub_sql(expr: str) -> str:
     """The identical bank as a nested DuckDB regexp_replace chain (RE2
     dialect, 'g' flag) for oracle parity."""

@@ -1,13 +1,12 @@
 """Text-similarity argmax (F15/A11) — fun.SimilarityText
 (/root/reference/extract/content.go:820, 887, 963, 999, 1151) as a
-vectorized UDF, plus the per-row candidate-argmax selector used by the
-title cascade (getTitleByEditDistance :956-978, h1/h2 match :876-925).
+vectorized per-row candidate-argmax UDF (the selector of the title
+cascade's getTitleByEditDistance :956-978, h1/h2 match :876-925).
 
 Per-row candidates only (no cross-row work, no shuffle): the UDF takes
 (candidates array, target) and returns the best candidate + its ratio.
 difflib.SequenceMatcher.ratio plays the reference's
-longest-common-substring similarity role; thresholds stay the caller's
-(TitleSimZh 0.3 / word-langs 0.5, content.go:71-74, 184-187).
+longest-common-substring similarity role; thresholds stay the caller's.
 """
 
 from __future__ import annotations
@@ -15,7 +14,7 @@ from __future__ import annotations
 from difflib import SequenceMatcher
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 BEST_MATCH_SCHEMA = StructType(
@@ -32,11 +31,6 @@ def similarity_ratio(a: str | None, b: str | None) -> float:
     return SequenceMatcher(None, a, b).ratio()
 
 
-@F.pandas_udf(DoubleType())
-def similarity_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([similarity_ratio(x, y) for x, y in zip(a, b)])
-
-
 @F.pandas_udf(BEST_MATCH_SCHEMA)
 def best_match_udf(candidates: pd.Series, target: pd.Series) -> pd.DataFrame:
     rows = []
@@ -49,62 +43,3 @@ def best_match_udf(candidates: pd.Series, target: pd.Series) -> pd.DataFrame:
                 best, best_r = c, r
         rows.append((best, round(best_r, 6)))
     return pd.DataFrame(rows, columns=["best", "ratio"])
-
-
-TITLE_PICK_SCHEMA = StructType(
-    [
-        StructField("title", StringType()),
-        StructField("title_pos", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(TITLE_PICK_SCHEMA)
-def pick_title_udf(segs: pd.Series, meta: pd.Series, thr: pd.Series) -> pd.DataFrame:
-    """The WHOLE getTitle cascade (content.go:844-978) in ONE Python hop:
-    headline (first segment similarity-matches the cleaned meta title) ->
-    content (best-matching segment anywhere) -> meta-title fallback.
-    Fusing matters: as three separate UDF calls (first_sim, best_match,
-    best_sim) the projection carried three ArrowEvalPython nodes — the
-    exact worker-pool/socket topology BENCH/BASELINE.md measured at ~85%
-    kernel time at local[32]."""
-    rows = []
-    for cands, t, th in zip(segs, meta, thr):
-        cands = list(cands) if cands is not None else []
-        t = t or ""
-        if cands and similarity_ratio(cands[0], t) > th:
-            rows.append((cands[0], "headline"))
-            continue
-        best, best_r = None, 0.0
-        for c in cands:
-            r = similarity_ratio(c, t)
-            if r > best_r:
-                best, best_r = c, r
-        if best is not None and best_r > th:
-            rows.append((best, "content"))
-        else:
-            rows.append((t, "title"))
-    return pd.DataFrame(rows, columns=["title", "title_pos"])
-
-
-def best_matching_segment(text: Column, target: Column, threshold: float) -> Column:
-    """A11: argmax similarity over the transcript's segments vs a target
-    string; NULL when below threshold (the titleSim gate)."""
-    segs = F.filter(
-        F.transform(
-            F.split(F.coalesce(text, F.lit("")), r"\n"),
-            lambda s: F.trim(F.regexp_replace(s, r"\s+", " ")),
-        ),
-        lambda s: s != "",
-    )
-    m = best_match_udf(segs, target)
-    return F.when(m["ratio"] > threshold, m["best"])
-
-
-# thresholds (content.go:71-74)
-TITLE_SIM_ZH = 0.3
-TITLE_SIM_WORD = 0.5
-
-
-def title_sim_threshold(lang: Column) -> Column:
-    return F.when(lang == "zh", TITLE_SIM_ZH).otherwise(TITLE_SIM_WORD)

@@ -7,28 +7,23 @@ as built-in Spark column expressions so they stay inside whole-stage
 codegen (no Python in the hot path).
 
 Regex dialect note: Spark compiles Java `java.util.regex` patterns;
-the DuckDB oracle uses RE2. The JAVA_* / RE2_* constant pairs below pin
-the equivalent class spellings in both dialects (SURVEY.md §7 risk
-"Unicode property regex dialect drift"); tests/test_textnorm.py pins
-them against shared fixtures.
+the DuckDB oracle uses RE2, which spells the same classes without
+Java's Is/In prefixes (SURVEY.md §7 risk "Unicode property regex
+dialect drift"). The JAVA_* constants below are the Spark side;
+tests/test_textnorm.py pins them against shared fixtures.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-# --- Unicode class spellings, Java (Spark) vs RE2 (DuckDB oracle) ---
+# --- Unicode class spellings (Java dialect, Spark side) ---
 # reference classes: /root/reference/lang.go:109-114
 JAVA_HAN = r"\p{IsHan}"
-RE2_HAN = r"\p{Han}"
 JAVA_KANA = r"[\p{InHiragana}\p{InKatakana}]"
-RE2_KANA = r"[\p{Hiragana}\p{Katakana}]"
 JAVA_HANGUL = r"\p{IsHangul}"
-RE2_HANGUL = r"\p{Hangul}"
 JAVA_PUNCT_SYM = r"[\p{P}\p{S}]"  # fun.RemoveSign's [\pP\pS]
-RE2_PUNCT_SYM = r"[\pP\pS]"
 JAVA_PUNCT = r"\p{P}"  # link.go:40 regexPuncPattern `\pP`
-RE2_PUNCT = r"\pP"
 ASCII_ALPHA = r"[a-zA-Z]"  # same in both dialects
 LATIN_SUPPLEMENT = "[-ÿ]"  # lang.go:111 regexLatinPattern
 
@@ -135,8 +130,3 @@ def strip_markup(col: Column) -> Column:
 def truncate_title(title: Column, max_length: int = 128) -> Column:
     """WebTitle truncation (/root/reference/extract/web.go:39-56)."""
     return F.substring(normalise_space(remove_lines(title)), 1, max_length)
-
-
-def truncate_description(desc: Column, max_length: int = 384) -> Column:
-    """WebDescription truncation (/root/reference/extract/web.go:179-183)."""
-    return F.substring(normalise_space(remove_lines(desc)), 1, max_length)

@@ -11,11 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
-from .textnorm import ASCII_ALPHA, JAVA_HAN, JAVA_PUNCT_SYM, char_count
-
-# BPE-ish pretokenizer: word pieces, numbers, or single non-space symbols
-# (GPT-2 pretokenizer shape, public knowledge).
-BPE_ISH_RE = r"[A-Za-z]+|[0-9]{1,3}|[^\sA-Za-z0-9]"
+from .textnorm import JAVA_PUNCT_SYM, char_count
 
 EN_STOPWORDS = (
     "the", "a", "an", "and", "or", "of", "to", "in", "is", "are", "was",
@@ -25,11 +21,6 @@ EN_STOPWORDS = (
 
 def whitespace_token_count(text: Column) -> Column:
     return F.size(F.filter(F.split(F.trim(F.coalesce(text, F.lit(""))), r"\s+"), lambda w: w != ""))
-
-
-def bpe_ish_token_count(text: Column) -> Column:
-    """Upper-bound token estimate via a BPE-style pretokenizer regex."""
-    return F.regexp_count(F.coalesce(text, F.lit("")), F.lit(BPE_ISH_RE))
 
 
 def stopword_ratio(text: Column) -> Column:
@@ -47,18 +38,6 @@ def punct_ratio(text: Column) -> Column:
     return F.when(n > 0, F.round(char_count(t, JAVA_PUNCT_SYM) / n, 6)).otherwise(F.lit(0.0))
 
 
-def alpha_ratio(text: Column) -> Column:
-    t = F.coalesce(text, F.lit(""))
-    n = F.length(t)
-    return F.when(n > 0, F.round(char_count(t, ASCII_ALPHA) / n, 6)).otherwise(F.lit(0.0))
-
-
-def han_ratio(text: Column) -> Column:
-    t = F.coalesce(text, F.lit(""))
-    n = F.length(t)
-    return F.when(n > 0, F.round(char_count(t, JAVA_HAN) / n, 6)).otherwise(F.lit(0.0))
-
-
 def words_array(text: Column) -> Column:
     """The shared whitespace word array (hoist target: an alias of this
     in its own projection is computed once per row even when the score
@@ -73,10 +52,6 @@ def mean_word_length_from_words(words: Column) -> Column:
     n = F.size(words)
     total = F.aggregate(words, F.lit(0), lambda a, w: a + F.length(w))
     return F.when(n > 0, F.round(total / n, 6)).otherwise(F.lit(0.0))
-
-
-def mean_word_length(text: Column) -> Column:
-    return mean_word_length_from_words(words_array(text))
 
 
 def quality_score_from_words(text: Column, words: Column) -> Column:

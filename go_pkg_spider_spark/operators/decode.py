@@ -33,7 +33,6 @@ import struct
 import subprocess
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     BooleanType,
     DoubleType,
@@ -79,6 +78,31 @@ _FLOAT_SOURCE_CODECS = frozenset(
 # the ceiling sits above FLAC's 655350 Hz spec maximum. Found by the
 # round-8 decoder fuzz (tests/test_fuzz_decode.py).
 SR_MIN, SR_MAX = 1_000, 1_000_000
+
+# The closed `err` vocabulary: every token decode_blob returns. A
+# ValueError message outside it (numpy/struct/library prose, or a
+# one-word library message) becomes "decode_error", so no library text
+# reaches the typed-error column or the decode_<err> drop reason.
+DECODE_ERRORS = frozenset(
+    {
+        # decode_blob's own guards
+        "empty_bytes", "max_content_length", "codec_not_whitelisted",
+        "implausible_sample_rate", "nonfinite_samples", "decode_error",
+        # container / PCM parsers (this module)
+        "empty_pcm", "bad_riff_header", "missing_wav_chunk",
+        "unsupported_wav_format", "bad_au_header", "unsupported_au_encoding",
+        "bad_aiff_header", "missing_aiff_chunk", "unsupported_aiff_format",
+        # FLAC bitstream decoder (operators/flac.py)
+        "bad_flac_header", "flac_missing_streaminfo", "flac_bps_unsupported",
+        "flac_truncated", "flac_bad_sync", "flac_bad_blocksize",
+        "flac_bad_utf8_number", "flac_bad_channel_assignment",
+        "flac_bad_sample_size", "flac_header_crc_mismatch",
+        "flac_bad_subframe_pad", "flac_bad_lpc_precision",
+        "flac_reserved_subframe_type", "flac_bad_residual_method",
+        "flac_bad_partition_order",
+    }
+    | {f"no_codec:{c}" for c in COMPRESSED_CODECS}
+)
 
 try:  # library slot for compressed audio (absent in this sandbox)
     import soundfile as _soundfile  # type: ignore
@@ -656,11 +680,10 @@ def decode_blob(
             return None, 0, "nonfinite_samples"
         return pcm, sr, None
     except ValueError as e:
-        # our parsers raise snake_case tokens; a ValueError bubbling up
-        # from numpy/struct carries a prose message — normalize it so a
-        # library-version string never lands in the typed-error column
+        # our parsers raise DECODE_ERRORS tokens; anything else is a
+        # library message and normalizes to decode_error
         msg = str(e)
-        return None, 0, msg if msg and " " not in msg else "decode_error"
+        return None, 0, msg if msg in DECODE_ERRORS else "decode_error"
     except Exception:  # noqa: BLE001 — malformed container
         return None, 0, "decode_error"
 
@@ -677,12 +700,3 @@ def _features(pcm: np.ndarray, sr: int) -> tuple:
     dc = float(pcm.mean(dtype=np.float64))
     zcr = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0
     return n, sr, rms, peak, clip_ratio, dc, zcr
-
-
-def decode_prefilter() -> Column:
-    """Pure-column pre-guards (no UDF): size cap + codec whitelist —
-    these push down to the parquet/Iceberg scan so rejected rows never
-    reach the Arrow decode batch."""
-    return (F.length("bytes") <= MAX_CONTENT_LENGTH) & F.col("codec").isin(
-        *CODEC_WHITELIST
-    )

@@ -5,11 +5,12 @@
 - ngram_jaccard_pairs: word n-gram shingles + exact distinct-set
   Jaccard (one intersect + size arithmetic) over bounded candidate
   groups (no UDF).
-- minhash_lsh: shingle -> k minhashes via xxhash64(shingle, seed_k) ->
-  band buckets -> self-join candidates. Pure built-ins; the classic
-  MinHash/LSH construction (Broder 1997; MMDS ch.3).
-- simhash64: 64-bit SimHash (Charikar 2002) via bit-position vote
-  columns over token hashes — JVM-side only.
+- minhash_lsh_candidates: shingle -> k minhashes (md5 shingle hash
+  under k seeded affine permutations, one Arrow UDF) -> band buckets ->
+  in-bucket pairs, no self-join. The classic MinHash/LSH construction
+  (Broder 1997; MMDS ch.3).
+- simhash64: 64-bit SimHash (Charikar 2002) via a per-bit majority
+  vote over token hashes, one numpy pass per Arrow batch.
 
 Scale notes: minhash/simhash signatures are tiny (k longs / 1 long) so
 the only shuffle is the band-bucket groupBy/self-join, which AQE
@@ -274,24 +275,6 @@ def _minhash_sig_np(shingles: list[str], num_hashes: int) -> np.ndarray | None:
     return m.min(axis=1).astype(np.int64)
 
 
-def make_minhash_udf(num_hashes: int = 32):
-    """Vectorized minhash signature UDF. Rationale vs the pure-column
-    form (k x array_min(transform(...))): the codegen expression grows
-    O(k * shingles) and measured ~10x slower than one numpy matrix-min
-    per Arrow batch — signatures are the one place the UDF wins
-    (SURVEY.md §4.2 axis-A vectorization)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_udf(shingles: pd.Series) -> pd.Series:
-        out = []
-        for sh in shingles:
-            sig = _minhash_sig_np(list(sh) if sh is not None else [], num_hashes)
-            out.append(None if sig is None else sig.tolist())
-        return pd.Series(out, dtype=object)
-
-    return minhash_udf
-
-
 def make_minhash_text_udf(num_hashes: int = 32, shingle_n: int = 3):
     """Round 9: minhash signature STRAIGHT FROM the normalized text —
     tokenization + n-gram assembly moved inside the Arrow batch loop.
@@ -332,12 +315,6 @@ def make_minhash_text_udf(num_hashes: int = 32, shingle_n: int = 3):
         return pd.Series(out, dtype=object)
 
     return minhash_text_udf
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 32) -> Column:
-    """k minhash values over the shingle array (Arrow-batched numpy).
-    Empty shingle set -> NULL signature (dropped from LSH)."""
-    return make_minhash_udf(num_hashes)(shingles)
 
 
 def minhash_lsh_candidates(
@@ -468,55 +445,3 @@ def simhash64(text: Column) -> Column:
     because the codegen expression is O(64 * tokens); one numpy
     matrix-vote per batch is ~100x cheaper."""
     return _simhash64_udf(text)
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
-
-
-def simhash_neardup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-    max_bucket_size: int = 1024,
-) -> DataFrame:
-    """SimHash near-dup pairs via 4-block bucketing (pigeonhole: any
-    pair within hamming<=3 shares at least one exact 16-bit block).
-    Shuffles once on (block_idx, block_value); hot blocks capped at
-    max_bucket_size members (operators/bucketing.py)."""
-    base = df.select(F.col(id_col).alias("id"), simhash64(F.col(text_col)).alias("sh"))
-    blocked = base.select(
-        "id",
-        "sh",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftright(F.col("sh"), i * 16).bitwiseAND(F.lit(0xFFFF))
-                    for i in range(4)
-                ]
-            )
-        ).alias("blk_idx", "blk"),
-    )
-    # bucket-collect pair generation (no self-join; simhash UDF runs once
-    # per row — same rationale as minhash_lsh_candidates)
-    buckets = capped_buckets(
-        blocked, ["blk_idx", "blk"], F.struct("id", "sh"), max_bucket_size
-    )
-    return (
-        buckets.select(
-            F.explode(
-                pair_apply(
-                    F.col("ms"),
-                    lambda a, b: F.struct(
-                        a["id"].alias("id_a"),
-                        b["id"].alias("id_b"),
-                        hamming64(a["sh"], b["sh"]).alias("hamming"),
-                    ),
-                )
-            ).alias("p")
-        )
-        .select("p.id_a", "p.id_b", "p.hamming")
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
-    )

@@ -457,14 +457,6 @@ def encode_flac_s16_stereo(
 # decoder
 # ---------------------------------------------------------------------------
 
-_FIXED_COEFS = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
-
 
 def decode_flac(blob: bytes) -> tuple[np.ndarray, int]:
     """Decode a FLAC stream to (float32 mono in [-1,1], sample_rate).

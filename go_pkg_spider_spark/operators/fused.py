@@ -21,9 +21,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
-    IntegerType,
     StringType,
     StructField,
     StructType,

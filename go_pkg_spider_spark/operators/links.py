@@ -4,13 +4,14 @@
 input:  links(url, anchor_title) + page lang (+ optional host rules)
 pass 0: URL validity filter (P2) with reject reasons (the `Filters`
         map, spider.go:30)
-pass 1: per-link classification (LinkIsContentByTitle) + subdomain set
+pass 1: per-link classification (LinkIsContentByTitle) + is_subdomain
 pass 2: per-site statistics (publishProb A5, topPaths A6) broadcast-
         rejoined to reclassify (linkTypePathProcess link.go:155-253)
 pass 3: zh licence-blacklist demotion (linkClean link.go:139-153)
 
 Output: one DataFrame with link_type + reject_reason columns — the four
-reference buckets are filter() views (SURVEY.md §1.1 LinkRes mapping).
+reference buckets are filter() views on link_type (SURVEY.md §1.1
+LinkRes mapping).
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from pyspark.sql import Column, DataFrame, functions as F
 
 from ..functions import rules
 from ..functions.domain import domain_top
-from ..functions.textnorm import JAVA_HAN, char_count
 
 
 def _path_of(url: Column) -> Column:
@@ -28,49 +28,6 @@ def _path_of(url: Column) -> Column:
 
 def _host_of(url: Column) -> Column:
     return F.coalesce(F.parse_url(url, F.lit("HOST")), F.lit(""))
-
-
-def classify_links_by_rules(
-    links: DataFrame,
-    rules_map: dict[str, list[str]],
-    url_col: str = "url",
-    title_col: str = "anchor_title",
-) -> DataFrame:
-    """Rule-mode classification (X2/J3: LinkTypeRule,
-    /root/reference/extract/link.go:48, 111-124, 255-274): per-host
-    regex lists, looked up by hostname with top-domain fallback, any
-    match -> content; otherwise none for index paths, unknown for the
-    rest. The rule table is tiny config -> folded into the plan as an
-    exists() over a map-literal lookup (broadcast-join shape J3)."""
-    url, title = F.col(url_col), F.col(title_col)
-    host = _host_of(url)
-    dtop = domain_top(host)
-
-    pairs: list[Column] = []
-    for k, regs in rules_map.items():
-        pairs.append(F.lit(k))
-        pairs.append(F.array(*[F.lit(r) for r in regs]))
-    rule_map = F.create_map(*pairs) if pairs else F.create_map()
-    # host key first, else top-domain key (link.go:258-266)
-    regs = F.coalesce(rule_map[host], rule_map[dtop])
-    # regexp_like accepts a Column pattern (Column.rlike takes str only)
-    matched = F.exists(regs, lambda r: F.regexp_like(url, r))
-    path = _path_of(url)
-    link_type = (
-        F.when(F.coalesce(matched, F.lit(False)), "content")
-        .when(rules.is_index_path(path), "none")
-        .otherwise("unknown")
-    )
-    return (
-        links.withColumn("reject_reason", rules.url_filter_reason(url))
-        .withColumn("host", host)
-        .withColumn("domain_top", dtop)
-        .withColumn("path", path)
-        .withColumn(
-            "link_type",
-            F.when(F.col("reject_reason").isNotNull(), "none").otherwise(link_type),
-        )
-    )
 
 
 def classify_links(
@@ -255,119 +212,4 @@ def _reclassify_by_publish_prob(df: DataFrame, threshold: float) -> DataFrame:
     )
     return out.withColumn("link_type", new_type).drop(
         "publish_prob", "content_count", "top_paths", "_dir", "_has_date", "_seg"
-    )
-
-
-# 具有 HTML 跳转属性 one-hop follow (spider.go:231-247): the reference
-# chases a meta-refresh redirect exactly once when the refresh target
-# shares the request's top domain. Batch recast: surface the eligible
-# target as a `redirect_of` column, then resolve content from the target
-# ROW via a self-join (the crawl already fetched every URL — following
-# the redirect is a row lookup, not an HTTP call).
-META_REFRESH_TAG_RE = r"(?i)<meta[^>]*http-equiv=[\"']?refresh[\"']?[^>]*>"
-META_REFRESH_URL_RE = r"(?i)url=(.+)"  # RegexMetaRefresh, spider.go:17
-
-
-def meta_refresh_target(html: Column, page_url: Column) -> Column:
-    """The same-top-domain refresh target URL, or NULL (spider.go:
-    232-243: regex over the meta content attr, UrlParse, DomainTop
-    equality with non-empty guard)."""
-    tag = F.regexp_extract(F.coalesce(html, F.lit("")), META_REFRESH_TAG_RE, 0)
-    content = F.regexp_extract(tag, r"(?i)content=[\"']?([^\"'>]+)", 1)
-    target = F.trim(F.regexp_extract(content, META_REFRESH_URL_RE, 1))
-    page_top = domain_top(_host_of(page_url))
-    target_top = domain_top(_host_of(target))
-    same = target_top.isNotNull() & (target_top != "") & (target_top == page_top)
-    return F.when((target != "") & same, target)
-
-
-def resolve_meta_refresh(
-    df: DataFrame,
-    url_col: str,
-    html_col: str,
-    resolve_cols: tuple[str, ...],
-) -> DataFrame:
-    """One-hop meta-refresh resolution: rows with an eligible target take
-    `resolve_cols` from the TARGET row (when it exists in the table);
-    everyone else keeps their own. Adds `redirect_of`.
-
-    One hop ONLY, like getNewsDoTop(top=false): a target that itself
-    redirects is not chased. The redirect set is tiny relative to the
-    corpus, so the mapping side broadcasts; the base table never
-    shuffles."""
-    redirected = df.withColumn(
-        "redirect_of", meta_refresh_target(F.col(html_col), F.col(url_col))
-    )
-    # one row per join key on both sides: a re-crawled URL (duplicate
-    # url_col) or a target matching several rows would otherwise fan the
-    # mapping join out and duplicate base-table rows through the final
-    # broadcast join. The pick is DETERMINISTIC (min over the candidate
-    # values / the full resolve-col struct) — dropDuplicates keeps an
-    # arbitrary row per key, which made conflicting re-crawls resolve
-    # differently across partitionings (round-3 advice).
-    mapping = (
-        redirected.filter(F.col("redirect_of").isNotNull())
-        .select(
-            F.col(url_col).alias("_src_url"), F.col("redirect_of").alias("_target_url")
-        )
-        .groupBy("_src_url")
-        .agg(F.min("_target_url").alias("_target_url"))
-    )
-    # most-populated row wins, then a deterministic value tiebreak:
-    # max over struct(non-null count, fields...). A bare min(struct)
-    # would prefer rows whose LEADING field is NULL (nulls sort first
-    # ascending), letting a failed re-crawl beat a populated one.
-    nn = sum(
-        (F.col(c).isNotNull().cast("int") for c in resolve_cols), F.lit(0)
-    )
-    targets = (
-        df.select(
-            F.col(url_col).alias("_t_url"),
-            F.struct(
-                nn.alias("_nn"),
-                *[F.col(c).alias(f"_t_{c}") for c in resolve_cols],
-            ).alias("_ts"),
-        )
-        .groupBy("_t_url")
-        .agg(F.max("_ts").alias("_ts"))
-        .select("_t_url", *[F.col(f"_ts._t_{c}").alias(f"_t_{c}") for c in resolve_cols])
-    )
-    resolved_map = mapping.join(
-        targets, mapping["_target_url"] == targets["_t_url"], "left"
-    ).select("_src_url", "_target_url", *[f"_t_{c}" for c in resolve_cols])
-    out = redirected.join(
-        F.broadcast(resolved_map),
-        redirected[url_col] == resolved_map["_src_url"],
-        "left",
-    )
-    for c in resolve_cols:
-        out = out.withColumn(c, F.coalesce(F.col(f"_t_{c}"), F.col(c)))
-    return out.drop("_src_url", "_target_url", *[f"_t_{c}" for c in resolve_cols])
-
-
-def link_buckets(classified: DataFrame) -> dict[str, DataFrame]:
-    """The four LinkRes buckets as filter views (zero extra compute)."""
-    return {
-        t: classified.filter(F.col("link_type") == t)
-        for t in ("content", "list", "unknown", "none")
-    }
-
-
-def subdomains(classified: DataFrame) -> DataFrame:
-    """U3 subdomain set per top-domain (link.go:70,79-82; detect.go:238)."""
-    return (
-        classified.filter(F.col("is_subdomain"))
-        .groupBy("domain_top")
-        .agg(F.sort_array(F.collect_set("host")).alias("subdomains"))
-    )
-
-
-def friend_domains(classified: DataFrame, title_col: str = "anchor_title") -> DataFrame:
-    """U4 friend-domain map (detect.go:273-357): off-domain links whose
-    path is root, deduped by top-domain keeping the longest title."""
-    root = F.trim(F.col("path")).isin("", "/")
-    return (
-        classified.filter(root & F.col("domain_top").isNotNull())
-        .groupBy("domain_top")
-        .agg(F.max_by(F.col(title_col), F.length(title_col)).alias("title"))
     )

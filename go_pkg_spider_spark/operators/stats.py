@@ -1,84 +1,12 @@
-"""Two-pass grouped statistics — the reference's per-site statistics
-feeding per-link reclassification (A5/A6,
-/root/reference/extract/link.go:155-253), generalized:
-
-pass 1: per-group aggregates (publish-path probability, top-path
-histogram); pass 2: rejoin to rows and reclassify. These are the ONLY
-shuffle-bearing operators in the reference's semantics (SURVEY.md §7
-risk) — both are broadcast-rejoin shaped: the per-group aggregate
-output is tiny (one row per site/source), so the rejoin broadcasts.
+"""Grouped statistics: gap sessionization and the two-pass per-group
+z-score. The reference's per-site link statistics (A5/A6, its
+extract/link.go:155-253) live in links.classify_links
+(`_reclassify_by_publish_prob`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
-
-from ..functions.rules import has_publish_date_path
-
-
-def group_publish_prob(df: DataFrame, group_col: str, path_col: str) -> DataFrame:
-    """publishProb per group (link.go:160-163): share of content rows
-    whose URL path carries a date."""
-    return df.groupBy(group_col).agg(
-        F.round(
-            F.avg(has_publish_date_path(F.col(path_col)).cast("int")), 6
-        ).alias("publish_prob"),
-        F.count(F.lit(1)).alias("content_count"),
-    )
-
-
-def top_paths(df: DataFrame, group_col: str, path_col: str, min_content: int = 8, prob_threshold: float = 0.4) -> DataFrame:
-    """topPaths (link.go:165-175, 213-236): first path segment histogram;
-    segments with freq>1 and share>threshold (when the group has at
-    least min_content rows) are the group's content-prefix signature."""
-    # try_element_at: ANSI mode throws on element_at over the empty
-    # array that a root path '/' produces
-    first_seg = F.try_element_at(
-        F.filter(F.split(F.col(path_col), "/"), lambda s: s != ""), F.lit(1)
-    )
-    seg_counts = (
-        df.select(F.col(group_col).alias("g"), first_seg.alias("seg"))
-        .filter(F.col("seg").isNotNull())
-        .groupBy("g", "seg")
-        .count()
-    )
-    totals = seg_counts.groupBy("g").agg(F.sum("count").alias("total"))
-    return (
-        seg_counts.join(F.broadcast(totals), "g")
-        .filter(
-            (F.col("count") > 1)
-            & (F.col("total") >= min_content)
-            & (F.col("count") / F.col("total") > prob_threshold)
-        )
-        .groupBy("g")
-        .agg(F.sort_array(F.collect_set("seg")).alias("top_paths"))
-        .withColumnRenamed("g", group_col)
-    )
-
-
-def reclassify_by_group_stats(
-    rows: DataFrame,
-    group_col: str,
-    path_col: str,
-    type_col: str,
-    publish_threshold: float = 0.7,
-) -> DataFrame:
-    """The pass-2 rejoin (link.go:178-212): when a group's publishProb
-    exceeds the threshold, unknown/list rows whose path carries a date
-    are promoted to content; date-less 'content' rows demote to list.
-    Broadcast join — group stats are one row per group."""
-    stats = group_publish_prob(
-        rows.filter(F.col(type_col) == "content"), group_col, path_col
-    )
-    joined = rows.join(F.broadcast(stats), group_col, "left")
-    has_date = has_publish_date_path(F.col(path_col))
-    strong = F.col("publish_prob") > publish_threshold
-    new_type = (
-        F.when(strong & has_date & F.col(type_col).isin("unknown", "list"), "content")
-        .when(strong & ~has_date & (F.col(type_col) == "content"), "list")
-        .otherwise(F.col(type_col))
-    )
-    return joined.withColumn(type_col, new_type).drop("publish_prob", "content_count")
+from pyspark.sql import DataFrame, functions as F
 
 
 def sessionize(
@@ -96,17 +24,15 @@ def sessionize(
     the partitioning); deterministic tie-break by (ts, id).
 
     Output: (key, session_id, session_start, session_end, n_events,
-    total_value) — the streaming twin is
-    streaming.jobs.stream_sessionize (applyInPandasWithState)."""
+    total_value)."""
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy(ts_col, id_col)
     prev_ts = F.lag(ts_col).over(w)
-    # Gap measured in MICROSECONDS — the same precision as the streaming
-    # twin's state (stream_sessionize) and the DuckDB oracle's INTERVAL
-    # compare, so sub-second timestamps can't split sessions differently
-    # across the three paths. events.ts is TIMESTAMP_NTZ: cast to
-    # timestamp first (NTZ->numeric is not a valid ANSI cast).
+    # Gap measured in MICROSECONDS — the same precision as the DuckDB
+    # oracle's INTERVAL compare, so sub-second timestamps can't split
+    # sessions differently on the two sides. events.ts is TIMESTAMP_NTZ:
+    # cast to timestamp first (NTZ->numeric is not a valid ANSI cast).
     micros = lambda c: F.unix_micros(c.cast("timestamp"))  # noqa: E731
     new_s = (
         prev_ts.isNull()

@@ -30,7 +30,6 @@ BODY_CHUNK_SIZE = 2048
 _HAN = (0x4E00, 0x9FFF)
 _HIRA = (0x3040, 0x309F)
 _KATA = (0x30A0, 0x30FF)
-_HANGUL = ((0xAC00, 0xD7AF), (0x1100, 0x11FF), (0x3130, 0x318F))
 _LATIN_SUPP = (0x0080, 0x00FF)
 
 import unicodedata
@@ -43,11 +42,6 @@ def _is_han(ch: str) -> bool:
 def _is_kana(ch: str) -> bool:
     o = ord(ch)
     return _HIRA[0] <= o <= _HIRA[1] or _KATA[0] <= o <= _KATA[1]
-
-
-def _is_hangul(ch: str) -> bool:
-    o = ord(ch)
-    return any(a <= o <= b for a, b in _HANGUL)
 
 
 def _is_punct_sym(ch: str) -> bool:

@@ -379,11 +379,6 @@ def date_cascade_sql(
     return raw, kind_case
 
 
-def norm_date_sql(col: str) -> str:
-    """Public alias of the normalize_date_string twin."""
-    return _norm_date_sql(col)
-
-
 def extract_news_sql(cascade: list[tuple[str, str, bool]]) -> str:
     """DuckDB twin of the extract_news_docs entry: the synthetic page is
     built from the SAME deterministic recipe, the title-clean replays

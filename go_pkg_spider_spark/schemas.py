@@ -5,8 +5,6 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     BinaryType,
-    BooleanType,
-    DoubleType,
     IntegerType,
     StringType,
     StructField,
@@ -25,16 +23,3 @@ CLIPS_SCHEMA = StructType(
     ]
 )
 
-# pipeline output (SURVEY.md §1.2)
-DECISIONS_SCHEMA = StructType(
-    [
-        StructField("clip_id", StringType()),
-        StructField("keep", BooleanType()),
-        StructField("drop_reason", StringType()),
-        StructField("scrubbed_transcript", StringType()),
-        StructField("lang", StringType()),
-        StructField("lang_pos", StringType()),
-        StructField("ppl", DoubleType()),
-        StructField("quality_score", DoubleType()),
-    ]
-)

@@ -12,13 +12,14 @@ feeding a consumer callback plus a `seen` dedup map
   event-time bound lets state expire
 - C5 (depth-synchronous BFS)        -> micro-batch boundaries
 
-Plus the standard late-data pattern the reference lacks but a 10^12-row
-ingest needs: watermarked event-time windowed metrics.
+Two streaming jobs live here, both run by jobs/run_streaming.py: the
+quality filter and online ANN top-k serving. Each runs the unchanged
+batch plan per micro-batch, so stream output equals batch output.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..pipeline import run_pipeline
@@ -111,274 +112,6 @@ def stream_quality_filter(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long, total_value double"
-)
-SESSION_STATE_SCHEMA = "start long, last long, n long, total double"
-
-
-def stream_sessionize(
-    events_stream: DataFrame,
-    checkpoint_path: str,
-    gap_minutes: int = 30,
-    watermark: str = "1 minute",
-    queryName: str = "sessions",
-    output_path: str | None = None,
-) -> StreamingQuery:
-    """CUSTOM STATEFUL OPERATOR via applyInPandasWithState: gap-based
-    sessionization (the streaming twin of stats.sessionize — tests pin
-    that every emitted session exactly matches the batch result).
-
-    Sink: with `output_path` set (production), closed sessions write to
-    idempotent batch_id=N parquet partitions exactly like
-    stream_quality_filter — fault-tolerant and driver-memory-free. The
-    memory sink (default) is for TESTS only: it accumulates every
-    emitted session on the driver and collides across concurrent
-    queries sharing a queryName.
-
-    Per user key the state holds the open session (start, last, n,
-    total). A micro-batch's rows merge in event-time order, closing a
-    session whenever the gap exceeds `gap_minutes` (emitted downstream,
-    append mode); the open session closes via EventTimeTimeout once the
-    watermark passes last+gap. Rows older than the watermark are dropped
-    by the engine before reaching the function, so state never grows
-    with late data; per-key state is O(1) — the operator scales by key
-    partitioning alone."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    gap = gap_minutes * 60 * 1_000_000  # microseconds (ts precision)
-
-    def fn(key, pdfs, state: GroupState):
-        user_id = int(key[0])
-
-        def closed_df(rows):
-            return pd.DataFrame(
-                [
-                    {
-                        "user_id": user_id,
-                        "session_start": pd.Timestamp(r[0], unit="us"),
-                        "session_end": pd.Timestamp(r[1], unit="us"),
-                        "n_events": r[2],
-                        "total_value": float(r[3]),
-                    }
-                    for r in rows
-                ]
-            )
-
-        if state.hasTimedOut:
-            start, last, n, total = state.get
-            state.remove()
-            yield closed_df([(start, last, n, total)])
-            return
-
-        rows = pd.concat(list(pdfs))
-        rows = rows.sort_values(["ts", "event_id"])
-        ts_us = rows["ts"].astype("int64").floordiv(1_000).to_list()  # epoch micros
-        vals = rows["value"].to_list()
-
-        cur = list(state.get) if state.exists else None
-        closed = []
-        for t, v in zip(ts_us, vals):
-            if cur is None:
-                cur = [t, t, 1, float(v)]
-            elif t - cur[1] > gap:
-                closed.append(tuple(cur))
-                cur = [t, t, 1, float(v)]
-            else:
-                cur[1] = max(cur[1], t)
-                cur[2] += 1
-                cur[3] += float(v)
-        state.update(tuple(cur))
-        # close the open session once event time passes last+gap
-        state.setTimeoutTimestamp((cur[1] + gap) // 1000)  # ms for the engine
-        if closed:
-            yield closed_df(closed)
-
-    events = events_stream.withColumn(
-        "ts", F.col("ts").cast("timestamp")  # parquet NTZ -> watermarkable
-    ).withWatermark("ts", watermark)
-    out = events.groupBy("user_id").applyInPandasWithState(
-        fn,
-        SESSION_OUT_SCHEMA,
-        SESSION_STATE_SCHEMA,
-        "append",
-        GroupStateTimeout.EventTimeTimeout,
-    )
-    if output_path is not None:
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                f"{output_path}/batch_id={batch_id}"
-            )
-
-        return (
-            out.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-    return (
-        out.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_dedup_within_watermark(
-    events_stream: DataFrame,
-    checkpoint_path: str,
-    key_cols: list[str],
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    queryName: str = "dedup_stream",
-    output_path: str | None = None,
-) -> StreamingQuery:
-    """Cross-batch dedup with BOUNDED state: dropDuplicatesWithinWatermark
-    keeps a key in the state store only until the watermark passes its
-    event time, so state is O(arrival rate x watermark) — the unbounded
-    `seen` map of stream_quality_filter's dropDuplicates (which matches
-    the reference's semantics but grows forever) traded for an explicit
-    time horizon. Use this form when re-crawls/duplicates arrive within
-    a known lateness bound; at 10^12 events the bounded form is the only
-    one that survives."""
-    base = events_stream.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    deduped = base.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        key_cols
-    )
-    if output_path is not None:
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                f"{output_path}/batch_id={batch_id}"
-            )
-
-        return (
-            deduped.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-    return (
-        deduped.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_interval_join(
-    events_stream: DataFrame,
-    checkpoint_path: str,
-    window_seconds: int = 300,
-    watermark: str = "10 minutes",
-    left_type: str = "click",
-    right_type: str = "view",
-    queryName: str = "interval_join",
-    output_path: str | None = None,
-) -> StreamingQuery:
-    """Stream-stream INTERVAL join (the streaming twin of
-    operators/rangejoin.within_range_count's batch semantics, emitting
-    the matched pairs): left events join right events of the same user
-    within +/-window_seconds. Watermarks on BOTH sides bound the join
-    state — the engine keeps only rows young enough to still match
-    (watermark + window), so state is O(arrival rate x window), not
-    O(stream length). This is the canonical Spark stream-stream join
-    pattern (time-range condition + two watermarks).
-
-    Sink mirrors stream_sessionize: idempotent batch_id=N parquet
-    partitions with output_path, test-only memory sink otherwise."""
-    base = events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    left = (
-        base.filter(F.col("event_type") == left_type)
-        .select(
-            F.col("event_id").alias("l_id"),
-            F.col("user_id").alias("l_user"),
-            F.col("ts").alias("l_ts"),
-        )
-        .withWatermark("l_ts", watermark)
-    )
-    right = (
-        base.filter(F.col("event_type") == right_type)
-        .select(
-            F.col("event_id").alias("r_id"),
-            F.col("user_id").alias("r_user"),
-            F.col("ts").alias("r_ts"),
-        )
-        .withWatermark("r_ts", watermark)
-    )
-    joined = left.join(
-        right,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") >= F.col("l_ts") - F.expr(f"INTERVAL {window_seconds} SECOND"))
-        & (F.col("r_ts") <= F.col("l_ts") + F.expr(f"INTERVAL {window_seconds} SECOND")),
-    ).select("l_id", "r_id", F.col("l_user").alias("user_id"), "l_ts", "r_ts")
-    if output_path is not None:
-
-        def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").parquet(
-                f"{output_path}/batch_id={batch_id}"
-            )
-
-        return (
-            joined.writeStream.foreachBatch(write_batch)
-            .outputMode("append")
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(availableNow=True)
-            .start()
-        )
-    return (
-        joined.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_hourly_metrics(
-    events_stream: DataFrame,
-    checkpoint_path: str,
-    watermark: str = "2 hours",
-    queryName: str = "hourly_metrics",
-) -> StreamingQuery:
-    """Watermarked event-time hourly rollup (the streaming twin of
-    entry_queries.events_hourly_rollup): late rows within the watermark
-    update their window; older ones drop. In-memory sink for tests;
-    production points the writer at a table."""
-    agg = (
-        # watermarks need TIMESTAMP (with zone); parquet NTZ casts cleanly
-        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .select(
-            F.col("win.start").alias("hour"), "event_type", "n_events", "total_value"
-        )
-    )
-    return (
-        agg.writeStream.format("memory")
-        .queryName(queryName)
-        .outputMode("complete")
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def stream_ann_topk(

@@ -10,10 +10,6 @@ the micro-batch id so replays resume instead of double-appending.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
 from go_pkg_spider_spark.fixtures.audio_fp_fixtures import (
@@ -21,7 +17,6 @@ from go_pkg_spider_spark.fixtures.audio_fp_fixtures import (
     INCREMENT_EXPECTED,
     build_increment_rows,
     build_subfp_rows,
-    derive_increment_expected,
 )
 from go_pkg_spider_spark.operators import audio_fp as afp
 from jobs.run_audio_dedup import (
@@ -33,6 +28,97 @@ from jobs.run_audio_dedup import (
 )
 
 _SCHEMA = "clip_id string, bytes binary, codec string, sr_hz int"
+
+
+def derive_increment_expected() -> list[tuple]:
+    """Recompute the incremental gate truth INDEPENDENTLY of the Spark
+    operators: committed groups = brute-force subfp union-find over
+    the base rows alone; increment labels = union-find over the batch
+    rows plus one node per reachable committed group (prefixed so the
+    committed group always wins the min-id label — the
+    assign_increment semantics re-derived from the predicates, not
+    from the production code path)."""
+    from go_pkg_spider_spark.operators.audio_fp import (
+        FP_MIN_SHARED_SITES,
+        _fp_row_full,
+        probe_shared_sites,
+        subfp_match_stats,
+        subfp_pair_passes,
+    )
+
+    def match(ra, rb) -> bool:
+        if probe_shared_sites(ra[6], rb[6]) < FP_MIN_SHARED_SITES:
+            return False
+        jac, ratio, shift = subfp_match_stats(ra[5], rb[5])
+        return subfp_pair_passes(jac, ratio, shift)
+
+    base_rows = {cid: r for cid, r in (
+        (cid, _fp_row_full(cid, b, c, s))
+        for cid, b, c, s in build_subfp_rows()
+        if cid in INCREMENT_BASE_IDS
+    )}
+    batch_rows = {
+        cid: _fp_row_full(cid, b, c, s)
+        for cid, b, c, s in build_increment_rows()
+    }
+
+    def eligible(rows):
+        return sorted(c for c, r in rows.items() if r[1] is None and not r[4])
+
+    # committed groups over the base alone (the batch job's truth)
+    parent = {cid: cid for cid in base_rows}
+
+    def find(p, x):
+        while p[x] != x:
+            p[x] = p[p[x]]
+            x = p[x]
+        return x
+
+    b_elig = eligible(base_rows)
+    for i, a in enumerate(b_elig):
+        for b in b_elig[i + 1:]:
+            ra, rb = find(parent, a), find(parent, b)
+            if ra != rb and match(base_rows[a], base_rows[b]):
+                parent[max(ra, rb)] = min(ra, rb)
+    base_group = {cid: find(parent, cid) for cid in base_rows}
+
+    # increment graph: batch nodes + prefixed committed-group nodes
+    nodes = {cid: cid for cid in batch_rows}
+    i_elig = eligible(batch_rows)
+    for i, a in enumerate(i_elig):
+        for b in i_elig[i + 1:]:
+            if match(batch_rows[a], batch_rows[b]):
+                ra, rb = find(nodes, a), find(nodes, b)
+                if ra != rb:
+                    nodes[max(ra, rb)] = min(ra, rb)
+    for a in i_elig:
+        for b in b_elig:
+            if match(batch_rows[a], base_rows[b]):
+                g = "\x00" + base_group[b]
+                nodes.setdefault(g, g)
+                ra, rb = find(nodes, a), find(nodes, g)
+                if ra != rb:
+                    nodes[max(ra, rb)] = min(ra, rb)
+
+    out = []
+    for cid in sorted(batch_rows):
+        err, n_subfp, deg = (
+            batch_rows[cid][1],
+            batch_rows[cid][2],
+            batch_rows[cid][4],
+        )
+        label = find(nodes, cid) if cid in i_elig else cid
+        group = label[1:] if label.startswith("\x00") else label
+        if err is not None:
+            decision = "error"
+        elif deg:
+            decision = "keep_degenerate"
+        elif group != cid:
+            decision = "drop_audio_dup"
+        else:
+            decision = "keep"
+        out.append((cid, err, n_subfp, deg, group, decision))
+    return out
 _SR = 16_000
 
 

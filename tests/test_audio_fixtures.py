@@ -6,11 +6,71 @@ decode code (breaking decode<->decode circularity)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
+import numpy as np
 
 from go_pkg_spider_spark.fixtures import audio_fixtures as ax
+
+# column names of an EXPECTED row (audio_fixtures.derive_expected)
+EXPECTED_COLUMNS = (
+    "fid",
+    "ok",
+    "err",
+    "n_samples",
+    "sr_decoded",
+    "rms",
+    "peak",
+    "clip_ratio",
+    "dc_offset",
+    "zcr",
+    "n_frames",
+    "centroid_hz",
+    "rolloff_hz",
+    "silence_ratio",
+    "resampled_n",
+)
+
+
+# Hand-derived values (documented arithmetic; see
+# audio_fixtures.build_rows comments).
+# q15: int16 truncation of 0.5*32767 = 16383.5 -> 16383, then the
+# decode normalization DIVIDES IN FLOAT32 (decode.py:79), so the exact
+# constant is the float32-rounded quotient 16383/32767 =
+# 0.4999847412109375 (float64 division would give ...740745262 — one
+# float32 ulp away; the float32 rounding is part of the contract).
+_Q15 = float(np.float32(16383.0) / np.float32(32767.0))
+_Q25 = float(np.float32(8191.0) / np.float32(32767.0))  # trunc(0.25*32767)=8191
+_Q23 = float(np.float32(4194303.0) / np.float32(8388607.0))  # 24-bit +0.5
+_Q7 = float(np.float32(31.0) / np.float32(127.0))  # 8-bit +0.25
+HAND_CHECKED: dict[int, dict[str, float | int | bool]] = {
+    # silence: all-zero samples
+    8: {"ok": True, "rms": 0.0, "peak": 0.0, "dc_offset": 0.0, "zcr": 0.0,
+        "clip_ratio": 0.0, "n_samples": 4000, "silence_ratio": 1.0},
+    # const +0.5: every sample exactly 16383/32767 (float32-exact: 16383
+    # and 32767 are both < 2^24); mean/rms/peak all equal it
+    9: {"ok": True, "rms": _Q15, "peak": _Q15, "dc_offset": _Q15, "zcr": 0.0,
+        "n_samples": 2000},
+    # ±0.5 square: |x| = 16383/32767 everywhere → rms=peak=q15; sign
+    # flips every adjacent pair → zcr = 1.0; 2000 (+,-) pairs → dc = 0
+    10: {"ok": True, "rms": _Q15, "peak": _Q15, "dc_offset": 0.0, "zcr": 1.0,
+         "n_samples": 4000},
+    # full-scale: 1.0*32767 → 32767 → 1.0 exactly
+    11: {"ok": True, "rms": 1.0, "peak": 1.0, "clip_ratio": 1.0,
+         "dc_offset": 1.0, "zcr": 0.0, "n_samples": 4000},
+    # sub-frame clip: decodes fine but yields zero 25ms frames
+    14: {"ok": True, "n_samples": 320, "n_frames": 0, "silence_ratio": 1.0},
+    # single sample 0.25 → trunc(8191.75)=8191, float32 quotient
+    15: {"ok": True, "n_samples": 1, "peak": _Q25, "zcr": 0.0},
+    # odd data chunk: 1001 bytes → 500 samples
+    17: {"ok": True, "n_samples": 500},
+    # raw pcm odd byte count: 2001 bytes → 1000 samples
+    22: {"ok": True, "n_samples": 1000},
+    # 24-bit const +0.5: trunc(0.5*8388607)=4194303, float32 quotient
+    52: {"ok": True, "rms": _Q23, "peak": _Q23, "dc_offset": _Q23,
+         "zcr": 0.0, "n_samples": 2000, "sr_decoded": 16000},
+    # 8-bit const +0.25: trunc(0.25*127)=31, float32 quotient
+    54: {"ok": True, "rms": _Q7, "peak": _Q7, "dc_offset": _Q7,
+         "zcr": 0.0, "n_samples": 2000},
+}
 
 
 def test_expected_matches_live_derivation():
@@ -21,16 +81,16 @@ def test_expected_matches_live_derivation():
 
 
 def test_hand_checked_rows():
-    cols = ax.EXPECTED_COLUMNS
+    cols = EXPECTED_COLUMNS
     by_fid = {r[0]: dict(zip(cols, r)) for r in ax.EXPECTED}
-    for fid, checks in ax.HAND_CHECKED.items():
+    for fid, checks in HAND_CHECKED.items():
         for col, want in checks.items():
             got = by_fid[fid][col]
             assert got == want, f"fid {fid} {col}: {got} != hand-derived {want}"
 
 
 def test_error_rows_are_typed():
-    cols = ax.EXPECTED_COLUMNS
+    cols = EXPECTED_COLUMNS
     by_fid = {r[0]: dict(zip(cols, r)) for r in ax.EXPECTED}
     want_errs = {
         30: "empty_bytes",

@@ -5,20 +5,112 @@ against the brute-force-derived expected partition."""
 
 from __future__ import annotations
 
-import sys
-
 import numpy as np
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from go_pkg_spider_spark.fixtures import audio_fp_fixtures as fpx
 from go_pkg_spider_spark.fixtures.audio_fixtures import _flac, _i16, _wav
 from go_pkg_spider_spark.operators import audio_fp as afp
 
+FP_GROUP_HAMMING = 7  # mirrors audio_fp.audio_neardup_groups default
+
+
+def derive_expected() -> list[tuple]:
+    """Recompute EXPECTED from the LIVE fingerprint kernel, grouping by
+    brute-force all-pairs hamming + union-find (independent of the
+    production pigeonhole-LSH path; the drift alarm AND the recall
+    cross-check)."""
+    from go_pkg_spider_spark.operators.audio_fp import fingerprint_for_clip
+
+    rows = [
+        fingerprint_for_clip(fid, blob, codec, sr_hz)
+        for fid, blob, codec, sr_hz in fpx.build_rows()
+    ]
+    # union-find over eligible rows (decoded, non-degenerate)
+    parent = {fid: fid for fid, err, _, _, deg in rows if err is None and not deg}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    elig = sorted(parent)
+    for i, a in enumerate(elig):
+        fa = next(r[3] for r in rows if r[0] == a)
+        for b in elig[i + 1 :]:
+            fb = next(r[3] for r in rows if r[0] == b)
+            if bin(fa ^ fb).count("1") <= FP_GROUP_HAMMING:
+                ra, rb = find(a), find(b)
+                if ra != rb:
+                    parent[max(ra, rb)] = min(ra, rb)
+    out = []
+    for fid, err, n_subfp, fp64, deg in rows:
+        gid = find(fid) if fid in parent else fid
+        out.append((fid, err, n_subfp, fp64, deg, gid))
+    return out
+
+
+def derive_subfp_expected() -> list[tuple]:
+    """Recompute SUBFP_EXPECTED from the live kernels: BOTH tiers'
+    groupings by independent brute-force union-find over all pairs,
+    mirroring the production predicates exactly — fp64 tier: hamming
+    <= FP_GROUP_HAMMING; subfp tier: >= 1 shared encoded (cell, value)
+    probe AND bit-set Jaccard / overlap-ratio at the best scanned
+    alignment. The
+    frozen table therefore cross-checks probe-blocking recall AND the
+    measured fp64-misses-these contrast (drift alarm for either
+    tier)."""
+    from go_pkg_spider_spark.operators.audio_fp import (
+        FP_MIN_SHARED_SITES,
+        _fp_row_full,
+        probe_shared_sites,
+        subfp_match_stats,
+        subfp_pair_passes,
+    )
+
+    full = {
+        cid: _fp_row_full(cid, blob, codec, sr_hz)
+        for cid, blob, codec, sr_hz in fpx.build_subfp_rows()
+    }
+    elig = sorted(cid for cid, r in full.items() if r[1] is None and not r[4])
+
+    def union_find(match) -> dict[str, str]:
+        parent = {cid: cid for cid in full}
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for i, a in enumerate(elig):
+            for b in elig[i + 1 :]:
+                if match(full[a], full[b]):
+                    ra, rb = find(a), find(b)
+                    if ra != rb:
+                        parent[max(ra, rb)] = min(ra, rb)
+        return {cid: find(cid) for cid in full}
+
+    def subfp_match(ra, rb) -> bool:
+        hit = probe_shared_sites(ra[6], rb[6]) >= FP_MIN_SHARED_SITES
+        jac, ratio, shift = subfp_match_stats(ra[5], rb[5])
+        return hit and subfp_pair_passes(jac, ratio, shift)
+
+    def fp64_match(ra, rb) -> bool:
+        return bin(ra[3] ^ rb[3]).count("1") <= FP_GROUP_HAMMING
+
+    sub_g = union_find(subfp_match)
+    fp_g = union_find(fp64_match)
+    return [
+        (cid, r[1], r[2], r[4], sub_g[cid], fp_g[cid])
+        for cid, r in sorted(full.items())
+    ]
+
+
 
 def test_expected_matches_live_derivation():
-    derived = fpx.derive_expected()
+    derived = derive_expected()
     assert len(derived) == len(fpx.EXPECTED) == 15
     for got, frozen in zip(derived, fpx.EXPECTED):
         assert got == frozen, f"fid {frozen[0]} drifted: {got} != {frozen}"
@@ -73,7 +165,7 @@ def test_distinct_clips_are_far():
     for i, a in enumerate(anchors):
         for b in anchors[i + 1 :]:
             h = bin((by_fid[a] ^ by_fid[b]) & ((1 << 64) - 1)).count("1")
-            assert h >= 3 * fpx.FP_GROUP_HAMMING, (a, b, h)
+            assert h >= 3 * FP_GROUP_HAMMING, (a, b, h)
 
 
 def test_degenerate_flag_semantics():
@@ -117,7 +209,7 @@ def test_sparse_stream_collapse_regression():
     for i in range(3):
         for j in range(i + 1, 3):
             h = bin((fps[i] ^ fps[j]) & ((1 << 64) - 1)).count("1")
-            assert h > 2 * fpx.FP_GROUP_HAMMING, (i, j, h)
+            assert h > 2 * FP_GROUP_HAMMING, (i, j, h)
 
 
 def test_tie_guard_absorbs_16bit_quantization():
@@ -335,7 +427,7 @@ def test_pairs_match_brute_force(spark):
         for i, a in enumerate(ids)
         for b in ids[i + 1 :]
         if bin((elig[a] ^ elig[b]) & ((1 << 64) - 1)).count("1")
-        <= fpx.FP_GROUP_HAMMING
+        <= FP_GROUP_HAMMING
     }
     assert set(got) == want
 
@@ -423,7 +515,7 @@ def test_subfp_expected_matches_live_derivation():
     """SUBFP_EXPECTED is the frozen output of derive_subfp_expected()
     — both tiers' brute-force union-finds over the live kernels. Any
     kernel/predicate drift trips here before the driver gate does."""
-    assert fpx.derive_subfp_expected() == fpx.SUBFP_EXPECTED
+    assert derive_subfp_expected() == fpx.SUBFP_EXPECTED
 
 
 def test_subfp_grouping_matches_brute_force(spark):

@@ -5,10 +5,6 @@ the Spark path vs brute force, and the blocking evidence floor.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import numpy as np
 import pytest
 
@@ -16,11 +12,61 @@ from go_pkg_spider_spark.fixtures.audio_fp_fixtures import (
     SNIPPET_EXPECTED,
     build_snippet_index_rows,
     build_snippet_query_rows,
-    derive_snippet_expected,
 )
 from go_pkg_spider_spark.operators import audio_fp as afp
 
 _SCHEMA = "clip_id string, bytes binary, codec string, sr_hz int"
+
+
+def derive_snippet_expected() -> list[tuple]:
+    """Brute-force snippet truth: every eligible query scored against
+    every eligible index clip with the production predicate (shared
+    distinct shingle keys >= FP_SNIPPET_MIN_SHARED, best-window
+    Jaccard >= FP_SNIPPET_JACCARD) — independent of the Spark
+    blocking/join path, so the gate cross-checks candidate recall."""
+    from go_pkg_spider_spark.operators.audio_fp import (
+        FP_SNIPPET_JACCARD,
+        FP_SNIPPET_MIN_SHARED,
+        _fp_row_full,
+        snippet_shingle_keys,
+        subfp_best_window,
+        unpack_subfps,
+    )
+
+    idx = {
+        cid: r
+        for cid, r in (
+            (cid, _fp_row_full(cid, b, c, s))
+            for cid, b, c, s in build_snippet_index_rows()
+        )
+    }
+    qs = {
+        cid: r
+        for cid, r in (
+            (cid, _fp_row_full(cid, b, c, s))
+            for cid, b, c, s in build_snippet_query_rows()
+        )
+    }
+
+    def elig(rows):
+        return sorted(c for c, r in rows.items() if r[1] is None and not r[4])
+
+    out = []
+    for qid in elig(qs):
+        qkeys = set(
+            int(k) for k in snippet_shingle_keys(unpack_subfps(qs[qid][5]))
+        )
+        for cid in elig(idx):
+            hkeys = set(
+                int(k)
+                for k in snippet_shingle_keys(unpack_subfps(idx[cid][5]))
+            )
+            if len(qkeys & hkeys) < FP_SNIPPET_MIN_SHARED:
+                continue
+            jac, pos = subfp_best_window(idx[cid][5], qs[qid][5])
+            if jac >= FP_SNIPPET_JACCARD:
+                out.append((qid, cid, round(jac, 6), pos))
+    return sorted(out)
 
 
 def test_best_window_hand_pin():

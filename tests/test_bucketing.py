@@ -6,8 +6,6 @@ Plan contract: the window rank + bucket groupBy share one Exchange."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,15 +33,6 @@ def test_minhash_hot_bucket_capped(spark):
     assert len(pairs) == cap * (cap - 1) // 2
     assert all(r.id_a < cap and r.id_b < cap for r in pairs)
     assert all(r.jaccard == 1.0 for r in pairs)
-
-
-def test_simhash_hot_bucket_capped(spark):
-    cap = 32
-    pairs = dedup.simhash_neardup_pairs(
-        _degenerate_corpus(spark, 1000), "text", "doc_id", max_bucket_size=cap
-    ).collect()
-    assert len(pairs) == cap * (cap - 1) // 2
-    assert all(r.hamming == 0 for r in pairs)
 
 
 def test_embedding_neardup_hot_bucket_capped(spark):

@@ -59,6 +59,53 @@ def test_reject_paths():
     assert decode.decode_blob(b"fLaC" + b"\0" * 32, "flac", 16000)[2] == "bad_flac_header"
 
 
+def test_decode_error_vocabulary_is_closed(monkeypatch):
+    """Every token the decoders raise or decode_blob returns is in
+    DECODE_ERRORS and every DECODE_ERRORS token is produced somewhere,
+    so a new raise must be added to the set; any other ValueError
+    message, a one-word library message included, maps to decode_error."""
+    import ast
+    import re
+    from pathlib import Path
+
+    from go_pkg_spider_spark.operators import flac
+
+    produced, prefixes = set(), set()
+    for mod in (decode, flac):
+        for node in ast.walk(ast.parse(Path(mod.__file__).read_text())):
+            if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "ValueError":
+                arg = node.args[0] if node.args else None
+                if isinstance(arg, ast.Constant) and re.fullmatch(r"[a-z0-9_]+", str(arg.value)):
+                    produced.add(arg.value)
+                elif (
+                    isinstance(arg, ast.JoinedStr)
+                    and isinstance(arg.values[0], ast.Constant)
+                    and re.fullmatch(r"[a-z0-9_]+:", arg.values[0].value)
+                ):
+                    prefixes.add(arg.values[0].value)
+            # decode_blob's direct `return None, 0, "<token>"`
+            if (
+                isinstance(node, ast.Return)
+                and isinstance(node.value, ast.Tuple)
+                and len(node.value.elts) == 3
+                and isinstance(node.value.elts[2], ast.Constant)
+                and isinstance(node.value.elts[2].value, str)
+            ):
+                produced.add(node.value.elts[2].value)
+    assert produced <= decode.DECODE_ERRORS, sorted(produced - decode.DECODE_ERRORS)
+    assert prefixes == {"no_codec:"}
+    no_codec = {f"no_codec:{c}" for c in decode.COMPRESSED_CODECS}
+    assert decode.DECODE_ERRORS - produced == no_codec
+
+    blob = b"RIFF" + b"\0" * 40
+    for msg in ("oneword", "frame number too large", ""):
+        def boom(blob, msg=msg):
+            raise ValueError(msg)
+
+        monkeypatch.setattr(decode, "decode_wav", boom)
+        assert decode.decode_blob(blob, "wav", 16000)[2] == "decode_error", msg
+
+
 def test_decode_udf_in_spark(spark, clips_path):
     df = spark.read.parquet(clips_path)
     out = df.select("clip_id", "codec", _fused_decode().alias("audio"))
@@ -68,15 +115,6 @@ def test_decode_udf_in_spark(spark, clips_path):
     for r in ok[:20]:
         assert r.audio.n_samples > 0
         assert 0.0 <= r.audio.rms <= 1.0
-
-
-def test_prefilter_pushdown(spark, clips_path):
-    """The codec/size guards must appear as data filters (pushdown to the
-    scan), so rejected rows never reach the Arrow batch."""
-    df = spark.read.parquet(clips_path).filter(decode.decode_prefilter())
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan or "Filter" in plan
-    assert df.count() > 0
 
 
 def test_wav_sample_width_family():
@@ -454,14 +492,13 @@ def test_compressed_codecs_are_whitelisted_with_typed_no_codec_rows():
 def test_compressed_codec_rows_flow_through_decode_udf(spark):
     """e2e through the production UDF surface, the fused Arrow UDF (the
     187edbe FLAC-test pattern): an mp3-labelled row reaches the decode
-    stage, passes decode_prefilter (whitelisted!), and lands as a typed
-    error row in this library-less sandbox."""
+    stage (its codec is whitelisted) and lands as a typed error row when
+    no codec library is installed."""
     import pytest
 
     from go_pkg_spider_spark.operators.decode import (
         _FFMPEG_BIN,
         _soundfile,
-        decode_prefilter,
     )
 
     if _soundfile is not None or _FFMPEG_BIN is not None:
@@ -481,10 +518,6 @@ def test_compressed_codec_rows_flow_through_decode_udf(spark):
     assert out["a"]["err"] == "no_codec:mp3"
     assert out["b"]["err"] == "no_codec:vorbis"
     assert out["c"]["err"] == "codec_not_whitelisted"
-    # prefilter admits the compressed rows (they're in contract) and
-    # still rejects the unlisted codec
-    kept = df.filter(decode_prefilter()).select("clip_id").collect()
-    assert sorted(r[0] for r in kept) == ["a", "b"]
 
 
 def test_au_and_aiff_containers():

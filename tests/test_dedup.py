@@ -111,12 +111,18 @@ def test_minhash_lsh_finds_planted_dups(corpus):
 
 
 def test_simhash_neardup(corpus):
-    pairs = dedup.simhash_neardup_pairs(corpus, "text", "doc_id", max_hamming=6).collect()
-    got = {(r.id_a, r.id_b): r.hamming for r in pairs}
-    assert got.get((1, 2)) == 0  # identical -> identical simhash
-    assert got.get((4, 6)) == 0
-    assert (1, 3) in got  # near dup within small hamming distance
-    assert (1, 4) not in got and (2, 4) not in got
+    sh = {
+        r.doc_id: r.sh
+        for r in corpus.select("doc_id", dedup.simhash64(F.col("text")).alias("sh")).collect()
+    }
+
+    def hamming(a, b):
+        return bin((sh[a] ^ sh[b]) & (2**64 - 1)).count("1")
+
+    assert hamming(1, 2) == 0  # identical -> identical simhash
+    assert hamming(4, 6) == 0
+    assert hamming(1, 3) <= 6  # near dup within small hamming distance
+    assert hamming(1, 4) > 6 and hamming(2, 4) > 6
 
 
 def test_simhash_deterministic(corpus):

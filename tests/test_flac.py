@@ -15,6 +15,16 @@ import pytest
 from go_pkg_spider_spark.operators import flac
 from go_pkg_spider_spark.operators.decode import decode_blob
 
+# the spec's FIXED predictor coefficients per order (the reference the
+# cumsum restore is checked against)
+_FIXED_COEFS = {
+    0: [],
+    1: [1],
+    2: [2, -1],
+    3: [3, -3, 1],
+    4: [4, -6, 4, -1],
+}
+
 
 def _pcm(n: int, seed: int = 3) -> np.ndarray:
     rng = np.random.default_rng(seed)
@@ -220,7 +230,7 @@ def test_restore_fixed_cumsum_equals_recurrence():
 
     def naive(warm, resid, order, n):
         out = list(warm)
-        coefs = flac._FIXED_COEFS[order]
+        coefs = _FIXED_COEFS[order]
         for r_ in resid:
             out.append(r_ + sum(c * out[-1 - j] for j, c in enumerate(coefs)))
         return np.array(out[:n], dtype=np.int64)

@@ -16,14 +16,14 @@ def _emb(spark):
 
 def test_centroids_deterministic(spark):
     e = _emb(spark)
-    c1 = similarity.train_ivf_centroids(e, "embedding", k=8)
-    c2 = similarity.train_ivf_centroids(e, "embedding", k=8)
+    c1 = similarity.train_ivf_centroids_distributed(e, "embedding", "vec_id", k=8)
+    c2 = similarity.train_ivf_centroids_distributed(e, "embedding", "vec_id", k=8)
     assert c1 == c2 and len(c1) == 8 and len(c1[0]) == 64
 
 
 def test_ivf_assignment_covers_all(spark):
     e = _emb(spark)
-    cents = similarity.train_ivf_centroids(e, "embedding", k=8)
+    cents = similarity.train_ivf_centroids_distributed(e, "embedding", "vec_id", k=8)
     cells = e.select(similarity.ivf_assign(F.col("embedding"), cents).alias("c"))
     counts = {r.c: r["count"] for r in cells.groupBy("c").count().collect()}
     assert sum(counts.values()) == e.count()
@@ -67,7 +67,7 @@ def test_ivf_assign_large_k_plan_is_constant_size(spark):
 
 def test_ivf_recall_vs_brute_force(spark):
     e = _emb(spark)
-    cents = similarity.train_ivf_centroids(e, "embedding", k=8)
+    cents = similarity.train_ivf_centroids_distributed(e, "embedding", "vec_id", k=8)
     q = [((-1.0) ** i) * (1.0 / (1 + i)) for i in range(64)]
     exact = {r.vec_id for r in similarity.brute_force_topk(e, "embedding", "vec_id", q, 10).collect()}
     approx = {

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from go_pkg_spider_spark.operators import links
 
@@ -87,12 +86,12 @@ def test_top_paths_branch(spark):
 
 
 def test_buckets_and_subdomains(spark, zh_links):
-    out = links.classify_links(zh_links, lang="zh")
-    buckets = links.link_buckets(out)
-    n = sum(buckets[t].count() for t in buckets)
-    assert n == zh_links.count()
-    subs = {r.domain_top: r.subdomains for r in links.subdomains(out).collect()}
-    assert "news.cn" in subs and "sports.news.cn" in subs["news.cn"]
+    out = links.classify_links(zh_links, lang="zh").collect()
+    # every link lands in exactly one of the four LinkRes buckets
+    assert len(out) == zh_links.count()
+    assert {r.link_type for r in out} <= {"content", "list", "unknown", "none"}
+    subs = {r.host for r in out if r.is_subdomain and r.domain_top == "news.cn"}
+    assert subs == {"sports.news.cn"}
 
 
 def test_broadcast_in_plan(spark, zh_links):
@@ -118,55 +117,3 @@ def test_root_dir_content_link_no_ansi_crash(spark):
     out = {r.url: r.link_type for r in links.classify_links(df, lang="zh").collect()}
     assert out["http://site.cn/c_999.htm"] in ("content", "unknown", "list")
     assert out["http://site.cn/x.htm"] in ("unknown", "list", "content")
-
-
-def test_meta_refresh_one_hop(spark):
-    """spider.go:231-247: same-top-domain refresh follows once; cross-
-    domain and chained refreshes do not."""
-    refresh = '<meta http-equiv="refresh" content="0; url=http://www.site.cn/real.html">'
-    cross = '<meta http-equiv="REFRESH" content="0;url=http://other.com/x.html">'
-    chain = '<meta http-equiv="refresh" content="0; url=http://www.site.cn/hop2.html">'
-    rows = [
-        ("http://site.cn/entry.html", refresh + "stub body"),
-        ("http://www.site.cn/real.html", "the real article content here"),
-        ("http://site.cn/cross.html", cross + "stays"),
-        ("http://site.cn/chain.html", chain + "chain stub"),
-        ("http://www.site.cn/hop2.html", refresh + "second hop stub"),
-        ("http://site.cn/plain.html", "plain page"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string")
-    out = {
-        r.url: r
-        for r in links.resolve_meta_refresh(df, "url", "html", ("html",)).collect()
-    }
-    # followed: content taken from the target row
-    assert out["http://site.cn/entry.html"].html == "the real article content here"
-    assert out["http://site.cn/entry.html"].redirect_of == "http://www.site.cn/real.html"
-    # cross-domain: not followed
-    assert out["http://site.cn/cross.html"].html.endswith("stays")
-    assert out["http://site.cn/cross.html"].redirect_of is None
-    # one hop only: chain takes hop2's RAW row (itself a refresh stub)
-    assert "second hop stub" in out["http://site.cn/chain.html"].html
-    assert out["http://site.cn/plain.html"].redirect_of is None
-
-
-def test_meta_refresh_prefers_populated_target_row(spark):
-    """A re-crawled target URL with one failed fetch (NULL html) and one
-    good row: the resolve must pick the populated row deterministically
-    (max over struct(non-null count, fields) — a bare min(struct) chose
-    the NULL-leading row because nulls sort first ascending)."""
-    refresh = '<meta http-equiv="refresh" content="0; url=http://www.site.cn/real.html">'
-    rows = [
-        ("http://site.cn/entry.html", refresh + "stub body", "t0"),
-        ("http://www.site.cn/real.html", None, None),        # failed fetch
-        ("http://www.site.cn/real.html", "good content", "good title"),
-    ]
-    df = spark.createDataFrame(rows, "url string, html string, title string")
-    out = {
-        r.url: r
-        for r in links.resolve_meta_refresh(
-            df, "url", "html", ("html", "title")
-        ).collect()
-    }
-    assert out["http://site.cn/entry.html"].html == "good content"
-    assert out["http://site.cn/entry.html"].title == "good title"

@@ -9,7 +9,7 @@ from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from go_pkg_spider_spark import oracle
-from go_pkg_spider_spark.functions import langid, scrub, textnorm
+from go_pkg_spider_spark.functions import langid, scrub
 
 # mixed-script text: latin, CJK, punctuation, whitespace, digits
 TEXT = st.text(
@@ -116,7 +116,7 @@ def test_date_cascade_dialect_parity(spark, texts):
     want = [
         (r[0], r[1])
         for r in con.execute(
-            f"SELECT {kind}, {oracle_sql_gen.norm_date_sql(raw)} FROM t ORDER BY i"
+            f"SELECT {kind}, {oracle_sql_gen._norm_date_sql(raw)} FROM t ORDER BY i"
         ).fetchall()
     ]
     assert got == want

@@ -5,9 +5,38 @@ DataFrame operator."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from go_pkg_spider_spark.functions import domain
+
+
+def psl_split(host: str) -> tuple[str, str, str] | None:
+    """Pure-Python DomainParse against the full PSL: returns
+    (subdomain, domain, tld) or None when the host has no registrable
+    domain (it IS a public suffix, or is a single label). Algorithm per
+    publicsuffix.org/list/: prevailing rule = matching exception (minus
+    its leftmost label) if any, else the longest matching rule, else
+    the implicit '*' (last label)."""
+    normal, wild, exc = domain.load_psl()
+    labels = [x for x in (host or "").lower().strip().split(".") if x != ""]
+    n = len(labels)
+    if n == 0:
+        return None
+    suffix_len = 1
+    for k in range(1, n + 1):
+        cand = ".".join(labels[n - k :])
+        if cand in exc:
+            suffix_len = k - 1
+            break
+        if cand in normal:
+            suffix_len = max(suffix_len, k)
+        if k >= 2 and ".".join(labels[n - k + 1 :]) in wild:
+            suffix_len = max(suffix_len, k)
+    if n <= suffix_len:
+        return None
+    tld = ".".join(labels[n - suffix_len :])
+    dom = labels[n - suffix_len - 1]
+    sub = ".".join(labels[: n - suffix_len - 1])
+    return (sub, dom, tld)
+
 
 # (host, (subdomain, domain, tld)) — derived by hand from the PSL rules
 # (net.cn/ac.cn/gov.cn/gov.mo/or.jp/co.uk are public suffixes; wh.cn,
@@ -50,12 +79,12 @@ def test_psl_loaded_full():
 
 def test_psl_split_fixtures():
     for host, want in FIXTURES.items():
-        assert domain.psl_split(host) == want, host
+        assert psl_split(host) == want, host
 
 
 def test_psl_split_public_suffix_hosts():
     for host in NO_DOMAIN:
-        assert domain.psl_split(host) is None, host
+        assert psl_split(host) is None, host
 
 
 def test_with_domain_parsed_matches_python(spark):
@@ -66,7 +95,7 @@ def test_with_domain_parsed_matches_python(spark):
         for r in domain.with_domain_parsed(df, "host").collect()
     }
     for h in hosts:
-        want = domain.psl_split(h)
+        want = psl_split(h)
         got = out[h]
         if want is None:
             assert got is None, h

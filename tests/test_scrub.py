@@ -1,11 +1,10 @@
-"""Exact-match scrub goldens (FIXTURES.md §3.5) + ICP extraction goldens
-(/root/reference/extract/icp_test.go:5-21)."""
+"""Exact-match scrub goldens (FIXTURES.md §3.5)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from go_pkg_spider_spark.functions import icp, scrub
+from go_pkg_spider_spark.functions import scrub
 
 
 def _scrub(spark, text):
@@ -80,17 +79,3 @@ def test_scrub_oracle_sql_matches(spark):
             f"select {expr} as s from (select ? as t)", params=[g]
         ).fetchone()[0]
         assert spark_out == duck_out, (g, spark_out, duck_out)
-
-
-def test_icp_extract(spark):
-    # icp_test.go:5-21 goldens
-    cases = {
-        "粤ICP备17055554号": ("粤ICP备17055554", "广东"),
-        "京公网安备31010402001073号": ("京公网安备31010402001073", "北京"),
-        "粤B2-20090059": ("粤B2-20090059", "广东"),
-        "沪ICP证030173号": ("沪ICP证030173", "上海"),
-    }
-    for raw, (want_icp, want_prov) in cases.items():
-        r = spark.range(1).select(icp.icp_extract(F.lit(raw)).alias("r")).collect()[0].r
-        assert r.icp == want_icp, (raw, r.icp)
-        assert r.province == want_prov, (raw, r.province)

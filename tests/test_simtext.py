@@ -1,60 +1,28 @@
-"""Similarity argmax (F15/A11) + rule-mode link classification (X2/J3)."""
+"""Similarity argmax (F15/A11)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from go_pkg_spider_spark.functions import simtext
-from go_pkg_spider_spark.operators import links
+
+
+def _best(spark, cands, target):
+    df = spark.createDataFrame([(cands, target)], "c array<string>, t string")
+    return df.select(simtext.best_match_udf("c", "t").alias("m")).collect()[0].m
 
 
 def test_similarity_udf(spark):
-    df = spark.createDataFrame(
-        [("hello world", "hello world"), ("hello world", "hella warld"), (None, "x")],
-        "a string, b string",
-    )
-    out = df.select(simtext.similarity_udf("a", "b").alias("r")).collect()
-    assert out[0].r == 1.0
-    assert 0.5 < out[1].r < 1.0
-    assert out[2].r == 0.0
+    assert _best(spark, ["hello world"], "hello world").ratio == 1.0
+    assert 0.5 < _best(spark, ["hello world"], "hella warld").ratio < 1.0
+    none = _best(spark, [None], "x")
+    assert (none.best, none.ratio) == (None, 0.0)
 
 
 def test_best_matching_segment(spark):
-    text = "completely unrelated line\nthe actual news title here\nanother line"
-    target = "actual news title"
-    got = spark.range(1).select(
-        simtext.best_matching_segment(F.lit(text), F.lit(target), 0.5).alias("m")
-    ).collect()[0].m
-    assert got == "the actual news title here"
-    # below threshold -> NULL
-    got2 = spark.range(1).select(
-        simtext.best_matching_segment(F.lit(text), F.lit("zzzz qqqq"), 0.5).alias("m")
-    ).collect()[0].m
-    assert got2 is None
-
-
-def test_classify_links_by_rules(spark):
-    rules_map = {
-        "news.cn": [r"/politics/\d{4}-\d{2}/"],
-        "sports.news.cn": [r"/games/"],
-    }
-    rows = [
-        ("http://news.cn/politics/2022-10/03/c_1.htm", "t1"),   # host-rule match
-        ("http://sports.news.cn/games/g_1.htm", "t2"),          # exact-host rule
-        ("http://other.news.cn/politics/2022-10/03/x.htm", "t3"),  # top-domain fallback
-        ("http://news.cn/about.html", "t4"),                    # no match -> unknown
-        ("http://news.cn/index.html", "t5"),                    # index -> none
-        ("http://news.cn/files/a.pdf", "t6"),                   # rejected
-    ]
-    df = spark.createDataFrame(rows, "url string, anchor_title string")
-    out = {r.url: r for r in links.classify_links_by_rules(df, rules_map).collect()}
-    assert out[rows[0][0]].link_type == "content"
-    assert out[rows[1][0]].link_type == "content"
-    assert out[rows[2][0]].link_type == "content"  # fallback to news.cn rules
-    assert out[rows[3][0]].link_type == "unknown"
-    assert out[rows[4][0]].link_type == "none"
-    assert out[rows[5][0]].link_type == "none"
-    assert out[rows[5][0]].reject_reason == "invalid url with suffix"
+    segs = ["completely unrelated line", "the actual news title here", "another line"]
+    got = _best(spark, segs, "actual news title")
+    assert got.best == "the actual news title here" and got.ratio > 0.5
+    # an unrelated target scores under the 0.5 title gate
+    assert _best(spark, segs, "zzzz qqqq").ratio < 0.5
 
 
 def test_simtext_fixtures_match_difflib():

@@ -1,5 +1,5 @@
 """Streaming recast tests: the foreachBatch quality-filter stream and
-the watermarked hourly rollup, driven with availableNow triggers."""
+online ANN serving, driven with availableNow triggers."""
 
 from __future__ import annotations
 
@@ -69,33 +69,6 @@ def test_stream_quality_filter_matches_batch(spark, clips_path, tmp_path):
     assert checked_audio > 100  # real decodes compared, not all-error
 
 
-def test_stream_hourly_metrics(spark, tmp_path):
-    events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    flat = str(tmp_path / "ev")
-    events.coalesce(1).write.mode("overwrite").parquet(flat)
-    stream = (
-        spark.readStream.schema(events.schema).option("maxFilesPerTrigger", 1).parquet(flat)
-    )
-    q = jobs.stream_hourly_metrics(stream, str(tmp_path / "ckpt2"), queryName="hm_test")
-    q.awaitTermination(300)
-    got = {
-        (r.hour, r.event_type): (r.n_events, r.total_value)
-        for r in spark.sql("select * from hm_test").collect()
-    }
-    want = {
-        (r.hour, r.event_type): (r.n_events, r.total_value)
-        for r in events.groupBy(
-            F.date_trunc("hour", "ts").alias("hour"), "event_type"
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_foreachbatch_sink_idempotent_on_replay(spark, clips_path, tmp_path):
     """foreachBatch is at-least-once: replaying a micro-batch (same
     batch_id) must not duplicate output rows — each batch overwrites its
@@ -116,61 +89,10 @@ def test_foreachbatch_sink_idempotent_on_replay(spark, clips_path, tmp_path):
     assert n1 == n2 == 20
 
 
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """applyInPandasWithState sessionization == batch sessionize for
-    every session the stream emitted (the open tail session per user
-    stays in state at end-of-stream and is legitimately unemitted)."""
-    from go_pkg_spider_spark.operators import stats
-
-    e = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .filter(F.col("user_id") % 25 == 0)
-        .select("event_id", "ts", "user_id", "value")
-    )
-    # three time-ordered files -> three micro-batches; the watermark
-    # advances between batches, firing EventTimeTimeout session closes
-    rows = e.orderBy("ts", "event_id").collect()
-    third = len(rows) // 3
-    sdir = tmp_path / "events_stream"
-    sdir.mkdir()
-    for i in range(3):
-        chunk = rows[i * third : (i + 1) * third] if i < 2 else rows[2 * third :]
-        spark.createDataFrame(chunk, e.schema).coalesce(1).write.parquet(
-            str(sdir / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir / "part*"))
-    )
-    q = jobs.stream_sessionize(
-        stream, str(tmp_path / "ckpt_sess"), gap_minutes=30, queryName="sess_test"
-    )
-    q.awaitTermination(300)
-
-    got = spark.sql("select * from sess_test").collect()
-    assert len(got) > 0  # timeouts + in-batch gaps emitted something
-    batch = stats.sessionize(e, "user_id", "ts", "event_id", "value", 30).collect()
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, round(r.total_value, 4))
-        for r in batch
-    }
-    for r in got:
-        key = (
-            r.user_id,
-            r.session_start,
-            r.session_end,
-            r.n_events,
-            round(r.total_value, 4),
-        )
-        assert key in want, key
-
-
-def test_sessionize_subsecond_gap_parity(spark, tmp_path):
-    """Sub-second timestamps: the batch gap is measured in MICROSECONDS
-    (second-truncation merged 60.4s gaps under a 60s threshold), and the
-    streaming twin — here driven through the PRODUCTION parquet sink
-    (output_path) — must split sessions identically."""
+def test_sessionize_subsecond_gap_parity(spark):
+    """Sub-second timestamps: the batch gap is measured in MICROSECONDS,
+    the same precision as the DuckDB oracle's INTERVAL compare
+    (second-truncation merged 60.4s gaps under a 60s threshold)."""
     import datetime as dt
 
     from go_pkg_spider_spark.operators import stats
@@ -182,7 +104,6 @@ def test_sessionize_subsecond_gap_parity(spark, tmp_path):
         # truncation (the old bug merged these)
         (2, t0 + dt.timedelta(seconds=60, microseconds=400_000), 7, 2.0),
         (3, t0 + dt.timedelta(seconds=90), 7, 3.0),
-        # far ahead so the watermark closes the sessions above
         (4, t0 + dt.timedelta(hours=6), 7, 4.0),
     ]
     schema = "event_id long, ts timestamp, user_id long, value double"
@@ -191,127 +112,6 @@ def test_sessionize_subsecond_gap_parity(spark, tmp_path):
     got = sorted(batch.collect(), key=lambda r: r.session_start)
     assert [r.n_events for r in got] == [1, 2, 1]
     assert got[0].session_end.microsecond == 100_000
-
-    sdir = tmp_path / "subsec_stream"
-    sdir.mkdir()
-    for i, r in enumerate(rows):
-        spark.createDataFrame([r], schema).coalesce(1).write.parquet(
-            str(sdir / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir / "part*"))
-    )
-    out_dir = str(tmp_path / "sess_parquet_out")
-    q = jobs.stream_sessionize(
-        stream,
-        str(tmp_path / "ckpt_subsec"),
-        gap_minutes=1,
-        output_path=out_dir,
-    )
-    q.awaitTermination(300)
-    streamed = spark.read.parquet(out_dir)
-    want = {
-        (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
-        for r in got
-    }
-    for r in streamed.select(
-        "user_id", "session_start", "session_end", "n_events", "total_value"
-    ).collect():
-        key = (r.user_id, r.session_start, r.session_end, r.n_events, r.total_value)
-        assert key in want, key
-    # both closed sessions emitted through the parquet sink (the
-    # 6h-later event is itself the open tail session left in state)
-    assert streamed.count() == 2
-
-
-def test_stream_interval_join_matches_batch(spark, tmp_path):
-    """Stream-stream interval join (two watermarks + time-range
-    condition) must emit exactly the batch inner-join pairs when fed in
-    event-time order: every +/-window pair has both sides inside
-    watermark+window when the later side arrives, so none evict early."""
-    e = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
-        "event_id", "ts", "user_id", "event_type"
-    )
-    rows = e.orderBy("ts", "event_id").collect()
-    third = len(rows) // 3
-    sdir = tmp_path / "ij_stream"
-    sdir.mkdir()
-    for i in range(3):
-        chunk = rows[i * third : (i + 1) * third] if i < 2 else rows[2 * third :]
-        spark.createDataFrame(chunk, e.schema).coalesce(1).write.parquet(
-            str(sdir / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(e.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir / "part*"))
-    )
-    out_dir = str(tmp_path / "ij_out")
-    q = jobs.stream_interval_join(
-        stream, str(tmp_path / "ij_ckpt"), window_seconds=1800, output_path=out_dir
-    )
-    q.awaitTermination(300)
-    got = {
-        (r.l_id, r.r_id)
-        for r in spark.read.parquet(out_dir).select("l_id", "r_id").collect()
-    }
-    b = e.withColumn("ts", F.col("ts").cast("timestamp"))
-    clicks = b.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("l_id"), F.col("user_id").alias("u"),
-        F.col("ts").alias("l_ts"),
-    )
-    views = b.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("r_id"), F.col("user_id").alias("u2"),
-        F.col("ts").alias("r_ts"),
-    )
-    want = {
-        (r.l_id, r.r_id)
-        for r in clicks.join(
-            views,
-            (F.col("u") == F.col("u2"))
-            & (F.col("r_ts") >= F.col("l_ts") - F.expr("INTERVAL 1800 SECOND"))
-            & (F.col("r_ts") <= F.col("l_ts") + F.expr("INTERVAL 1800 SECOND")),
-        ).collect()
-    }
-    assert got == want and len(want) > 0
-
-
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    """Bounded-state cross-batch dedup: duplicates arriving within the
-    watermark horizon are dropped across micro-batches; each surviving
-    event_id appears exactly once in the sink."""
-    import datetime as dt
-
-    t0 = dt.datetime(2024, 4, 1, 9, 0, 0)
-    schema = "event_id long, ts timestamp, user_id long"
-    waves = [
-        [(1, t0, 5), (2, t0 + dt.timedelta(minutes=1), 5)],
-        # wave 2 re-delivers event 2 (same event time) + a new event
-        [(2, t0 + dt.timedelta(minutes=1), 5), (3, t0 + dt.timedelta(minutes=2), 5)],
-        # far-future event advances the watermark past everything
-        [(4, t0 + dt.timedelta(hours=6), 5)],
-    ]
-    sdir = tmp_path / "dd_stream"
-    sdir.mkdir()
-    for i, wave in enumerate(waves):
-        spark.createDataFrame(wave, schema).coalesce(1).write.parquet(
-            str(sdir / f"part{i}")
-        )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(sdir / "part*"))
-    )
-    out_dir = str(tmp_path / "dd_out")
-    q = jobs.stream_dedup_within_watermark(
-        stream, str(tmp_path / "dd_ckpt"), ["event_id"], watermark="1 hour",
-        output_path=out_dir,
-    )
-    q.awaitTermination(300)
-    got = sorted(r.event_id for r in spark.read.parquet(out_dir).collect())
-    assert got == [1, 2, 3, 4]
 
 
 import pytest

@@ -66,4 +66,3 @@ def test_clean_for_lang_chain_order(spark):
 
 def test_truncations(spark):
     assert _one(spark, tn.truncate_title(F.lit("x" * 300))) == "x" * 128
-    assert _one(spark, tn.truncate_description(F.lit("y" * 500))) == "y" * 384
