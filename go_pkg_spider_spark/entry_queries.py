@@ -551,7 +551,7 @@ _EMB_DIM = 64  # embeddings.embedding dim in testdata (verified in tests)
 )
 def ann_topk_embeddings(spark, sf_dir):
     """Brute-force cosine top-k baseline (TakeOrderedAndProject)."""
-    e = _t(spark, sf_dir, "embeddings", spread=True)
+    e = _t(spark, sf_dir, "embeddings")
     q = _query_vec(_EMB_DIM)
     qc = similarity.lit_double_array(q)
     return (
@@ -894,29 +894,12 @@ def winnow_fingerprints_docs(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents", spread=True)
 
-    # Round 9 (guide §1.2 per-task work, §2.3 narrower types): gram
-    # hashes used to ride as decimal(20,0) — one string->BigDecimal
-    # parse per gram plus BigDecimal compares through every min pass
-    # (~14.6M grams at sf1.0). The u64 now rides as a SIGN-BIASED long:
-    # conv(hex, 16, -10) reads the same little-endian bytes as a signed
-    # long, and XOR with the sign bit makes signed order equal unsigned
-    # order, so every least()/array_distinct works on primitive longs.
-    # The unsigned 20-digit STRING the oracle expects is rebuilt ONCE
-    # per surviving fingerprint (hex -> conv base 10), not per gram —
-    # output strings byte-identical (proven vs the pre-change output on
-    # sf0.01/sf0.1 and the DuckDB oracle). Measured: 3.6s -> ~2s at sf1.
-    _SIGN = F.lit(-0x8000000000000000)
-
-    def le_u64_biased(m):  # first 8 md5 bytes little-endian, order-biased
-        return (
-            F.conv(
-                F.concat(*[F.substring(m, i * 2 + 1, 2) for i in reversed(range(8))]),
-                16,
-                -10,
-            )
-            .cast("long")
-            .bitwiseXOR(_SIGN)
-        )
+    def le_u64(m):  # first 8 md5 bytes little-endian == md5_number_upper
+        return F.conv(
+            F.concat(*[F.substring(m, i * 2 + 1, 2) for i in reversed(range(8))]),
+            16,
+            10,
+        ).cast("decimal(20,0)")
 
     def grams_of(s: Column) -> Column:
         n = F.length(s)
@@ -927,11 +910,9 @@ def winnow_fingerprints_docs(spark, sf_dir):
                 # let-bind the md5 hex per gram too: le_u64 references its
                 # argument 8x (one per byte), which would mean 8 md5
                 # evaluations per gram inlined
-                lambda i: let_col(
-                    F.md5(F.substring(s, i, F.lit(_WINNOW_K))), le_u64_biased
-                ),
+                lambda i: let_col(F.md5(F.substring(s, i, F.lit(_WINNOW_K))), le_u64),
             ),
-        ).otherwise(F.array().cast("array<bigint>"))
+        ).otherwise(F.array().cast("array<decimal(20,0)>"))
 
     def mins_of(hs: Column) -> Column:
         # sliding min of width 4 by doubling: pair[j] = min(h[j],
@@ -971,7 +952,7 @@ def winnow_fingerprints_docs(spark, sf_dir):
                     ),
                 )
             ),
-        ).otherwise(F.array().cast("array<bigint>"))
+        ).otherwise(F.array().cast("array<decimal(20,0)>"))
 
     # let-bound stages (expr_utils.let_col): withColumn aliases are NOT
     # a safe barrier here — CollapseProject inlines them through the
@@ -983,15 +964,9 @@ def winnow_fingerprints_docs(spark, sf_dir):
         F.lower(F.trim(F.regexp_replace(F.col("text"), r"\s+", " "))), 1, _WINNOW_CAP
     )
     fps = let_col(norm, lambda s: let_col(grams_of(s), mins_of))
-    # un-bias and format as the unsigned decimal string ONCE per
-    # surviving fingerprint: hex() prints the long as unsigned 64-bit
-    # hex, conv(_, 16, 10) renders the 20-digit unsigned value
     return (
         d.select("doc_id", F.explode(fps).alias("fp"))
-        .select(
-            "doc_id",
-            F.conv(F.hex(F.col("fp").bitwiseXOR(_SIGN)), 16, 10).alias("fingerprint"),
-        )
+        .select("doc_id", F.col("fp").cast("string").alias("fingerprint"))
     )
 
 
@@ -1763,7 +1738,7 @@ def gov_meta_docs(spark, sf_dir):
     gov.hk keeps 政务 while its province still needs lang=zh."""
     from .functions import domain
 
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = _t(spark, sf_dir, "documents")
     v = F.col("doc_id") % 8
     host = (
         F.when(v == 0, "portal.ministry.gov.cn")
@@ -1826,7 +1801,7 @@ def dates_family_docs(spark, sf_dir):
     single / none / zh-units vs dashed with time). The Spark side runs
     the REAL fold (dates.longest_date — first-wins on equal length);
     DuckDB replays it with the identical list_reduce fold."""
-    d = _t(spark, sf_dir, "documents", spread=True)
+    d = _t(spark, sf_dir, "documents")
     m1 = (F.col("doc_id") % 9 + 1).cast("string")
     h = (F.col("doc_id") % 3).cast("string")
     v = F.col("doc_id") % 4

@@ -244,9 +244,10 @@ class ManifestedRun:
             out, output_table, partition_by=["bucket"], replace_partitions=wave
         )
         # metrics from the committed output: one read of the wave's
-        # partitions, drop_reason column only. Exact for any reason —
-        # decode_<token> reasons form an open set no fixed list covers.
-        # A bucket with no rows has no partition and keeps hist {}; the
+        # partitions, drop_reason column only. Exact for any reason
+        # without naming them: the decode_<token> reasons are the closed
+        # decode.DECODE_ERRORS set, but this count needs no list. A
+        # bucket with no rows has no partition and keeps hist {}; the
         # known schema lets a table with no data files at all read as
         # empty.
         hists: dict[int, dict] = {b: {} for b in wave}

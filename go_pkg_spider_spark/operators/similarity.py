@@ -605,7 +605,6 @@ def ivf_topk_batch_gemm(
     round_digits: int = 6,
     cell_col: str | None = None,
     max_probe_rows_per_chunk: int = 100_000,
-    persist_index_across_chunks: bool = True,
 ) -> DataFrame:
     """ivf_topk_batch's GEMM scorer: same probe selection (bit-identical
     — the shared _probe_cells plan collected to the driver; the query
@@ -645,17 +644,16 @@ def ivf_topk_batch_gemm(
     separate mapInPandas branch over the cell-assigned index
     projection, so a C-chunk serve re-scans (and, when cell_col is
     None, re-computes the cell assignment of) the index C times. When
-    more than one chunk exists and persist_index_across_chunks is on,
-    the projection is persisted MEMORY_AND_DISK before the job runs —
-    the first branch materializes it, the rest read the cache
+    more than one chunk exists, the projection is persisted
+    MEMORY_AND_DISK before the job runs — the first branch
+    materializes it, the rest read the cache
     (measured: BENCH/BASELINE.md round-8 section). The cache is scoped
     to the returned plan: callers that materialize once (every oracled
     entry, the serve stage) should release it afterwards via
     release_serve_caches(spark) — jobs/run_ann_index.py does. At an
     index far larger than cluster storage-memory the cache degrades to
     disk-spill reads, which is the same order as the repeated columnar
-    scan it replaces; set persist_index_across_chunks=False to keep
-    the pure re-scan behavior."""
+    scan it replaces."""
     from pyspark.sql import Window
 
     probes = _probe_cells(queries_df, vec_col, qid_col, centroids, n_probe)
@@ -785,7 +783,7 @@ def ivf_topk_batch_gemm(
             )
         )
 
-    if len(chunk_dfs) > 1 and persist_index_across_chunks:
+    if len(chunk_dfs) > 1:
         # one cache fill beats C-1 extra index scans (and C-1 repeated
         # ivf_assign computations when cell_col is None); released by
         # the caller via release_serve_caches once materialized

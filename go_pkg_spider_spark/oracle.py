@@ -18,7 +18,6 @@ from dataclasses import dataclass
 from .functions.langid import (
     LATIN_SET,
     OTHER_SET,
-    SEED_CORPUS,  # noqa: F401 — same embedded model artifact
     _score_text,
 )
 from .functions.scrub import SCRUB_BANK

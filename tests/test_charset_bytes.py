@@ -4,8 +4,6 @@ Charset() decision order (/root/reference/charset.go:38-101)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from go_pkg_spider_spark.functions.charset_bytes import (
     convert_charset_py,
     sniff_charset,

@@ -7,11 +7,7 @@ oracle)."""
 
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from go_pkg_spider_spark.fixtures.charset_fixtures import FIXTURES
 from go_pkg_spider_spark.functions import charset_bytes as cb

@@ -3,12 +3,8 @@ parity at sf0.001 (the fast tier; the driver runs sf0.01)."""
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entry_mod
 from tools.check_oracles import TABLES, compare

@@ -106,8 +106,6 @@ def test_non_utf_charset_skips_body(spark):
 
 
 def test_model_resolution_languages(spark):
-    from go_pkg_spider_spark.functions.langid import SEED_CORPUS
-
     cases = {
         "ru": "Быстрая коричневая лиса прыгает через ленивую собаку пока журналисты собирались на месте чтобы подробно осветить историю для проверки",
         "ko": "빠른 갈색 여우가 게으른 개를 뛰어넘고 사람들이 아이들과 함께 걷고 있는 도시의 거리를 달립니다 이것은 테스트 문장입니다 감사합니다",

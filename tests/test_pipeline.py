@@ -4,8 +4,6 @@ per-clip path)."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from go_pkg_spider_spark import pipeline
 from go_pkg_spider_spark.oracle import oracle_decide
 

@@ -1,18 +1,20 @@
-"""Every package module, and every top-level definition in it, is
-reached from an entry point.
+"""Every script is a listed entry point, every package module and
+every top-level definition in it is reached from one, and every import
+is used.
 
-Walks `import` / `from ... import` nodes with `ast` (imports inside
-functions included, since most entries import lazily) from the
-entry points: jobs/*.py, tools/*.py, bench.py, bench_extra.py,
-perfbench/*.py, pipeline.py and entry_queries.py. A module no entry,
-job or pipeline reaches is dead code: delete it, or justify it in
-ALLOWED_UNREACHED.
+ROOTS lists the entry points, each with why it is one; any other *.py
+at the repo root or under tools/ fails, naming its file. Walks
+`import` / `from ... import` nodes with `ast` (imports inside
+functions included, since most entries import lazily) from those
+roots. A module no entry, job or pipeline reaches is dead code: delete
+it, or justify it in ALLOWED_UNREACHED.
 
 The same walk then goes down to top-level `def`s, `class`es and
 UPPER_CASE constants of the package: one that no reached non-test
 file uses is dead code too, even when a test calls it. Delete it (a
 test's reference for a production twin moves into the test), or
-justify it in ALLOWED_UNUSED.
+justify it in ALLOWED_UNUSED. An import is not a use, so the last
+check fails on any name a file imports and never mentions.
 """
 
 from __future__ import annotations
@@ -32,12 +34,30 @@ ALLOWED_UNREACHED: set[str] = set()
 ALLOWED_UNUSED: dict[str, str] = {}
 
 
+# Every entry point, with why it is one. Only these files root the
+# walks below, and every *.py at the repo root and under tools/ must be
+# listed: a one-off script fails test_every_script_is_a_listed_root
+# (timings belong in perfbench/ or bench.py, not beside them).
+ROOTS: dict[str, str] = {
+    "bench.py": "entry-level benchmark: every queries() entry, noop sink",
+    "__spark_entry__.py": "the queries() / oracle_sql() contract surface",
+    f"{PKG}/pipeline.py": "the clips quality-filter pipeline",
+    f"{PKG}/entry_queries.py": "the oracled queries() entries",
+    "jobs/*.py": "the spark-submit jobs",
+    "perfbench/*.py": "the job benchmark (BENCHMARK.json)",
+    "tools/__init__.py": "makes tools/ a package the tests import from",
+    "tools/check_oracles.py": "Spark-vs-DuckDB parity gate; test_entry, test_check_oracles",
+    "tools/regen_goldens.py": "rewrites the frozen goldens after an intended semantics change",
+    "tools/regen_audio_fixtures.py": "rewrites the audio fixture table (audio_fixtures.py names it)",
+    "tools/ann_recall.py": "recall@k sweep; test_ivf",
+    "tools/fp_robustness.py": "fingerprint robustness floors; test_audio_fp",
+    "tools/model_accuracy.py": "langid / perplexity accuracy; test_model_accuracy",
+    "tools/plan_report.py": "writes BENCH/PLANS.md, the plan-shape evidence",
+}
+
+
 def _roots() -> list[Path]:
-    files = [REPO / "bench.py", REPO / "bench_extra.py"]
-    files += [REPO / PKG / "pipeline.py", REPO / PKG / "entry_queries.py"]
-    for d in ("jobs", "tools", "perfbench"):
-        files += sorted((REPO / d).glob("*.py"))
-    return [f for f in files if f.exists()]
+    return sorted(f for pattern in ROOTS for f in REPO.glob(pattern))
 
 
 def _module_file(name: str, near: Path) -> Path | None:
@@ -106,6 +126,14 @@ def _modules(files) -> set[str]:
     }
 
 
+def test_every_script_is_a_listed_root():
+    """A script at the repo root or under tools/ is an entry point by
+    being runnable, so it must say why it exists in ROOTS."""
+    scripts = set(REPO.glob("*.py")) | set((REPO / "tools").glob("*.py"))
+    unlisted = sorted(str(f.relative_to(REPO)) for f in scripts - set(_roots()))
+    assert not unlisted, f"scripts not in ROOTS: {unlisted}"
+
+
 def test_every_package_module_is_reached_from_an_entry_point():
     """Equality, not a subset check: an allowlisted module that becomes
     reachable, or is deleted, must leave the allowlist, so the allowlist
@@ -144,17 +172,15 @@ def _is_registered(stmt: ast.stmt) -> bool:
 
 
 def _names_used(node: ast.AST) -> set[str]:
-    """Every name node mentions: a Name, an Attribute, an imported
-    name, or a string constant that is an identifier (getattr and
-    patch-by-name)."""
+    """Every name node mentions: a Name, an Attribute, or a string
+    constant that is an identifier (getattr and patch-by-name). An
+    import alone is not a use: the importing file must name it."""
     out: set[str] = set()
     for n in ast.walk(node):
         if isinstance(n, ast.Name):
             out.add(n.id)
         elif isinstance(n, ast.Attribute):
             out.add(n.attr)
-        elif isinstance(n, ast.alias):
-            out.add(n.name.split(".")[-1])
         elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
             out.add(n.value)
     return out
@@ -215,3 +241,28 @@ def test_every_package_definition_is_used_from_an_entry_point():
     assert not new, "defined but used by no entry point:\n" + "\n".join(new)
     stale = sorted(set(ALLOWED_UNUSED) - set(unused))
     assert not stale, f"allowlisted but used or gone: {stale}"
+
+
+def _unused_imports(f: Path) -> list[str]:
+    """Each name f imports but never mentions, as "line name"."""
+    tree = ast.parse(f.read_text(), str(f))
+    bound: dict[str, int] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+            continue
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            for a in node.names:
+                if a.name != "*":
+                    bound.setdefault(a.asname or a.name.split(".")[0], node.lineno)
+    used = _names_used(tree)
+    return [f"{line} {name}" for name, line in bound.items() if name not in used]
+
+
+def test_every_import_is_used():
+    """The walks above do not count an import as a use, so an unused
+    import hides nothing from them; it is still dead code."""
+    files = [f for d in (PKG, "jobs", "tools", "tests") for f in (REPO / d).rglob("*.py")]
+    unused = [
+        f"{f.relative_to(REPO)}:{hit}" for f in sorted(files) for hit in _unused_imports(f)
+    ]
+    assert not unused, "imported but unused:\n" + "\n".join(unused)

@@ -6,10 +6,6 @@ index)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from pyspark.sql import functions as F
 
 from go_pkg_spider_spark.operators import similarity

@@ -5,13 +5,9 @@ knob change must NOT re-run the fingerprint decode stage)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import numpy as np
 
-from go_pkg_spider_spark.fixtures.audio_fixtures import _flac, _i16, _wav
+from go_pkg_spider_spark.fixtures.audio_fixtures import _flac, _wav
 from go_pkg_spider_spark.fixtures.audio_fp_fixtures import _am, _chirp
 from jobs.run_audio_dedup import run_audio_dedup
 

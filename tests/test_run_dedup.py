@@ -5,10 +5,6 @@ manifest metrics."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 from go_pkg_spider_spark.io.manifest import latest_rows
 from jobs.run_dedup import run_dedup
 

@@ -133,10 +133,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     if len(sys.argv) > 1 and sys.argv[1] == "--clustered":
-        # the 500k clustered corpus built by tools/sf1_headline.py's
-        # `ann` phase (2,000 micro-clusters of 250): the realistic-best
-        # case complementing the near-random base table's floor. 500
-        # queries keep the full-probe truth run bounded (~250M pairs).
+        # the 500k clustered corpus built by the `ann` phase of
+        # `git show d74e7cb:tools/sf1_headline.py` (2,000 micro-clusters
+        # of 250): the realistic-best case complementing the near-random
+        # base table's floor. 500 queries keep the full-probe truth run
+        # bounded (~250M pairs).
         sf_dir = "/tmp/emb_sf1.parquet (clustered, sf1_headline ann gen)"
         emb = spark.read.parquet("/tmp/emb_sf1.parquet")
         queries = (

@@ -25,11 +25,12 @@ Usage: python tools/fp_robustness.py
 from __future__ import annotations
 
 import json
+import os
 import sys
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from go_pkg_spider_spark.fixtures.audio_fixtures import _hashnoise  # noqa: E402
 from go_pkg_spider_spark.operators import audio_fp as afp  # noqa: E402
