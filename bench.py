@@ -18,9 +18,11 @@ query list (pass 1 forward, passes 2-3 reverse, pass 4 forward) so one
 contended host window lands in at most one or two of each entry's runs
 — back-to-back min-of-2 could not reject a window that covered both
 runs (BENCH_r05: uniform 1.5-3x inflation on every sub-second entry).
-Raw per-run times go to BENCH/bench_raw_runs.json (referenced by path
-from the printed line) so noise stays adjudicable without bloating the
-one-line artifact a truncating capture could cut (VERDICT r6 #1).
+Raw per-run times go to BENCH/bench_raw_runs_<cpus>core_sf<sf>.json
+(referenced by its repo-relative path from the printed line) so noise
+stays adjudicable without bloating the one-line artifact a truncating
+capture could cut (VERDICT r6 #1). The name carries the core count and
+SF, so a run at one setting never overwrites the raw runs of another.
 """
 
 from __future__ import annotations
@@ -193,12 +195,11 @@ def main() -> None:
     # tail-truncated mid-raw_runs and lost 13 entries INCLUDING the
     # headline. The side file lands in git with the round commit, so
     # noise stays adjudicable without bloating the captured line.
-    raw_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "bench_raw_runs.json"
-    )
+    raw_path = os.path.join("BENCH", f"bench_raw_runs_{CPUS}core_sf{sf}.json")
+    abs_raw_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), raw_path)
     try:
-        os.makedirs(os.path.dirname(raw_path), exist_ok=True)
-        with open(raw_path, "w", encoding="utf-8") as f:
+        os.makedirs(os.path.dirname(abs_raw_path), exist_ok=True)
+        with open(abs_raw_path, "w", encoding="utf-8") as f:
             json.dump(
                 {"sf": sf, "cpus": CPUS, "passes": PASSES, "raw_runs": raw_runs},
                 f,

@@ -27,6 +27,9 @@ from functools import lru_cache
 from itertools import chain
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+
+from ..session import local_frame
 
 # PSL subset: multi-level public suffixes (longest-match wins; a plain
 # single-label TLD is the fallback). Extend freely — lookup is O(#levels).
@@ -117,7 +120,14 @@ def psl_rules_df(spark) -> DataFrame:
         + [(s, s.count(".") + 1, 1) for s in wild]
         + [(s, s.count(".") + 1, 2) for s in exc]
     )
-    return spark.createDataFrame(rows, "join_key string, labels int, kind int")
+    schema = StructType(
+        [
+            StructField("join_key", StringType()),
+            StructField("labels", IntegerType()),
+            StructField("kind", IntegerType()),
+        ]
+    )
+    return local_frame(spark, rows, schema)
 
 
 MAX_SUFFIX_LABELS = 5  # longest PSL rules are 4 labels; +1 margin

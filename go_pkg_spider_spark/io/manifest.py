@@ -61,6 +61,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import local_frame
 from .catalog import Catalog
 
 
@@ -102,11 +103,18 @@ def append_rows(
     are NULL), all stamped from one clock read: committed_at_unix in
     seconds, seq in nanoseconds. seq orders same-second rows ACROSS
     processes (a per-process counter can't: a crashed rerun's
-    `running` row must outrank an earlier run's `done`)."""
+    `running` row must outrank an earlier run's `done`).
+
+    The rows go in as an Arrow local relation (session.local_frame):
+    built from a Python list, the frame would be a parallelized RDD,
+    and each one- or two-row append would run a Python-worker task
+    per default partition. Not through pandas either: a NULL in an
+    int64 column makes pandas cast it to float64, which rounds a
+    nanosecond `seq` and so breaks latest_rows' ordering."""
     now_ns = time.time_ns()
     stamp = {"committed_at_unix": now_ns // 1_000_000_000, "seq": now_ns}
     data = [tuple({**r, **stamp}.get(f.name) for f in schema.fields) for r in rows]
-    catalog.append(catalog.spark.createDataFrame(data, schema), table)
+    catalog.append(local_frame(catalog.spark, data, schema), table)
 
 
 MANIFEST_SCHEMA = StructType(

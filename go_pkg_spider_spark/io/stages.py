@@ -8,6 +8,9 @@ table. The stage manifest follows ManifestedRun's protocol
 - commit() appends a `running` row for the stage, overwrites the
   stage table, then appends a `done` row. The manifest is append-only;
   nothing ever rewrites it.
+- The done row's `rows` is counted while the write runs (an
+  Observation), and a resumed run reports a skipped stage's rows from
+  that row: no stage table is read back just to count it.
 - A committed stage is reusable ONLY if its LATEST manifest row
   (manifest.latest_rows) is `done` with the SAME parameter fingerprint
   (params_sig) as the current invocation. Older rows never count:
@@ -32,6 +35,7 @@ import socket
 import time
 import uuid
 
+from pyspark.sql import Observation, functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -260,12 +264,12 @@ class StageRunner:
         }
         self._done = self._done_stages()
 
-    def _done_stages(self) -> set[str]:
-        """Stages whose latest manifest row is done with the stage's
-        params_sig."""
+    def _done_stages(self) -> dict:
+        """{stage: its latest manifest row}, for the stages whose latest
+        row is done with the stage's params_sig."""
         rows = read_manifest(self.cat, self.manifest_table, STAGE_MANIFEST_SCHEMA)
         return {
-            s
+            s: r
             for s, r in latest_rows(rows, "stage").items()
             if r.status == "done"
             and (r.metrics or {}).get("params_sig") == self._sig_for(s)
@@ -288,6 +292,10 @@ class StageRunner:
         """Append a `running` row, write the stage table, then append
         the `done` row: until the done row lands the stage's latest row
         is `running`, so a crash anywhere in between reruns the stage.
+        The done row's `rows` is counted by an Observation on the frame
+        the write executes, never by reading the table back. It sits
+        directly under the write, in the write's result stage, where
+        each task's count is merged exactly once.
         metrics_after (optional callable) runs AFTER the write — for
         metrics only observable once the plan executed (e.g. a pyspark
         Observation). partition_by: physical partition columns for the
@@ -295,10 +303,16 @@ class StageRunner:
         t0 = time.monotonic()
         sig = self._sig_for(stage)
         self._append_row(stage, "running", metrics={"params_sig": sig})
-        self.cat.write(df, stage, mode="overwrite", partition_by=partition_by)
+        obs = Observation()
+        self.cat.write(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            stage,
+            mode="overwrite",
+            partition_by=partition_by,
+        )
         metrics = dict(metrics_after() if metrics_after else {})
         metrics["params_sig"] = sig
-        rows = self.cat.read(stage).count()
+        rows = obs.get["rows"]
         self._append_row(
             stage,
             "done",
@@ -314,6 +328,6 @@ class StageRunner:
     def resumable(self, stage: str) -> bool:
         if stage in self._done and not self.upstream_reran:
             self.summary["stages_skipped"] += 1
-            self.summary["stage_rows"][stage] = self.cat.read(stage).count()
+            self.summary["stage_rows"][stage] = self._done[stage].rows
             return True
         return False

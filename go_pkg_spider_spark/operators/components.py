@@ -34,6 +34,9 @@ from __future__ import annotations
 import warnings
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..session import local_frame
 
 
 def connected_components(
@@ -192,9 +195,8 @@ def _driver_union_find(sym: DataFrame, nodes: DataFrame | None, id_col: str) -> 
         base = nodes.select(F.col(id_col).alias("n")).distinct()
     if labels:
         id_type = sym.schema["u"].dataType
-        from pyspark.sql.types import StructField, StructType
-
-        mapping = spark.createDataFrame(
+        mapping = local_frame(
+            spark,
             labels,
             StructType(
                 [StructField("n", id_type, True), StructField("_l", id_type, True)]

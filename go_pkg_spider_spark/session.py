@@ -15,7 +15,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 # Arrow batch size: clips average ~100KB-1MB of audio bytes; 256 rows/batch
 # keeps a decode batch under ~256MB even for heavy rows, while still
@@ -110,3 +113,21 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """A DataFrame of driver-built `rows` (tuples in `schema` order;
+    a MapType value is a dict or None), built as a pyarrow Table with
+    the schema's Arrow types so it plans as a LocalTableScan. A Python
+    list given to createDataFrame plans as a scan of a parallelized
+    RDD instead, and then even a one-row frame runs one Python-worker
+    task per default partition. No pandas frame is made: pandas turns
+    an int64 column holding a None into float64, which rounds values
+    above 2**53 (a manifest `seq`, for one)."""
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [[] for _ in arrow_schema]
+    table = pa.Table.from_arrays(
+        [pa.array(values, type=f.type) for f, values in zip(arrow_schema, columns)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)

@@ -140,10 +140,12 @@ def _run_ann_index_locked(
     scorer: str = "join",
 ) -> dict:
     from pyspark.sql import functions as F
+    from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
     from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.io.stages import StageRunner
     from go_pkg_spider_spark.operators import similarity
+    from go_pkg_spider_spark.session import local_frame
 
     cat = Catalog(spark, output_root)
     core = {
@@ -181,8 +183,16 @@ def _run_ann_index_locked(
             )
         runner.commit(
             "centroids",
-            spark.createDataFrame(
-                _centroids_long_rows(cents), "cell int, pos int, val double"
+            local_frame(
+                spark,
+                _centroids_long_rows(cents),
+                StructType(
+                    [
+                        StructField("cell", IntegerType()),
+                        StructField("pos", IntegerType()),
+                        StructField("val", DoubleType()),
+                    ]
+                ),
             ),
             metrics_after=lambda: {
                 "n_cells": str(len(cents)),

@@ -310,3 +310,33 @@ def test_one_wave_costs_the_same_spark_jobs_for_more_buckets(spark, clips_path, 
             sc.setLocalProperty("spark.jobGroup.id", None)
         jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
     assert 0 < jobs[4] <= jobs[2]
+
+
+def test_local_frame_round_trips_as_a_local_relation(spark):
+    """The frame helper every manifest append goes through: the
+    values come back exactly (a seq-sized int64 beside a NULL, which a
+    pandas float64 column would round, and a map that is NULL or empty),
+    and the plan is a LocalTableScan, not a scan of a parallelized
+    Python RDD."""
+    from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
+
+    from go_pkg_spider_spark.session import local_frame
+
+    schema = StructType(
+        [
+            StructField("seq", LongType()),
+            StructField("hist", MapType(StringType(), LongType())),
+            StructField("status", StringType(), False),
+        ]
+    )
+    big = 1_760_000_000_123_456_789  # > 2**53
+    rows = [(None, None, "running"), (big, {}, "done"), (big + 1, {"": 3, "x": 2**60}, "done")]
+    df = local_frame(spark, rows, schema)
+    assert df.schema == schema
+    assert [tuple(r) for r in df.collect()] == rows
+    empty = local_frame(spark, [], schema)
+    assert empty.schema == schema and empty.collect() == []
+    for frame in (df, empty):
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan

@@ -266,3 +266,50 @@ def test_every_import_is_used():
         f"{f.relative_to(REPO)}:{hit}" for f in sorted(files) for hit in _unused_imports(f)
     ]
     assert not unused, "imported but unused:\n" + "\n".join(unused)
+
+
+# file -> why its createDataFrame calls stay off session.local_frame.
+CREATE_DATAFRAME_ALLOWED: dict[str, str] = {
+    f"{PKG}/entry_queries.py": "fixture frames that feed bench.py entries; "
+    "moving them changes what those entries time",
+}
+
+
+def _create_dataframe_calls(f: Path) -> list[int]:
+    """Lines of f's createDataFrame calls outside a `local_frame` def."""
+    tree = ast.parse(f.read_text(), str(f))
+    in_local_frame = {
+        id(n)
+        for d in ast.walk(tree)
+        if isinstance(d, ast.FunctionDef) and d.name == "local_frame"
+        for n in ast.walk(d)
+    }
+    return [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and id(n) not in in_local_frame
+        and "createDataFrame" in (getattr(n.func, "attr", None), getattr(n.func, "id", None))
+    ]
+
+
+def test_driver_built_frames_go_through_local_frame():
+    """A Python list given to createDataFrame plans as a scan of a
+    parallelized RDD, so even a one-row frame runs a Python-worker
+    task per default partition; session.local_frame builds an Arrow
+    local relation instead. Equality with the allowlist, as above."""
+    calls = {
+        str(f.relative_to(REPO)): lines
+        for d in (PKG, "jobs")
+        for f in sorted((REPO / d).rglob("*.py"))
+        if (lines := _create_dataframe_calls(f))
+    }
+    new = [
+        f"{f}:{n}"
+        for f, lines in calls.items()
+        if f not in CREATE_DATAFRAME_ALLOWED
+        for n in lines
+    ]
+    assert not new, "createDataFrame outside session.local_frame:\n" + "\n".join(new)
+    stale = sorted(set(CREATE_DATAFRAME_ALLOWED) - set(calls))
+    assert not stale, f"allowlisted but calling no createDataFrame: {stale}"

@@ -5,8 +5,10 @@ manifest metrics."""
 
 from __future__ import annotations
 
-from go_pkg_spider_spark.io.manifest import latest_rows
-from jobs.run_dedup import run_dedup
+from go_pkg_spider_spark.io.catalog import Catalog
+from go_pkg_spider_spark.io.manifest import latest_rows, read_manifest
+from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+from jobs.run_dedup import DEDUP_MANIFEST_TABLE, run_dedup
 
 
 BASE = (
@@ -64,6 +66,39 @@ def test_dedup_job_decisions_and_resume(spark, tmp_path):
     s2 = run_dedup(spark, docs, root, run_id="t1", threshold=0.5)
     assert s2["stages_run"] == 0 and s2["stages_skipped"] == 4
     assert s2["decision_histogram"] == hist
+
+
+def test_resume_takes_stage_rows_from_the_manifest(spark, tmp_path):
+    """A fully committed root resumes with the same stage_rows, read
+    from each stage's done row: no stage table is read back to count
+    it. Counted by job group, the resume starts only the jobs of the
+    manifest read, the schema read of the `exact` table the job reads
+    its groups from, and the decision_histogram query."""
+    docs = _corpus(spark)
+    root = str(tmp_path / "dedup_resume")
+    s1 = run_dedup(spark, docs, root, run_id="t1")
+    sc = spark.sparkContext
+
+    def jobs_of(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    s2, resume_jobs = jobs_of("dedup-resume", lambda: run_dedup(spark, docs, root, run_id="t1"))
+    assert s2["stages_skipped"] == 4 and s2["stage_rows"] == s1["stage_rows"]
+    cat = Catalog(spark, root)
+    _, read_jobs = jobs_of(
+        "dedup-reads",
+        lambda: (
+            read_manifest(cat, DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA),
+            cat.read("exact"),
+            cat.read("decisions").groupBy("decision").count().collect(),
+        ),
+    )
+    assert 0 < resume_jobs == read_jobs
 
 
 def test_dedup_job_param_change_invalidates_resume(spark, tmp_path):

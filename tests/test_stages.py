@@ -74,3 +74,21 @@ def test_crash_mid_commit_reruns_stage(spark, tmp_path):
     }
     # append-only: no commit ever rewrote the manifest table
     assert MANIFEST not in written
+
+
+def test_done_rows_count_the_committed_tables(spark, tmp_path):
+    """The done row's `rows` comes from the write itself; it must equal
+    a count of the table on disk, also for a stage that comes out
+    empty."""
+    cat = Catalog(spark, str(tmp_path / "counted"))
+    runner = StageRunner(spark, cat, MANIFEST, {"chain": 1}, "r1")
+    runner.commit("full", spark.range(37).repartition(5))
+    runner.commit("empty", spark.range(10).filter(F.col("id") > 100))
+    runner.commit(
+        "parted", spark.range(23).withColumn("p", F.col("id") % 3), partition_by=["p"]
+    )
+    rows = spark.read.parquet(str(tmp_path / "counted" / MANIFEST)).collect()
+    done = {r.stage: r.rows for r in rows if r.status == "done"}
+    assert done == {s: cat.read(s).count() for s in ("full", "empty", "parted")}
+    assert done == {"full": 37, "empty": 0, "parted": 23}
+    assert runner.summary["stage_rows"] == done

@@ -28,13 +28,10 @@ N_CELLS = 8
 PROBES = (1, 2, 4, 8)
 
 
-def recall_sweep(
-    spark, emb, k=K, n_cells=N_CELLS, probes=PROBES, iters=1, queries_df=None
-):
+def recall_sweep(spark, emb, k=K, n_cells=N_CELLS, probes=PROBES, iters=1):
     """Returns (rows, centroids): rows = [{n_probe, recall, probed_frac,
     wall_sec}], truth taken from the full-probe entry (must be the max
-    of `probes` and equal n_cells). queries_df: optional (qid,
-    embedding) frame; default = every index vector self-queried."""
+    of `probes` and equal n_cells). Every index vector is a query."""
     import time
 
     from pyspark.sql import functions as F
@@ -47,11 +44,7 @@ def recall_sweep(
     cents = similarity.train_ivf_centroids_distributed(
         emb, "embedding", "vec_id", k=n_cells, iters=iters
     )
-    queries = (
-        queries_df
-        if queries_df is not None
-        else emb.select(F.col("vec_id").alias("qid"), "embedding")
-    )
+    queries = emb.select(F.col("vec_id").alias("qid"), "embedding")
     # index-side cell sizes -> probed-row fraction per n_probe is data
     # dependent per query; report the average via candidate counts
     n_index = emb.count()
@@ -117,13 +110,10 @@ def recall_sweep(
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
     from go_pkg_spider_spark.session import get_spark
 
     spark = get_spark(
         app_name="ann_recall",
-        master="local[32]",
         # the fan-out-join scan-split lesson (run_ann_index.py): a
         # compact index bin-packs into ~2 tasks at default splits
         extra_conf={
@@ -132,30 +122,11 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if len(sys.argv) > 1 and sys.argv[1] == "--clustered":
-        # the 500k clustered corpus built by the `ann` phase of
-        # `git show d74e7cb:tools/sf1_headline.py` (2,000 micro-clusters
-        # of 250): the realistic-best case complementing the near-random
-        # base table's floor. 500 queries keep the full-probe truth run
-        # bounded (~250M pairs).
-        sf_dir = "/tmp/emb_sf1.parquet (clustered, sf1_headline ann gen)"
-        emb = spark.read.parquet("/tmp/emb_sf1.parquet")
-        queries = (
-            spark.read.parquet("/tmp/ann_queries_sf1.parquet")
-            .orderBy("vec_id")
-            .limit(500)
-            .select(F.col("vec_id").alias("qid"), "embedding")
-        )
-        n_cells, probes = 64, (1, 2, 4, 8, 16, 64)
-    else:
-        sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-        emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
-        queries, n_cells, probes = None, N_CELLS, PROBES
-    rows, _ = recall_sweep(
-        spark, emb, n_cells=n_cells, probes=probes, queries_df=queries
-    )
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
+    rows, _ = recall_sweep(spark, emb)
     n = emb.count()
-    print(f"\n| n_probe (of {n_cells} cells) | recall@{K} | index rows probed | wall (s) |")
+    print(f"\n| n_probe (of {N_CELLS} cells) | recall@{K} | index rows probed | wall (s) |")
     print("|---|---|---|---|")
     for r in rows:
         print(
