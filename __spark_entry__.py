@@ -18,12 +18,24 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: the full text-leg quality-filter pipeline (lang rules ->
     model residual -> keep/drop -> scrub -> quality + ppl) over
-    sf0.001/documents.parquet."""
-    from go_pkg_spider_spark.functions import langid, perplexity, rules, scrub, tokens
+    sf0.001/documents.parquet. The model residual and ppl come from one
+    pass of the fused UDF, as in pipeline.run_pipeline: ppl is scored for
+    rows that pass the lang-independent guards and surfaced for kept
+    rows."""
+    from go_pkg_spider_spark.functions import langid, rules, scrub, tokens
+    from go_pkg_spider_spark.operators.fused import fused_text_udf
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     df = d.withColumn("lang_res", langid.body_lang_rules(F.col("text")))
-    df = langid.resolve_model_langs(df, "lang_res", "text")
+    t = F.coalesce(F.col("text"), F.lit(""))
+    pre_drop = rules.lang_independent_drop(t, min_chars=64)
+    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("text"))
+    df = df.withColumn(
+        "fused", fused_text_udf(model_text, marker, F.when(pre_drop.isNull(), t))
+    ).withColumn(
+        "lang_res",
+        langid.resolve_model_lang(F.col("lang_res"), F.col("fused")["model_lang"]),
+    )
     kd = rules.keep_drop(F.col("text"), F.col("lang_res")["lang"], min_chars=64)
     df = (
         df.withColumn("keep", kd["keep"])
@@ -31,7 +43,7 @@ def entry(spark: SparkSession) -> DataFrame:
         .withColumn(
             "scrubbed_text", F.when(F.col("keep"), scrub.scrub(F.col("text")))
         )
-        .withColumn("ppl", perplexity.ppl_udf(F.when(F.col("keep"), F.col("text"))))
+        .withColumn("ppl", F.when(F.col("keep"), F.col("fused")["ppl"]))
     )
     df = tokens.with_quality_score(df, "text")
     return df.select(

@@ -8,21 +8,20 @@ Recasts /root/reference/lang.go:
   BodyMinSize=64, hanRate>=0.3, ja/han>0.1, englishRate>0.618,
   latinCount>5, title path jaRate/koRate>0.2 (lang.go:237,250).
 - The lingua-go model slot (lang.go:335-355, X4 of SURVEY.md §2.10)
-  becomes a fastText-style hashed character n-gram scorer in an
-  Arrow-batched pandas UDF, with the same two constrained candidate
-  sets: latin {fr,de,es,pt,en} (lang.go:88-94) and other
-  {ar,ru,hi,ko} (lang.go:81-86).
+  becomes a fastText-style hashed character n-gram scorer (`_score_text`)
+  with the same two constrained candidate sets: latin {fr,de,es,pt,en}
+  (lang.go:88-94) and other {ar,ru,hi,ko} (lang.go:81-86). It runs
+  inside the one fused Arrow UDF (operators/fused.py).
 
 Two-phase plan (SURVEY.md §4): the cheap rules settle most rows
-JVM-side; the model UDF runs only on rows the rules marked
-NEEDS_MODEL_* — never on the full table.
+JVM-side; the model runs only on rows the rules marked NEEDS_MODEL_*
+(`model_inputs`) — never on the full table — and `resolve_model_lang`
+folds its answer back into the cascade's struct.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql import Column, functions as F
 
 from .textnorm import (
     ASCII_ALPHA,
@@ -137,7 +136,7 @@ def lang_cascade(
        NEEDS_MODEL_* sentinel for the model UDF)
 
     Returns struct(lang, lang_pos); lang may be a NEEDS_MODEL_* sentinel
-    — resolve with `resolve_model_langs` before surfacing results.
+    — resolve with `resolve_model_lang` before surfacing results.
     """
     from .charset import charset_lang
 
@@ -323,39 +322,31 @@ def _score_text(text: str, langs: tuple[str, ...]) -> str | None:
     return lang_names[int(np.argmax(scores))]
 
 
-@F.pandas_udf(StringType())
-def ngram_langid_udf(text: pd.Series, marker: pd.Series) -> pd.Series:
-    """Vectorized model scoring for rows the rule cascade could not
-    settle. `marker` selects the constrained candidate set (the two
-    lingua builder sets, lang.go:81-94). Arrow-batched; profiles are
-    built once per executor process."""
-    out = []
-    for t, m in zip(text, marker):
-        if t is None:
-            out.append(None)
-            continue
-        langs = LATIN_SET if m == NEEDS_MODEL_LATIN else OTHER_SET
-        out.append(_score_text(t, langs))
-    return pd.Series(out, dtype=object)
+def _needs_model(lang_res: Column) -> Column:
+    return lang_res["lang"].isin(NEEDS_MODEL_LATIN, NEEDS_MODEL_OTHER)
 
 
-def resolve_model_langs(df: DataFrame, lang_struct_col: str = "lang_res", text_col: str = "transcript") -> DataFrame:
-    """Two-phase resolution (SURVEY.md §4 'lang cascade early-exit'):
-    replace NEEDS_MODEL_* sentinels with the model UDF's answer, setting
-    provenance 'lingua'. The UDF input is masked to sentinel rows only,
-    so Arrow transfer cost is proportional to the residual, not the
-    table. One narrow select — no shuffle, no extra pass."""
-    s = F.col(lang_struct_col)
-    needs = s["lang"].isin(NEEDS_MODEL_LATIN, NEEDS_MODEL_OTHER)
-    cleaned = clean_for_lang(F.col(text_col), BODY_CHUNK_SIZE)
-    model_lang = ngram_langid_udf(
-        F.when(needs, cleaned), F.when(needs, s["lang"])
+def model_inputs(lang_res: Column, text: Column) -> tuple[Column, Column]:
+    """(model text, marker) for the fused UDF (operators/fused.py): the
+    cleaned body chunk and the NEEDS_MODEL_* sentinel that selects the
+    candidate set, both NULL on rows the rules settled, so the model
+    runs on the residual only."""
+    needs = _needs_model(lang_res)
+    return (
+        F.when(needs, clean_for_lang(text, BODY_CHUNK_SIZE)),
+        F.when(needs, lang_res["lang"]),
     )
-    resolved = F.when(
-        needs,
+
+
+def resolve_model_lang(lang_res: Column, model_lang: Column) -> Column:
+    """Two-phase resolution (SURVEY.md §4 'lang cascade early-exit'):
+    replace a NEEDS_MODEL_* sentinel in `lang_res` with the model's
+    answer (the fused UDF's `model_lang`), provenance 'lingua'; settled
+    rows keep their struct."""
+    return F.when(
+        _needs_model(lang_res),
         F.struct(
             model_lang.alias("lang"),
             F.when(model_lang.isNotNull(), F.lit(POS_LINGUA)).alias("lang_pos"),
         ),
-    ).otherwise(s)
-    return df.withColumn(lang_struct_col, resolved)
+    ).otherwise(lang_res)

@@ -1,4 +1,5 @@
-"""KenLM-style character n-gram perplexity as an Arrow-batched UDF.
+"""KenLM-style character n-gram perplexity, scored row by row
+(`_ppl_one`) inside the one fused Arrow UDF (operators/fused.py).
 
 The reference's model slot is lingua-go (X4, /root/reference/lang.go:
 335-355); the north-star adds a perplexity quality signal alongside it.
@@ -14,6 +15,8 @@ pipeline's hottest Python path).
 
 Production swap-in: replace `_train()` with loading real KenLM-exported
 probs from a broadcast artifact; the UDF shape stays identical.
+Text-only callers (the entry() flagship, tools/model_accuracy.py) pass
+NULL audio to the same fused UDF and read its `ppl` field.
 
 MEASURED separation contract (round 8, tools/model_accuracy.py over
 the held-out corpus — table in BENCH/BASELINE.md, floors in
@@ -30,9 +33,6 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType
 
 from .langid import SEED_CORPUS
 
@@ -107,7 +107,3 @@ def _ppl_one(text: str) -> float | None:
 
     return float(np.exp(-logp.mean()))
 
-
-@F.pandas_udf(DoubleType())
-def ppl_udf(text: pd.Series) -> pd.Series:
-    return text.map(lambda t: _ppl_one(t) if t is not None else None)

@@ -121,6 +121,25 @@ def is_dynamic_render_junk(text: Column) -> Column:
     return (opens >= 5) & (closes >= 5)
 
 
+def lang_independent_drop(
+    t: Column, min_chars: int = 64, max_chars: int = 1_000_000
+) -> Column:
+    """The guards that need neither lang nor audio, on a non-null
+    transcript `t`, first failing one wins, NULL when all pass (the
+    reference's guard order: size bounds (detect.go:109-114 analog,
+    lang.go:290-294), dynamic-render junk (lang.go:373-375), licence
+    boilerplate (link.go:139-153)). The pipeline masks the ppl input
+    with it, so it runs before any model."""
+    return (
+        F.when(F.length(F.trim(t)) == 0, "empty_transcript")
+        .when(F.length(t) < min_chars, "too_short")
+        .when(F.length(t) > max_chars, "too_long")
+        .when(is_dynamic_render_junk(t), "dynamic_render_junk")
+        .when(is_licence_boilerplate(t), "licence_boilerplate")
+        .otherwise(F.lit(None).cast("string"))
+    )
+
+
 def keep_drop(
     transcript: Column,
     lang: Column,
@@ -128,24 +147,17 @@ def keep_drop(
     max_chars: int = 1_000_000,
 ) -> Column:
     """The end-to-end keep/drop decision for a transcript, with the first
-    failing rule preserved as `drop_reason` (ordered exactly like the
-    reference's guard sequence: size bounds (detect.go:109-114 analog,
-    lang.go:290-294), dynamic-render junk (lang.go:373-375), licence
-    boilerplate (link.go:139-153), then the title-style classification
-    (link.go:276-364) where only 'content' survives.
+    failing rule preserved as `drop_reason`: the lang-independent guards,
+    then the title-style classification (link.go:276-364) where only
+    'content' survives.
 
     Returns struct(keep boolean, drop_reason string-or-null,
     link_type string)."""
     t = F.coalesce(transcript, F.lit(""))
     link_type = classify_title(F.trim(t), lang, full_len=None)
-    reason = (
-        F.when(F.length(F.trim(t)) == 0, "empty_transcript")
-        .when(F.length(t) < min_chars, "too_short")
-        .when(F.length(t) > max_chars, "too_long")
-        .when(is_dynamic_render_junk(t), "dynamic_render_junk")
-        .when(is_licence_boilerplate(t), "licence_boilerplate")
-        .when(link_type != TYPE_CONTENT, F.concat(F.lit("class_"), link_type))
-        .otherwise(F.lit(None).cast("string"))
+    reason = F.coalesce(
+        lang_independent_drop(t, min_chars, max_chars),
+        F.when(link_type != TYPE_CONTENT, F.concat(F.lit("class_"), link_type)),
     )
     return F.struct(
         reason.isNull().alias("keep"),

@@ -13,9 +13,9 @@ This module bounds it: members are ranked per bucket with a window
 (`row_number` over the bucket key, deterministic smallest-member-first
 order), only the first `max_bucket_size` survive the collect, and the
 overflow is counted per bucket (`n_dropped`) — never silently discarded:
-the count rides on the bucket row AND is registered as an observed
-metric (`df.observe`) so production jobs see drop totals in their query
-metrics at zero extra cost.
+the count rides on the bucket row, and a caller that passes an
+`Observation` reads the drop totals from it after the first action, at
+no extra pass.
 
 Plan/shuffle profile (pinned in tests/test_plans.py): the window and the
 groupBy share the bucket-key hash partitioning, so this is still ONE
@@ -28,13 +28,7 @@ raise the cap.
 
 from __future__ import annotations
 
-import itertools
-
 from pyspark.sql import Column, DataFrame, Window, functions as F
-
-# uniquifies df.observe() metric names when one plan contains several
-# capped-bucket operators (Spark requires distinct observation names)
-_obs_counter = itertools.count()
 
 
 def capped_buckets(
@@ -42,7 +36,6 @@ def capped_buckets(
     bucket_cols: list[str],
     member: Column,
     max_bucket_size: int = 1024,
-    metric_name: str | None = None,
     observation=None,
 ) -> DataFrame:
     """(bucket_cols..., ms: array<member>, n_members, n_dropped) with
@@ -71,17 +64,16 @@ def capped_buckets(
             F.greatest(F.col("n_members") - F.lit(max_bucket_size), F.lit(0)),
         )
     )
-    metrics = (
+    if observation is None:
+        return buckets
+    # caller-held pyspark.sql.Observation: metrics readable as
+    # observation.get after the first action
+    return buckets.observe(
+        observation,
         F.sum("n_dropped").alias("dropped_members"),
         F.max("n_members").alias("max_bucket_members"),
         F.count(F.lit(1)).alias("n_buckets"),
     )
-    if observation is not None:
-        # caller-held pyspark.sql.Observation: metrics readable as
-        # observation.get after the first action — the programmatic way
-        # to consume the drop accounting
-        return buckets.observe(observation, *metrics)
-    return buckets.observe(metric_name or f"bucket_cap_{next(_obs_counter)}", *metrics)
 
 
 def pair_array(ms: Column, a_name: str = "a", b_name: str = "b") -> Column:

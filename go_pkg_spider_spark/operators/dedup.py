@@ -23,7 +23,6 @@ and ENFORCES its bounded-group contract at runtime (max_group_size cap
 from __future__ import annotations
 
 import hashlib
-import itertools
 import re
 
 import numpy as np
@@ -33,9 +32,6 @@ from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.tokens import content_hash_md5
 from .bucketing import capped_buckets, pair_apply
-
-# uniquifies the ngram group-cap observation name per plan
-_ngram_obs = itertools.count()
 
 
 def normalized_text(col: Column) -> Column:
@@ -131,9 +127,9 @@ def ngram_jaccard_pairs(
     groups are capped at max_group_size members — the SMALLEST ids
     survive (deterministic row_number over the group, same posture as
     the LSH bucket cap in operators/bucketing.py) and the overflow is
-    surfaced, never silent: per-group counts feed an observed metric
-    (dropped_members / max_group_members / n_groups, readable via a
-    caller-held Observation or the query's observedMetrics). Corpora
+    surfaced, never silent: given a caller-held Observation, per-group
+    counts feed its metrics (dropped_members / max_group_members /
+    n_groups). Corpora
     with groups past the cap belong on the minhash_lsh path — that IS
     the scale path; this operator is the exact small-group scorer.
 
@@ -179,22 +175,20 @@ def ngram_jaccard_pairs(
         F.row_number().over(w_rank).alias("_rn"),
         F.count(F.lit(1)).over(w_all).alias("_n"),
     )
-    metrics = (
-        # count each group's overflow ONCE (on its rank-1 row)
-        F.sum(
-            F.when(
-                F.col("_rn") == 1,
-                F.greatest(F.col("_n") - F.lit(max_group_size), F.lit(0)),
-            ).otherwise(F.lit(0))
-        ).alias("dropped_members"),
-        F.max("_n").alias("max_group_members"),
-        F.sum(F.when(F.col("_rn") == 1, 1).otherwise(0)).alias("n_groups"),
-    )
     capped = ranked.filter(F.col("_rn") <= max_group_size)
     if observation is not None:
-        capped = capped.observe(observation, *metrics)
-    else:
-        capped = capped.observe(f"ngram_group_cap_{next(_ngram_obs)}", *metrics)
+        capped = capped.observe(
+            observation,
+            # count each group's overflow ONCE (on its rank-1 row)
+            F.sum(
+                F.when(
+                    F.col("_rn") == 1,
+                    F.greatest(F.col("_n") - F.lit(max_group_size), F.lit(0)),
+                ).otherwise(F.lit(0))
+            ).alias("dropped_members"),
+            F.max("_n").alias("max_group_members"),
+            F.sum(F.when(F.col("_rn") == 1, 1).otherwise(0)).alias("n_groups"),
+        )
     fan = max(1, int(join_fanout))
     s = capped.select(
         "g",
@@ -390,7 +384,6 @@ def minhash_lsh_candidates(
         ["band_idx", "band_hash"],
         F.struct("id", "sig"),
         max_bucket_size,
-        metric_name=None,
         observation=observation,
     )
     # score inside the pair lambda (pair_apply): the old pair_array form

@@ -11,15 +11,21 @@ at local[32] (fork/socket/page churn). One fused node cuts python
 round trips 3x and never ships `bytes` past the first hop.
 
 Inputs: bytes/codec/sr_hz (decode), cleaned text + NEEDS_MODEL marker
-(langid residual), raw transcript + maybe_keep (ppl). Output: one
-struct column with audio features, model_lang, ppl.
+(langid residual, langid.model_inputs), the transcript of rows that
+pass the lang-independent guards (ppl). Output: one struct column with
+audio features, model_lang, ppl.
+
+It is the only UDF that runs the langid model and the perplexity LM.
+Text-only callers (entry(), tools/model_accuracy.py) go through
+`fused_text_udf`, which passes NULL audio; the audio_decode_docs entry
+passes NULL text.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import functions as F
+from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     DoubleType,
     StringType,
@@ -126,4 +132,19 @@ def fused_model_arrow_udf(
     return pa.StructArray.from_arrays(
         [pa.array(list(c), t) for c, t in zip(cols, arrow_types)],
         names=[f.name for f in FUSED_SCHEMA.fields],
+    )
+
+
+def fused_text_udf(model_text: Column, marker: Column, ppl_text: Column) -> Column:
+    """The fused UDF with NULL bytes/codec/sr_hz, for callers that have
+    text only: decode answers `empty_bytes` before any work, so only
+    `model_lang` and `ppl` carry information. The NULL blob is typed
+    binary because `_binary_views` reads a Binary array's buffers."""
+    return fused_model_arrow_udf(
+        F.lit(None).cast("binary"),
+        F.lit(None).cast("string"),
+        F.lit(None).cast("int"),
+        model_text,
+        marker,
+        ppl_text,
     )

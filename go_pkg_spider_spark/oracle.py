@@ -138,7 +138,8 @@ def oracle_decide(
     max_chars: int = 1_000_000,
 ) -> OracleResult:
     """Full reference-label decision, guard order identical to
-    pipeline.with_keep_drop."""
+    pipeline.run_pipeline (decode, rules.lang_independent_drop, then
+    the classification)."""
     t = transcript or ""
     # P1 tag-strip before scoring (mirrors pipeline/strip_markup)
     content = re.sub(r"\[[^\[\]]{1,64}\]", "", re.sub(r"<[^<>]{1,64}>", "", t))

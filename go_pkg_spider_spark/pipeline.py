@@ -43,19 +43,6 @@ def with_charset(df: DataFrame) -> DataFrame:
     )
 
 
-def _lang_independent_drop(t: Column, min_chars: int, max_chars: int) -> Column:
-    """The guards that need neither lang nor audio (checked first, same
-    order as the reference's guard sequence)."""
-    return (
-        F.when(F.length(F.trim(t)) == 0, "empty_transcript")
-        .when(F.length(t) < min_chars, "too_short")
-        .when(F.length(t) > max_chars, "too_long")
-        .when(rules.is_dynamic_render_junk(t), "dynamic_render_junk")
-        .when(rules.is_licence_boilerplate(t), "licence_boilerplate")
-        .otherwise(F.lit(None).cast("string"))
-    )
-
-
 def run_pipeline(
     clips: DataFrame,
     min_chars: int = 64,
@@ -80,11 +67,10 @@ def run_pipeline(
     )
 
     t = F.coalesce(F.col("transcript"), F.lit(""))
-    pre_drop = _lang_independent_drop(t, min_chars, max_chars)
-    needs_model = F.col("lang_res")["lang"].isin(
-        langid.NEEDS_MODEL_LATIN, langid.NEEDS_MODEL_OTHER
+    pre_drop = rules.lang_independent_drop(t, min_chars, max_chars)
+    model_text, marker = langid.model_inputs(
+        F.col("lang_res"), F.col("content_text")
     )
-    cleaned = langid.clean_for_lang(F.col("content_text"), langid.BODY_CHUNK_SIZE)
 
     # ONE Python round trip: decode + model langid (residual rows only)
     # + ppl (rows passing the lang-independent guards only)
@@ -94,26 +80,17 @@ def run_pipeline(
             F.col("bytes"),
             F.col("codec"),
             F.col("sr_hz"),
-            F.when(needs_model, cleaned),
-            F.when(needs_model, F.col("lang_res")["lang"]),
+            model_text,
+            marker,
             F.when(pre_drop.isNull(), t),
         ),
     )
     df = df.withColumn("audio", F.struct(*[F.col("fused")[f.name].alias(f.name) for f in fused.DECODE_SCHEMA.fields]))
 
     # resolve sentinels with the model's answer (provenance 'lingua')
-    model_lang = F.col("fused")["model_lang"]
     df = df.withColumn(
         "lang_res",
-        F.when(
-            needs_model,
-            F.struct(
-                model_lang.alias("lang"),
-                F.when(model_lang.isNotNull(), F.lit(langid.POS_LINGUA)).alias(
-                    "lang_pos"
-                ),
-            ),
-        ).otherwise(F.col("lang_res")),
+        langid.resolve_model_lang(F.col("lang_res"), F.col("fused")["model_lang"]),
     )
 
     # full keep/drop: decode failure -> lang-independent guards (on the

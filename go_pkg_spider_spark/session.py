@@ -4,7 +4,7 @@ Scale notes (100 TB / 1000-executor design, tested on local[N]):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting is
   the backstop for long-transcript / long-clip skew (SURVEY.md §4.1).
 - Arrow on, with a bounded records-per-batch so Arrow batches of binary
-  audio `bytes` stay memory-safe inside pandas UDFs (SURVEY.md §7 risk:
+  audio `bytes` stay memory-safe inside Python UDFs (SURVEY.md §7 risk:
   PCM is ~100x input; never let a batch of decoded audio exceed RAM).
 - shuffle.partitions default sized for local testing; production submit
   overrides via spark-submit conf (the code never hard-codes a plan that
@@ -25,45 +25,20 @@ from pyspark.sql.types import StructType
 # amortizing Python/Arrow transfer overhead.
 ARROW_MAX_RECORDS_PER_BATCH = 256
 
-# UDF-heavy stages run ~2 processes per task slot (JVM task thread +
-# python worker): local[N] on N physical cores oversubscribes 2x, and
-# local[24] measured ~2x FASTER than local[32] on this 32-core host
-# (BENCH/BASELINE.md). 0.75x cores is the measured sweet spot.
-UDF_STAGE_CORE_FRACTION = 0.75
-
-
-def udf_stage_cores(total_cores: int | None = None) -> int:
-    """Task-slot count to use for UDF-heavy jobs on a `total_cores` host
-    (default: this machine). Overridable via $SPARK_GRAFT_UDF_CPUS."""
-    env = os.environ.get("SPARK_GRAFT_UDF_CPUS")
-    if env:
-        return int(env)
-    total = total_cores or os.cpu_count() or 8
-    return max(4, int(total * UDF_STAGE_CORE_FRACTION))
-
 
 def get_spark(
     app_name: str = "go-pkg-spider-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    udf_heavy: bool = False,
 ) -> SparkSession:
-    """udf_heavy=True sizes an unspecified local master at
-    udf_stage_cores() (0.75x physical cores) instead of local[*] — the
-    measured fix for python-worker oversubscription on UDF-dominated
-    jobs; explicit `master`/$SPARK_GRAFT_MASTER always win."""
+    """An unspecified master is $SPARK_GRAFT_MASTER, else
+    local[$SPARK_GRAFT_CPUS], else local[*]; $SPARK_GRAFT_CPUS also
+    replaces an explicit local[*]."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
-        # precedence for an unspecified master: SPARK_GRAFT_CPUS (the
-        # explicit bench/driver knob — it wins even for udf_heavy
-        # sessions, round-3 advice), then udf_heavy auto-sizing, then
-        # local[*].
-        if cpus:
-            master = f"local[{cpus}]"
-        else:
-            master = f"local[{udf_stage_cores()}]" if udf_heavy else "local[*]"
+        master = f"local[{cpus}]" if cpus else "local[*]"
     elif cpus and master == "local[*]":
         master = f"local[{cpus}]"
     if shuffle_partitions is None:

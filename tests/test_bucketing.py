@@ -112,6 +112,21 @@ def test_drop_metrics_observable(spark):
     assert got["max_bucket_members"] == 20 and got["n_buckets"] == 2
 
 
+def test_no_observation_no_collect_metrics(spark):
+    """Without a caller-held Observation nothing reads the cap metrics,
+    so the plan carries no CollectMetrics node; with one, it does."""
+    from pyspark.sql import Observation
+
+    docs = _degenerate_corpus(spark, 20)
+    plain = dedup.minhash_lsh_candidates(docs, "text", "doc_id")
+    plan = plain._jdf.queryExecution().executedPlan().toString()
+    assert "CollectMetrics" not in plan
+    observed = dedup.minhash_lsh_candidates(
+        docs, "text", "doc_id", observation=Observation()
+    )
+    assert "CollectMetrics" in observed._jdf.queryExecution().executedPlan().toString()
+
+
 def test_gate_scale_buckets_never_hit_cap(spark):
     """The DuckDB oracles for minhash_lsh_docs / embedding_neardup_pairs
     do NOT model the max_bucket_size cap, so hash parity silently

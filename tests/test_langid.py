@@ -10,6 +10,8 @@ from go_pkg_spider_spark.functions import langid
 
 
 def _res(spark, body, charset=None, title=None, declared=None):
+    from go_pkg_spider_spark.operators.fused import fused_text_udf
+
     df = spark.range(1).select(F.lit(body).alias("transcript")).select(
         "transcript",
         langid.lang_cascade(
@@ -19,7 +21,13 @@ def _res(spark, body, charset=None, title=None, declared=None):
             declared_lang=F.lit(declared) if declared is not None else None,
         ).alias("lang_res"),
     )
-    df = langid.resolve_model_langs(df, "lang_res", "transcript")
+    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("transcript"))
+    df = df.withColumn(
+        "fused", fused_text_udf(model_text, marker, F.lit(None).cast("string"))
+    ).withColumn(
+        "lang_res",
+        langid.resolve_model_lang(F.col("lang_res"), F.col("fused")["model_lang"]),
+    )
     row = df.collect()[0].lang_res
     return row.lang, row.lang_pos
 

@@ -77,6 +77,30 @@ def test_minhash_single_python_hop(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_entry_single_python_hop(spark):
+    """entry() scores the model residual and ppl through the fused UDF
+    in one pass: one ArrowEvalPython node, as in the clips pipeline."""
+    plan = _plan(entry.entry(spark))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "BatchEvalPython" not in plan
+
+
+def test_fused_import_leaves_pandas_out():
+    """The fused UDF's import chain is pandas-free, so its Arrow UDF
+    worker never pays for loading pandas."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, go_pkg_spider_spark.operators.fused; "
+        "print('pandas' in sys.modules)"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], capture_output=True, text=True, check=True
+    )
+    assert out.stdout.strip() == "False"
+
+
 def test_simhash_single_python_hop(spark):
     plan = _plan(entry.queries()["simhash_docs"](spark, SF))
     assert plan.count("ArrowEvalPython") == 1

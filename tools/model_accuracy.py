@@ -3,10 +3,13 @@ perplexity LM (round 8, VERDICT r7 #2 — the ANN-recall precedent
 applied to the last model slots whose quality was asserted by
 construction rather than measured).
 
+Both halves score through the fused Arrow UDF the pipeline runs, with
+NULL audio (operators/fused.fused_text_udf).
+
 Langid: runs the PRODUCTION cascade (functions/langid.lang_cascade with
-charset='utf-8' + title column, model residual resolved by
-resolve_model_langs — the same _score_text the fused pipeline UDF
-calls) over the held-out corpus in fixtures/langid_holdout.py
+charset='utf-8' + title column, model residual from langid.model_inputs
+resolved by langid.resolve_model_lang) over the held-out corpus in
+fixtures/langid_holdout.py
 (authored disjoint from SEED_CORPUS; natural rows per language plus
 threshold-straddling boundary rows) and reports per-language
 precision/recall plus the confusion pairs.
@@ -37,6 +40,7 @@ def run_langid(spark) -> dict:
 
     from go_pkg_spider_spark.fixtures.langid_holdout import build_rows
     from go_pkg_spider_spark.functions import langid
+    from go_pkg_spider_spark.operators.fused import fused_text_udf
 
     df = spark.createDataFrame(
         build_rows(), "lid long, true_lang string, title string, text string"
@@ -47,7 +51,13 @@ def run_langid(spark) -> dict:
             F.col("text"), charset=F.lit("utf-8"), title=F.col("title")
         ),
     )
-    df = langid.resolve_model_langs(df, text_col="text")
+    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("text"))
+    df = df.withColumn(
+        "fused", fused_text_udf(model_text, marker, F.lit(None).cast("string"))
+    ).withColumn(
+        "lang_res",
+        langid.resolve_model_lang(F.col("lang_res"), F.col("fused")["model_lang"]),
+    )
     rows = df.select(
         "lid", "true_lang", F.col("lang_res")["lang"].alias("pred")
     ).collect()
@@ -116,7 +126,9 @@ def run_ppl(spark) -> dict:
         shuffled_chars,
         shuffled_words,
     )
-    from go_pkg_spider_spark.functions.perplexity import ppl_udf
+    from pyspark.sql import functions as F
+
+    from go_pkg_spider_spark.operators.fused import fused_text_udf
 
     rows = [
         (lid, lang, text, shuffled_chars(text), shuffled_words(text))
@@ -125,12 +137,17 @@ def run_ppl(spark) -> dict:
     df = spark.createDataFrame(
         rows, "lid long, lang string, clean string, sh_char string, sh_word string"
     )
+    no_text = F.lit(None).cast("string")
+
+    def ppl(col):
+        return fused_text_udf(no_text, no_text, F.col(col))["ppl"]
+
     out = df.select(
         "lid",
         "lang",
-        ppl_udf("clean").alias("p_clean"),
-        ppl_udf("sh_char").alias("p_char"),
-        ppl_udf("sh_word").alias("p_word"),
+        ppl("clean").alias("p_clean"),
+        ppl("sh_char").alias("p_char"),
+        ppl("sh_word").alias("p_word"),
     ).collect()
 
     def stats(rs, shuffled_key):
@@ -168,7 +185,7 @@ def run_ppl(spark) -> dict:
 def main() -> None:
     from go_pkg_spider_spark.session import get_spark
 
-    spark = get_spark(master="local[8]", app_name="model-accuracy")
+    spark = get_spark(app_name="model-accuracy")
     spark.sparkContext.setLogLevel("ERROR")
     result = {"langid": run_langid(spark), "perplexity": run_ppl(spark)}
     print(json.dumps(result))
