@@ -98,10 +98,12 @@ class Catalog:
             w.parquet(self._path(table))
 
     def append(self, df: DataFrame, table: str) -> None:
+        """One data file per append (parquet): appends are the manifest's
+        few-row frames, and a reader opens every file the table has."""
         if self.use_iceberg:
             df.writeTo(self._ident(table)).append()
         else:
-            df.write.mode("append").parquet(self._path(table))
+            df.coalesce(1).write.mode("append").parquet(self._path(table))
 
     def read(self, table: str, schema: StructType | None = None) -> DataFrame:
         """schema (parquet only; an Iceberg table carries its own): the

@@ -8,9 +8,13 @@ table. The stage manifest follows ManifestedRun's protocol
 - commit() appends a `running` row for the stage, overwrites the
   stage table, then appends a `done` row. The manifest is append-only;
   nothing ever rewrites it.
-- The done row's `rows` is counted while the write runs (an
-  Observation), and a resumed run reports a skipped stage's rows from
-  that row: no stage table is read back just to count it.
+- commit() is the only place a stage's metrics are computed, and all
+  of them are observed while the stage's own write runs: the done
+  row's `rows`, the job's aggregate metric Columns and a declared
+  histogram in one Observation on the written frame, plus an
+  operator-held Observation (a bucket cap's drop accounting). No job
+  reads a table it just committed to report on it, and a resumed run
+  reports a skipped stage's rows and histogram from its done row.
 - A committed stage is reusable ONLY if its LATEST manifest row
   (manifest.latest_rows) is `done` with the SAME parameter fingerprint
   (params_sig) as the current invocation. Older rows never count:
@@ -18,7 +22,9 @@ table. The stage manifest follows ManifestedRun's protocol
   from before an intervening different-sig run describes a table that
   no longer exists (the A -> B -> A resume-staleness hole), and a
   crash mid-commit leaves the latest row `running`, so resume reruns
-  the stage even when an older done row carries the same sig.
+  the stage even when an older done row carries the same sig. A done
+  row of a histogram stage that carries no histogram (written before
+  the histogram was recorded) is not reusable either.
 - Once any stage reruns, every DOWNSTREAM stage reruns too (their
   inputs changed) — tracked via `upstream_reran`.
 - The params_sig covers EVERY knob that changes any stage's output;
@@ -35,7 +41,8 @@ import socket
 import time
 import uuid
 
-from pyspark.sql import Observation, functions as F
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import Column, Observation, functions as F
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -217,6 +224,9 @@ STAGE_MANIFEST_SCHEMA = StructType(
         StructField("rows", LongType()),
         # stage metrics plus the params_sig the stage table embodies
         StructField("metrics", MapType(StringType(), StringType())),
+        # {value: rows} of a histogram stage's column, zero counts left
+        # out; NULL on other stages and on rows older than the column
+        StructField("histogram", MapType(StringType(), LongType())),
         StructField("wall_sec", DoubleType()),
         StructField("run_id", StringType()),
         StructField("committed_at_unix", LongType()),
@@ -238,6 +248,7 @@ class StageRunner:
         params: dict,
         run_id: str,
         stage_params: dict | None = None,
+        histograms: dict | None = None,
     ):
         """stage_params (optional): {stage: params_dict} overriding the
         chain params for THAT stage's fingerprint only — for a stage
@@ -245,7 +256,11 @@ class StageRunner:
         fingerprint table vs the grouping hamming threshold), so a knob
         change reruns the chain FROM the first stage the knob actually
         feeds instead of re-running the expensive head. Downstream
-        rerun-propagation (upstream_reran) is unchanged."""
+        rerun-propagation (upstream_reran) is unchanged.
+
+        histograms (optional): {stage: (column, vocabulary)} — that
+        stage's commit counts its rows per vocabulary value, and
+        histogram(stage) returns the nonzero counts."""
         self.spark = spark
         self.cat = catalog
         self.manifest_table = manifest_table
@@ -254,6 +269,7 @@ class StageRunner:
             st: json.dumps(pp, sort_keys=True)
             for st, pp in (stage_params or {}).items()
         }
+        self._histograms = histograms or {}
         self.run_id = run_id
         self.upstream_reran = False
         self.summary: dict = {
@@ -263,16 +279,19 @@ class StageRunner:
             "metrics": {},
         }
         self._done = self._done_stages()
+        self._counts: dict = {}
 
     def _done_stages(self) -> dict:
         """{stage: its latest manifest row}, for the stages whose latest
-        row is done with the stage's params_sig."""
+        row is done with the stage's params_sig (and, for a histogram
+        stage, carries the histogram)."""
         rows = read_manifest(self.cat, self.manifest_table, STAGE_MANIFEST_SCHEMA)
         return {
             s: r
             for s, r in latest_rows(rows, "stage").items()
             if r.status == "done"
             and (r.metrics or {}).get("params_sig") == self._sig_for(s)
+            and (s not in self._histograms or r.histogram is not None)
         }
 
     def _sig_for(self, stage: str) -> str:
@@ -287,47 +306,94 @@ class StageRunner:
         )
 
     def commit(
-        self, stage: str, df, metrics_after=None, partition_by=None
+        self, stage: str, df, metrics=None, observation=None, partition_by=None
     ) -> None:
         """Append a `running` row, write the stage table, then append
         the `done` row: until the done row lands the stage's latest row
         is `running`, so a crash anywhere in between reruns the stage.
-        The done row's `rows` is counted by an Observation on the frame
-        the write executes, never by reading the table back. It sits
-        directly under the write, in the write's result stage, where
-        each task's count is merged exactly once.
-        metrics_after (optional callable) runs AFTER the write — for
-        metrics only observable once the plan executed (e.g. a pyspark
-        Observation). partition_by: physical partition columns for the
-        stage table (e.g. the ANN index's cell id)."""
+
+        Every metric is observed during the write, never by reading the
+        table back. One Observation sits directly under the write, in
+        the write's result stage, where each task's value is merged
+        exactly once; it counts the done row's `rows`, evaluates each
+        aggregate Column of `metrics` and, for a histogram stage, one
+        count_if per vocabulary value. metrics: {name: str, recorded as
+        is, or aggregate Column over the written frame}. observation:
+        an operator-held Observation (a bucket cap's drop accounting),
+        read once after the write. Observed values are recorded as
+        strings, an aggregate over no rows (None) as "0".
+        partition_by: physical partition columns for the stage table
+        (e.g. the ANN index's cell id)."""
         t0 = time.monotonic()
         sig = self._sig_for(stage)
         self._append_row(stage, "running", metrics={"params_sig": sig})
+        metrics = dict(metrics or {})
+        observed = [F.count(F.lit(1)).alias("rows")]
+        observed += [c.alias(k) for k, c in metrics.items() if isinstance(c, Column)]
+        col, vocab = self._histograms.get(stage, (None, ()))
+        observed += [F.count_if(F.col(col) == v).alias(f"{col}={v}") for v in vocab]
         obs = Observation()
         self.cat.write(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            df.observe(obs, *observed),
             stage,
             mode="overwrite",
             partition_by=partition_by,
         )
-        metrics = dict(metrics_after() if metrics_after else {})
+        got = obs.get
+        if observation is not None:
+            metrics = {**_observed(df, observation), **metrics}
+        metrics = {
+            k: str(got[k] or 0) if isinstance(v, Column) else v
+            for k, v in metrics.items()
+        }
         metrics["params_sig"] = sig
-        rows = obs.get["rows"]
+        rows = got["rows"]
+        counts = {v: got[f"{col}={v}"] for v in vocab if got[f"{col}={v}"]}
         self._append_row(
             stage,
             "done",
             rows=rows,
             metrics=metrics,
+            histogram=counts if col else None,
             wall_sec=round(time.monotonic() - t0, 3),
         )
         self.upstream_reran = True
         self.summary["stages_run"] += 1
         self.summary["stage_rows"][stage] = rows
         self.summary["metrics"][stage] = metrics
+        self._counts[stage] = counts
 
     def resumable(self, stage: str) -> bool:
         if stage in self._done and not self.upstream_reran:
             self.summary["stages_skipped"] += 1
             self.summary["stage_rows"][stage] = self._done[stage].rows
+            self._counts[stage] = self._done[stage].histogram
             return True
         return False
+
+    def histogram(self, stage: str) -> dict:
+        """{value: rows} of a histogram stage, from its commit in this
+        run or from the done row it resumed from."""
+        return dict(self._counts[stage])
+
+
+def _observed(df, observation) -> dict:
+    """An operator-held Observation's values as strings, None as "0".
+    When the observed subtree produced no rows, AQE's empty-relation
+    propagation can remove its CollectMetrics node, and the
+    Observation then has no row to return. No row reached the node, so
+    each of its metrics is recorded as "0", under the names found on
+    the node in df's logical plan."""
+    try:
+        return {k: str(v or 0) for k, v in observation.get.items()}
+    except Py4JJavaError:
+        name = observation._jo.name()  # noqa: SLF001
+        todo = [df._jdf.queryExecution().logical()]  # noqa: SLF001
+        while todo:
+            node = todo.pop()
+            if node.nodeName() == "CollectMetrics" and node.name() == name:
+                ms = node.metrics()
+                return {ms.apply(i).name(): "0" for i in range(ms.length())}
+            kids = node.children()
+            todo.extend(kids.apply(i) for i in range(kids.length()))
+        raise

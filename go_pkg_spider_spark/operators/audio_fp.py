@@ -973,22 +973,38 @@ def assign_increment(
         .otherwise(F.col("component"))
         .alias("component"),
     )
-    enriched = batch_fpf.select(
-        "clip_id", "err", "fp_degenerate", "fp64"
-    ).join(assigned, "clip_id", "left")
-    decision = (
-        F.when(F.col("err").isNotNull(), "error")
-        .when(F.col("fp_degenerate"), "keep_degenerate")
-        .when(F.col("component") != F.col("clip_id"), "drop_audio_dup")
-        .otherwise("keep")
+    return audio_decisions(batch_fpf, assigned), deferred_merges
+
+
+# the decisions stage's closed vocabulary, in rule precedence order
+AUDIO_DECISIONS = ("error", "keep_degenerate", "drop_audio_dup", "keep")
+
+
+def audio_decisions(fpf: DataFrame, labels: DataFrame) -> DataFrame:
+    """(clip_id, fp64, group_id, decision): one decision row per
+    fingerprint row, the rule the batch job, an increment and a
+    compaction share. Error rows -> 'error'; degenerate fingerprints
+    -> 'keep_degenerate' (no identity to assert; never merged); a clip
+    whose (clip_id, component) label names another clip ->
+    'drop_audio_dup'; else 'keep'. A clip without a label is its own
+    group. The narrow select lets the parquet scan prune the packed
+    subfp stream: decisions never pay for the 8 KiB column."""
+    error, degenerate, dup, keep = AUDIO_DECISIONS
+    enriched = fpf.select("clip_id", "err", "fp_degenerate", "fp64").join(
+        labels, "clip_id", "left"
     )
-    decisions = enriched.select(
+    decision = (
+        F.when(F.col("err").isNotNull(), error)
+        .when(F.col("fp_degenerate"), degenerate)
+        .when(F.col("component") != F.col("clip_id"), dup)
+        .otherwise(keep)
+    )
+    return enriched.select(
         "clip_id",
         "fp64",
         F.coalesce(F.col("component"), F.col("clip_id")).alias("group_id"),
         decision.alias("decision"),
     )
-    return decisions, deferred_merges
 
 
 # --- snippet containment search: find clips CONTAINING a query cut ---

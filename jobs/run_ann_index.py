@@ -194,10 +194,7 @@ def _run_ann_index_locked(
                     ]
                 ),
             ),
-            metrics_after=lambda: {
-                "n_cells": str(len(cents)),
-                "dim": str(len(cents[0])),
-            },
+            metrics={"n_cells": str(len(cents)), "dim": str(len(cents[0]))},
         )
     cents = _centroids_from_table(cat.read("centroids"))
     if not cents:
@@ -208,7 +205,9 @@ def _run_ann_index_locked(
 
     # stage 2: the cell-partitioned index (id, vector, cell). Rows with
     # NULL vectors cannot be indexed: they are dropped HERE, with the
-    # drop count surfaced in the manifest metrics (never silent).
+    # drop count surfaced in the manifest metrics (never silent). The
+    # per-cell sizes are counted during the write, one count_if per
+    # cell.
     if not runner.resumable("index"):
         from pyspark.sql import Observation
 
@@ -217,7 +216,9 @@ def _run_ann_index_locked(
             emb.select(F.col(id_col), F.col(vec_col))
             .observe(
                 obs,
-                F.sum(F.col(vec_col).isNull().cast("long")).alias("null_vectors"),
+                F.sum(F.col(vec_col).isNull().cast("long")).alias(
+                    "null_vectors_dropped"
+                ),
             )
             .filter(F.col(vec_col).isNotNull())
             .select(
@@ -226,21 +227,20 @@ def _run_ann_index_locked(
                 similarity.ivf_assign(F.col(vec_col), cents).alias("cell"),
             )
         )
-
-        def _cell_metrics():
-            hist = (
-                cat.read("index").groupBy("cell").count().collect()
-            )  # bounded: k rows
-            sizes = [r["count"] for r in hist]
-            return {
-                "cells_used": str(len(sizes)),
-                "max_cell_rows": str(max(sizes) if sizes else 0),
-                "min_cell_rows": str(min(sizes) if sizes else 0),
-                "null_vectors_dropped": str(obs.get.get("null_vectors") or 0),
-            }
-
+        used = F.filter(
+            F.array(*[F.count_if(F.col("cell") == c) for c in range(len(cents))]),
+            lambda n: n > 0,
+        )
         runner.commit(
-            "index", assigned, metrics_after=_cell_metrics, partition_by=["cell"]
+            "index",
+            assigned,
+            metrics={
+                "cells_used": F.size(used),
+                "max_cell_rows": F.coalesce(F.array_max(used), F.lit(0)),
+                "min_cell_rows": F.coalesce(F.array_min(used), F.lit(0)),
+            },
+            observation=obs,
+            partition_by=["cell"],
         )
 
     # stage 3: serve the query batch against the committed index

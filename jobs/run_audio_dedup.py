@@ -44,10 +44,12 @@ Scale/resume design (the run_dedup.py conventions, stage-manifested):
   column; subfp: jaccard + overlap_ratio columns).
 - `components` labels over the COMMITTED pairs (lineage cut),
   endpoint-only node set.
-- `decisions`: error rows -> 'error'; degenerate fingerprints (zero
-  or sub-evidence-floor spectro-temporal variation) ->
-  'keep_degenerate' (no identity to assert; NEVER merged); group
-  losers -> 'drop_audio_dup'; else 'keep'.
+- `decisions`: operators/audio_fp.audio_decisions, the one rule the
+  batch run, an increment and a compaction share — error rows ->
+  'error'; degenerate fingerprints (zero or sub-evidence-floor
+  spectro-temporal variation) -> 'keep_degenerate' (no identity to
+  assert; NEVER merged); group losers -> 'drop_audio_dup'; else
+  'keep'. The decision histogram is counted during that write.
 - Single-writer run lease on the output root (io/stages.run_lease).
 """
 
@@ -156,6 +158,7 @@ def _run_locked(
         params,
         run_id,
         stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
+        histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
     )
     summary = runner.summary
     commit, resumable = runner.commit, runner.resumable
@@ -185,34 +188,14 @@ def _run_locked(
                 max_bucket_size=max_bucket_size,
                 observation=obs,
             )
-
-        def _bucket_metrics():
-            try:
-                got = obs.get
-            except Exception:
-                # AQE empty-relation propagation through the verify
-                # join eliminates the CollectMetrics node when the
-                # bucket subtree produced ZERO rows (all-singleton
-                # buckets) — the only collapse case, measured: with
-                # any nonempty bucket the observation survives even
-                # when every pair is later rejected. Zero buckets
-                # means zero drops by definition.
-                got = {}
-            m = {
-                "dropped_members": str(got.get("dropped_members") or 0),
-                "max_bucket_members": str(got.get("max_bucket_members") or 0),
-                "n_buckets": str(got.get("n_buckets") or 0),
-                "tier": tier,
-            }
-            if tier == "fp64":
-                m["max_hamming"] = str(max_hamming)
-                m["verify_pairs"] = str(verify_pairs)
-            if tier == "subfp" or verify_pairs:
-                m["min_jaccard"] = str(min_jaccard)
-                m["min_overlap_ratio"] = str(min_overlap_ratio)
-            return m
-
-        commit("pairs", pairs, metrics_after=_bucket_metrics)
+        m = {"tier": tier}
+        if tier == "fp64":
+            m["max_hamming"] = str(max_hamming)
+            m["verify_pairs"] = str(verify_pairs)
+        if tier == "subfp" or verify_pairs:
+            m["min_jaccard"] = str(min_jaccard)
+            m["min_overlap_ratio"] = str(min_overlap_ratio)
+        commit("pairs", pairs, metrics=m, observation=obs)
 
     if not resumable("components"):
         # pair endpoints only (no corpus-wide node set): clips in no
@@ -228,32 +211,9 @@ def _run_locked(
         commit("components", labels.select(F.col("id").alias("clip_id"), "component"))
 
     if not resumable("decisions"):
-        labels = cat.read("components")
-        # narrow column select: the parquet scan prunes the packed
-        # subfp stream — decisions never pay for the 8 KiB column
-        enriched = fp.select("clip_id", "err", "fp_degenerate", "fp64").join(
-            labels, "clip_id", "left"
-        )
-        decision = (
-            F.when(F.col("err").isNotNull(), "error")
-            .when(F.col("fp_degenerate"), "keep_degenerate")
-            .when(F.col("component") != F.col("clip_id"), "drop_audio_dup")
-            .otherwise("keep")
-        )
-        commit(
-            "decisions",
-            enriched.select(
-                "clip_id",
-                "fp64",
-                F.coalesce(F.col("component"), F.col("clip_id")).alias("group_id"),
-                decision.alias("decision"),
-            ),
-        )
+        commit("decisions", afp.audio_decisions(fp, cat.read("components")))
 
-    dec = cat.read("decisions")
-    summary["decision_histogram"] = {
-        r.decision: r["count"] for r in dec.groupBy("decision").count().collect()
-    }
+    summary["decision_histogram"] = runner.histogram("decisions")
     return summary
 
 
@@ -371,7 +331,7 @@ def run_audio_dedup_increment(
     audio-dedup) leans on for exactly-once batches. Cross-matches are
     ALWAYS stream-verified (the raw-fp64 false-dup lesson); there is
     deliberately no --no-verify-pairs dial here."""
-    from pyspark.sql import Observation, functions as F
+    from pyspark.sql import Observation
 
     from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.io.stages import StageRunner, run_lease
@@ -411,6 +371,7 @@ def run_audio_dedup_increment(
             params,
             run_id,
             stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
+            histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
         )
         summary = runner.summary
         commit, resumable = runner.commit, runner.resumable
@@ -468,24 +429,7 @@ def run_audio_dedup_increment(
                 min_overlap_ratio=min_overlap_ratio,
                 observation=obs,
             )
-
-            def _match_metrics():
-                try:
-                    got = obs.get
-                except Exception:
-                    # same AQE empty-relation collapse as the batch
-                    # job's bucket metrics: zero key matches = zero
-                    # drops by definition
-                    got = {}
-                return {
-                    "dropped_index_keys": str(got.get("dropped_index_keys") or 0),
-                    "max_key_matches_seen": str(
-                        got.get("max_key_matches_seen") or 0
-                    ),
-                    "tier": tier,
-                }
-
-            commit("matches", cross, metrics_after=_match_metrics)
+            commit("matches", cross, metrics={"tier": tier}, observation=obs)
 
         if not resumable("decisions"):
             decisions, deferred = afp.assign_increment(
@@ -499,14 +443,10 @@ def run_audio_dedup_increment(
             commit(
                 "decisions",
                 decisions,
-                metrics_after=lambda: {"deferred_merges": str(deferred)},
+                metrics={"deferred_merges": str(deferred)},
             )
 
-        dec = cat.read("decisions")
-        summary["decision_histogram"] = {
-            r.decision: r["count"]
-            for r in dec.groupBy("decision").count().collect()
-        }
+        summary["decision_histogram"] = runner.histogram("decisions")
         return summary
 
 
@@ -594,6 +534,7 @@ def run_audio_dedup_compact(
             params,
             run_id,
             stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
+            histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
         )
         summary = runner.summary
         commit, resumable = runner.commit, runner.resumable
@@ -648,33 +589,9 @@ def run_audio_dedup_compact(
             )
 
         if not resumable("decisions"):
-            labels = cat.read("components")
-            enriched = fp.select(
-                "clip_id", "err", "fp_degenerate", "fp64"
-            ).join(labels, "clip_id", "left")
-            decision = (
-                F.when(F.col("err").isNotNull(), "error")
-                .when(F.col("fp_degenerate"), "keep_degenerate")
-                .when(F.col("component") != F.col("clip_id"), "drop_audio_dup")
-                .otherwise("keep")
-            )
-            commit(
-                "decisions",
-                enriched.select(
-                    "clip_id",
-                    "fp64",
-                    F.coalesce(F.col("component"), F.col("clip_id")).alias(
-                        "group_id"
-                    ),
-                    decision.alias("decision"),
-                ),
-            )
+            commit("decisions", afp.audio_decisions(fp, cat.read("components")))
 
-        dec = cat.read("decisions")
-        summary["decision_histogram"] = {
-            r.decision: r["count"]
-            for r in dec.groupBy("decision").count().collect()
-        }
+        summary["decision_histogram"] = runner.histogram("decisions")
         summary["compacted_increments"] = len(inc_roots)
         return summary
 

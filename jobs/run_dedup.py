@@ -44,6 +44,9 @@ import sys
 
 DEDUP_MANIFEST_TABLE = "dedup_manifest"
 
+# the decisions stage's closed vocabulary, in rule precedence order
+DEDUP_DECISIONS = ("drop_exact_dup", "drop_near_dup", "drop_sample_miss", "keep")
+
 
 def run_dedup(
     spark,
@@ -123,6 +126,7 @@ def _run_dedup_locked(
             "max_bucket_size": max_bucket_size,
         },
         run_id,
+        histograms={"decisions": ("decision", DEDUP_DECISIONS)},
     )
     summary = runner.summary
     commit, resumable = runner.commit, runner.resumable
@@ -151,17 +155,7 @@ def _run_dedup_locked(
             max_bucket_size=max_bucket_size,
             observation=obs,
         ).filter(F.col("jaccard") >= threshold)
-
-        def _bucket_metrics():
-            got = obs.get
-            return {
-                "dropped_members": str(got.get("dropped_members") or 0),
-                "max_bucket_members": str(got.get("max_bucket_members") or 0),
-                "n_buckets": str(got.get("n_buckets") or 0),
-                "threshold": str(threshold),
-            }
-
-        commit("pairs", pairs, metrics_after=_bucket_metrics)
+        commit("pairs", pairs, metrics={"threshold": str(threshold)}, observation=obs)
 
     # stage 3: connected components over the COMMITTED pairs (reading
     # the parquet back cuts the minhash lineage — the iteration joins a
@@ -195,11 +189,12 @@ def _run_dedup_locked(
             else md5_u64_le(F.col(id_col))
             < F.lit(str(int(sample_rate * (1 << 64)))).cast("decimal(20,0)")
         )
+        exact, near, miss, keep = DEDUP_DECISIONS
         decision = (
-            F.when(F.col(id_col) != F.col("kept_id"), "drop_exact_dup")
-            .when(F.col("component") != F.col(id_col), "drop_near_dup")
-            .when(~in_sample, "drop_sample_miss")
-            .otherwise("keep")
+            F.when(F.col(id_col) != F.col("kept_id"), exact)
+            .when(F.col("component") != F.col(id_col), near)
+            .when(~in_sample, miss)
+            .otherwise(keep)
         )
         commit(
             "decisions",
@@ -209,13 +204,10 @@ def _run_dedup_locked(
                 F.col("component"),
                 decision.alias("decision"),
             ),
-            metrics_after=lambda: {"sample_rate": str(sample_rate)},
+            metrics={"sample_rate": str(sample_rate)},
         )
 
-    dec = cat.read("decisions")
-    summary["decision_histogram"] = {
-        r.decision: r["count"] for r in dec.groupBy("decision").count().collect()
-    }
+    summary["decision_histogram"] = runner.histogram("decisions")
     return summary
 
 

@@ -203,6 +203,10 @@ def test_increment_matches_full_batch(spark, tmp_path):
         "error": 1,  # e1
     }
     assert summary["metrics"]["decisions"]["deferred_merges"] == "0"
+    # counted during the increment's decisions write, equal to a groupBy
+    # over the table it committed
+    grouped = spark.read.parquet(f"{root}/increments/inc1/decisions").groupBy("decision").count()
+    assert summary["decision_histogram"] == {r.decision: r["count"] for r in grouped.collect()}
 
     got = _decisions(spark, root)
     for cid, _err, _n, _deg, group, decision in INCREMENT_EXPECTED:

@@ -2,7 +2,7 @@
 replaces the whole table (run_ann_index relies on it), while
 replace_partitions replaces exactly the listed partitions — including
 listed ones the new data leaves empty. Parquet always; Iceberg when its
-runtime is on the classpath."""
+runtime is on the classpath. An append writes one data file."""
 
 from __future__ import annotations
 
@@ -82,3 +82,18 @@ def test_replace_partitions_needs_one_partition_column(spark, tmp_path):
     df = spark.createDataFrame([(1, "a")], "p int, v string")
     with pytest.raises(ValueError, match="exactly one partition_by"):
         cat.write(df, "t", replace_partitions=[1])
+
+
+def test_an_append_writes_one_data_file(spark, tmp_path):
+    """A manifest append is a few-row local relation spread over up to
+    one partition per core; it still lands as one parquet file, so a
+    manifest read opens one file per append, not one per row."""
+    from go_pkg_spider_spark.io.manifest import MANIFEST_SCHEMA, append_rows
+
+    cat = Catalog(spark, str(tmp_path))
+    rows = [{"bucket": b, "status": "running", "run_id": "r"} for b in range(2)]
+    append_rows(cat, "m", MANIFEST_SCHEMA, rows)
+    assert len(glob.glob(str(tmp_path / "m" / "*.parquet"))) == 1
+    append_rows(cat, "m", MANIFEST_SCHEMA, rows)
+    assert len(glob.glob(str(tmp_path / "m" / "*.parquet"))) == 2
+    assert sorted(r.bucket for r in cat.read("m").collect()) == [0, 0, 1, 1]

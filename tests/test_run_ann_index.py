@@ -41,6 +41,17 @@ def test_full_run_resume_and_query_only_rerun(spark, tmp_path):
     assert s1["stages_run"] == 3 and s1["stages_skipped"] == 0
     assert int(s1["metrics"]["centroids"]["n_cells"]) == 8
     assert int(s1["metrics"]["index"]["cells_used"]) >= 4
+    # the cell metrics are counted during the index write, and equal a
+    # groupBy over the committed index
+    sizes = [
+        r["count"]
+        for r in spark.read.parquet(f"{root}/index").groupBy("cell").count().collect()
+    ]
+    m = s1["metrics"]["index"]
+    assert (m["cells_used"], m["max_cell_rows"], m["min_cell_rows"]) == (
+        str(len(sizes)), str(max(sizes)), str(min(sizes))
+    )
+    assert m["null_vectors_dropped"] == "0"
 
     # with n_probe == n_cells the probe prunes nothing, so the served
     # batch must EQUAL brute-force top-k for every query

@@ -48,6 +48,9 @@ def test_audio_dedup_decisions_resume_and_stage_sigs(spark, tmp_path):
         "keep_degenerate": 2,  # f, g
         "error": 1,  # h
     }
+    # counted during the decisions write, equal to a groupBy over it
+    grouped = spark.read.parquet(f"{root}/decisions").groupBy("decision").count()
+    assert hist == {r.decision: r["count"] for r in grouped.collect()}
     dec = {r.clip_id: r for r in spark.read.parquet(f"{root}/decisions").collect()}
     assert dec["clip-a"].decision == "keep" and dec["clip-b"].group_id == "clip-a"
     assert dec["clip-c"].group_id == "clip-a"

@@ -6,7 +6,7 @@ manifest metrics."""
 from __future__ import annotations
 
 from go_pkg_spider_spark.io.catalog import Catalog
-from go_pkg_spider_spark.io.manifest import latest_rows, read_manifest
+from go_pkg_spider_spark.io.manifest import append_rows, latest_rows, read_manifest
 from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
 from jobs.run_dedup import DEDUP_MANIFEST_TABLE, run_dedup
 
@@ -38,6 +38,11 @@ def _corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _grouped(spark, root):
+    dec = spark.read.parquet(f"{root}/decisions")
+    return {r.decision: r["count"] for r in dec.groupBy("decision").count().collect()}
+
+
 def test_dedup_job_decisions_and_resume(spark, tmp_path):
     docs = _corpus(spark)
     root = str(tmp_path / "dedup")
@@ -49,6 +54,8 @@ def test_dedup_job_decisions_and_resume(spark, tmp_path):
     assert hist["drop_exact_dup"] == 2
     assert hist["drop_near_dup"] == 1
     assert hist["keep"] == 11 - 3  # 11 rows, 2 exact + 1 near lost
+    # counted during the decisions write, equal to a groupBy over it
+    assert hist == _grouped(spark, root)
     dec = {
         r.doc_id: r
         for r in spark.read.parquet(f"{root}/decisions").collect()
@@ -72,8 +79,8 @@ def test_resume_takes_stage_rows_from_the_manifest(spark, tmp_path):
     """A fully committed root resumes with the same stage_rows, read
     from each stage's done row: no stage table is read back to count
     it. Counted by job group, the resume starts only the jobs of the
-    manifest read, the schema read of the `exact` table the job reads
-    its groups from, and the decision_histogram query."""
+    manifest read and the schema read of the `exact` table the job
+    reads its groups from."""
     docs = _corpus(spark)
     root = str(tmp_path / "dedup_resume")
     s1 = run_dedup(spark, docs, root, run_id="t1")
@@ -95,10 +102,49 @@ def test_resume_takes_stage_rows_from_the_manifest(spark, tmp_path):
         lambda: (
             read_manifest(cat, DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA),
             cat.read("exact"),
-            cat.read("decisions").groupBy("decision").count().collect(),
         ),
     )
     assert 0 < resume_jobs == read_jobs
+
+
+def test_decisions_done_row_without_histogram_reruns_the_stage(spark, tmp_path):
+    """A decisions done row written before the histogram was recorded
+    (a manifest file without the histogram column) carries none, so a
+    resume from it reruns the decisions stage and reports that run's
+    histogram, not an empty one."""
+    from pyspark.sql.types import StructType
+
+    docs = _corpus(spark)
+    root = str(tmp_path / "dedup_old_row")
+    s1 = run_dedup(spark, docs, root, run_id="t1")
+    cat = Catalog(spark, root)
+    done = latest_rows(
+        read_manifest(cat, DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA), "stage"
+    )["decisions"].asDict()
+    old_schema = StructType([f for f in STAGE_MANIFEST_SCHEMA.fields if f.name != "histogram"])
+    append_rows(
+        cat,
+        DEDUP_MANIFEST_TABLE,
+        old_schema,
+        [{f.name: done[f.name] for f in old_schema.fields if f.name not in ("committed_at_unix", "seq")}],
+    )
+    s2 = run_dedup(spark, docs, root, run_id="t2")
+    assert (s2["stages_run"], s2["stages_skipped"]) == (1, 3)
+    assert s2["decision_histogram"] == s1["decision_histogram"] == _grouped(spark, root)
+    assert s2["metrics"]["decisions"] == s1["metrics"]["decisions"]
+
+
+def test_corpus_without_candidate_buckets_commits(spark, tmp_path):
+    """Unrelated docs leave every LSH bucket a singleton: the bucket
+    subtree produces no rows, and AQE's empty-relation propagation
+    removes its Observation's node. The pairs stage still commits and
+    records zero bucket-cap drops."""
+    docs = _corpus(spark).filter("doc_id >= 20")
+    s = run_dedup(spark, docs, str(tmp_path / "dedup_unique"), run_id="u")
+    assert s["stages_run"] == 4 and s["stage_rows"]["pairs"] == 0
+    assert s["decision_histogram"] == {"keep": 6}
+    m = s["metrics"]["pairs"]
+    assert (m["dropped_members"], m["max_bucket_members"], m["n_buckets"]) == ("0", "0", "0")
 
 
 def test_dedup_job_param_change_invalidates_resume(spark, tmp_path):
@@ -156,6 +202,7 @@ def test_dedup_job_invariants_on_testdata(spark, tmp_path):
     s = run_dedup(spark, docs, root, run_id="inv", threshold=0.5)
     dec = spark.read.parquet(f"{root}/decisions")
     assert dec.count() == docs.count()
+    assert s["decision_histogram"] == _grouped(spark, root)
     # exact losers: same content hash as keeper, id > keeper
     groups = spark.read.parquet(f"{root}/exact")
     losers = dec.filter(F.col("decision") == "drop_exact_dup").join(

@@ -92,3 +92,68 @@ def test_done_rows_count_the_committed_tables(spark, tmp_path):
     assert done == {s: cat.read(s).count() for s in ("full", "empty", "parted")}
     assert done == {"full": 37, "empty": 0, "parted": 23}
     assert runner.summary["stage_rows"] == done
+
+
+def test_histogram_is_counted_during_the_write_and_resumed(spark, tmp_path):
+    """A histogram stage's counts come from its own write and equal a
+    groupBy over the table, zero counts left out; a resumed run
+    reports them from the done row, also the empty histogram of an
+    empty stage."""
+    cat = Catalog(spark, str(tmp_path / "hist"))
+    vocab = ("a", "b", "c")
+
+    def run(run_id):
+        runner = StageRunner(
+            spark, cat, MANIFEST, {"chain": 1}, run_id,
+            histograms={"h": ("v", vocab), "empty": ("v", vocab)},
+        )
+        if not runner.resumable("h"):
+            v = F.when(F.col("id") < 3, "a").otherwise("c").alias("v")
+            runner.commit("h", spark.range(10).select(v))
+        if not runner.resumable("empty"):
+            runner.commit("empty", cat.read("h").filter(F.col("v") == "b"))
+        return runner
+
+    first = run("r1")
+    grouped = {r.v: r["count"] for r in cat.read("h").groupBy("v").count().collect()}
+    assert first.histogram("h") == grouped == {"a": 3, "c": 7}
+    assert first.histogram("empty") == {}
+    again = run("r2")
+    assert (again.summary["stages_run"], again.summary["stages_skipped"]) == (0, 2)
+    assert again.histogram("h") == grouped and again.histogram("empty") == {}
+
+
+def test_operator_observation_of_an_empty_subtree_records_zeros(spark, tmp_path):
+    """When the observed subtree produces no rows, AQE's empty-relation
+    propagation removes its CollectMetrics node and the Observation has
+    no row to return; commit records each of its metrics as "0"."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    buckets = (
+        spark.range(50)
+        .filter(F.col("id") > 100)
+        .groupBy(F.col("id").alias("k"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .observe(
+            obs,
+            F.sum("n").alias("dropped_members"),
+            F.max("n").alias("max_bucket_members"),
+            F.count(F.lit(1)).alias("n_buckets"),
+        )
+    )
+    pairs = buckets.join(spark.range(50).withColumnRenamed("id", "k"), "k")
+    runner = StageRunner(spark, Catalog(spark, str(tmp_path / "aqe")), MANIFEST, {"chain": 1}, "r1")
+    runner.commit("pairs", pairs, metrics={"tier": "t"}, observation=obs)
+    with pytest.raises(Py4JJavaError):
+        obs.get  # the node was removed, so commit took the fallback
+    m = runner.summary["metrics"]["pairs"]
+    assert m == {
+        "dropped_members": "0",
+        "max_bucket_members": "0",
+        "n_buckets": "0",
+        "tier": "t",
+        "params_sig": m["params_sig"],
+    }
+    assert runner.summary["stage_rows"] == {"pairs": 0}
