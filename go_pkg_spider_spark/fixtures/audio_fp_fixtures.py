@@ -1,7 +1,7 @@
 """Frozen fixture corpus for the audio-fingerprint near-dup oracle
 (`audio_fp_docs`): deterministic clips whose duplicate structure is
 known BY CONSTRUCTION, with frozen expected outputs of the production
-fingerprint path (operators/audio_fp.fingerprint_for_clip) and of the
+fingerprint path (operators/audio_fp._fp_row_full) and of the
 near-dup grouping.
 
 The corpus encodes the real-world re-encode problem directly:

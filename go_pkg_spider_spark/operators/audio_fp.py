@@ -358,8 +358,11 @@ def subfp_pair_passes(
 
 
 def _fp_row_full(cid, blob, codec, sr_hz) -> tuple:
-    """One AUDIO_FP_FULL_SCHEMA row (the AUDIO_FP_SCHEMA fields plus
-    the packed subfp stream and the blocking probes)."""
+    """One AUDIO_FP_FULL_SCHEMA row: the AUDIO_FP_SCHEMA fields, then
+    the packed subfp stream and the blocking probes. The pure per-row
+    kernel of both fingerprint operators and of the frozen-truth
+    fixture oracles, so those gates exercise the production code path
+    (the features_for_clip convention)."""
     pcm, sr_dec, err = decode_blob(blob, codec, sr_hz)
     if pcm is None:
         return (cid, err, 0, 0, True, b"", [])
@@ -384,14 +387,6 @@ def _fp_row_full(cid, blob, codec, sr_hz) -> tuple:
     )
 
 
-def fingerprint_for_clip(cid, blob, codec, sr_hz) -> tuple:
-    """One AUDIO_FP_SCHEMA row — the pure per-row kernel shared by the
-    mapInPandas operator and the frozen-truth fixture oracle
-    (fixtures/audio_fp_fixtures.py), so the driver gate exercises the
-    exact production code path (the features_for_clip convention)."""
-    return _fp_row_full(cid, blob, codec, sr_hz)[:5]
-
-
 AUDIO_FP_SCHEMA = StructType(
     [
         StructField("clip_id", StringType()),
@@ -403,28 +398,35 @@ AUDIO_FP_SCHEMA = StructType(
 )
 
 
-def fingerprint_clips(df: DataFrame) -> DataFrame:
-    """clips(clip_id, bytes, codec, sr_hz) -> AUDIO_FP_SCHEMA rows.
-    One mapInPandas pass; PCM and the per-frame spectra die inside the
-    stage (the extract_audio_features confinement shape)."""
+def _fingerprint(df: DataFrame, schema: StructType) -> DataFrame:
+    """clips(clip_id, bytes, codec, sr_hz) -> the leading fields of
+    _fp_row_full that `schema` names, in one mapInPandas pass; PCM and
+    the per-frame spectra die inside the stage (the
+    extract_audio_features confinement shape)."""
+    cols = schema.fieldNames()
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FP_SCHEMA.fields]
         for b in batches:
             rows = [
-                fingerprint_for_clip(
+                _fp_row_full(
                     b.clip_id.iloc[i],
                     b.bytes.iloc[i],
                     b.codec.iloc[i],
                     None if pd.isna(b.sr_hz.iloc[i]) else int(b.sr_hz.iloc[i]),
-                )
+                )[: len(cols)]
                 for i in range(len(b))
             ]
             yield pd.DataFrame.from_records(rows, columns=cols)
 
     return df.select("clip_id", "bytes", "codec", "sr_hz").mapInPandas(
-        compute, AUDIO_FP_SCHEMA
+        compute, schema
     )
+
+
+def fingerprint_clips(df: DataFrame) -> DataFrame:
+    """clips -> AUDIO_FP_SCHEMA rows, ~20 bytes/clip: the packed stream
+    never leaves the UDF."""
+    return _fingerprint(df, AUDIO_FP_SCHEMA)
 
 
 AUDIO_FP_FULL_SCHEMA = StructType(
@@ -443,24 +445,7 @@ def fingerprint_clips_full(df: DataFrame) -> DataFrame:
     mapInPandas confinement; the stream is ~400x smaller than the PCM
     it summarizes, so retaining it does not reopen the payload-shuffle
     problem the fp64 projection exists to avoid."""
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in AUDIO_FP_FULL_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                _fp_row_full(
-                    b.clip_id.iloc[i],
-                    b.bytes.iloc[i],
-                    b.codec.iloc[i],
-                    None if pd.isna(b.sr_hz.iloc[i]) else int(b.sr_hz.iloc[i]),
-                )
-                for i in range(len(b))
-            ]
-            yield pd.DataFrame.from_records(rows, columns=cols)
-
-    return df.select("clip_id", "bytes", "codec", "sr_hz").mapInPandas(
-        compute, AUDIO_FP_FULL_SCHEMA
-    )
+    return _fingerprint(df, AUDIO_FP_FULL_SCHEMA)
 
 
 def _eligible(fp: DataFrame) -> DataFrame:
@@ -899,6 +884,35 @@ def audio_fp_match_against(
         )
     return verify_pairs(
         batch_fpf, cand, min_jaccard, min_overlap_ratio, fpf_b=index_fpf
+    )
+
+
+def audio_pairs(
+    fpf: DataFrame,
+    *,
+    tier: str,
+    max_bucket_size: int,
+    min_jaccard: float,
+    min_overlap_ratio: float,
+    observation,
+    max_hamming: int | None = None,
+) -> DataFrame:
+    """(id_a, id_b, jaccard, overlap_ratio, shift) verified near-dup
+    pairs WITHIN one fingerprint_clips_full table, at either tier — the
+    self-join twin of audio_fp_match_against, and the one pair
+    generator of the composed job's batch run, increment and rematch
+    compaction. fp64: pigeonhole candidates (audio_fp_pairs), then
+    stream-verified (verify_pairs), since raw fp64 collisions are false
+    on sparse corpora; any other tier is subfp: audio_subfp_pairs,
+    which verifies itself. The caller validates the tier before it
+    decodes anything (run_audio_dedup._tier_params, whose knob dict is
+    these keywords); max_hamming only exists on fp64. `observation`
+    gets the tier's bucket-cap drop accounting."""
+    if tier == "fp64":
+        cand = audio_fp_pairs(fpf, max_hamming, max_bucket_size, observation)
+        return verify_pairs(fpf, cand, min_jaccard, min_overlap_ratio)
+    return audio_subfp_pairs(
+        fpf, min_jaccard, min_overlap_ratio, max_bucket_size, observation
     )
 
 

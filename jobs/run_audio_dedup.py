@@ -18,10 +18,11 @@ Two matching tiers over ONE committed fingerprint table
   verify over the packed sub-fingerprint streams — recovers noise to
   10 dB SNR and non-integer resamples the 64-bit compression loses.
 
-Both tiers STREAM-VERIFY their candidates by default (the H&K
-lookup-then-verify architecture; ``--no-verify-pairs`` restores raw
-fp64 grouping): on sparse semi-stationary corpora the 64-bit simhash
-is voted by too few shingles and DISTINCT clips collide at
+Both tiers STREAM-VERIFY their candidates (the H&K
+lookup-then-verify architecture; operators/audio_fp.audio_pairs is the
+one pair generator of the batch run, an increment and a rematch
+compaction): on sparse semi-stationary corpora the 64-bit simhash is
+voted by too few shingles and DISTINCT clips collide at
 hamming <= 7 — measured on the 500-clip datagen corpus, all 8 fp64
 candidate pairs were false (aligned-overlap Jaccard 0.09-0.23 vs 1.0
 for true re-encode twins). Verification joins the committed streams
@@ -32,16 +33,16 @@ Scale/resume design (the run_dedup.py conventions, stage-manifested):
   packed subfp stream + blocking probes, <= ~8 KiB/clip — still ~400x
   smaller than the PCM it summarizes): the expensive decode+FFT pass
   runs exactly once, and EVERY downstream rerun — including a TIER
-  switch — reads it back instead of re-decoding the corpus. The
-  fp64-tier stages select only the ~20-byte columns, so the parquet
-  scan prunes the stream column and never pays for it. Grouping knobs
-  (tier, max_hamming, min_jaccard, min_overlap_ratio,
-  max_bucket_size) are therefore EXCLUDED from the fingerprint
-  stage's params_sig (StageRunner per-stage extra_sig) and only gate
-  the downstream stages.
-- `pairs` commits the verified candidate pairs with the bucket-cap
-  drop accounting observed into the manifest metrics (fp64: hamming
-  column; subfp: jaccard + overlap_ratio columns).
+  switch — reads it back instead of re-decoding the corpus. fp64
+  blocking and the decisions select only the ~20-byte columns, so
+  their parquet scans prune the stream column; only verification
+  reads it. Grouping knobs (tier, max_hamming, min_jaccard,
+  min_overlap_ratio, max_bucket_size) are therefore EXCLUDED from the
+  fingerprint stage's params_sig (StageRunner stage_params) and only
+  gate the downstream stages.
+- `pairs` commits the verified pairs (id_a, id_b, jaccard,
+  overlap_ratio, shift) at either tier, with the tier and the
+  bucket-cap drop accounting observed into the manifest metrics.
 - `components` labels over the COMMITTED pairs (lineage cut),
   endpoint-only node set.
 - `decisions`: operators/audio_fp.audio_decisions, the one rule the
@@ -72,6 +73,84 @@ AUDIO_DEDUP_MANIFEST_TABLE = "audio_dedup_manifest"
 _FP_SCHEMA_V = 4
 
 
+def _tier_params(
+    tier: str,
+    max_hamming: int,
+    max_bucket_size: int,
+    min_jaccard: float | None,
+    min_overlap_ratio: float | None,
+) -> dict:
+    """The one tier check, run before anything is decoded, and the
+    knobs that change a tier's pairs, thresholds defaulted: the pair
+    stages' part of the params_sig and the keyword arguments of
+    afp.audio_pairs. max_hamming exists only on the fp64 tier."""
+    from go_pkg_spider_spark.operators import audio_fp as afp
+
+    if tier not in ("fp64", "subfp"):
+        raise ValueError(f"unknown tier {tier!r} (fp64 | subfp)")
+    knobs = {
+        "tier": tier,
+        "min_jaccard": afp.FP_SUBFP_JACCARD if min_jaccard is None else min_jaccard,
+        "min_overlap_ratio": (
+            afp.FP_MIN_OVERLAP_RATIO
+            if min_overlap_ratio is None
+            else min_overlap_ratio
+        ),
+        "max_bucket_size": max_bucket_size,
+    }
+    if tier == "fp64":
+        knobs["max_hamming"] = max_hamming
+    return knobs
+
+
+def _stage_runner(spark, root: str, params: dict, run_id: str):
+    """The StageRunner of one audio dedup chain under root. The
+    fingerprint stage is knob-free by design (only the committed schema
+    version), so tier and threshold changes never re-decode the corpus;
+    the decisions commit counts the decision histogram."""
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.stages import StageRunner
+    from go_pkg_spider_spark.operators import audio_fp as afp
+
+    return StageRunner(
+        spark,
+        Catalog(spark, root),
+        AUDIO_DEDUP_MANIFEST_TABLE,
+        params,
+        run_id,
+        stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
+        histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
+    )
+
+
+def _commit_groups(runner, fp) -> dict:
+    """The chain's tail over its committed `pairs`: `components` labels
+    the pair endpoints only (no corpus-wide node set: clips in no pair
+    are singletons, and the decisions' left join labels them, so every
+    iterative round stays at O(near-dup members), not O(corpus)), then
+    `decisions`. Returns the decision histogram."""
+    from pyspark.sql import functions as F
+
+    from go_pkg_spider_spark.operators import audio_fp as afp
+    from go_pkg_spider_spark.operators import components as cc_ops
+
+    if not runner.resumable("components"):
+        labels = cc_ops.connected_components(
+            runner.cat.read("pairs").select("id_a", "id_b"),
+            src="id_a",
+            dst="id_b",
+            id_col="id",
+        )
+        runner.commit(
+            "components", labels.select(F.col("id").alias("clip_id"), "component")
+        )
+    if not runner.resumable("decisions"):
+        runner.commit(
+            "decisions", afp.audio_decisions(fp, runner.cat.read("components"))
+        )
+    return runner.histogram("decisions")
+
+
 def run_audio_dedup(
     spark,
     clips,
@@ -82,139 +161,43 @@ def run_audio_dedup(
     max_bucket_size: int = 1024,
     min_jaccard: float | None = None,
     min_overlap_ratio: float | None = None,
-    verify_pairs: bool = True,
 ) -> dict:
+    from pyspark.sql import Observation
+
     from go_pkg_spider_spark.io.stages import run_lease
-
-    if tier not in ("fp64", "subfp"):
-        raise ValueError(f"unknown tier {tier!r} (fp64 | subfp)")
-    with run_lease(output_root, run_id):
-        return _run_locked(
-            spark,
-            clips,
-            output_root,
-            run_id,
-            tier,
-            max_hamming,
-            max_bucket_size,
-            min_jaccard,
-            min_overlap_ratio,
-            verify_pairs,
-        )
-
-
-def _run_locked(
-    spark,
-    clips,
-    output_root: str,
-    run_id: str,
-    tier: str,
-    max_hamming: int,
-    max_bucket_size: int,
-    min_jaccard: float | None,
-    min_overlap_ratio: float | None,
-    verify_pairs: bool,
-) -> dict:
-    from pyspark.sql import Observation, functions as F
-
-    from go_pkg_spider_spark.io.catalog import Catalog
-    from go_pkg_spider_spark.io.stages import StageRunner
-    from go_pkg_spider_spark.operators import components as cc_ops
     from go_pkg_spider_spark.operators import audio_fp as afp
 
-    if min_jaccard is None:
-        min_jaccard = afp.FP_SUBFP_JACCARD
-    if min_overlap_ratio is None:
-        min_overlap_ratio = afp.FP_MIN_OVERLAP_RATIO
-
-    # every knob that changes the PAIR tier's output rides the global
-    # sig; the fingerprint stage is knob-free by design (only the
-    # committed schema version) so tier/threshold changes never
-    # re-decode the corpus
-    if tier == "fp64":
-        params = {
-            "tier": tier,
-            "max_hamming": max_hamming,
-            "max_bucket_size": max_bucket_size,
-            "verify_pairs": verify_pairs,
-        }
-        if verify_pairs:
-            params["min_jaccard"] = min_jaccard
-            params["min_overlap_ratio"] = min_overlap_ratio
-    else:
-        # the subfp tier always verifies — that IS the tier
-        params = {
-            "tier": tier,
-            "min_jaccard": min_jaccard,
-            "min_overlap_ratio": min_overlap_ratio,
-            "max_bucket_size": max_bucket_size,
-        }
-
-    cat = Catalog(spark, output_root)
-    runner = StageRunner(
-        spark,
-        cat,
-        AUDIO_DEDUP_MANIFEST_TABLE,
-        params,
-        run_id,
-        stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
-        histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
+    # every knob that changes the pairs rides the chain's sig
+    knobs = _tier_params(
+        tier, max_hamming, max_bucket_size, min_jaccard, min_overlap_ratio
     )
-    summary = runner.summary
-    commit, resumable = runner.commit, runner.resumable
+    with run_lease(output_root, run_id):
+        runner = _stage_runner(spark, output_root, knobs, run_id)
+        commit, resumable = runner.commit, runner.resumable
+        if not resumable("fingerprints"):
+            commit("fingerprints", afp.fingerprint_clips_full(clips))
+        fp = runner.cat.read("fingerprints")
+        if not resumable("pairs"):
+            obs = Observation()
+            pairs = afp.audio_pairs(fp, observation=obs, **knobs)
+            commit("pairs", pairs, metrics={"tier": tier}, observation=obs)
+        runner.summary["decision_histogram"] = _commit_groups(runner, fp)
+        return runner.summary
 
-    if not resumable("fingerprints"):
-        commit("fingerprints", afp.fingerprint_clips_full(clips))
-    fp = cat.read("fingerprints")
 
-    if not resumable("pairs"):
-        obs = Observation()
-        if tier == "fp64":
-            pairs = afp.audio_fp_pairs(
-                fp,
-                max_hamming=max_hamming,
-                max_bucket_size=max_bucket_size,
-                observation=obs,
-            )
-            if verify_pairs:
-                pairs = afp.verify_pairs(
-                    fp, pairs, min_jaccard, min_overlap_ratio
-                )
-        else:
-            pairs = afp.audio_subfp_pairs(
-                fp,
-                min_jaccard=min_jaccard,
-                min_overlap_ratio=min_overlap_ratio,
-                max_bucket_size=max_bucket_size,
-                observation=obs,
-            )
-        m = {"tier": tier}
-        if tier == "fp64":
-            m["max_hamming"] = str(max_hamming)
-            m["verify_pairs"] = str(verify_pairs)
-        if tier == "subfp" or verify_pairs:
-            m["min_jaccard"] = str(min_jaccard)
-            m["min_overlap_ratio"] = str(min_overlap_ratio)
-        commit("pairs", pairs, metrics=m, observation=obs)
+def latest_done_row(spark, root: str, stage: str):
+    """The manifest row a committed `stage` under root resumes from:
+    the stage's latest row when it is `done`, else None (never
+    committed, or a crash mid-commit)."""
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import latest_rows, read_manifest
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
 
-    if not resumable("components"):
-        # pair endpoints only (no corpus-wide node set): clips in no
-        # pair are singletons and the decisions stage's left-join
-        # coalesce labels them — keeps every iterative round at
-        # O(near-dup members), not O(corpus)
-        labels = cc_ops.connected_components(
-            cat.read("pairs").select("id_a", "id_b"),
-            src="id_a",
-            dst="id_b",
-            id_col="id",
-        )
-        commit("components", labels.select(F.col("id").alias("clip_id"), "component"))
-
-    if not resumable("decisions"):
-        commit("decisions", afp.audio_decisions(fp, cat.read("components")))
-
-    summary["decision_histogram"] = runner.histogram("decisions")
-    return summary
+    rows = read_manifest(
+        Catalog(spark, root), AUDIO_DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA
+    )
+    latest = latest_rows(rows, "stage").get(stage)
+    return latest if latest is not None and latest.status == "done" else None
 
 
 def _require_fp_schema(spark, roots) -> None:
@@ -228,16 +211,9 @@ def _require_fp_schema(spark, roots) -> None:
     protects same-root resume, not cross-root reads. A root whose
     latest fingerprints row is not `done` (no manifest, a crash
     mid-commit) is left to the existing existence checks."""
-    from go_pkg_spider_spark.io.catalog import Catalog
-    from go_pkg_spider_spark.io.manifest import latest_rows, read_manifest
-    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
-
     for root in roots:
-        rows = read_manifest(
-            Catalog(spark, root), AUDIO_DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA
-        )
-        latest = latest_rows(rows, "stage").get("fingerprints")
-        if latest is None or latest.status != "done":
+        latest = latest_done_row(spark, root, "fingerprints")
+        if latest is None:
             continue
         sig = (latest.metrics or {}).get("params_sig")
         try:
@@ -330,51 +306,33 @@ def run_audio_dedup_increment(
     idempotence story the streaming twin (jobs/run_streaming.py
     audio-dedup) leans on for exactly-once batches. Cross-matches are
     ALWAYS stream-verified (the raw-fp64 false-dup lesson); there is
-    deliberately no --no-verify-pairs dial here."""
+    no unverified mode."""
     from pyspark.sql import Observation
 
     from go_pkg_spider_spark.io.catalog import Catalog
-    from go_pkg_spider_spark.io.stages import StageRunner, run_lease
+    from go_pkg_spider_spark.io.stages import run_lease
     from go_pkg_spider_spark.operators import audio_fp as afp
 
-    if tier not in ("fp64", "subfp"):
-        raise ValueError(f"unknown tier {tier!r} (fp64 | subfp)")
+    knobs = _tier_params(
+        tier, max_hamming, max_bucket_size, min_jaccard, min_overlap_ratio
+    )
     if not Catalog(spark, output_root).exists("decisions"):
         raise ValueError(
             f"no committed run_audio_dedup state under {output_root!r} — "
             "run the batch job first"
         )
-    if min_jaccard is None:
-        min_jaccard = afp.FP_SUBFP_JACCARD
-    if min_overlap_ratio is None:
-        min_overlap_ratio = afp.FP_MIN_OVERLAP_RATIO
     if max_key_matches is None:
         max_key_matches = afp.FP_MAX_KEY_MATCHES
 
-    params = {
-        "tier": tier,
-        "min_jaccard": min_jaccard,
-        "min_overlap_ratio": min_overlap_ratio,
-        "max_bucket_size": max_bucket_size,
-        "max_key_matches": max_key_matches,
-    }
-    if tier == "fp64":
-        params["max_hamming"] = max_hamming
-
     inc_root = os.path.join(output_root, "increments", run_id)
     with run_lease(inc_root, run_id):
-        cat = Catalog(spark, inc_root)
-        runner = StageRunner(
+        runner = _stage_runner(
             spark,
-            cat,
-            AUDIO_DEDUP_MANIFEST_TABLE,
-            params,
+            inc_root,
+            {**knobs, "max_key_matches": max_key_matches},
             run_id,
-            stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
-            histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
         )
-        summary = runner.summary
-        commit, resumable = runner.commit, runner.resumable
+        cat, commit, resumable = runner.cat, runner.commit, runner.resumable
 
         if not resumable("fingerprints"):
             commit("fingerprints", afp.fingerprint_clips_full(new_clips))
@@ -397,25 +355,9 @@ def run_audio_dedup_increment(
         )
 
         if not resumable("within_pairs"):
-            if tier == "fp64":
-                wp = afp.verify_pairs(
-                    fp_new,
-                    afp.audio_fp_pairs(
-                        fp_new,
-                        max_hamming=max_hamming,
-                        max_bucket_size=max_bucket_size,
-                    ),
-                    min_jaccard,
-                    min_overlap_ratio,
-                )
-            else:
-                wp = afp.audio_subfp_pairs(
-                    fp_new,
-                    min_jaccard=min_jaccard,
-                    min_overlap_ratio=min_overlap_ratio,
-                    max_bucket_size=max_bucket_size,
-                )
-            commit("within_pairs", wp)
+            obs = Observation()
+            wp = afp.audio_pairs(fp_new, observation=obs, **knobs)
+            commit("within_pairs", wp, metrics={"tier": tier}, observation=obs)
 
         if not resumable("matches"):
             obs = Observation()
@@ -425,8 +367,8 @@ def run_audio_dedup_increment(
                 tier=tier,
                 max_hamming=max_hamming,
                 max_key_matches=max_key_matches,
-                min_jaccard=min_jaccard,
-                min_overlap_ratio=min_overlap_ratio,
+                min_jaccard=knobs["min_jaccard"],
+                min_overlap_ratio=knobs["min_overlap_ratio"],
                 observation=obs,
             )
             commit("matches", cross, metrics={"tier": tier}, observation=obs)
@@ -446,8 +388,8 @@ def run_audio_dedup_increment(
                 metrics={"deferred_merges": str(deferred)},
             )
 
-        summary["decision_histogram"] = runner.histogram("decisions")
-        return summary
+        runner.summary["decision_histogram"] = runner.histogram("decisions")
+        return runner.summary
 
 
 def run_audio_dedup_compact(
@@ -489,20 +431,15 @@ def run_audio_dedup_compact(
     decode is what makes the batch job expensive; pair generation over
     committed fingerprints is the cheap tail), at the cost of
     re-verifying candidate pairs."""
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation
 
     from go_pkg_spider_spark.io.catalog import Catalog
-    from go_pkg_spider_spark.io.stages import StageRunner, run_lease
-    from go_pkg_spider_spark.operators import components as cc_ops
-
+    from go_pkg_spider_spark.io.stages import run_lease
     from go_pkg_spider_spark.operators import audio_fp as afp
 
-    if tier not in ("fp64", "subfp"):
-        raise ValueError(f"unknown tier {tier!r} (fp64 | subfp)")
-    if min_jaccard is None:
-        min_jaccard = afp.FP_SUBFP_JACCARD
-    if min_overlap_ratio is None:
-        min_overlap_ratio = afp.FP_MIN_OVERLAP_RATIO
+    knobs = _tier_params(
+        tier, max_hamming, max_bucket_size, min_jaccard, min_overlap_ratio
+    )
     src = Catalog(spark, source_root)
     if not src.exists("decisions"):
         raise ValueError(
@@ -516,27 +453,10 @@ def run_audio_dedup_compact(
         "rematch": rematch,
     }
     if rematch:
-        params.update(
-            tier=tier,
-            min_jaccard=min_jaccard,
-            min_overlap_ratio=min_overlap_ratio,
-            max_bucket_size=max_bucket_size,
-        )
-        if tier == "fp64":
-            params["max_hamming"] = max_hamming
+        params.update(knobs)
 
     with run_lease(target_root, run_id):
-        cat = Catalog(spark, target_root)
-        runner = StageRunner(
-            spark,
-            cat,
-            AUDIO_DEDUP_MANIFEST_TABLE,
-            params,
-            run_id,
-            stage_params={"fingerprints": {"fp_schema_v": _FP_SCHEMA_V}},
-            histograms={"decisions": ("decision", afp.AUDIO_DECISIONS)},
-        )
-        summary = runner.summary
+        runner = _stage_runner(spark, target_root, params, run_id)
         commit, resumable = runner.commit, runner.resumable
 
         if not resumable("fingerprints"):
@@ -548,28 +468,18 @@ def run_audio_dedup_compact(
                 "fingerprints",
                 read_all_fingerprints(spark, source_root, inc_roots=inc_roots),
             )
-        fp = cat.read("fingerprints")
+        fp = runner.cat.read("fingerprints")
 
         if not resumable("pairs"):
             if rematch:
-                if tier == "fp64":
-                    edges = afp.verify_pairs(
-                        fp,
-                        afp.audio_fp_pairs(
-                            fp,
-                            max_hamming=max_hamming,
-                            max_bucket_size=max_bucket_size,
-                        ),
-                        min_jaccard,
-                        min_overlap_ratio,
-                    ).select("id_a", "id_b")
-                else:
-                    edges = afp.audio_subfp_pairs(
-                        fp,
-                        min_jaccard=min_jaccard,
-                        min_overlap_ratio=min_overlap_ratio,
-                        max_bucket_size=max_bucket_size,
-                    ).select("id_a", "id_b")
+                obs = Observation()
+                edges = afp.audio_pairs(fp, observation=obs, **knobs)
+                commit(
+                    "pairs",
+                    edges.select("id_a", "id_b"),
+                    metrics={"tier": tier},
+                    observation=obs,
+                )
             else:
                 edges = src.read("pairs").select("id_a", "id_b")
                 for root in inc_roots:
@@ -577,23 +487,11 @@ def run_audio_dedup_compact(
                     edges = edges.unionByName(
                         icat.read("within_pairs").select("id_a", "id_b")
                     ).unionByName(icat.read("matches").select("id_a", "id_b"))
-            commit("pairs", edges)
+                commit("pairs", edges)
 
-        if not resumable("components"):
-            labels = cc_ops.connected_components(
-                cat.read("pairs"), src="id_a", dst="id_b", id_col="id"
-            )
-            commit(
-                "components",
-                labels.select(F.col("id").alias("clip_id"), "component"),
-            )
-
-        if not resumable("decisions"):
-            commit("decisions", afp.audio_decisions(fp, cat.read("components")))
-
-        summary["decision_histogram"] = runner.histogram("decisions")
-        summary["compacted_increments"] = len(inc_roots)
-        return summary
+        runner.summary["decision_histogram"] = _commit_groups(runner, fp)
+        runner.summary["compacted_increments"] = len(inc_roots)
+        return runner.summary
 
 
 def main() -> None:
@@ -616,12 +514,6 @@ def main() -> None:
     p.add_argument("--max-bucket-size", type=int, default=1024)
     p.add_argument("--min-jaccard", type=float, default=None)
     p.add_argument("--min-overlap-ratio", type=float, default=None)
-    p.add_argument(
-        "--no-verify-pairs",
-        action="store_true",
-        help="skip stream verification of fp64-tier candidates "
-        "(raw hamming grouping; false-dups on sparse corpora)",
-    )
     p.add_argument(
         "--append",
         action="store_true",
@@ -701,7 +593,6 @@ def main() -> None:
             max_bucket_size=args.max_bucket_size,
             min_jaccard=args.min_jaccard,
             min_overlap_ratio=args.min_overlap_ratio,
-            verify_pairs=not args.no_verify_pairs,
         )
     print(json.dumps(summary))
     spark.stop()

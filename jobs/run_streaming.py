@@ -39,7 +39,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shlex
 import sys
+from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -140,9 +142,12 @@ def cmd_audio_dedup(args) -> dict:
     resumes instead of double-appending — the committed root is the
     only state (foreachBatch holds none, so no unbounded-state dial
     applies here)."""
-    from run_audio_dedup import _increment_roots, run_audio_dedup_increment
+    from run_audio_dedup import (
+        _increment_roots,
+        latest_done_row,
+        run_audio_dedup_increment,
+    )
 
-    from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.streaming.jobs import read_clips_stream
 
     spark = _spark("stream-audio-dedup")
@@ -177,20 +182,46 @@ def cmd_audio_dedup(args) -> dict:
 
     prefix = os.path.join(args.dedup_root, "increments", args.stream_id + "-")
     inc_roots = [r for r in _increment_roots(args.dedup_root) if r.startswith(prefix)]
-    hist: dict[str, int] = {}
+    # each increment's decisions commit recorded its rows and histogram
+    # in its done row: sum those, read no table back
+    hist: Counter = Counter()
     rows = 0
     for root in inc_roots:
-        for r in (
-            Catalog(spark, root).read("decisions").groupBy("decision").count().collect()
-        ):
-            hist[r.decision] = hist.get(r.decision, 0) + r["count"]
-            rows += r["count"]
+        done = latest_done_row(spark, root, "decisions")
+        if done is None:
+            raise RuntimeError(
+                f"increment {root!r} has no committed decisions: its "
+                "micro-batch did not finish (a restart on the same "
+                "checkpoint replays it)"
+            )
+        if done.histogram is None:
+            raise RuntimeError(_recount_hint(args, root, done))
+        rows += done.rows
+        hist.update(done.histogram)
     return {
         "job": "audio-dedup",
         "increments": len(inc_roots),
         "sink_rows": rows,
-        "decision_histogram": hist,
+        "decision_histogram": dict(hist),
     }
+
+
+def _recount_hint(args, root: str, done) -> str:
+    """The error for an increment whose decisions done row was written
+    before decision histograms were recorded, ending in the command
+    that recounts it: the increment's own run id and every knob of its
+    params_sig, so its fingerprints and pairs resume and only the
+    decisions stage reruns (--input is opened, never decoded)."""
+    cmd = [
+        "run_audio_dedup.py", "--append", "--input", args.input,
+        "--output-root", args.dedup_root, "--run-id", os.path.basename(root),
+    ]
+    for k, v in sorted(json.loads(done.metrics["params_sig"]).items()):
+        cmd += ["--" + k.replace("_", "-"), str(v)]
+    return (
+        f"increment {root!r} committed its decisions before decision "
+        "histograms were recorded; recount them with:\n" + shlex.join(cmd)
+    )
 
 
 def cmd_audio_snippet(args) -> dict:

@@ -400,6 +400,51 @@ def test_compact_rematch_recovers_missing_edges(spark, tmp_path):
     assert _decisions(spark, re)["a1"] == ("a0", "drop_audio_dup")
 
 
+def test_compact_rematch_fp64_equals_edge_union(spark, tmp_path):
+    """With no concurrent increments every fp64 pair of the union is
+    already a committed edge (the base's pairs, the increment's
+    within_pairs or its matches), so a rematch compaction at the fp64
+    tier must decide exactly as the edge-union one. The fixture has
+    one edge of each increment kind: f0, a FLAC re-encode of the
+    committed a0 (a match), and y0/y1, a new AM clip and its FLAC
+    re-encode (a within pair); the noisy twin a1 stays unmatched at
+    this tier."""
+    from go_pkg_spider_spark.fixtures.audio_fixtures import _flac, _wav
+    from go_pkg_spider_spark.fixtures.audio_fp_fixtures import _am, _chirp
+
+    rows = _rows_by_id()
+    root = str(tmp_path / "root")
+    run_audio_dedup(
+        spark, _df(spark, [rows["a0"], rows["b0"]]), root,
+        run_id="base", tier="fp64",
+    )
+    up = _chirp(_SR, _SR, 200.0, 2000.0)
+    am = _am(_SR, _SR, 1200.0, 7.0)
+    run_audio_dedup_increment(
+        spark,
+        _df(spark, [
+            ("f0", _flac(up, _SR), "flac", _SR),
+            ("y0", _wav(am, _SR), "wav", _SR),
+            ("y1", _flac(am, _SR), "flac", _SR),
+            rows["a1"],
+        ]),
+        root,
+        run_id="inc",
+        tier="fp64",
+    )
+
+    plain = str(tmp_path / "plain")
+    run_audio_dedup_compact(spark, root, plain)
+    re = str(tmp_path / "rematch")
+    s = run_audio_dedup_compact(spark, root, re, rematch=True, tier="fp64")
+    assert s["metrics"]["pairs"]["tier"] == "fp64"
+    got = _decisions(spark, re)
+    assert got == _decisions(spark, plain)
+    assert got["f0"] == ("a0", "drop_audio_dup")
+    assert got["y1"] == ("y0", "drop_audio_dup")
+    assert got["a1"] == ("a1", "keep")
+
+
 def test_streaming_twin_parity_and_restart(spark, tmp_path):
     """The foreachBatch streaming twin over a landing dir must produce
     the same increment decisions as the batch --append call, and a

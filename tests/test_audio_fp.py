@@ -20,10 +20,10 @@ def derive_expected() -> list[tuple]:
     brute-force all-pairs hamming + union-find (independent of the
     production pigeonhole-LSH path; the drift alarm AND the recall
     cross-check)."""
-    from go_pkg_spider_spark.operators.audio_fp import fingerprint_for_clip
+    from go_pkg_spider_spark.operators.audio_fp import _fp_row_full
 
     rows = [
-        fingerprint_for_clip(fid, blob, codec, sr_hz)
+        _fp_row_full(fid, blob, codec, sr_hz)[:5]
         for fid, blob, codec, sr_hz in fpx.build_rows()
     ]
     # union-find over eligible rows (decoded, non-degenerate)
@@ -198,7 +198,7 @@ def test_sparse_stream_collapse_regression():
         return sig
 
     rows = [
-        afp.fingerprint_for_clip(cid, _wav(burst(p, f), sr), "wav", sr)
+        afp._fp_row_full(cid, _wav(burst(p, f), sr), "wav", sr)[:5]
         for cid, p, f in (("s0", 1.0, 500.0), ("s1", 2.5, 1500.0), ("s2", 1.7, 900.0))
     ]
     for cid, err, n_subfp, fp64, deg in rows:
@@ -578,17 +578,20 @@ def test_subfp_grouping_matches_brute_force(spark):
 
 def test_fingerprint_clips_full_consistency(spark):
     """fingerprint_clips_full extends (never drifts from) the frozen
-    fp64 kernel: shared fields equal fingerprint_for_clip exactly,
-    the packed stream unpacks to n_subfp words, probes match the
+    fp64 kernel: shared fields equal the per-row kernel
+    (_fp_row_full's first five) exactly, and so do fingerprint_clips'
+    rows, the packed stream unpacks to n_subfp words, probes match the
     probe spec, error rows carry empty stream/probes."""
     rows, schema = _subfp_corpus()
-    fpf = {r.clip_id: r for r in afp.fingerprint_clips_full(
-        spark.createDataFrame(rows, schema)
-    ).collect()}
+    df = spark.createDataFrame(rows, schema)
+    fpf = {r.clip_id: r for r in afp.fingerprint_clips_full(df).collect()}
+    fp = {r.clip_id: tuple(r) for r in afp.fingerprint_clips(df).collect()}
+    assert set(fpf) == set(fp) == {cid for cid, *_ in rows}
     for cid, blob, codec, sr in rows:
-        base = afp.fingerprint_for_clip(cid, blob, codec, sr)
+        base = afp._fp_row_full(cid, blob, codec, sr)[:5]
         r = fpf[cid]
         assert (r.clip_id, r.err, r.n_subfp, r.fp64, r.fp_degenerate) == base
+        assert fp[cid] == base
         subs = afp.unpack_subfps(bytes(r.subfps))
         assert subs.size == r.n_subfp
         assert r.probes == afp.probe_vector(subs)

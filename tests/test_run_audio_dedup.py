@@ -5,11 +5,18 @@ knob change must NOT re-run the fingerprint decode stage)."""
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
+import pytest
 
 from go_pkg_spider_spark.fixtures.audio_fixtures import _flac, _wav
 from go_pkg_spider_spark.fixtures.audio_fp_fixtures import _am, _chirp
-from jobs.run_audio_dedup import run_audio_dedup
+from jobs.run_audio_dedup import (
+    run_audio_dedup,
+    run_audio_dedup_compact,
+    run_audio_dedup_increment,
+)
 
 
 def _corpus(spark):
@@ -119,3 +126,72 @@ def test_audio_dedup_subfp_tier_and_tier_switch_resume(spark, tmp_path):
     s3 = run_audio_dedup(spark, clips, root, run_id="subfp-rerun", tier="subfp")
     assert s3["stages_run"] == 0 and s3["stages_skipped"] == 4
     assert s3["decision_histogram"] == s2["decision_histogram"]
+
+
+# Every mode's chain params_sig at default knobs. A committed root
+# resumes only while its stages' sigs stay byte-identical, so a change
+# here reruns every existing root of that mode. "{src}" is the
+# compaction's source root.
+_SIG_GOLDENS = {
+    "batch_fp64": '{"max_bucket_size": 1024, "max_hamming": 7, '
+    '"min_jaccard": 0.4, "min_overlap_ratio": 0.5, "tier": "fp64"}',
+    "batch_subfp": '{"max_bucket_size": 1024, "min_jaccard": 0.4, '
+    '"min_overlap_ratio": 0.5, "tier": "subfp"}',
+    "increment_fp64": '{"max_bucket_size": 1024, "max_hamming": 7, '
+    '"max_key_matches": 1024, "min_jaccard": 0.4, "min_overlap_ratio": 0.5, '
+    '"tier": "fp64"}',
+    "increment_subfp": '{"max_bucket_size": 1024, "max_key_matches": 1024, '
+    '"min_jaccard": 0.4, "min_overlap_ratio": 0.5, "tier": "subfp"}',
+    "compact": '{"compacted_from": {src}, "n_increments": 1, "rematch": false}',
+    "compact_rematch_subfp": '{"compacted_from": {src}, "max_bucket_size": 1024, '
+    '"min_jaccard": 0.4, "min_overlap_ratio": 0.5, "n_increments": 1, '
+    '"rematch": true, "tier": "subfp"}',
+    "compact_rematch_fp64": '{"compacted_from": {src}, "max_bucket_size": 1024, '
+    '"max_hamming": 7, "min_jaccard": 0.4, "min_overlap_ratio": 0.5, '
+    '"n_increments": 1, "rematch": true, "tier": "fp64"}',
+}
+
+
+class _Built(Exception):
+    """Carries the params_sig of the StageRunner a job just built."""
+
+
+@pytest.mark.parametrize("mode", sorted(_SIG_GOLDENS))
+def test_params_sig_goldens(spark, tmp_path, monkeypatch, mode):
+    """Each mode builds its StageRunner with the golden params_sig. The
+    job stops as soon as the runner exists, so no stage runs; the
+    source root is a committed-looking layout with one increment."""
+    from go_pkg_spider_spark.io import stages
+
+    class Capture(stages.StageRunner):
+        def __init__(self, *a, **k):
+            super().__init__(*a, **k)
+            raise _Built(self.params_sig)
+
+    monkeypatch.setattr(stages, "StageRunner", Capture)
+    root = tmp_path / "root"
+    for d in (root / "decisions", root / "increments" / "inc1" / "decisions"):
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").touch()
+    src, target = str(root), str(tmp_path / "target")
+    calls = {
+        "batch_fp64": lambda: run_audio_dedup(spark, None, src),
+        "batch_subfp": lambda: run_audio_dedup(spark, None, src, tier="subfp"),
+        "increment_fp64": lambda: run_audio_dedup_increment(
+            spark, None, src, "inc2"
+        ),
+        "increment_subfp": lambda: run_audio_dedup_increment(
+            spark, None, src, "inc2", tier="subfp"
+        ),
+        "compact": lambda: run_audio_dedup_compact(spark, src, target),
+        "compact_rematch_subfp": lambda: run_audio_dedup_compact(
+            spark, src, target, rematch=True
+        ),
+        "compact_rematch_fp64": lambda: run_audio_dedup_compact(
+            spark, src, target, rematch=True, tier="fp64"
+        ),
+    }
+    with pytest.raises(_Built) as built:
+        calls[mode]()
+    want = _SIG_GOLDENS[mode].replace("{src}", json.dumps(src))
+    assert built.value.args[0] == want

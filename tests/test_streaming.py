@@ -279,6 +279,12 @@ def test_stream_ann_topk_watermarked_dedup(spark, tmp_path):
 def _run_streaming_cli(argv: list[str]) -> dict:
     """Drive jobs/run_streaming.py main() in-process (get_spark reuses
     the session JVM; the spark-submit surface is the same main)."""
+    return _run_job_cli("run_streaming", argv)
+
+
+def _run_job_cli(module: str, argv: list[str]) -> dict:
+    """Drive jobs/<module>.py main() in-process and return the JSON
+    summary it prints last."""
     import importlib
     import json
     import sys as _sys
@@ -288,11 +294,11 @@ def _run_streaming_cli(argv: list[str]) -> dict:
     jobs_dir = os.path.join(os.path.dirname(__file__), "..", "jobs")
     if jobs_dir not in _sys.path:
         _sys.path.insert(0, jobs_dir)
-    mod = importlib.import_module("run_streaming")
+    mod = importlib.import_module(module)
     old = _sys.argv
     buf = StringIO()
     try:
-        _sys.argv = ["run_streaming.py", *argv]
+        _sys.argv = [f"{module}.py", *argv]
         with redirect_stdout(buf):
             mod.main()
     finally:
@@ -381,3 +387,90 @@ def test_run_streaming_cli_ann_topk(spark, tmp_path):
     assert s1["sink_rows"] == 15  # 5 queries x k=3
     s2 = _run_streaming_cli(base)
     assert s2["sink_rows"] == 15 and s2["sink_batches"] == s1["sink_batches"]
+
+
+def test_run_streaming_cli_audio_dedup_summary_and_restart(spark, tmp_path, monkeypatch):
+    """audio-dedup CLI: --available-now drains a two-file landing dir
+    into one increment per micro-batch, and the summary (taken from the
+    increments' decisions done rows) equals a groupBy over the
+    decisions they committed. A restart on the same checkpoint adds no
+    increment and reports the same summary. An increment committed
+    before decision histograms were recorded stops the summary with the
+    exact command that recounts it."""
+    from collections import Counter
+
+    import shlex
+
+    from pyspark.sql.types import StructType
+
+    from go_pkg_spider_spark.fixtures.audio_fp_fixtures import (
+        build_increment_rows,
+        build_subfp_rows,
+    )
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import append_rows, latest_rows, read_manifest
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+    from jobs.run_audio_dedup import (
+        AUDIO_DEDUP_MANIFEST_TABLE,
+        _increment_roots,
+        run_audio_dedup,
+    )
+
+    rows = {r[0]: r for r in build_subfp_rows() + build_increment_rows()}
+    schema = "clip_id string, bytes binary, codec string, sr_hz int"
+    root = str(tmp_path / "root")
+    run_audio_dedup(
+        spark, spark.createDataFrame([rows["a0"], rows["b0"]], schema), root,
+        run_id="base", tier="subfp",
+    )
+    landing = str(tmp_path / "landing")
+    for i, ids in enumerate((("a1", "t0", "z0"), ("x0", "x1", "e1"))):
+        spark.createDataFrame(
+            [(cid, b, sr, 1000, c, None) for cid, b, c, sr in (rows[k] for k in ids)],
+            "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+            "codec string, transcript string",
+        ).coalesce(1).write.parquet(landing, mode="append" if i else "overwrite")
+
+    argv = [
+        "audio-dedup", "--input", landing, "--dedup-root", root,
+        "--checkpoint", str(tmp_path / "ckpt"), "--tier", "subfp",
+        "--max-files-per-trigger", "1", "--available-now",
+    ]
+    s1 = _run_streaming_cli(argv)
+    incs = _increment_roots(root)
+    assert s1["increments"] == len(incs) == 2
+    grouped = Counter()
+    for inc in incs:
+        for r in spark.read.parquet(f"{inc}/decisions").groupBy("decision").count().collect():
+            grouped[r.decision] += r["count"]
+    assert s1["decision_histogram"] == dict(grouped)
+    assert s1["sink_rows"] == sum(grouped.values()) == 6
+    assert grouped["drop_audio_dup"] == 2  # a1 -> a0, x1 -> x0
+
+    s2 = _run_streaming_cli(argv)  # restart: the checkpoint consumed both files
+    assert _increment_roots(root) == incs
+    assert s2 == s1
+
+    # a decisions done row written before histograms were recorded (a
+    # manifest file without the column): the summary refuses it and its
+    # last line is the command that recounts it, after which the
+    # summary is whole again
+    cat = Catalog(spark, incs[0])
+    done = latest_rows(
+        read_manifest(cat, AUDIO_DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA), "stage"
+    )["decisions"].asDict()
+    old_schema = StructType([f for f in STAGE_MANIFEST_SCHEMA.fields if f.name != "histogram"])
+    append_rows(
+        cat,
+        AUDIO_DEDUP_MANIFEST_TABLE,
+        old_schema,
+        [{f.name: done[f.name] for f in old_schema.fields if f.name not in ("committed_at_unix", "seq")}],
+    )
+    with pytest.raises(RuntimeError) as err:
+        _run_streaming_cli(argv)
+    cmd = shlex.split(str(err.value).splitlines()[-1])
+    assert cmd[0] == "run_audio_dedup.py"
+    monkeypatch.setattr(spark, "stop", lambda: None)  # main() stops its session
+    recount = _run_job_cli("run_audio_dedup", cmd[1:])
+    assert (recount["stages_run"], recount["stages_skipped"]) == (1, 3)
+    assert _run_streaming_cli(argv) == s1
