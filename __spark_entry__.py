@@ -29,7 +29,7 @@ def entry(spark: SparkSession) -> DataFrame:
     df = d.withColumn("lang_res", langid.body_lang_rules(F.col("text")))
     t = F.coalesce(F.col("text"), F.lit(""))
     pre_drop = rules.lang_independent_drop(t, min_chars=64)
-    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("text"))
+    model_text, marker = langid.model_inputs(F.col("lang_res"))
     df = df.withColumn(
         "fused", fused_text_udf(model_text, marker, F.when(pre_drop.isNull(), t))
     ).withColumn(

@@ -23,6 +23,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from .expr_utils import let_col
 from .textnorm import (
     ASCII_ALPHA,
     JAVA_HAN,
@@ -61,19 +62,33 @@ def lang_from_declared_tag(tag: Column) -> Column:
 def body_lang_rules(text: Column) -> Column:
     """langFromText cheap branches (/root/reference/lang.go:274-345).
 
-    Returns struct(lang, lang_pos) where lang is one of
+    Returns struct(lang, lang_pos, model_text) where lang is one of
     zh/ja/en/NEEDS_MODEL_LATIN/NEEDS_MODEL_OTHER/NULL:
     - NULL: text too short (<64 chars after cleaning) — no language.
-    - NEEDS_MODEL_*: hand off to the n-gram model UDF.
+    - NEEDS_MODEL_*: hand off to the n-gram model UDF; model_text is
+      the cleaned body chunk it scores (NULL on every other row).
     All counts use rune semantics (regexp_count == len(FindAllString)).
-    """
-    clean = clean_for_lang(text, BODY_CHUNK_SIZE)
-    n = F.length(clean)
-    han = char_count(clean, JAVA_HAN)
-    ja = char_count(clean, JAVA_KANA)
-    en = char_count(clean, ASCII_ALPHA)
-    latin = char_count(clean, LATIN_SUPPLEMENT)
 
+    The cleaned chunk and its four class counts are let-bound
+    (expr_utils.let_col): the cascade reads each several times, and an
+    inlined Column would rerun its regex chain at every read.
+    """
+    return let_col(
+        clean_for_lang(text, BODY_CHUNK_SIZE),
+        lambda clean: let_col(
+            F.struct(
+                F.length(clean).alias("n"),
+                char_count(clean, JAVA_HAN).alias("han"),
+                char_count(clean, JAVA_KANA).alias("ja"),
+                char_count(clean, ASCII_ALPHA).alias("en"),
+                char_count(clean, LATIN_SUPPLEMENT).alias("latin"),
+            ),
+            lambda c: _body_lang(clean, c["n"], c["han"], c["ja"], c["en"], c["latin"]),
+        ),
+    )
+
+
+def _body_lang(clean, n, han, ja, en, latin) -> Column:
     han_rate = han / n
     ja_in_han_rate = ja / F.when(han > 0, han)  # null-safe: only used when han>0
     en_rate = en / n
@@ -90,19 +105,27 @@ def body_lang_rules(text: Column) -> Column:
         )
         .otherwise(NEEDS_MODEL_OTHER)
     )
-    pos = F.when(
-        lang.isNull() | lang.isin(NEEDS_MODEL_LATIN, NEEDS_MODEL_OTHER),
-        F.lit(None).cast("string"),
-    ).otherwise(F.lit(POS_BODY))
-    return F.struct(lang.alias("lang"), pos.alias("lang_pos"))
+    needs = lang.isin(NEEDS_MODEL_LATIN, NEEDS_MODEL_OTHER)
+    pos = F.when(lang.isNull() | needs, F.lit(None).cast("string")).otherwise(
+        F.lit(POS_BODY)
+    )
+    return _lang_struct(lang, pos, F.when(needs, clean))
+
+
+def _lang_struct(lang: Column, pos: Column, model_text: Column | None = None) -> Column:
+    """The cascade's struct(lang, lang_pos, model_text); only the body
+    rules hand the model a text."""
+    if model_text is None:
+        model_text = F.lit(None).cast("string")
+    return F.struct(lang.alias("lang"), pos.alias("lang_pos"), model_text.alias("model_text"))
 
 
 def title_lang_rule(title: Column, body_text: Column) -> Column:
     """LangFromTitle (/root/reference/lang.go:200-263): if the cleaned
     title holds >=2 Han chars, inspect the cleaned/truncated body — ja
     rate >0.2 -> ja, ko rate >0.2 -> ko, else zh; provenance 'title'.
-    Returns struct(lang, lang_pos) with NULL lang when the rule doesn't
-    fire."""
+    Returns struct(lang, lang_pos, model_text) with NULL lang when the
+    rule doesn't fire."""
     t = F.trim(remove_sign(title))
     title_han = char_count(t, JAVA_HAN)
 
@@ -115,8 +138,7 @@ def title_lang_rule(title: Column, body_text: Column) -> Column:
         (t != "") & (title_han >= 2),
         F.when(ja_rate > 0.2, "ja").when(ko_rate > 0.2, "ko").otherwise("zh"),
     )
-    pos = F.when(lang.isNotNull(), F.lit(POS_TITLE))
-    return F.struct(lang.alias("lang"), pos.alias("lang_pos"))
+    return _lang_struct(lang, F.when(lang.isNotNull(), F.lit(POS_TITLE)))
 
 
 def lang_cascade(
@@ -135,21 +157,19 @@ def lang_cascade(
     4. charset is UTF* and tag in ('',en)  -> body cascade ('body' or
        NEEDS_MODEL_* sentinel for the model UDF)
 
-    Returns struct(lang, lang_pos); lang may be a NEEDS_MODEL_* sentinel
-    — resolve with `resolve_model_lang` before surfacing results.
+    Returns struct(lang, lang_pos, model_text); lang may be a
+    NEEDS_MODEL_* sentinel — resolve with `resolve_model_lang` before
+    surfacing results.
     """
     from .charset import charset_lang
 
-    null_struct = F.struct(
-        F.lit(None).cast("string").alias("lang"),
-        F.lit(None).cast("string").alias("lang_pos"),
-    )
+    null_struct = _lang_struct(F.lit(None).cast("string"), F.lit(None).cast("string"))
 
     steps: list[Column] = []
     if charset is not None:
         cl = charset_lang(charset)
         steps.append(
-            F.when(cl.isNotNull(), F.struct(cl.alias("lang"), F.lit(POS_CHARSET).alias("lang_pos")))
+            F.when(cl.isNotNull(), _lang_struct(cl, F.lit(POS_CHARSET)))
         )
     if title is not None:
         tr = title_lang_rule(title, body)
@@ -159,7 +179,7 @@ def lang_cascade(
         steps.append(
             F.when(
                 (dl != "") & (dl != "en"),
-                F.struct(dl.alias("lang"), F.lit(POS_HTML).alias("lang_pos")),
+                _lang_struct(dl, F.lit(POS_HTML)),
             )
         )
     body_res = body_lang_rules(body)
@@ -326,27 +346,24 @@ def _needs_model(lang_res: Column) -> Column:
     return lang_res["lang"].isin(NEEDS_MODEL_LATIN, NEEDS_MODEL_OTHER)
 
 
-def model_inputs(lang_res: Column, text: Column) -> tuple[Column, Column]:
+def model_inputs(lang_res: Column) -> tuple[Column, Column]:
     """(model text, marker) for the fused UDF (operators/fused.py): the
-    cleaned body chunk and the NEEDS_MODEL_* sentinel that selects the
-    candidate set, both NULL on rows the rules settled, so the model
-    runs on the residual only."""
-    needs = _needs_model(lang_res)
-    return (
-        F.when(needs, clean_for_lang(text, BODY_CHUNK_SIZE)),
-        F.when(needs, lang_res["lang"]),
-    )
+    cleaned body chunk the body rules bound and the NEEDS_MODEL_*
+    sentinel that selects the candidate set, both NULL on rows the rules
+    settled, so the model runs on the residual only."""
+    return lang_res["model_text"], F.when(_needs_model(lang_res), lang_res["lang"])
 
 
 def resolve_model_lang(lang_res: Column, model_lang: Column) -> Column:
     """Two-phase resolution (SURVEY.md §4 'lang cascade early-exit'):
     replace a NEEDS_MODEL_* sentinel in `lang_res` with the model's
     answer (the fused UDF's `model_lang`), provenance 'lingua'; settled
-    rows keep their struct."""
+    rows keep their lang and lang_pos. The result is struct(lang,
+    lang_pos): the model text is spent."""
     return F.when(
         _needs_model(lang_res),
         F.struct(
             model_lang.alias("lang"),
             F.when(model_lang.isNotNull(), F.lit(POS_LINGUA)).alias("lang_pos"),
         ),
-    ).otherwise(lang_res)
+    ).otherwise(F.struct(lang_res["lang"].alias("lang"), lang_res["lang_pos"].alias("lang_pos")))

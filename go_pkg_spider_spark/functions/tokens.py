@@ -55,8 +55,8 @@ def mean_word_length_from_words(words: Column) -> Column:
 
 
 def quality_score_from_words(text: Column, words: Column) -> Column:
-    """quality_score with the word array injected (see with_quality_score
-    for the hoisted two-projection form)."""
+    """quality_score with the word array injected (see quality_score_steps
+    for the hoisted form)."""
     t = F.coalesce(text, F.lit(""))
     n = F.length(t)
     len_score = F.least(n / F.lit(500.0), F.lit(1.0))
@@ -74,11 +74,16 @@ def quality_score(text: Column) -> Column:
     return quality_score_from_words(text, words_array(text))
 
 
-def with_quality_score(df, text_col: str, out_col: str = "quality_score"):
-    """Adds the quality score with the word array AND its length-sum
-    hoisted into single-eval projections (the inline form re-derived the
-    split/filter array ~6x and the aggregate 2x in the plan)."""
-    w, tot = "_qs_words", "_qs_total"
+QS_TEMPS = ("_qs_words", "_qs_total")
+
+
+def quality_score_steps(text_col: str, out_col: str = "quality_score") -> list[dict[str, Column]]:
+    """The quality score as three projections: the word array, then its
+    length-sum, then the score, each computed once (the inline form
+    re-derived the split/filter array ~6x and the aggregate 2x in the
+    plan). Apply each dict with one withColumns, in order; the two
+    QS_TEMPS columns are scratch."""
+    w, tot = QS_TEMPS
     words, total = F.col(w), F.col(tot)
     n = F.size(words)
     wl = F.when(n > 0, F.round(total / n, 6)).otherwise(F.lit(0.0))
@@ -89,12 +94,18 @@ def with_quality_score(df, text_col: str, out_col: str = "quality_score"):
         F.lit(0.0), F.lit(1.0) - punct_ratio(F.col(text_col)) * 4.0
     )
     score = F.round(len_score * 0.4 + punct_penalty * 0.4 + wl_score * 0.2, 6)
-    return (
-        df.withColumn(w, words_array(F.col(text_col)))
-        .withColumn(tot, F.aggregate(words, F.lit(0), lambda a, x: a + F.length(x)))
-        .withColumn(out_col, score)
-        .drop(w, tot)
-    )
+    return [
+        {w: words_array(F.col(text_col))},
+        {tot: F.aggregate(words, F.lit(0), lambda a, x: a + F.length(x))},
+        {out_col: score},
+    ]
+
+
+def with_quality_score(df, text_col: str, out_col: str = "quality_score"):
+    """Adds the quality score (quality_score_steps) to `df`."""
+    for step in quality_score_steps(text_col, out_col):
+        df = df.withColumns(step)
+    return df.drop(*QS_TEMPS)
 
 
 def fingerprint(text: Column) -> Column:

@@ -96,8 +96,16 @@ def _binary_views(arr):
     return out
 
 
-@F.arrow_udf(FUSED_SCHEMA)
-def fused_model_arrow_udf(
+def fused_model_arrow_udf(*cols: Column) -> Column:
+    """The fused UDF over (bytes, codec, sr_hz, model_text, marker,
+    ppl_text). Each call wraps `_fused_batch` anew, for the active
+    SparkContext: a UDF object keeps the Java function of the first
+    context it was called in, and after a context restart that one
+    reports to a dead accumulator."""
+    return F.arrow_udf(_fused_batch, FUSED_SCHEMA)(*cols)
+
+
+def _fused_batch(
     blob: pa.Array,
     codec: pa.Array,
     sr_hz: pa.Array,

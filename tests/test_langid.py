@@ -21,7 +21,7 @@ def _res(spark, body, charset=None, title=None, declared=None):
             declared_lang=F.lit(declared) if declared is not None else None,
         ).alias("lang_res"),
     )
-    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("transcript"))
+    model_text, marker = langid.model_inputs(F.col("lang_res"))
     df = df.withColumn(
         "fused", fused_text_udf(model_text, marker, F.lit(None).cast("string"))
     ).withColumn(

@@ -51,7 +51,7 @@ def run_langid(spark) -> dict:
             F.col("text"), charset=F.lit("utf-8"), title=F.col("title")
         ),
     )
-    model_text, marker = langid.model_inputs(F.col("lang_res"), F.col("text"))
+    model_text, marker = langid.model_inputs(F.col("lang_res"))
     df = df.withColumn(
         "fused", fused_text_udf(model_text, marker, F.lit(None).cast("string"))
     ).withColumn(
