@@ -26,9 +26,16 @@ def entry(spark: SparkSession) -> DataFrame:
     from go_pkg_spider_spark.operators.fused import fused_text_udf
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    df = d.withColumn("lang_res", langid.body_lang_rules(F.col("text")))
     t = F.coalesce(F.col("text"), F.lit(""))
-    pre_drop = rules.lang_independent_drop(t, min_chars=64)
+    # the lang-independent guards run once, as in run_pipeline: they
+    # mask the ppl input and lead the drop-reason chain
+    df = d.withColumns(
+        {
+            "lang_res": langid.body_lang_rules(F.col("text")),
+            "pre_drop": rules.lang_independent_drop(t, min_chars=64),
+        }
+    )
+    pre_drop = F.col("pre_drop")
     model_text, marker = langid.model_inputs(F.col("lang_res"))
     df = df.withColumn(
         "fused", fused_text_udf(model_text, marker, F.when(pre_drop.isNull(), t))
@@ -36,10 +43,11 @@ def entry(spark: SparkSession) -> DataFrame:
         "lang_res",
         langid.resolve_model_lang(F.col("lang_res"), F.col("fused")["model_lang"]),
     )
-    kd = rules.keep_drop(F.col("text"), F.col("lang_res")["lang"], min_chars=64)
+    kd = rules.keep_drop(F.col("text"), F.col("lang_res")["lang"], pre_drop=pre_drop)
+    # drop_reason is its own projection: keep reads it again
     df = (
-        df.withColumn("keep", kd["keep"])
-        .withColumn("drop_reason", kd["drop_reason"])
+        df.withColumn("drop_reason", kd["drop_reason"])
+        .withColumn("keep", F.col("drop_reason").isNull())
         .withColumn(
             "scrubbed_text", F.when(F.col("keep"), scrub.scrub(F.col("text")))
         )

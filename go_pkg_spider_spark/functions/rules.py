@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from .expr_utils import let_col
 from .textnorm import ASCII_ALPHA, JAVA_HAN, JAVA_PUNCT, char_count
 
 # link.go:14-17 LinkType enum, as strings for readability
@@ -65,6 +66,10 @@ def classify_title(title: Column, lang: Column, full_len: Column | None = None) 
     word-lang branch (:328-348): strip punct; any ascii letter ->
     content if >=5 words else list; none otherwise.
     other branch (:350-360): strip punct; len>=8 -> content else list.
+
+    The Han count, the space-stripped and the punct-stripped title are
+    let-bound (expr_utils.let_col), each inside the branch that reads
+    it: an inlined Column would rerun its regex at every read.
     """
     over = (
         F.length(F.coalesce(full_len, F.lit(""))) > 255
@@ -72,38 +77,34 @@ def classify_title(title: Column, lang: Column, full_len: Column | None = None) 
         else F.lit(False)
     )
 
-    han = char_count(title, JAVA_HAN)
-    t_nospace = F.regexp_replace(title, " ", "")
-    t_len = F.length(t_nospace)
-    has_zh_punc = t_nospace.rlike(f"[{ZH_PUNCS}]")
-
-    zh_branch = (
-        F.when(
-            han > 5,
-            F.when(t_len >= 8, TYPE_CONTENT)
-            .when(has_zh_punc, TYPE_CONTENT)
-            .otherwise(TYPE_UNKNOWN),
+    def short_zh(t_nospace):
+        return (
+            F.when(F.length(t_nospace) >= 8, TYPE_CONTENT)
+            .when(t_nospace.rlike(f"[{ZH_PUNCS}]"), TYPE_CONTENT)
+            .otherwise(TYPE_UNKNOWN)
         )
+
+    zh_branch = let_col(
+        char_count(title, JAVA_HAN),
+        lambda han: F.when(han > 5, let_col(F.regexp_replace(title, " ", ""), short_zh))
         .when(han > 0, TYPE_LIST)
         .when(F.lower(title).isin(*ZH_EN_TITLES), TYPE_LIST)
-        .otherwise(TYPE_NONE)
+        .otherwise(TYPE_NONE),
     )
 
-    t_nopunct = F.regexp_replace(title, JAVA_PUNCT, "")
-    en_count = char_count(t_nopunct, ASCII_ALPHA)
-    words = F.size(F.filter(F.split(F.trim(t_nopunct), " +"), lambda w: w != ""))
-    word_branch = F.when(
-        en_count > 0, F.when(words >= 5, TYPE_CONTENT).otherwise(TYPE_LIST)
-    ).otherwise(TYPE_NONE)
-
-    other_len = F.length(t_nopunct)
-    other_branch = F.when(other_len >= 8, TYPE_CONTENT).otherwise(TYPE_LIST)
+    def word_or_other(t_nopunct):
+        en_count = char_count(t_nopunct, ASCII_ALPHA)
+        words = F.size(F.filter(F.split(F.trim(t_nopunct), " +"), lambda w: w != ""))
+        word_branch = F.when(
+            en_count > 0, F.when(words >= 5, TYPE_CONTENT).otherwise(TYPE_LIST)
+        ).otherwise(TYPE_NONE)
+        other_branch = F.when(F.length(t_nopunct) >= 8, TYPE_CONTENT).otherwise(TYPE_LIST)
+        return F.when(lang.isin(*WORD_LANGS), word_branch).otherwise(other_branch)
 
     return (
         F.when(over, TYPE_NONE)
         .when(lang == "zh", zh_branch)
-        .when(lang.isin(*WORD_LANGS), word_branch)
-        .otherwise(other_branch)
+        .otherwise(let_col(F.regexp_replace(title, JAVA_PUNCT, ""), word_or_other))
     )
 
 
@@ -145,18 +146,23 @@ def keep_drop(
     lang: Column,
     min_chars: int = 64,
     max_chars: int = 1_000_000,
+    pre_drop: Column | None = None,
 ) -> Column:
     """The end-to-end keep/drop decision for a transcript, with the first
     failing rule preserved as `drop_reason`: the lang-independent guards,
     then the title-style classification (link.go:276-364) where only
-    'content' survives.
+    'content' survives. pre_drop: the guards' result, when the caller
+    has already projected lang_independent_drop(transcript) (min_chars
+    and max_chars are then unused).
 
     Returns struct(keep boolean, drop_reason string-or-null,
     link_type string)."""
     t = F.coalesce(transcript, F.lit(""))
     link_type = classify_title(F.trim(t), lang, full_len=None)
+    if pre_drop is None:
+        pre_drop = lang_independent_drop(t, min_chars, max_chars)
     reason = F.coalesce(
-        lang_independent_drop(t, min_chars, max_chars),
+        pre_drop,
         F.when(link_type != TYPE_CONTENT, F.concat(F.lit("class_"), link_type)),
     )
     return F.struct(

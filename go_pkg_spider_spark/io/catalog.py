@@ -12,9 +12,15 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import MapType, StructType
+
+from ..session import arrow_table, local_frame
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -97,23 +103,70 @@ class Catalog:
                 w = w.partitionBy(*partition_by)
             w.parquet(self._path(table))
 
-    def append(self, df: DataFrame, table: str) -> None:
-        """One data file per append (parquet): appends are the manifest's
-        few-row frames, and a reader opens every file the table has."""
+    def append(self, rows: list[tuple], schema: StructType, table: str) -> None:
+        """Append driver-built `rows` (tuples in `schema` order, as
+        session.local_frame takes them): the manifests' few-row commits.
+
+        Parquet: one file written from the driver with pyarrow, no Spark
+        job. It is written under a hidden `.`-prefixed name and then
+        renamed into place (os.replace), so a crash leaves either the
+        whole file or only the hidden one, which Spark and pyarrow
+        readers both skip. Iceberg: one Spark append of the rows as a
+        local relation."""
         if self.use_iceberg:
-            df.writeTo(self._ident(table)).append()
-        else:
-            df.coalesce(1).write.mode("append").parquet(self._path(table))
+            local_frame(self.spark, rows, schema).writeTo(self._ident(table)).append()
+            return
+        path = self._path(table)
+        os.makedirs(path, exist_ok=True)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(path, f".{name}.tmp")
+        pq.write_table(arrow_table(rows, schema), tmp)
+        os.replace(tmp, os.path.join(path, name))
 
     def read(self, table: str, schema: StructType | None = None) -> DataFrame:
         """schema (parquet only; an Iceberg table carries its own): the
-        known table schema, partition columns included. It skips schema
-        inference, and a table dir holding no data files reads as empty
-        instead of failing."""
+        known table schema, partition columns included, e.g. the one a
+        stage's done row records (StageRunner.read). Without it Spark
+        starts a job to infer the schema from the files' footers. With
+        it there is no such job, and a table dir holding no data files
+        reads as empty instead of failing."""
         if self.use_iceberg:
             return self.spark.read.table(self._ident(table))
         reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         return reader.parquet(self._path(table))
+
+    def read_rows(self, table: str, schema: StructType) -> list[Row]:
+        """Every row of a small table (a manifest) in `schema`'s column
+        order, [] before its first append. A column a file lacks
+        (written by an older job version) reads as NULL.
+
+        Parquet: read from the driver with pyarrow.dataset, no Spark
+        job; it reads the files Spark wrote before the driver-side
+        appends too. A MapType value comes back as a dict, as a Spark
+        collect returns it. Iceberg: one Spark collect."""
+        if not self.exists(table):
+            return []
+        if self.use_iceberg:
+            df = self.read(table)
+            return df.select(
+                *[
+                    F.col(f.name)
+                    if f.name in df.columns
+                    else F.lit(None).cast(f.dataType).alias(f.name)
+                    for f in schema.fields
+                ]
+            ).collect()
+        data = ds.dataset(
+            self._path(table), format="parquet", schema=to_arrow_schema(schema)
+        ).to_table()
+        columns = [
+            [None if v is None else dict(v) for v in data.column(f.name).to_pylist()]
+            if isinstance(f.dataType, MapType)
+            else data.column(f.name).to_pylist()
+            for f in schema.fields
+        ]
+        row = Row(*schema.fieldNames())
+        return [row(*values) for values in zip(*columns)]
 
     def exists(self, table: str) -> bool:
         if self.use_iceberg:

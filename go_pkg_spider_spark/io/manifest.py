@@ -43,6 +43,13 @@ Idempotence: a bucket either committed (latest manifest row done with
 matching sig) or is re-run whole; a wave's write replaces its buckets'
 partitions, including ones that come out empty (Catalog.write
 replace_partitions), so re-running a half-written wave is safe.
+
+Manifest I/O starts no Spark job on parquet: an append is one parquet
+file the driver writes with pyarrow and renames into place, and a read
+is one pyarrow.dataset scan under the manifest's known schema
+(Catalog.append / Catalog.read_rows). Manifests that Spark wrote
+before this stay readable, missing columns and all. On Iceberg both go
+through Spark, as table commits must.
 """
 
 from __future__ import annotations
@@ -61,22 +68,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..session import local_frame
 from .catalog import Catalog
 
 
 def read_manifest(catalog: Catalog, table: str, schema: StructType) -> list[Row]:
-    """Every row of a manifest table, [] before its first append. The
-    known schema skips inference; columns an older job version did not
-    write read as NULL (given the schema on parquet, added here on
-    Iceberg), so such rows never match the current params_sig."""
-    if not catalog.exists(table):
-        return []
-    mdf = catalog.read(table, schema=schema)
-    for f in schema.fields:
-        if f.name not in mdf.columns:
-            mdf = mdf.withColumn(f.name, F.lit(None).cast(f.dataType))
-    return mdf.select(*schema.fieldNames()).collect()
+    """Every row of a manifest table, [] before its first append
+    (Catalog.read_rows: on parquet a driver-side read, no Spark job).
+    Columns an older job version did not write read as NULL, so such
+    rows never match the current params_sig."""
+    return catalog.read_rows(table, schema)
 
 
 def latest_rows(rows, unit_col: str) -> dict:
@@ -103,18 +103,13 @@ def append_rows(
     are NULL), all stamped from one clock read: committed_at_unix in
     seconds, seq in nanoseconds. seq orders same-second rows ACROSS
     processes (a per-process counter can't: a crashed rerun's
-    `running` row must outrank an earlier run's `done`).
-
-    The rows go in as an Arrow local relation (session.local_frame):
-    built from a Python list, the frame would be a parallelized RDD,
-    and each one- or two-row append would run a Python-worker task
-    per default partition. Not through pandas either: a NULL in an
-    int64 column makes pandas cast it to float64, which rounds a
-    nanosecond `seq` and so breaks latest_rows' ordering."""
+    `running` row must outrank an earlier run's `done`). On parquet
+    Catalog.append writes the rows as one file from the driver, with
+    no Spark job."""
     now_ns = time.time_ns()
     stamp = {"committed_at_unix": now_ns // 1_000_000_000, "seq": now_ns}
     data = [tuple({**r, **stamp}.get(f.name) for f in schema.fields) for r in rows]
-    catalog.append(local_frame(catalog.spark, data, schema), table)
+    catalog.append(data, schema, table)
 
 
 MANIFEST_SCHEMA = StructType(

@@ -15,6 +15,12 @@ table. The stage manifest follows ManifestedRun's protocol
   operator-held Observation (a bucket cap's drop accounting). No job
   reads a table it just committed to report on it, and a resumed run
   reports a skipped stage's rows and histogram from its done row.
+- The done row also records the committed frame's schema, and read()
+  reads a stage table with it, so no stage read starts a Spark job to
+  infer the schema. With the driver-side manifest I/O
+  (io/manifest.py), a fully resumed chain starts no Spark job at all.
+  A done row older than the column has no schema; its table is read by
+  inference, so such a root resumes without rerunning anything.
 - A committed stage is reusable ONLY if its LATEST manifest row
   (manifest.latest_rows) is `done` with the SAME parameter fingerprint
   (params_sig) as the current invocation. Older rows never count:
@@ -232,6 +238,9 @@ STAGE_MANIFEST_SCHEMA = StructType(
         StructField("committed_at_unix", LongType()),
         # wall-clock nanoseconds at append (manifest.append_rows)
         StructField("seq", LongType()),
+        # the committed table's schema (StructType.json()) on done rows,
+        # which StageRunner.read reads it with; NULL on older rows
+        StructField("schema", StringType()),
     ]
 )
 
@@ -280,6 +289,7 @@ class StageRunner:
         }
         self._done = self._done_stages()
         self._counts: dict = {}
+        self._schemas: dict = {}
 
     def _done_stages(self) -> dict:
         """{stage: its latest manifest row}, for the stages whose latest
@@ -349,6 +359,7 @@ class StageRunner:
         metrics["params_sig"] = sig
         rows = got["rows"]
         counts = {v: got[f"{col}={v}"] for v in vocab if got[f"{col}={v}"]}
+        schema = df.schema.json()
         self._append_row(
             stage,
             "done",
@@ -356,20 +367,33 @@ class StageRunner:
             metrics=metrics,
             histogram=counts if col else None,
             wall_sec=round(time.monotonic() - t0, 3),
+            schema=schema,
         )
         self.upstream_reran = True
         self.summary["stages_run"] += 1
         self.summary["stage_rows"][stage] = rows
         self.summary["metrics"][stage] = metrics
         self._counts[stage] = counts
+        self._schemas[stage] = schema
 
     def resumable(self, stage: str) -> bool:
         if stage in self._done and not self.upstream_reran:
             self.summary["stages_skipped"] += 1
             self.summary["stage_rows"][stage] = self._done[stage].rows
             self._counts[stage] = self._done[stage].histogram
+            self._schemas[stage] = self._done[stage].schema
             return True
         return False
+
+    def read(self, stage: str):
+        """The committed stage table, read with the schema its commit in
+        this run or the done row it resumed from records, so the read
+        starts no schema-inference job. A done row written before the
+        schema was recorded has none: that table's schema is inferred."""
+        schema = self._schemas.get(stage)
+        return self.cat.read(
+            stage, schema=StructType.fromJson(json.loads(schema)) if schema else None
+        )
 
     def histogram(self, stage: str) -> dict:
         """{value: rows} of a histogram stage, from its commit in this

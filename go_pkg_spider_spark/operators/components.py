@@ -69,8 +69,10 @@ def connected_components(
     replaces diameter-many join+checkpoint+probe rounds with one
     collect + one broadcast join (measured: the LSH components
     entry dropped ~1.5s of round latency at sf1.0, identical rows).
-    Edge lists larger than the threshold run the distributed iteration
-    unchanged; 0 disables the fast path."""
+    That collect, of at most threshold + 1 edges, also sizes the list:
+    there is no separate count. Edge lists larger than the threshold
+    run the distributed iteration unchanged; 0 disables the fast
+    path."""
     if on_max_iter not in ("star", "raise"):
         raise ValueError(f"on_max_iter must be 'star' or 'raise', got {on_max_iter!r}")
     # materialize the DIRECTED edge list before mirroring it: every
@@ -83,8 +85,11 @@ def connected_components(
     # .checkpoint(dir) on a cluster.
     e0 = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).localCheckpoint()
     sym = e0.union(e0.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    if driver_edge_threshold and e0.count() <= driver_edge_threshold:
-        return _driver_union_find(sym, nodes, id_col)
+    if driver_edge_threshold:
+        # one collect both sizes the graph and fetches a small one
+        rows = e0.limit(driver_edge_threshold + 1).collect()
+        if len(rows) <= driver_edge_threshold:
+            return _driver_union_find(rows, sym, nodes, id_col)
     if nodes is None:
         base = sym.select(F.col("u").alias("n")).distinct()
     else:
@@ -153,17 +158,20 @@ def connected_components(
     return labels.select(F.col("n").alias(id_col), F.col("l").alias("component"))
 
 
-def _driver_union_find(sym: DataFrame, nodes: DataFrame | None, id_col: str) -> DataFrame:
+def _driver_union_find(
+    rows: list, sym: DataFrame, nodes: DataFrame | None, id_col: str
+) -> DataFrame:
     """Small-graph fast path: exact min-label components via union-find
-    on the driver over an already-materialized symmetric edge list
-    (bounded by driver_edge_threshold — a deliberate, size-guarded
-    control-path collect, NOT a data-path collect). Labels match the
-    iterative path bit-for-bit: component id = smallest member id.
+    on the driver over the collected directed edges `rows` (bounded by
+    driver_edge_threshold — a deliberate, size-guarded control-path
+    collect, NOT a data-path collect; union-find needs no mirrored
+    edges). `sym` is the symmetric edge frame the default node set
+    comes from. Labels match the iterative path bit-for-bit: component
+    id = smallest member id.
 
     The label table re-enters the plan as a broadcast-joined mapping;
     nodes missing from it (isolated vertices) coalesce to themselves,
     the same singleton rule as the iterative path."""
-    rows = sym.collect()
     parent: dict = {}
 
     def find(x):

@@ -90,19 +90,24 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
-    """A DataFrame of driver-built `rows` (tuples in `schema` order;
-    a MapType value is a dict or None), built as a pyarrow Table with
-    the schema's Arrow types so it plans as a LocalTableScan. A Python
-    list given to createDataFrame plans as a scan of a parallelized
-    RDD instead, and then even a one-row frame runs one Python-worker
-    task per default partition. No pandas frame is made: pandas turns
-    an int64 column holding a None into float64, which rounds values
-    above 2**53 (a manifest `seq`, for one)."""
+def arrow_table(rows, schema: StructType) -> pa.Table:
+    """`rows` (tuples in `schema` order; a MapType value is a dict or
+    None) as a pyarrow Table with the schema's Arrow types. No pandas
+    frame is made: pandas turns an int64 column holding a None into
+    float64, which rounds values above 2**53 (a manifest `seq`, for
+    one)."""
     arrow_schema = to_arrow_schema(schema)
     columns = list(zip(*rows)) or [[] for _ in arrow_schema]
-    table = pa.Table.from_arrays(
+    return pa.Table.from_arrays(
         [pa.array(values, type=f.type) for f, values in zip(arrow_schema, columns)],
         schema=arrow_schema,
     )
-    return spark.createDataFrame(table, schema)
+
+
+def local_frame(spark: SparkSession, rows, schema: StructType) -> DataFrame:
+    """A DataFrame of driver-built `rows` (as in arrow_table), built as
+    a pyarrow Table so it plans as a LocalTableScan. A Python list given
+    to createDataFrame plans as a scan of a parallelized RDD instead,
+    and then even a one-row frame runs one Python-worker task per
+    default partition."""
+    return spark.createDataFrame(arrow_table(rows, schema), schema)

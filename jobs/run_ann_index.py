@@ -196,7 +196,7 @@ def _run_ann_index_locked(
             ),
             metrics={"n_cells": str(len(cents)), "dim": str(len(cents[0]))},
         )
-    cents = _centroids_from_table(cat.read("centroids"))
+    cents = _centroids_from_table(runner.read("centroids"))
     if not cents:
         raise ValueError(
             "run_ann_index: committed centroids table is empty (written "
@@ -282,7 +282,7 @@ def _run_ann_index_locked(
                 else similarity.ivf_topk_batch
             )
             result = score(
-                cat.read("index"),
+                runner.read("index"),
                 q,
                 vec_col,
                 id_col,

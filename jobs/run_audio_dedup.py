@@ -136,7 +136,7 @@ def _commit_groups(runner, fp) -> dict:
 
     if not runner.resumable("components"):
         labels = cc_ops.connected_components(
-            runner.cat.read("pairs").select("id_a", "id_b"),
+            runner.read("pairs").select("id_a", "id_b"),
             src="id_a",
             dst="id_b",
             id_col="id",
@@ -146,7 +146,7 @@ def _commit_groups(runner, fp) -> dict:
         )
     if not runner.resumable("decisions"):
         runner.commit(
-            "decisions", afp.audio_decisions(fp, runner.cat.read("components"))
+            "decisions", afp.audio_decisions(fp, runner.read("components"))
         )
     return runner.histogram("decisions")
 
@@ -176,7 +176,7 @@ def run_audio_dedup(
         commit, resumable = runner.commit, runner.resumable
         if not resumable("fingerprints"):
             commit("fingerprints", afp.fingerprint_clips_full(clips))
-        fp = runner.cat.read("fingerprints")
+        fp = runner.read("fingerprints")
         if not resumable("pairs"):
             obs = Observation()
             pairs = afp.audio_pairs(fp, observation=obs, **knobs)
@@ -332,11 +332,11 @@ def run_audio_dedup_increment(
             {**knobs, "max_key_matches": max_key_matches},
             run_id,
         )
-        cat, commit, resumable = runner.cat, runner.commit, runner.resumable
+        commit, resumable, read = runner.commit, runner.resumable, runner.read
 
         if not resumable("fingerprints"):
             commit("fingerprints", afp.fingerprint_clips_full(new_clips))
-        fp_new = cat.read("fingerprints")
+        fp_new = read("fingerprints")
         # the committed state is read AFTER the lease is held so a
         # concurrent increment cannot commit between read and match;
         # increments under different run_ids still race on the
@@ -376,8 +376,8 @@ def run_audio_dedup_increment(
         if not resumable("decisions"):
             decisions, deferred = afp.assign_increment(
                 fp_new,
-                cat.read("within_pairs"),
-                cat.read("matches"),
+                read("within_pairs"),
+                read("matches"),
                 read_all_decisions(
                     spark, output_root, inc_roots=index_incs
                 ).select("clip_id", "group_id"),
@@ -468,7 +468,7 @@ def run_audio_dedup_compact(
                 "fingerprints",
                 read_all_fingerprints(spark, source_root, inc_roots=inc_roots),
             )
-        fp = runner.cat.read("fingerprints")
+        fp = runner.read("fingerprints")
 
         if not resumable("pairs"):
             if rematch:

@@ -129,12 +129,12 @@ def _run_dedup_locked(
         histograms={"decisions": ("decision", DEDUP_DECISIONS)},
     )
     summary = runner.summary
-    commit, resumable = runner.commit, runner.resumable
+    commit, resumable, read = runner.commit, runner.resumable, runner.read
 
     # stage 1: exact dedup — one row per distinct normalized text
     if not resumable("exact"):
         commit("exact", dedup.exact_dedup(docs, text_col, id_col))
-    groups = cat.read("exact")
+    groups = read("exact")
 
     # survivors of exact dedup (id == kept_id), re-derived from the
     # committed groups: a hash semi-join on the id column only
@@ -163,7 +163,7 @@ def _run_dedup_locked(
     # node set so singletons label themselves
     if not resumable("components"):
         labels = cc_ops.connected_components(
-            cat.read("pairs"),
+            read("pairs"),
             src="id_a",
             dst="id_b",
             nodes=survivors.select(id_col),
@@ -174,7 +174,7 @@ def _run_dedup_locked(
     # stage 4: one decision row per INPUT doc. Deterministic precedence:
     # exact loser -> near-dup loser -> stratified-sample miss -> keep.
     if not resumable("decisions"):
-        labels = cat.read("components")
+        labels = read("components")
         with_hash = docs.select(
             F.col(id_col), content_hash_md5(F.col(text_col)).alias("content_md5")
         )

@@ -53,6 +53,23 @@ def test_driver_fast_path_matches_iterative(spark):
     }
 
 
+def test_driver_fast_path_collects_the_edges_once(spark, jobs_of):
+    """The small-graph path sizes the edge list with the same collect
+    that fetches it. Over a 4-partition edge list the call starts at
+    most the checkpoint's jobs plus the 2 of that limited collect (it
+    scans one partition, then the rest); a count (2 jobs) followed by
+    a collect of the mirrored edges (1) would make one more."""
+    e = spark.createDataFrame(
+        [(1, 2), (2, 3), (9, 4), (4, 4), (7, 6), (11, 11)], "id_a long, id_b long"
+    ).repartition(4)
+    labels, call_jobs = jobs_of(lambda: components.connected_components(e))
+    _, checkpoint_jobs = jobs_of(lambda: e.select("id_a", "id_b").localCheckpoint())
+    assert 0 < call_jobs <= checkpoint_jobs + 2
+    assert {r.id: r.component for r in labels.collect()} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 9: 4, 6: 6, 7: 6, 11: 11,
+    }
+
+
 def test_edge_direction_irrelevant(spark):
     assert _cc(spark, [(5, 2), (2, 9)]) == {2: 2, 5: 2, 9: 2}
 

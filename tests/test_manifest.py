@@ -7,10 +7,13 @@ mirrors io/stages.StageRunner's guarantee)."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from go_pkg_spider_spark import pipeline
 from go_pkg_spider_spark.io import manifest
@@ -47,7 +50,7 @@ def _commit_one_bucket(spark, cat, clips, bucket, num_buckets, table="decisions"
             "crashed", int(time.time()), _sig(num_buckets), 0,
         )
     ]
-    cat.append(spark.createDataFrame(row, MANIFEST_SCHEMA), MANIFEST_TABLE)
+    cat.append(row, MANIFEST_SCHEMA, MANIFEST_TABLE)
 
 
 def test_full_run_then_nothing_pending(spark, clips_path, tmp_path):
@@ -178,14 +181,15 @@ def test_legacy_manifest_without_sig_reruns(spark, clips_path, tmp_path):
     outputs."""
     clips = spark.read.parquet(clips_path)
     cat = Catalog(spark, str(tmp_path / "legacy"))
-    # write a legacy-shaped manifest: done rows without params_sig/seq
+    # a legacy manifest, written by Spark as manifests were then: done
+    # rows without params_sig/seq
     legacy = spark.createDataFrame(
         [(0, "done", 10, 8, {"": 8}, 1.0, "old", int(time.time()))],
         "bucket int, status string, input_rows long, kept_rows long, "
         "drop_histogram map<string,long>, wall_sec double, run_id string, "
         "committed_at_unix long",
     )
-    cat.append(legacy, MANIFEST_TABLE)
+    legacy.write.mode("append").parquet(f"{cat.root}/{MANIFEST_TABLE}")
     run = ManifestedRun(spark, cat, 2, "new")
     assert run.pending_buckets() == [0, 1]
 
@@ -202,7 +206,7 @@ def test_same_second_tie_is_not_done(spark, clips_path, tmp_path):
         (0, "done", 10, 8, {"": 8}, 1.0, "w2", now, sig, None),
         (1, "done", 10, 8, {"": 8}, 1.0, "w1", now, sig, 5),
     ]
-    cat.append(spark.createDataFrame(rows, MANIFEST_SCHEMA), MANIFEST_TABLE)
+    cat.append(rows, MANIFEST_SCHEMA, MANIFEST_TABLE)
     run = ManifestedRun(spark, cat, 2, "r")
     # bucket 0 tied -> rerun; bucket 1 has a unique latest done row -> kept
     assert run.pending_buckets() == [0]
@@ -313,9 +317,10 @@ def test_one_wave_costs_the_same_spark_jobs_for_more_buckets(spark, clips_path, 
 
 
 def test_local_frame_round_trips_as_a_local_relation(spark):
-    """The frame helper every manifest append goes through: the
-    values come back exactly (a seq-sized int64 beside a NULL, which a
-    pandas float64 column would round, and a map that is NULL or empty),
+    """The helper driver-built frames go through (an Iceberg manifest
+    append too): the values come back exactly (a seq-sized int64
+    beside a NULL, which a pandas float64 column would round, and a map
+    that is NULL or empty),
     and the plan is a LocalTableScan, not a scan of a parallelized
     Python RDD."""
     from pyspark.sql.types import LongType, MapType, StringType, StructField, StructType
@@ -340,3 +345,114 @@ def test_local_frame_round_trips_as_a_local_relation(spark):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "LocalTableScan" in plan, plan
         assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
+
+def test_manifest_append_and_read_start_no_spark_job(spark, tmp_path, jobs_of):
+    """On parquet an append is one file written from the driver and a
+    read is a driver-side scan: neither starts a Spark job. The rows
+    read back are the rows appended, a map as a dict and a NULL map
+    as None, and Spark reads the same file to the same rows."""
+    cat = Catalog(spark, str(tmp_path / "io"))
+    rows = [
+        {"bucket": 0, "status": "running", "run_id": "r"},
+        {"bucket": 1, "status": "done", "input_rows": 3, "kept_rows": 1,
+         "drop_histogram": {"": 1, "too_short": 2}, "wall_sec": 0.5,
+         "run_id": "r", "params_sig": "s"},
+    ]
+    _, append_jobs = jobs_of(lambda: manifest.append_rows(cat, "m", MANIFEST_SCHEMA, rows))
+    got, read_jobs = jobs_of(lambda: manifest.read_manifest(cat, "m", MANIFEST_SCHEMA))
+    assert (append_jobs, read_jobs) == (0, 0)
+    assert manifest.read_manifest(cat, "absent", MANIFEST_SCHEMA) == []
+    stamp = {"committed_at_unix": got[0].committed_at_unix, "seq": got[0].seq}
+    assert stamp["seq"] // 1_000_000_000 == stamp["committed_at_unix"]
+    want = [
+        tuple({**r, **stamp}.get(f.name) for f in MANIFEST_SCHEMA.fields) for r in rows
+    ]
+    assert sorted(tuple(r) for r in got) == want
+    assert list(got[0].asDict()) == MANIFEST_SCHEMA.fieldNames()
+    assert sorted(tuple(r) for r in cat.read("m", schema=MANIFEST_SCHEMA).collect()) == want
+
+
+def test_resume_with_every_bucket_done_starts_no_spark_job(
+    spark, clips_path, tmp_path, jobs_of
+):
+    """A resume pass over a manifest whose buckets are all done reads
+    the manifest on the driver and commits nothing: 0 Spark jobs."""
+    clips = spark.read.parquet(clips_path)
+    cat = Catalog(spark, str(tmp_path / "resume"))
+    ManifestedRun(spark, cat, 3, "a").run(clips, _transform, "decisions")
+    s, jobs = jobs_of(
+        lambda: ManifestedRun(spark, cat, 3, "b").run(clips, _transform, "decisions")
+    )
+    assert s == {"buckets_run": 0, "buckets_skipped": 3}
+    assert jobs == 0
+
+
+def test_spark_written_and_driver_written_manifest_files_mix(spark, tmp_path):
+    """A manifest holding files Spark wrote before the driver-side
+    appends (legacy ones without params_sig, seq or a newer column, and
+    full-schema ones) and files the driver wrote reads to the same
+    latest rows as a Spark read of the table under the known schema,
+    which is how the manifest was read before."""
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+
+    root = tmp_path / "mixed"
+    cat = Catalog(spark, str(root))
+    now = int(time.time())
+    spark.createDataFrame(
+        [(0, "done", 10, 8, {"": 8}, 1.0, "old", now - 9),
+         (1, "done", 5, 5, {"": 5}, 1.0, "old", now - 9)],
+        "bucket int, status string, input_rows long, kept_rows long, "
+        "drop_histogram map<string,long>, wall_sec double, run_id string, "
+        "committed_at_unix long",
+    ).write.mode("append").parquet(f"{root}/{MANIFEST_TABLE}")
+    spark.createDataFrame(
+        [(1, "running", None, None, None, None, "spark", now - 5, _sig(4), 1),
+         (2, "done", 4, 1, {"": 1, "x": 3}, 2.0, "spark", now - 5, _sig(4), 2)],
+        MANIFEST_SCHEMA,
+    ).write.mode("append").parquet(f"{root}/{MANIFEST_TABLE}")
+    manifest.append_rows(
+        cat, MANIFEST_TABLE, MANIFEST_SCHEMA,
+        [{"bucket": 1, "status": "done", "input_rows": 5, "kept_rows": 4,
+          "drop_histogram": {"": 4, "too_short": 1}, "run_id": "driver",
+          "params_sig": _sig(4)},
+         {"bucket": 3, "status": "running", "run_id": "driver"}],
+    )
+    got = manifest.read_manifest(cat, MANIFEST_TABLE, MANIFEST_SCHEMA)
+    spark_read = spark.read.schema(MANIFEST_SCHEMA).parquet(f"{root}/{MANIFEST_TABLE}")
+    assert sorted(map(tuple, got)) == sorted(map(tuple, spark_read.collect()))
+    latest = manifest.latest_rows(got, "bucket")
+    assert latest == manifest.latest_rows(spark_read.collect(), "bucket")
+    assert {b: (r.status, r.run_id) for b, r in latest.items()} == {
+        0: ("done", "old"), 1: ("done", "driver"), 2: ("done", "spark"), 3: ("running", "driver"),
+    }
+    assert latest[0].params_sig is None and latest[0].seq is None
+    assert ManifestedRun(spark, cat, 4, "r").pending_buckets() == [0, 3]
+    # a stage manifest file from before the histogram and schema columns
+    old = StructType(
+        [f for f in STAGE_MANIFEST_SCHEMA.fields if f.name not in ("histogram", "schema")]
+    )
+    spark.createDataFrame(
+        [("a", "done", 7, {"params_sig": "s"}, 1.0, "old", now, 3)], old
+    ).write.mode("append").parquet(f"{root}/stages")
+    manifest.append_rows(cat, "stages", STAGE_MANIFEST_SCHEMA,
+                         [{"stage": "b", "status": "done", "rows": 2, "schema": "{}"}])
+    got = manifest.read_manifest(cat, "stages", STAGE_MANIFEST_SCHEMA)
+    spark_read = spark.read.schema(STAGE_MANIFEST_SCHEMA).parquet(f"{root}/stages")
+    assert sorted(map(tuple, got)) == sorted(map(tuple, spark_read.collect()))
+    assert {r.stage: (r.histogram, r.schema) for r in got} == {
+        "a": (None, None), "b": (None, "{}"),
+    }
+
+
+def test_a_leftover_temporary_file_is_ignored(spark, tmp_path):
+    """An append killed between its write and its rename leaves a
+    hidden `.`-prefixed file; neither the manifest read nor Spark sees
+    it."""
+    cat = Catalog(spark, str(tmp_path / "tmp"))
+    manifest.append_rows(cat, "m", MANIFEST_SCHEMA, [{"bucket": 0, "status": "done"}])
+    table = tmp_path / "tmp" / "m"
+    (data,) = [f for f in os.listdir(table) if not f.startswith(".")]
+    shutil.copy(table / data, table / f".{data}.tmp")
+    assert len(manifest.read_manifest(cat, "m", MANIFEST_SCHEMA)) == 1
+    assert spark.read.parquet(str(table)).count() == 1

@@ -70,10 +70,10 @@ def fresh_jvm(tmp_path_factory):
 
 def test_plan_evaluates_each_regex_once(fresh_jvm):
     # the bound clean_for_lang chain (4), strip_markup (2), the scrub
-    # bank (13) and classify_title (5); the four body-rule counts,
-    # classify_title's han (2) and ascii (1) counts, punct_ratio (1).
-    # Before the binding: 168 and 31.
-    assert (fresh_jvm["regexp_replace"], fresh_jvm["regexp_extract_all"]) == (24, 8)
+    # bank (13) and classify_title's bound no-space and no-punct titles
+    # (2); the four body-rule counts, classify_title's bound han (1) and
+    # ascii (1) counts, punct_ratio (1). Before the bindings: 168 and 31.
+    assert (fresh_jvm["regexp_replace"], fresh_jvm["regexp_extract_all"]) == (21, 7)
 
 
 def test_largest_generated_method_under_32k(fresh_jvm):

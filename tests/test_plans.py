@@ -85,6 +85,17 @@ def test_entry_single_python_hop(spark):
     assert "BatchEvalPython" not in plan
 
 
+def test_entry_evaluates_the_guards_once(spark):
+    """entry() projects the lang-independent guards once and reads
+    them in both the ppl mask and the drop-reason chain, so the
+    licence-blacklist regex appears once in its optimized plan."""
+    from go_pkg_spider_spark.functions.rules import ZH_LICENCE_BLACKLIST_RE
+
+    df = entry.entry(spark)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count(ZH_LICENCE_BLACKLIST_RE) == 1
+
+
 def test_fused_import_leaves_pandas_out():
     """The fused UDF's import chain is pandas-free, so its Arrow UDF
     worker never pays for loading pandas."""

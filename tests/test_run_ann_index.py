@@ -142,3 +142,21 @@ def test_inline_queries_never_resume_topk(spark, tmp_path):
     # rerun (two different inline batches would share a fingerprint)
     s2 = run_ann_index(spark, emb, root, queries=_queries(emb), query_id_col="qid")
     assert s2["stages_skipped"] == 2 and s2["stages_run"] == 1
+
+
+def test_stage_reads_use_the_recorded_schemas(spark, tmp_path, stage_reads):
+    """Committed and resumed, every stage table, the cell-partitioned
+    index included, reads with the schema its done row records: no
+    inference job, the inferred schema (partition column last)."""
+    emb = _emb(spark)
+    root = str(tmp_path / "ann_schemas")
+    kw = dict(n_cells=4, iters=1, queries_sig="q1", query_id_col="qid", topk=3, n_probe=2)
+    run_ann_index(spark, emb, root, queries=_queries(emb), **kw)
+    s2 = run_ann_index(spark, emb, root, queries=_queries(emb), **kw)
+    assert s2["stages_skipped"] == 3
+    checked = stage_reads()
+    assert sorted(checked) == sorted(
+        [("ann_manifest", "centroids"), ("ann_manifest", "index"), ("ann_manifest_topk", "topk")]
+        * 2
+    )
+    assert spark.read.parquet(f"{root}/index").columns[-1] == "cell"

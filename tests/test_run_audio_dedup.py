@@ -195,3 +195,21 @@ def test_params_sig_goldens(spark, tmp_path, monkeypatch, mode):
         calls[mode]()
     want = _SIG_GOLDENS[mode].replace("{src}", json.dumps(src))
     assert built.value.args[0] == want
+
+
+def test_stage_reads_use_the_recorded_schemas(spark, tmp_path, stage_reads):
+    """Every stage table of the batch chain (committed and resumed), of
+    an increment and of a compaction reads with the schema its done
+    row records: no inference job, the inferred schema."""
+    from pyspark.sql import functions as F
+
+    clips = _corpus(spark)
+    late = F.col("clip_id").isin("clip-b", "clip-c", "clip-g")
+    root = str(tmp_path / "audio_schemas")
+    run_audio_dedup(spark, clips.filter(~late), root, run_id="t1")
+    assert run_audio_dedup(spark, clips.filter(~late), root, run_id="t2")["stages_skipped"] == 4
+    run_audio_dedup_increment(spark, clips.filter(late), root, "inc1")
+    run_audio_dedup_compact(spark, root, str(tmp_path / "compacted"))
+    chain = ["fingerprints", "pairs", "components", "decisions"]
+    increment = ["fingerprints", "within_pairs", "matches", "decisions"]
+    assert sorted(s for _, s in stage_reads()) == sorted(chain * 3 + increment)

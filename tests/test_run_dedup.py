@@ -75,36 +75,32 @@ def test_dedup_job_decisions_and_resume(spark, tmp_path):
     assert s2["decision_histogram"] == hist
 
 
-def test_resume_takes_stage_rows_from_the_manifest(spark, tmp_path):
+def test_resume_takes_stage_rows_from_the_manifest(spark, tmp_path, jobs_of):
     """A fully committed root resumes with the same stage_rows, read
     from each stage's done row: no stage table is read back to count
-    it. Counted by job group, the resume starts only the jobs of the
-    manifest read and the schema read of the `exact` table the job
-    reads its groups from."""
+    it. Counted by job group, the resume starts no Spark job at all:
+    the manifest is read on the driver, and the `exact` table the job
+    reads its groups from is read with the schema its done row
+    records."""
     docs = _corpus(spark)
     root = str(tmp_path / "dedup_resume")
     s1 = run_dedup(spark, docs, root, run_id="t1")
-    sc = spark.sparkContext
-
-    def jobs_of(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-    s2, resume_jobs = jobs_of("dedup-resume", lambda: run_dedup(spark, docs, root, run_id="t1"))
+    s2, resume_jobs = jobs_of(lambda: run_dedup(spark, docs, root, run_id="t1"))
     assert s2["stages_skipped"] == 4 and s2["stage_rows"] == s1["stage_rows"]
-    cat = Catalog(spark, root)
-    _, read_jobs = jobs_of(
-        "dedup-reads",
-        lambda: (
-            read_manifest(cat, DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA),
-            cat.read("exact"),
-        ),
-    )
-    assert 0 < resume_jobs == read_jobs
+    assert resume_jobs == 0
+
+
+def test_stage_reads_use_the_recorded_schemas(spark, tmp_path, stage_reads):
+    """Committed and resumed, every stage table reads with the schema
+    its done row records: no inference job, the inferred schema."""
+    docs = _corpus(spark)
+    root = str(tmp_path / "dedup_schemas")
+    run_dedup(spark, docs, root, run_id="t1")
+    assert run_dedup(spark, docs, root, run_id="t2")["stages_skipped"] == 4
+    stages = ["exact", "pairs", "components", "decisions"]
+    assert sorted(stage_reads()) == sorted([(DEDUP_MANIFEST_TABLE, s) for s in stages] * 2)
+    rows = read_manifest(Catalog(spark, root), DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA)
+    assert all(r.schema for r in rows if r.status == "done")
 
 
 def test_decisions_done_row_without_histogram_reruns_the_stage(spark, tmp_path):
