@@ -2215,10 +2215,11 @@ def audio_decode_docs(spark, sf_dir):
     odd-chunk RIFF walks, sub-frame clips, and the
     full typed-error family (empty/oversize/non-whitelisted/corrupt
     container/truncated FLAC) — pushed through the REAL production
-    operators (the fused.fused_model_arrow_udf Arrow UDF, with NULL
-    langid/ppl inputs, + audio_features.extract_audio_features
-    mapInPandas) and compared value-for-value
-    against the frozen expected-truth table. Reference analog: the
+    operators and compared with the frozen expected-truth table. ok/err
+    come from the fused.fused_model_arrow_udf Arrow UDF (NULL
+    langid/ppl inputs), the decode verdict run_pipeline acts on; every
+    scalar comes from the audio_features.extract_audio_features
+    mapInPandas. Reference analog: the
     transcode stage http.go:157-170 whose charset half is gated by
     charset_rules_docs; decode is not SQL-expressible, so the oracle
     is the frozen-literal pattern (simtext_argmax_docs).
@@ -2237,24 +2238,20 @@ def audio_decode_docs(spark, sf_dir):
         fused_model_arrow_udf(
             F.col("bytes"), F.col("codec"), F.col("sr_hz"), no_text, no_text, no_text
         ).alias("d"),
-    ).select(
-        "fid",
-        F.col("d.ok").alias("ok"),
-        F.col("d.err").alias("err"),
-        F.col("d.n_samples").alias("n_samples"),
-        F.col("d.sr_decoded").alias("sr_decoded"),
-        F.col("d.rms").alias("rms"),
-        F.col("d.peak").alias("peak"),
-        F.col("d.clip_ratio").alias("clip_ratio"),
-        F.col("d.dc_offset").alias("dc_offset"),
-        F.col("d.zero_cross_rate").alias("zcr"),
-    )
+    ).select("fid", F.col("d.ok").alias("ok"), F.col("d.err").alias("err"))
     feats = af.extract_audio_features(
         df.select(
             F.col("fid").cast("string").alias("clip_id"), "bytes", "codec", "sr_hz"
         )
     ).select(
         F.col("clip_id").cast("long").alias("fid"),
+        "n_samples",
+        "sr_decoded",
+        "rms",
+        "peak",
+        "clip_ratio",
+        "dc_offset",
+        F.col("zero_cross_rate").alias("zcr"),
         "n_frames",
         F.col("spectral_centroid_hz").alias("centroid_hz"),
         F.col("spectral_rolloff_hz").alias("rolloff_hz"),

@@ -1,8 +1,8 @@
 """Frozen fixture corpus for the audio decode/features value oracle
 (`audio_decode_docs`): deterministic WAV/PCM/FLAC byte blobs plus
 corrupt/oversize/unknown-codec rows, with FROZEN expected outputs of
-the production decode+features path (operators/decode.decode_blob +
-_features, operators/audio_features.features_for_clip).
+the production decode+features path (operators/decode.decode_blob
+inside operators/audio_features.features_for_clip).
 
 This is the simtext_argmax_docs pattern applied to the north-star's
 audio leg (reference analog: the transcode stage http.go:157-170,
@@ -602,20 +602,13 @@ def derive_expected() -> list[tuple]:
     """Recompute the expectation table from the LIVE operators (the
     drift alarm; EXPECTED below is this output frozen)."""
     from ..operators import audio_features as af
-    from ..operators.decode import _features, decode_blob
 
     out = []
     for fid, blob, codec, sr_hz in build_rows():
-        pcm, srd, err = decode_blob(blob, codec, sr_hz)
-        if pcm is None:
-            dec = (False, err, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0)
-        else:
-            n, sr, rms, peak, clip, dc, zcr = _features(pcm, srd)
-            dec = (True, None, n, sr, rms, peak, clip, dc, zcr)
-        (_cid, _ok, n_frames, _rms_a, _zcr_a, cent, roll, sil, _rs, rn) = (
+        (_cid, err, n_frames, _rms_a, _zcr_a, cent, roll, sil, _rs, rn, *scalars) = (
             af.features_for_clip(str(fid), blob, codec, sr_hz)
         )
-        out.append((fid, *dec, n_frames, cent, roll, sil, rn))
+        out.append((fid, err is None, err, *scalars, n_frames, cent, roll, sil, rn))
     return out
 
 

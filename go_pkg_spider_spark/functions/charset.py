@@ -30,9 +30,9 @@ CHARSET_LANG_MAP: dict[str, str] = {
     "ISO-2022-KR": "ko",
 }
 
-# charset provenance enum (/root/reference/charset.go:13-18)
+# charset provenance enum (/root/reference/charset.go:13-18); "html"
+# comes only from the byte sniffer (charset_bytes)
 POS_HEADER = "header"
-POS_HTML = "html"
 POS_VALID = "valid"
 
 

@@ -3,7 +3,8 @@ with a vectorized hashed char-n-gram model UDF for the residual rows.
 
 Recasts /root/reference/lang.go:
 - Lang() dispatch (lang.go:128-167): charset map -> title-han rule ->
-  declared-lang tag -> utf8 body cascade.
+  utf8 body cascade. The declared-lang tag step (LangFromHtml) is not
+  recast: no input of this engine carries an HTML lang attribute.
 - langFromText body cascade (lang.go:274-358) with thresholds verbatim:
   BodyMinSize=64, hanRate>=0.3, ja/han>0.1, englishRate>0.618,
   latinCount>5, title path jaRate/koRate>0.2 (lang.go:237,250).
@@ -37,7 +38,6 @@ from .textnorm import (
 
 # provenance enum (/root/reference/lang.go:14-19)
 POS_CHARSET = "charset"
-POS_HTML = "html"
 POS_BODY = "body"
 POS_LINGUA = "lingua"
 POS_TITLE = "title"
@@ -48,15 +48,6 @@ BODY_MIN_SIZE = 64  # lang.go:21
 # sentinel markers: rules could not settle the row; model UDF must run
 NEEDS_MODEL_LATIN = "__latin__"  # lingua latin set, lang.go:335
 NEEDS_MODEL_OTHER = "__other__"  # lingua other set, lang.go:349
-
-
-def lang_from_declared_tag(tag: Column) -> Column:
-    """LangFromHtml (/root/reference/lang.go:169-199): validate the
-    declared tag against ^([a-z]{2}|[a-z]{2}-[a-z]+)$ (case-insensitive)
-    and keep the first two chars; '' when invalid."""
-    t = F.trim(tag)
-    ok = t.rlike(r"(?i)^([a-z]{2}|[a-z]{2}\-[a-z]+)$")
-    return F.when(ok, F.lower(F.substring(t, 1, 2))).otherwise(F.lit(""))
 
 
 def body_lang_rules(text: Column) -> Column:
@@ -145,7 +136,6 @@ def lang_cascade(
     body: Column,
     charset: Column | None = None,
     title: Column | None = None,
-    declared_lang: Column | None = None,
 ) -> Column:
     """Full Lang() dispatch (/root/reference/lang.go:128-167) as one
     coalesce of provenance-ordered rules (cheap->expensive; Catalyst
@@ -153,8 +143,7 @@ def lang_cascade(
 
     1. charset in CharsetLangMap           -> (lang, 'charset')
     2. title han rule (+ja/ko body check)  -> (lang, 'title')
-    3. declared tag valid and != en        -> (lang, 'html')
-    4. charset is UTF* and tag in ('',en)  -> body cascade ('body' or
+    3. charset is UTF*                     -> body cascade ('body' or
        NEEDS_MODEL_* sentinel for the model UDF)
 
     Returns struct(lang, lang_pos, model_text); lang may be a
@@ -174,20 +163,9 @@ def lang_cascade(
     if title is not None:
         tr = title_lang_rule(title, body)
         steps.append(F.when(tr["lang"].isNotNull(), tr))
-    if declared_lang is not None:
-        dl = lang_from_declared_tag(declared_lang)
-        steps.append(
-            F.when(
-                (dl != "") & (dl != "en"),
-                _lang_struct(dl, F.lit(POS_HTML)),
-            )
-        )
     body_res = body_lang_rules(body)
     if charset is not None:
         gate = F.upper(F.trim(charset)).startswith("UTF")
-        if declared_lang is not None:
-            dl = lang_from_declared_tag(declared_lang)
-            gate = gate & ((dl == "") | (dl == "en"))
         steps.append(F.when(gate, body_res))
         steps.append(null_struct)
     else:

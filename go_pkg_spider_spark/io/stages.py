@@ -245,6 +245,16 @@ STAGE_MANIFEST_SCHEMA = StructType(
 )
 
 
+def read_stage(cat, stage: str, schema: str | None):
+    """A committed stage table, read with `schema`, the JSON schema its
+    done row records, so the read starts no schema-inference job. A
+    done row written before the schema was recorded has none: that
+    table's schema is inferred (Catalog.read without a schema)."""
+    return cat.read(
+        stage, schema=StructType.fromJson(json.loads(schema)) if schema else None
+    )
+
+
 class StageRunner:
     """Commit/resume driver for one manifested chain. `params` must
     contain every knob that changes stage outputs."""
@@ -387,13 +397,8 @@ class StageRunner:
 
     def read(self, stage: str):
         """The committed stage table, read with the schema its commit in
-        this run or the done row it resumed from records, so the read
-        starts no schema-inference job. A done row written before the
-        schema was recorded has none: that table's schema is inferred."""
-        schema = self._schemas.get(stage)
-        return self.cat.read(
-            stage, schema=StructType.fromJson(json.loads(schema)) if schema else None
-        )
+        this run or the done row it resumed from records."""
+        return read_stage(self.cat, stage, self._schemas.get(stage))
 
     def histogram(self, stage: str) -> dict:
         """{value: rows} of a histogram stage, from its commit in this

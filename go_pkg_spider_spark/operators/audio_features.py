@@ -2,11 +2,13 @@
 numpy, no external audio libs.
 
 The multimodal column pattern (binary payload + typed metadata): decode
-once, emit frame-sampled / spectral features as typed arrays. All
-computation is real numpy (windowed RMS/ZCR, rfft spectral centroid &
-rolloff, linear resampling); every whitelisted container decodes for
-real — wav/pcm in operators/decode.py, flac via the own bitstream
-decoder in operators/flac.py.
+once, emit the per-clip scalars of the decoded signal (`clip_scalars`:
+n_samples, sr_decoded, rms, peak, clip_ratio, dc_offset,
+zero_cross_rate) and frame-sampled / spectral features as typed
+arrays. All computation is real numpy (windowed RMS/ZCR, rfft spectral
+centroid & rolloff, linear resampling); every whitelisted container
+decodes for real — wav/pcm in operators/decode.py, flac via the own
+bitstream decoder in operators/flac.py.
 
 Frame shape follows the standard 25ms/10ms speech convention; batch
 shape: one mapInPandas pass, PCM dropped in-stage (never crosses a
@@ -33,6 +35,9 @@ from .decode import decode_blob
 
 FRAME_MS = 25
 HOP_MS = 10
+TARGET_SR = 16_000  # every clip is resampled to this rate before framing
+MAX_FRAMES = 512  # per-clip frame cap: bounded output arrays
+SILENCE_RMS = 0.01  # a frame below this RMS counts as silent
 
 AUDIO_FEATURES_SCHEMA = StructType(
     [
@@ -46,8 +51,32 @@ AUDIO_FEATURES_SCHEMA = StructType(
         StructField("silence_ratio", DoubleType()),
         StructField("resampled_sr", IntegerType()),
         StructField("resampled_n", IntegerType()),
+        # clip_scalars, over the decoded signal at its own rate
+        StructField("n_samples", IntegerType()),
+        StructField("sr_decoded", IntegerType()),
+        StructField("rms", DoubleType()),
+        StructField("peak", DoubleType()),
+        StructField("clip_ratio", DoubleType()),  # samples at full-scale
+        StructField("dc_offset", DoubleType()),
+        StructField("zero_cross_rate", DoubleType()),
     ]
 )
+
+
+def clip_scalars(pcm: np.ndarray, sr: int) -> tuple:
+    """(n_samples, sr_decoded, rms, peak, clip_ratio, dc_offset,
+    zero_cross_rate) of one decoded clip."""
+    n = int(pcm.size)
+    if n == 0:
+        return 0, sr, 0.0, 0.0, 0.0, 0.0, 0.0
+    a = np.abs(pcm)
+    # float64 accumulators over float32 data: exact enough, half the reads
+    rms = float(np.sqrt(np.mean(np.square(pcm, dtype=np.float64))))
+    peak = float(a.max())
+    clip_ratio = float(np.mean(a >= 0.999))
+    dc = float(pcm.mean(dtype=np.float64))
+    zcr = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0
+    return n, sr, rms, peak, clip_ratio, dc, zcr
 
 
 def _frames(pcm: np.ndarray, sr: int) -> np.ndarray:
@@ -90,32 +119,24 @@ def _spectral(pcm: np.ndarray, sr: int) -> tuple[float, float]:
     return centroid, rolloff
 
 
-def features_for_clip(
-    cid,
-    blob,
-    codec,
-    sr_hz,
-    target_sr: int = 16_000,
-    max_frames: int = 512,
-    silence_rms: float = 0.01,
-) -> tuple:
+def features_for_clip(cid, blob, codec, sr_hz) -> tuple:
     """One AUDIO_FEATURES_SCHEMA row for one clip — the pure per-row
     kernel shared by the mapInPandas operator and the frozen-truth
     audio oracle fixtures (fixtures/audio_fixtures.py), so the gate
     exercises the exact production code path."""
     pcm, sr_dec, err = decode_blob(blob, codec, sr_hz)
     if pcm is None:
-        return (cid, err, 0, [], [], 0.0, 0.0, 0.0, 0, 0)
-    res = linear_resample(pcm, sr_dec, target_sr)
-    fr = _frames(res, target_sr)[:max_frames]
+        return (cid, err, 0, [], [], 0.0, 0.0, 0.0, 0, 0, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0)
+    res = linear_resample(pcm, sr_dec, TARGET_SR)
+    fr = _frames(res, TARGET_SR)[:MAX_FRAMES]
     rms = np.sqrt((fr**2).mean(axis=1)) if fr.size else np.empty(0)
     zcr = (
         np.abs(np.diff(np.signbit(fr), axis=1)).mean(axis=1)
         if fr.size
         else np.empty(0)
     )
-    centroid, rolloff = _spectral(res, target_sr)
-    silence = float((rms < silence_rms).mean()) if rms.size else 1.0
+    centroid, rolloff = _spectral(res, TARGET_SR)
+    silence = float((rms < SILENCE_RMS).mean()) if rms.size else 1.0
     return (
         cid,
         None,
@@ -125,20 +146,17 @@ def features_for_clip(
         round(centroid, 3),
         round(rolloff, 3),
         round(silence, 6),
-        target_sr,
+        TARGET_SR,
         int(res.size),
+        *clip_scalars(pcm, sr_dec),
     )
 
 
-def extract_audio_features(
-    df: DataFrame,
-    target_sr: int = 16_000,
-    max_frames: int = 512,
-    silence_rms: float = 0.01,
-) -> DataFrame:
-    """clips -> per-clip frame/spectral features. One mapInPandas pass;
-    output rows carry bounded arrays (max_frames cap — the work-bound
-    discipline of the reference's 2048-char/64-tag caps)."""
+def extract_audio_features(df: DataFrame) -> DataFrame:
+    """clips -> per-clip scalars and frame/spectral features. One
+    mapInPandas pass; output rows carry bounded arrays (MAX_FRAMES cap —
+    the work-bound discipline of the reference's 2048-char/64-tag
+    caps)."""
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
@@ -148,9 +166,6 @@ def extract_audio_features(
                     blob,
                     codec,
                     int(sr) if not pd.isna(sr) else None,
-                    target_sr=target_sr,
-                    max_frames=max_frames,
-                    silence_rms=silence_rms,
                 )
                 for cid, blob, codec, sr in zip(
                     b["clip_id"], b["bytes"], b["codec"], b["sr_hz"]

@@ -294,14 +294,12 @@ def probe_vector(subs: np.ndarray) -> list[int]:
     return [int(p) for p in np.unique(both)]
 
 
-def subfp_match_stats(
-    a: bytes, b: bytes, max_shift: int = FP_SHIFT_SCAN
-) -> tuple[float, float, int]:
+def subfp_match_stats(a: bytes, b: bytes) -> tuple[float, float, int]:
     """(bit-set Jaccard at the best relative alignment, overlap ratio
     of that alignment over the longer stream, the winning shift)
     between two packed subfp streams — the verify kernel. Scans
     integer shifts s in 0, +1, -1, ... (a[i+s] against b[i]) out to
-    min(max_shift, min_len // 2) — see the FP_SHIFT_SCAN knob for why
+    min(FP_SHIFT_SCAN, min_len // 2) — see the FP_SHIFT_SCAN knob for why
     the cap — keeping the strictly-best Jaccard, so ties resolve to
     the smallest shift and the scan is deterministic; a trimmed
     re-upload aligns at s = (hops cropped) and scores like the
@@ -314,7 +312,7 @@ def subfp_match_stats(
     if min(sa.size, sb.size) == 0:
         return 0.0, 0.0, 0
     denom = float(max(sa.size, sb.size))
-    max_shift = min(max_shift, min(sa.size, sb.size) // 2)
+    max_shift = min(FP_SHIFT_SCAN, min(sa.size, sb.size) // 2)
     best_jac, best_ratio, best_s = -1.0, 0.0, 0
     for k in range(2 * max_shift + 1):
         s = (k + 1) // 2 if k % 2 else -(k // 2)  # 0,+1,-1,+2,-2,...
@@ -1119,14 +1117,13 @@ def audio_snippet_search(
     min_jaccard: float = FP_SNIPPET_JACCARD,
     min_shared: int = FP_SNIPPET_MIN_SHARED,
     max_key_matches: int = FP_MAX_KEY_MATCHES,
-    observation=None,
 ) -> DataFrame:
     """(qid, clip_id, jaccard, pos) — corpus clips CONTAINING each
     query snippet (both sides fingerprint_clips_full rows; the query
     side is a short cut, the index side the committed corpus).
     Candidates block on shared distinct value-pair shingles
     (>= min_shared — one or two shared pairs are coincidence, see the
-    knob comment), hot index keys rank-capped with drop accounting;
+    knob comment), hot index keys rank-capped at max_key_matches;
     verify slides each query over each candidate stream once
     (subfp_best_window) in one mapInPandas at candidate volume. The
     index stream column moves only for candidate clip ids; queries
@@ -1139,14 +1136,6 @@ def audio_snippet_search(
         "rn",
         F.row_number().over(Window.partitionBy("key").orderBy("clip_id")),
     )
-    if observation is not None:
-        ranked = ranked.observe(
-            observation,
-            F.sum(
-                F.when(F.col("rn") > max_key_matches, 1).otherwise(0)
-            ).alias("dropped_index_keys"),
-            F.max("rn").alias("max_key_matches_seen"),
-        )
     idx_kept = ranked.filter(F.col("rn") <= max_key_matches).drop("rn")
     cand = (
         q_keys.join(idx_kept, "key")

@@ -76,7 +76,7 @@ def capped_buckets(
     )
 
 
-def pair_array(ms: Column, a_name: str = "a", b_name: str = "b") -> Column:
+def pair_array(ms: Column) -> Column:
     """All i<j member pairs of a (small, capped) bucket array as
     array<struct<a, b>> via array combinatorics — the no-self-join pair
     generator shared by the LSH family."""
@@ -85,7 +85,7 @@ def pair_array(ms: Column, a_name: str = "a", b_name: str = "b") -> Column:
             ms,
             lambda x, i: F.transform(
                 F.slice(ms, i + 2, F.size(ms)),
-                lambda y: F.struct(x.alias(a_name), y.alias(b_name)),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
             ),
         )
     )

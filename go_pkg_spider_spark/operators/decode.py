@@ -1,13 +1,12 @@
-"""Audio decode kernel: binary `bytes` -> PCM -> per-clip features.
+"""Audio decode kernel: binary `bytes` -> PCM, or a typed error.
 
 The Spark recast of the reference's response-decode stage
 (/root/reference/http.go:124-173: content-type whitelist ->
 charset-detect -> transcode). For audio: codec whitelist -> container
-parse -> PCM decode -> per-clip features. decode_blob + _features run
-inside the ONE fused Arrow UDF (operators/fused.py), so the blob is
-decoded exactly once per row (the reference's single-pass computeInfo
-idiom) and the PCM never leaves the stage — only scalar features cross
-the (potential) shuffle boundary downstream (SURVEY.md §4.3
+parse -> PCM decode. decode_blob runs inside the ONE fused Arrow UDF
+(operators/fused.py), which keeps only its ok/err verdict, and inside
+operators/audio_features, which turns the PCM into per-clip scalars.
+The PCM never leaves the stage that decoded it (SURVEY.md §4.3
 spill-safety: PCM is ~100x input, never materialized as a column).
 
 Codecs: 'wav' (RIFF + RF64/BW64 64-bit sizes: PCM 8/16/24/32-bit,
@@ -33,14 +32,6 @@ import struct
 import subprocess
 
 import numpy as np
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    IntegerType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 # Lossy-compressed codecs decode through an IMPORT-GATED library slot
 # (soundfile if importable, else the ffmpeg CLI if on PATH):
@@ -378,19 +369,6 @@ def _decode_ima_adpcm(data: bytes, block_align: int, n_ch: int = 1) -> np.ndarra
         return chans[0].astype(np.int16)
     return chans.astype(np.int16).mean(axis=0)
 
-DECODE_SCHEMA = StructType(
-    [
-        StructField("ok", BooleanType()),
-        StructField("err", StringType()),
-        StructField("n_samples", IntegerType()),
-        StructField("sr_decoded", IntegerType()),
-        StructField("rms", DoubleType()),
-        StructField("peak", DoubleType()),
-        StructField("clip_ratio", DoubleType()),  # samples at full-scale
-        StructField("dc_offset", DoubleType()),
-        StructField("zero_cross_rate", DoubleType()),
-    ]
-)
 
 from . import flac as _flac
 
@@ -687,16 +665,3 @@ def decode_blob(
     except Exception:  # noqa: BLE001 — malformed container
         return None, 0, "decode_error"
 
-
-def _features(pcm: np.ndarray, sr: int) -> tuple:
-    n = int(pcm.size)
-    if n == 0:
-        return 0, sr, 0.0, 0.0, 0.0, 0.0, 0.0
-    a = np.abs(pcm)
-    # float64 accumulators over float32 data: exact enough, half the reads
-    rms = float(np.sqrt(np.mean(np.square(pcm, dtype=np.float64))))
-    peak = float(a.max())
-    clip_ratio = float(np.mean(a >= 0.999))
-    dc = float(pcm.mean(dtype=np.float64))
-    zcr = float(np.mean(np.abs(np.diff(np.signbit(pcm))))) if n > 1 else 0.0
-    return n, sr, rms, peak, clip_ratio, dc, zcr

@@ -12,8 +12,10 @@ round trips 3x and never ships `bytes` past the first hop.
 
 Inputs: bytes/codec/sr_hz (decode), cleaned text + NEEDS_MODEL marker
 (langid residual, langid.model_inputs), the transcript of rows that
-pass the lang-independent guards (ppl). Output: one struct column with
-audio features, model_lang, ppl.
+pass the lang-independent guards (ppl). Output: one struct column
+(ok, err, model_lang, ppl): the decode verdict, the model's language
+and the perplexity. The PCM never leaves `_fused_row`; the per-clip
+audio scalars are operators/audio_features' job.
 
 It is the only UDF that runs the langid model and the perplexity LM.
 Text-only callers (entry(), tools/model_accuracy.py) go through
@@ -27,6 +29,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
+    BooleanType,
     DoubleType,
     StringType,
     StructField,
@@ -40,11 +43,12 @@ from ..functions.langid import (
     _score_text,
 )
 from ..functions.perplexity import _ppl_one
-from .decode import DECODE_SCHEMA, _features, decode_blob
+from .decode import decode_blob
 
 FUSED_SCHEMA = StructType(
-    list(DECODE_SCHEMA.fields)
-    + [
+    [
+        StructField("ok", BooleanType()),
+        StructField("err", StringType()),
         StructField("model_lang", StringType()),
         StructField("ppl", DoubleType()),
     ]
@@ -54,17 +58,13 @@ FUSED_SCHEMA = StructType(
 def _fused_row(b, c, s, mt, mk, pt) -> tuple:
     """One output row; b may be bytes OR a zero-copy memoryview (every
     decoder indexes/slices/frombuffers, which both types support)."""
-    pcm, sr, err = decode_blob(b, c, s)
-    if pcm is None:
-        audio = (False, err, 0, 0, 0.0, 0.0, 0.0, 0.0, 0.0)
-    else:
-        audio = (True, None, *_features(pcm, sr))
+    pcm, _, err = decode_blob(b, c, s)
     model_lang = None
     if mt is not None and mk is not None:
         langs = LATIN_SET if mk == NEEDS_MODEL_LATIN else OTHER_SET
         model_lang = _score_text(mt, langs)
     ppl = _ppl_one(pt) if pt else None
-    return (*audio, model_lang, ppl)
+    return (pcm is not None, err, model_lang, ppl)
 
 
 def _binary_views(arr):
@@ -132,11 +132,7 @@ def _fused_batch(
         )
     ]
     cols = list(zip(*rows)) if rows else [[] for _ in FUSED_SCHEMA.fields]
-    arrow_types = [
-        pa.bool_(), pa.string(), pa.int32(), pa.int32(),
-        pa.float64(), pa.float64(), pa.float64(), pa.float64(),
-        pa.float64(), pa.string(), pa.float64(),
-    ]
+    arrow_types = [pa.bool_(), pa.string(), pa.string(), pa.float64()]
     return pa.StructArray.from_arrays(
         [pa.array(list(c), t) for c, t in zip(cols, arrow_types)],
         names=[f.name for f in FUSED_SCHEMA.fields],

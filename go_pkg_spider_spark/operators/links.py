@@ -35,7 +35,6 @@ def classify_links(
     lang: str,
     url_col: str = "url",
     title_col: str = "anchor_title",
-    site_col: str | None = None,
     publish_threshold: float = 0.7,
 ) -> DataFrame:
     """Returns links + (reject_reason, link_type, host, domain_top,
@@ -46,7 +45,7 @@ def classify_links(
     host = _host_of(url)
     path = _path_of(url)
     dtop = domain_top(host)
-    site = F.col(site_col) if site_col else F.coalesce(dtop, host)
+    site = F.coalesce(dtop, host)
 
     df = links.withColumn("reject_reason", rules.url_filter_reason(url))
     df = df.withColumn("host", host).withColumn("domain_top", dtop)

@@ -20,7 +20,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .bucketing import capped_buckets, pair_array
+from .bucketing import capped_buckets
+
+# Rows lsh_bucketed_topk returns; oracle_sql_gen.ann_lsh_topk_sql ranks
+# the same number.
+LSH_TOPK = 10
 
 
 def lit_double_array(vec) -> Column:
@@ -110,14 +114,13 @@ def lsh_bucketed_topk(
     vec_col: str,
     id_col: str,
     query: list[float],
-    k: int = 10,
     n_planes: int = 8,
     max_hamming_bits: int = 2,
     round_digits: int = 6,
 ) -> DataFrame:
     """ANN: prune to vectors whose hyperplane signature is within
-    `max_hamming_bits` of the query's, then exact-cosine top-k on the
-    survivors. Recall/probe tradeoff via n_planes/max_hamming_bits."""
+    `max_hamming_bits` of the query's, then exact-cosine top-LSH_TOPK on
+    the survivors. Recall/probe tradeoff via n_planes/max_hamming_bits."""
     dim = len(query)
     planes = _seeded_planes(dim, n_planes)
     qbits = 0
@@ -126,7 +129,7 @@ def lsh_bucketed_topk(
             qbits |= 1 << i
     sig = hyperplane_bits(F.col(vec_col), planes)
     pruned = df.filter(F.bit_count(sig.bitwiseXOR(F.lit(qbits))) <= max_hamming_bits)
-    return brute_force_topk(pruned, vec_col, id_col, query, k, round_digits)
+    return brute_force_topk(pruned, vec_col, id_col, query, LSH_TOPK, round_digits)
 
 
 def embedding_neardup_pairs(
@@ -138,9 +141,7 @@ def embedding_neardup_pairs(
     bands: int = 4,
     planes_per_band: int = 8,
     round_digits: int = 6,
-    carry_vectors: bool = True,
     max_bucket_size: int = 1024,
-    observation=None,
 ) -> DataFrame:
     """Near-duplicate vector pairs via MULTI-BAND hyperplane LSH: bands
     of planes_per_band sign bits each; a pair is a candidate when it
@@ -151,19 +152,12 @@ def embedding_neardup_pairs(
     Plan shape: NO driver action at build time (dim is a parameter — the
     array length is not in the schema), NO self-join: bucket-collect pair
     generation (one explode rows x bands, one groupBy on (band, bits)),
-    the same pattern as dedup.minhash_lsh_candidates.
-
-    carry_vectors=True (default, narrow vectors): vectors ride through
-    the bucket collect_list, verification happens in-bucket — one
-    shuffle total.
-    carry_vectors=False (wide vectors / 10^12 rows): buckets carry only
-    ids; distinct candidate id-pairs join back to the vector table for
-    exact cosine — the bucket shuffle moves 8-byte ids instead of
-    dim x 8-byte arrays, at the cost of two hash joins against the base
-    table. Same result set (tested).
+    the same pattern as dedup.minhash_lsh_candidates. Vectors ride
+    through the bucket collect_list and verification happens in-bucket:
+    one shuffle total.
 
     max_bucket_size bounds hot buckets (bounded task memory; overflow
-    counted per bucket + observed metric — operators/bucketing.py)."""
+    counted per bucket — operators/bucketing.py)."""
     all_planes = _seeded_planes(dim, bands * planes_per_band)
     band_sigs = F.array(
         *[
@@ -173,123 +167,88 @@ def embedding_neardup_pairs(
             for b in range(bands)
         ]
     )
-    if carry_vectors:
-        # norms ride the member struct: computed ONCE per (row, band)
-        # below the bucket collect, instead of once per PAIR (a member
-        # of an m-bucket appears in m-1 pairs — per-pair norms were
-        # ~35% of this entry's cost). Same doubles: the norm expression
-        # is unchanged, only where it evaluates.
-        base = df.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            F.posexplode(band_sigs).alias("b", "bits"),
-        ).withColumn("nv", norm(F.col("v")))
-        buckets = capped_buckets(
-            base, ["b", "bits"], F.struct("id", "v", "nv"), max_bucket_size,
-            observation=observation,
-        )
-
-        # Round 9 (guide §4.2 "hand whole batches to vectorized native
-        # libraries"): per-bucket pairwise cosine via ONE numpy pass per
-        # bucket inside mapInPandas, replacing ~15us/pair of interpreted
-        # zip_with+aggregate HOF per candidate pair (3.9M pairs at
-        # sf1.0). Bit-exactness is engineered, not assumed:
-        # - the pairwise dot accumulates as a LEFT FOLD over the dim
-        #   axis (acc += V[:,k] outer V[:,k], k ascending, acc from
-        #   0.0), the exact IEEE sequence of the old
-        #   aggregate(zip_with(..)) fold — np.dot/BLAS would reorder
-        #   the sum and flip rounded knife-edge values;
-        # - norms stay JVM-computed (they ride the member struct);
-        # - rounding stays Spark-side (F.round is HALF_UP; np.round is
-        #   half-even) — Python emits the RAW cosine and only prunes
-        #   pairs below threshold - 10^-round_digits, a margin twice
-        #   the worst rounding step, so every pair the rounded filter
-        #   could keep survives to the exact Spark-side filter.
-        # NULL vectors zero out (d=0 -> cosine 0.0), matching the old
-        # when(d > 0, ...).otherwise(0.0) branch.
-        id_type = df.schema[id_col].dataType.simpleString()
-        out_schema = f"id_a {id_type}, id_b {id_type}, cosine_sim double"
-        thr_floor = float(threshold) - (10.0 ** -round_digits)
-
-        def score_buckets(batches):
-            import numpy as _np
-            import pandas as _pd
-
-            for pdf in batches:
-                out_a, out_b, out_c = [], [], []
-                for ms in pdf["ms"]:
-                    m = len(ms)
-                    if m < 2:
-                        continue
-                    ids = [r["id"] for r in ms]
-                    dim_v = next(
-                        (len(r["v"]) for r in ms if r["v"] is not None), 0
-                    )
-                    V = _np.zeros((m, dim_v), dtype=_np.float64)
-                    nv = _np.zeros(m, dtype=_np.float64)
-                    for i, r in enumerate(ms):
-                        if r["v"] is not None and r["nv"] is not None:
-                            V[i] = _np.asarray(r["v"], dtype=_np.float64)
-                            nv[i] = r["nv"]
-                    acc = _np.zeros((m, m), dtype=_np.float64)
-                    for k in range(dim_v):  # left fold, ascending k
-                        col = V[:, k]
-                        acc += col[:, None] * col[None, :]
-                    d = nv[:, None] * nv[None, :]
-                    with _np.errstate(divide="ignore", invalid="ignore"):
-                        cos = _np.where(d > 0, acc / d, 0.0)
-                    iu, ju = _np.triu_indices(m, 1)
-                    c = cos[iu, ju]
-                    keep = c >= thr_floor
-                    if keep.any():
-                        out_a.extend(ids[i] for i in iu[keep])
-                        out_b.extend(ids[j] for j in ju[keep])
-                        out_c.extend(c[keep].tolist())
-                yield _pd.DataFrame(
-                    {"id_a": out_a, "id_b": out_b, "cosine_sim": out_c}
-                )
-
-        return (
-            buckets.select("ms")
-            .mapInPandas(score_buckets, out_schema)
-            .select(
-                "id_a",
-                "id_b",
-                F.round(F.col("cosine_sim"), round_digits).alias("cosine_sim"),
-            )
-            .filter(F.col("cosine_sim") >= threshold)
-            .dropDuplicates(["id_a", "id_b"])
-        )
-
-    base = df.select(F.col(id_col).alias("id"), F.posexplode(band_sigs).alias("b", "bits"))
-    buckets = capped_buckets(
-        base, ["b", "bits"], F.col("id"), max_bucket_size, observation=observation
-    )
-    pair_arr = pair_array(F.col("ms"), "id_a", "id_b")
-    pairs = (
-        buckets.select(F.explode(pair_arr).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])  # dedup BEFORE the cosine joins
-    )
-    # norms computed in the projection BELOW the joins — once per row,
-    # not once per pair (same hoist as the carry_vectors branch)
-    vecs = df.select(
-        F.col(id_col).alias("vid"),
+    # norms ride the member struct: computed ONCE per (row, band)
+    # below the bucket collect, instead of once per PAIR (a member
+    # of an m-bucket appears in m-1 pairs — per-pair norms were
+    # ~35% of this entry's cost). Same doubles: the norm expression
+    # is unchanged, only where it evaluates.
+    base = df.select(
+        F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
-        norm(F.col(vec_col)).alias("nv"),
-    )
-    a, b = vecs.alias("va"), vecs.alias("vb")
-    d = F.col("va.nv") * F.col("vb.nv")
-    cos = F.when(d > 0, dot(F.col("va.v"), F.col("vb.v")) / d).otherwise(F.lit(0.0))
+        F.posexplode(band_sigs).alias("b", "bits"),
+    ).withColumn("nv", norm(F.col("v")))
+    buckets = capped_buckets(base, ["b", "bits"], F.struct("id", "v", "nv"), max_bucket_size)
+
+    # Round 9 (guide §4.2 "hand whole batches to vectorized native
+    # libraries"): per-bucket pairwise cosine via ONE numpy pass per
+    # bucket inside mapInPandas, replacing ~15us/pair of interpreted
+    # zip_with+aggregate HOF per candidate pair (3.9M pairs at
+    # sf1.0). Bit-exactness is engineered, not assumed:
+    # - the pairwise dot accumulates as a LEFT FOLD over the dim
+    #   axis (acc += V[:,k] outer V[:,k], k ascending, acc from
+    #   0.0), the exact IEEE sequence of the old
+    #   aggregate(zip_with(..)) fold — np.dot/BLAS would reorder
+    #   the sum and flip rounded knife-edge values;
+    # - norms stay JVM-computed (they ride the member struct);
+    # - rounding stays Spark-side (F.round is HALF_UP; np.round is
+    #   half-even) — Python emits the RAW cosine and only prunes
+    #   pairs below threshold - 10^-round_digits, a margin twice
+    #   the worst rounding step, so every pair the rounded filter
+    #   could keep survives to the exact Spark-side filter.
+    # NULL vectors zero out (d=0 -> cosine 0.0), matching the old
+    # when(d > 0, ...).otherwise(0.0) branch.
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"id_a {id_type}, id_b {id_type}, cosine_sim double"
+    thr_floor = float(threshold) - (10.0 ** -round_digits)
+
+    def score_buckets(batches):
+        import numpy as _np
+        import pandas as _pd
+
+        for pdf in batches:
+            out_a, out_b, out_c = [], [], []
+            for ms in pdf["ms"]:
+                m = len(ms)
+                if m < 2:
+                    continue
+                ids = [r["id"] for r in ms]
+                dim_v = next(
+                    (len(r["v"]) for r in ms if r["v"] is not None), 0
+                )
+                V = _np.zeros((m, dim_v), dtype=_np.float64)
+                nv = _np.zeros(m, dtype=_np.float64)
+                for i, r in enumerate(ms):
+                    if r["v"] is not None and r["nv"] is not None:
+                        V[i] = _np.asarray(r["v"], dtype=_np.float64)
+                        nv[i] = r["nv"]
+                acc = _np.zeros((m, m), dtype=_np.float64)
+                for k in range(dim_v):  # left fold, ascending k
+                    col = V[:, k]
+                    acc += col[:, None] * col[None, :]
+                d = nv[:, None] * nv[None, :]
+                with _np.errstate(divide="ignore", invalid="ignore"):
+                    cos = _np.where(d > 0, acc / d, 0.0)
+                iu, ju = _np.triu_indices(m, 1)
+                c = cos[iu, ju]
+                keep = c >= thr_floor
+                if keep.any():
+                    out_a.extend(ids[i] for i in iu[keep])
+                    out_b.extend(ids[j] for j in ju[keep])
+                    out_c.extend(c[keep].tolist())
+            yield _pd.DataFrame(
+                {"id_a": out_a, "id_b": out_b, "cosine_sim": out_c}
+            )
+
     return (
-        pairs.join(a, pairs["id_a"] == F.col("va.vid"))
-        .join(b, pairs["id_b"] == F.col("vb.vid"))
+        buckets.select("ms")
+        .mapInPandas(score_buckets, out_schema)
         .select(
             "id_a",
             "id_b",
-            F.round(cos, round_digits).alias("cosine_sim"),
+            F.round(F.col("cosine_sim"), round_digits).alias("cosine_sim"),
         )
         .filter(F.col("cosine_sim") >= threshold)
+        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -446,8 +405,8 @@ def ivf_topk(
     id_col: str,
     query: list[float],
     centroids: list[list[float]],
-    k: int = 10,
-    n_probe: int = 4,
+    k: int,
+    n_probe: int,
     round_digits: int = 6,
 ) -> DataFrame:
     """IVF search: score only rows whose coarse cell is among the

@@ -15,7 +15,7 @@ def sessionize(
     ts_col: str,
     id_col: str,
     value_col: str,
-    gap_minutes: int = 30,
+    gap_minutes: int,
 ) -> DataFrame:
     """Gap-based sessionization (batch form): events more than
     `gap_minutes` apart start a new session. Classic two-window shape —

@@ -10,8 +10,8 @@
       -> PII scrub (frozen regex bank)
 
 Output schema (SURVEY.md §1.2): clip_id, keep, drop_reason,
-scrubbed_transcript, lang, lang_pos, ppl, quality_score (+ feature
-structs for metrics).
+scrubbed_transcript, lang, lang_pos, ppl, quality_score. Per-clip audio
+scalars come from operators/audio_features, not from this pipeline.
 
 Scale design: the whole per-clip path is ONE narrow stage (zero
 shuffles) with exactly ONE Python round trip (operators/fused.py — the
@@ -21,7 +21,7 @@ inherited from the source scan; `repartition_salted` is available for
 writers that need balanced output files despite long-clip skew.
 
 The plan is built once per SparkContext: the first call for a
-(SparkContext, min_chars, max_chars, with_features) key builds the
+(SparkContext, min_chars, max_chars) key builds the
 Columns of every step (`_plan`), and every later call (each
 ManifestedRun wave, each streaming micro-batch) only applies them:
 building them takes 3,200-3,900 py4j calls and 0.5-0.7 s at local[4],
@@ -36,7 +36,7 @@ from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .functions import charset as cs
-from .functions import langid, quality, rules, scrub, tokens
+from .functions import langid, rules, scrub, tokens
 from .functions.textnorm import strip_markup
 from .operators import fused as fused_op
 
@@ -52,9 +52,8 @@ def run_pipeline(
     clips: DataFrame,
     min_chars: int = 64,
     max_chars: int = 1_000_000,
-    with_features: bool = False,
 ) -> DataFrame:
-    steps, cols = _plan(clips.sparkSession.sparkContext, min_chars, max_chars, with_features)
+    steps, cols = _plan(clips.sparkSession.sparkContext, min_chars, max_chars)
     df = clips
     for step in steps:
         df = df.withColumns(step)
@@ -63,7 +62,7 @@ def run_pipeline(
 
 @functools.lru_cache(maxsize=8)
 def _plan(
-    sc: SparkContext, min_chars: int, max_chars: int, with_features: bool
+    sc: SparkContext, min_chars: int, max_chars: int
 ) -> tuple[list[dict[str, Column]], list[Column]]:
     """The pipeline's Columns, built once per (SparkContext, knobs):
     the projections run_pipeline applies in order, one withColumns each,
@@ -142,15 +141,7 @@ def _plan(
         "ppl": F.when(keep, fused["ppl"]),
         "quality_score": F.col("quality_score"),
     }
-    cols = [out[name].alias(name) for name in OUTPUT_COLUMNS]
-    if with_features:
-        audio = F.struct(*[fused[f.name].alias(f.name) for f in fused_op.DECODE_SCHEMA.fields])
-        cols += [
-            quality.quality_features(transcript).alias("qf"),
-            audio.alias("audio"),
-            lt,
-        ]
-    return steps, cols
+    return steps, [out[name].alias(name) for name in OUTPUT_COLUMNS]
 
 
 OUTPUT_COLUMNS = [

@@ -25,6 +25,10 @@ from pyspark.sql.streaming import StreamingQuery
 from ..pipeline import run_pipeline
 from ..schemas import CLIPS_SCHEMA
 
+# Digits the served cosine is rounded to: run_ann_index's default, so a
+# stream over a committed index returns the rows its batch top-k does.
+SERVE_ROUND_DIGITS = 6
+
 
 def read_clips_stream(spark: SparkSession, input_path: str, max_files_per_trigger: int = 8) -> DataFrame:
     """File-source stream over a clips directory (the Iceberg streaming
@@ -71,7 +75,6 @@ def stream_quality_filter(
     output_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    pipeline_kwargs: dict | None = None,
     event_time_col: str | None = None,
     dedup_watermark: str = "10 minutes",
     allow_unbounded_state: bool = False,
@@ -96,7 +99,7 @@ def stream_quality_filter(
     )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = run_pipeline(batch_df, **(pipeline_kwargs or {}))
+        out = run_pipeline(batch_df)
         # foreachBatch is AT-LEAST-ONCE: after a mid-write failure the
         # same batch_id replays, so a bare append duplicates rows. Each
         # batch owns its batch_id=N partition directory and overwrites
@@ -125,7 +128,6 @@ def stream_ann_topk(
     qid_col: str = "qid",
     k: int = 10,
     n_probe: int = 4,
-    round_digits: int = 6,
     cell_col: str | None = "cell",
     available_now: bool = False,
     event_time_col: str | None = None,
@@ -176,7 +178,7 @@ def stream_ann_topk(
             centroids,
             k=k,
             n_probe=n_probe,
-            round_digits=round_digits,
+            round_digits=SERVE_ROUND_DIGITS,
             cell_col=cell_col,
         )
         out.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")

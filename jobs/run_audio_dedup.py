@@ -200,6 +200,17 @@ def latest_done_row(spark, root: str, stage: str):
     return latest if latest is not None and latest.status == "done" else None
 
 
+def read_committed(spark, root: str, stage: str):
+    """`stage` as committed under root, read with the schema its done
+    row records (stages.read_stage), so a cross-root read starts no
+    schema-inference job."""
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.stages import read_stage
+
+    done = latest_done_row(spark, root, stage)
+    return read_stage(Catalog(spark, root), stage, done.schema if done else None)
+
+
 def _require_fp_schema(spark, roots) -> None:
     """ADVICE r8 #1 (correctness): cross-root reads of COMMITTED
     fingerprints (--append matching against a base, --compact-to
@@ -254,13 +265,11 @@ def read_all_fingerprints(spark, output_root: str, inc_roots=None):
     increment list to a caller-taken snapshot so a multi-stage reader
     (compaction) unions a CONSISTENT set even if new increments land
     mid-run."""
-    from go_pkg_spider_spark.io.catalog import Catalog
-
-    df = Catalog(spark, output_root).read("fingerprints")
+    df = read_committed(spark, output_root, "fingerprints")
     if inc_roots is None:
         inc_roots = _increment_roots(output_root)
     for root in inc_roots:
-        df = df.unionByName(Catalog(spark, root).read("fingerprints"))
+        df = df.unionByName(read_committed(spark, root, "fingerprints"))
     return df
 
 
@@ -268,13 +277,11 @@ def read_all_decisions(spark, output_root: str, inc_roots=None):
     """Base decisions plus every committed increment's — one row per
     clip ever ingested (increments only ever ADD clip ids). inc_roots
     as in read_all_fingerprints."""
-    from go_pkg_spider_spark.io.catalog import Catalog
-
-    df = Catalog(spark, output_root).read("decisions")
+    df = read_committed(spark, output_root, "decisions")
     if inc_roots is None:
         inc_roots = _increment_roots(output_root)
     for root in inc_roots:
-        df = df.unionByName(Catalog(spark, root).read("decisions"))
+        df = df.unionByName(read_committed(spark, root, "decisions"))
     return df
 
 
@@ -481,12 +488,12 @@ def run_audio_dedup_compact(
                     observation=obs,
                 )
             else:
-                edges = src.read("pairs").select("id_a", "id_b")
+                edges = read_committed(spark, source_root, "pairs").select("id_a", "id_b")
                 for root in inc_roots:
-                    icat = Catalog(spark, root)
-                    edges = edges.unionByName(
-                        icat.read("within_pairs").select("id_a", "id_b")
-                    ).unionByName(icat.read("matches").select("id_a", "id_b"))
+                    for stage in ("within_pairs", "matches"):
+                        edges = edges.unionByName(
+                            read_committed(spark, root, stage).select("id_a", "id_b")
+                        )
                 commit("pairs", edges)
 
         runner.summary["decision_histogram"] = _commit_groups(runner, fp)

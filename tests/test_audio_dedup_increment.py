@@ -263,6 +263,34 @@ def test_increment_rerun_resumes(spark, tmp_path):
     assert read_all_decisions(spark, root).count() == 3
 
 
+def test_cross_root_reads_start_no_schema_job(spark, tmp_path, jobs_of):
+    """The reads an increment makes of the committed state (every
+    root's fingerprints, then every root's decisions) take each table's
+    schema from its root's done row, so building them starts no Spark
+    job: counted by job group, with a base root and one increment.
+    Inferring the schema instead starts one job per root and read."""
+    from jobs.run_audio_dedup import read_committed
+
+    rows = _rows_by_id()
+    root = str(tmp_path / "root")
+    run_audio_dedup(
+        spark, _df(spark, [rows["a0"], rows["b0"]]), root,
+        run_id="base", tier="subfp",
+    )
+    run_audio_dedup_increment(
+        spark, _df(spark, [rows["a1"]]), root, run_id="inc", tier="subfp"
+    )
+    fp, fp_jobs = jobs_of(lambda: read_all_fingerprints(spark, root))
+    dec, dec_jobs = jobs_of(lambda: read_all_decisions(spark, root))
+    assert (fp_jobs, dec_jobs) == (0, 0)
+    assert fp.count() == dec.count() == 3
+    # the compaction's edge union reads the same way
+    inc = str(tmp_path / "root" / "increments" / "inc")
+    for r, stage in ((root, "pairs"), (inc, "within_pairs"), (inc, "matches")):
+        _, jobs = jobs_of(lambda r=r, stage=stage: read_committed(spark, r, stage))
+        assert jobs == 0, stage
+
+
 def test_increment_fp64_tier(spark, tmp_path):
     """The cheap tier works through the job-level append path too: an
     exact re-encode twin (same PCM, FLAC container) collides at fp64

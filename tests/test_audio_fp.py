@@ -484,9 +484,18 @@ def test_subfp_match_stats_hand_pin():
     # symmetric in value (scan covers both signs)
     sym = afp.subfp_match_stats(c, afp.pack_subfps(seq))
     assert (sym[0], sym[1], sym[2]) == (jac, ratio, 2)
-    # the scan is bounded: max_shift=1 cannot reach the s=-2 alignment
-    jac1, _, _ = afp.subfp_match_stats(afp.pack_subfps(seq), c, max_shift=1)
-    assert jac1 < 1.0
+    # the scan is bounded by FP_SHIFT_SCAN: a long stream planted after
+    # FP_SHIFT_SCAN junk words aligns exactly, after one more it cannot
+    n = afp.FP_SHIFT_SCAN + 1
+    long_seq = np.array([(i * 40503) & 0xFFFF for i in range(1, 2 * n + 1)], dtype=np.uint16)
+    for junk, reachable in ((n - 1, True), (n, False)):
+        planted = afp.pack_subfps(
+            np.concatenate([np.full(junk, 0b1010, dtype=np.uint16), long_seq])
+        )
+        jac_far, _, shift_far = afp.subfp_match_stats(afp.pack_subfps(long_seq), planted)
+        assert (jac_far == 1.0) is reachable, (junk, jac_far, shift_far)
+        if reachable:
+            assert shift_far == -junk
     # half-min-length cap: a 2-word stream against the same stream
     # 3 positions later can never align (cap = 1)
     short = np.array([3, 12], dtype=np.uint16)

@@ -127,15 +127,26 @@ def test_no_observation_no_collect_metrics(spark):
     assert "CollectMetrics" in observed._jdf.queryExecution().executedPlan().toString()
 
 
-def test_gate_scale_buckets_never_hit_cap(spark):
+def test_gate_scale_buckets_never_hit_cap(spark, monkeypatch):
     """The DuckDB oracles for minhash_lsh_docs / embedding_neardup_pairs
     do NOT model the max_bucket_size cap, so hash parity silently
     depends on every gate-scale bucket staying under it (round-3
     advice). Assert the headroom directly via the observed metric at
-    both gate tiers: max bucket membership must stay well below 1024."""
+    both gate tiers: max bucket membership must stay well below 1024.
+    embedding_neardup_pairs takes no Observation, so the test hands
+    one to the capped_buckets call inside it."""
     from pyspark.sql import Observation, functions as F
 
     from go_pkg_spider_spark.operators import dedup, similarity
+
+    observed = []
+    capped = similarity.capped_buckets
+
+    def observing(*a, **k):
+        observed.append(Observation())
+        return capped(*a, **k, observation=observed[-1])
+
+    monkeypatch.setattr(similarity, "capped_buckets", observing)
 
     for sf_dir in ("/root/testdata/sf0.01", "/root/testdata/sf0.1"):
         obs_m = Observation()
@@ -145,12 +156,10 @@ def test_gate_scale_buckets_never_hit_cap(spark):
         ).write.format("noop").mode("overwrite").save()
         assert obs_m.get["max_bucket_members"] < 1024, sf_dir
 
-        obs_e = Observation()
         e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
             "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
         )
         similarity.embedding_neardup_pairs(
-            e, "embedding", "vec_id", dim=64, threshold=0.25,
-            round_digits=4, observation=obs_e,
+            e, "embedding", "vec_id", dim=64, threshold=0.25, round_digits=4
         ).write.format("noop").mode("overwrite").save()
-        assert obs_e.get["max_bucket_members"] < 1024, sf_dir
+        assert observed[-1].get["max_bucket_members"] < 1024, sf_dir

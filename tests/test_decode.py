@@ -107,14 +107,22 @@ def test_decode_error_vocabulary_is_closed(monkeypatch):
 
 
 def test_decode_udf_in_spark(spark, clips_path):
+    """The fused UDF's decode verdict (ok, err) agrees row for row with
+    the audio-features operator's, which carries the per-clip scalars."""
+    from go_pkg_spider_spark.operators import audio_features as af
+
     df = spark.read.parquet(clips_path)
-    out = df.select("clip_id", "codec", _fused_decode().alias("audio"))
-    rows = out.collect()
-    ok = [r for r in rows if r.audio.ok]
-    assert len(ok) > len(rows) * 0.4
+    verdict = {
+        r.clip_id: (r.d.ok, r.d.err)
+        for r in df.select("clip_id", _fused_decode().alias("d")).collect()
+    }
+    feats = {r.clip_id: r for r in af.extract_audio_features(df).collect()}
+    assert verdict == {cid: (r.ok is None, r.ok) for cid, r in feats.items()}
+    ok = [r for r in feats.values() if r.ok is None]
+    assert len(ok) > len(feats) * 0.4
     for r in ok[:20]:
-        assert r.audio.n_samples > 0
-        assert 0.0 <= r.audio.rms <= 1.0
+        assert r.n_samples > 0
+        assert 0.0 <= r.rms <= 1.0
 
 
 def test_wav_sample_width_family():
@@ -458,9 +466,9 @@ def test_pcm8_normalization_contract():
     pcm16, _, err = decode.decode_blob(blob16, "wav", 8000)
     assert err is None and pcm16[0] == np.float32(-32768.0 / 32767.0)
     # both rails count as clipped under the |x| >= 0.999 gate
-    from go_pkg_spider_spark.operators.decode import _features
+    from go_pkg_spider_spark.operators.audio_features import clip_scalars
 
-    assert _features(pcm, sr)[4] == 2.0 / 3.0  # clip_ratio
+    assert clip_scalars(pcm, sr)[4] == 2.0 / 3.0  # clip_ratio
 
 
 def test_compressed_codecs_are_whitelisted_with_typed_no_codec_rows():
@@ -723,6 +731,7 @@ def test_stereo_float32_near_max_downmixes_under_any_warnings_filter():
     import struct
 
     from go_pkg_spider_spark.fixtures.audio_fixtures import _au, _fmt_chunk, _riff
+    from go_pkg_spider_spark.operators.audio_features import clip_scalars
 
     n = 16
     cases = [
@@ -738,5 +747,5 @@ def test_stereo_float32_near_max_downmixes_under_any_warnings_filter():
         assert err is None, (codec, err)
         assert sr == 16000 and pcm.dtype == np.float32
         assert pcm.size == n and (pcm == np.float32(3e38)).all(), codec
-        feats = decode._features(pcm, sr)
+        feats = clip_scalars(pcm, sr)
         assert all(np.isfinite(v) for v in feats), codec

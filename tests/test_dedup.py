@@ -153,7 +153,7 @@ def test_embedding_neardup_and_ann(spark):
     topk = similarity.brute_force_topk(df, "embedding", "vec_id", base, k=2).collect()
     assert [r.vec_id for r in topk] == [1, 2]
 
-    lsh = similarity.lsh_bucketed_topk(df, "embedding", "vec_id", base, k=2).collect()
+    lsh = similarity.lsh_bucketed_topk(df, "embedding", "vec_id", base).collect()
     assert lsh[0].vec_id == 1  # nearest survives the pruning
 
 
@@ -165,7 +165,7 @@ def test_lsh_recall_vs_brute_force(spark):
     )
     q = [((-1.0) ** i) * (1.0 / (1 + i)) for i in range(64)]
     exact = {r.vec_id for r in similarity.brute_force_topk(e, "embedding", "vec_id", q, 10).collect()}
-    approx = {r.vec_id for r in similarity.lsh_bucketed_topk(e, "embedding", "vec_id", q, 10).collect()}
+    approx = {r.vec_id for r in similarity.lsh_bucketed_topk(e, "embedding", "vec_id", q).collect()}
     assert len(exact & approx) >= 5
 
 
@@ -203,28 +203,6 @@ def test_neardup_multiband_recall(spark):
     hits = sum((i, 100 + i) in got for i in range(40))
     assert hits >= 30  # multi-band recall
     assert len(got) <= 80  # precision: no all-pairs flood
-
-
-def test_neardup_rejoin_mode_same_pairs(spark):
-    """carry_vectors=False (id-only buckets + rejoin, the wide-vector
-    scale path) must produce exactly the carry_vectors=True result."""
-    e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    )
-    kw = dict(dim=64, threshold=0.25, round_digits=4)
-    inb = {
-        (r.id_a, r.id_b, r.cosine_sim)
-        for r in similarity.embedding_neardup_pairs(
-            e, "embedding", "vec_id", carry_vectors=True, **kw
-        ).collect()
-    }
-    rej = {
-        (r.id_a, r.id_b, r.cosine_sim)
-        for r in similarity.embedding_neardup_pairs(
-            e, "embedding", "vec_id", carry_vectors=False, **kw
-        ).collect()
-    }
-    assert inb == rej and len(inb) > 0
 
 
 def test_range_join_counts_and_zero_rows(spark):

@@ -55,11 +55,11 @@ def _assert_contract(blob: bytes, codec: str, sr_hz) -> None:
         assert decode.SR_MIN <= sr <= decode.SR_MAX
         assert bool(np.isfinite(pcm).all())
     row = features_for_clip("fuzz", blob, codec, sr_hz)
-    assert len(row) == 10
+    assert len(row) == 17
     if row[1] is None and err is None:  # decoded: features must be finite
         assert all(math.isfinite(v) for v in row[3]), "rms"
         assert all(math.isfinite(v) for v in row[4]), "zcr"
-        assert all(math.isfinite(float(row[i])) for i in (5, 6, 7))
+        assert all(math.isfinite(float(row[i])) for i in (5, 6, 7, *range(12, 17)))
 
 
 @settings(**_SETTINGS)

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 from go_pkg_spider_spark.functions import langid
 
 
-def _res(spark, body, charset=None, title=None, declared=None):
+def _res(spark, body, charset=None, title=None):
     from go_pkg_spider_spark.operators.fused import fused_text_udf
 
     df = spark.range(1).select(F.lit(body).alias("transcript")).select(
@@ -18,7 +18,6 @@ def _res(spark, body, charset=None, title=None, declared=None):
             F.col("transcript"),
             charset=F.lit(charset) if charset is not None else None,
             title=F.lit(title) if title is not None else None,
-            declared_lang=F.lit(declared) if declared is not None else None,
         ).alias("lang_res"),
     )
     model_text, marker = langid.model_inputs(F.col("lang_res"))
@@ -97,14 +96,6 @@ def test_title_ja_rate(spark):
     body = ("これはにほんごのぶんしょうです" * 10)
     lang, pos = _res(spark, body, charset="UTF-8", title="日本語新聞")
     assert (lang, pos) == ("ja", "title")
-
-
-def test_declared_tag(spark):
-    lang, pos = _res(spark, EN_TEXT, charset="UTF-8", declared="zh-CN".lower())
-    assert (lang, pos) == ("zh", "html")
-    # en declared tag is low-trust -> body cascade wins (lang.go:151-158)
-    lang, pos = _res(spark, EN_TEXT, charset="UTF-8", declared="en")
-    assert (lang, pos) == ("en", "body")
 
 
 def test_non_utf_charset_skips_body(spark):

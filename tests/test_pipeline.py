@@ -59,11 +59,14 @@ def test_deterministic(spark, clips_path):
 def test_stereo_and_hires_flac_through_production_pipeline(spark):
     """Round 7: stereo-decorrelated and 24-bit FLAC clips must decode
     through the PRODUCTION surface (run_pipeline's fused Arrow UDF),
-    not just the entry-query operators. The stereo clip's channels are
-    m±d, so its decoded features must equal the mono twin clip's
-    EXACTLY; the 24-bit clip carries the same sine at hi-res width."""
+    not just the entry-query operators: no row is dropped as a decode
+    failure. The stereo clip's channels are m±d, so its per-clip
+    scalars (audio_features, the one kernel for them) must equal the
+    mono twin clip's EXACTLY; the 24-bit clip carries the same sine at
+    hi-res width."""
     import numpy as np
 
+    from go_pkg_spider_spark.operators import audio_features as af
     from go_pkg_spider_spark.operators.flac import (
         encode_flac_pcm,
         encode_flac_s16,
@@ -99,19 +102,26 @@ def test_stereo_and_hires_flac_through_production_pipeline(spark):
         ),
     ]
     df = spark.createDataFrame(rows, CLIPS_SCHEMA)
-    out = {r.clip_id: r for r in pipeline.run_pipeline(df, with_features=True).collect()}
+    out = {r.clip_id: r for r in pipeline.run_pipeline(df).collect()}
     assert len(out) == 4
-    for cid in ("mono", "stereo-ms", "stereo-ls", "hires24"):
-        a = out[cid].audio
-        assert a.ok and a.err is None, (cid, a)
-        assert a.n_samples == 2 * sr and a.sr_decoded == sr
-    # stereo m±d downmixes to EXACTLY the mono clip's samples
-    for cid in ("stereo-ms", "stereo-ls"):
-        assert out[cid].audio == out["mono"].audio, cid
-    # 24-bit m<<8 is the same waveform within one 16-bit quantum
-    assert abs(out["hires24"].audio.rms - out["mono"].audio.rms) < 1e-4
+    assert all(not (r.drop_reason or "").startswith("decode_") for r in out.values()), out
     # and the text-side decision is identical across payload forms
     assert len({(out[c].keep, out[c].lang) for c in out}) == 1
+    names = ("n_samples", "sr_decoded", "rms", "peak", "clip_ratio", "dc_offset",
+             "zero_cross_rate")
+    audio = {
+        r.clip_id: (r.ok, *(r[n] for n in names))
+        for r in af.extract_audio_features(df).collect()
+    }
+    for cid in ("mono", "stereo-ms", "stereo-ls", "hires24"):
+        ok, n_samples, sr_decoded, *_ = audio[cid]
+        assert ok is None, (cid, ok)  # the err column: NULL when decoded
+        assert n_samples == 2 * sr and sr_decoded == sr
+    # stereo m±d downmixes to EXACTLY the mono clip's samples
+    for cid in ("stereo-ms", "stereo-ls"):
+        assert audio[cid] == audio["mono"], cid
+    # 24-bit m<<8 is the same waveform within one 16-bit quantum
+    assert abs(audio["hires24"][3] - audio["mono"][3]) < 1e-4
 
 
 def test_no_shuffle_in_per_clip_path(spark, clips_path):

@@ -15,6 +15,12 @@ file uses is dead code too, even when a test calls it. Delete it (a
 test's reference for a production twin moves into the test), or
 justify it in ALLOWED_UNUSED. An import is not a use, so the last
 check fails on any name a file imports and never mentions.
+
+The parameter check goes down once more, to the defaulted parameters
+of the package's and the jobs' functions: one that only tests give a
+non-default value, by keyword or by position, selects a path that
+production never runs. Delete it with its branch, or justify it in
+SEAMS.
 """
 
 from __future__ import annotations
@@ -313,3 +319,277 @@ def test_driver_built_frames_go_through_local_frame():
     assert not new, "createDataFrame outside session.local_frame:\n" + "\n".join(new)
     stale = sorted(set(CREATE_DATAFRAME_ALLOWED) - set(calls))
     assert not stale, f"allowlisted but calling no createDataFrame: {stale}"
+
+
+# "module:function(parameter)" -> why a defaulted parameter stays
+# although only tests give it a value other than its default: a seam,
+# kept so a test can select a path at fixture size.
+SEAMS: dict[str, str] = {
+    "operators.components:connected_components(max_iter)":
+        "a path longer than max_iter reaches the star fallback at fixture size",
+    "operators.components:connected_components(driver_edge_threshold)":
+        "0 runs the distributed min-label rounds on a fixture graph",
+    "io.stages:run_lease(ttl_sec)": "a lease that expires within the test's wait",
+    "operators.similarity:ivf_assign(max_literal_k)":
+        "the Arrow argmin form at a fixture's k of 8 centroids",
+    "operators.similarity:ivf_topk_batch_gemm(max_probe_rows_per_chunk)":
+        "a multi-chunk serve over a few fixture queries",
+    "operators.dedup:ngram_jaccard_pairs(max_group_size)":
+        "the group cap and its drop count on a fixture corpus",
+    "operators.similarity:embedding_neardup_pairs(max_bucket_size)":
+        "the bucket cap on a fixture's hot bucket",
+    "fixtures.audio_fixtures:_fmt_chunk(channels)":
+        "fixture builder: tests build stereo WAV blobs the frozen corpus does not hold",
+    "fixtures.audio_fixtures:_au(channels)":
+        "fixture builder: tests build stereo AU blobs the frozen corpus does not hold",
+}
+
+# Where the parameter check looks for definitions; calls are read from
+# every Python file of the repository.
+_PARAM_SCOPES = (PKG, "jobs")
+
+
+def _call_files() -> list[Path]:
+    dirs = (PKG, "jobs", "tools", "perfbench", "tests")
+    return sorted({f for d in dirs for f in (REPO / d).rglob("*.py")} | set(REPO.glob("*.py")))
+
+
+def _is_static(fn: ast.FunctionDef) -> bool:
+    return any(getattr(d, "id", None) == "staticmethod" for d in fn.decorator_list)
+
+
+def _definitions() -> tuple[dict[str, tuple[Path, ast.FunctionDef, int]], set[str]]:
+    """Every top-level function and method of a top-level class, as
+    "module:qualname" -> (file, def, the positional offset of a call
+    through its name), and the "module:Class" keys. Test helpers are
+    definitions too, so the keywords they forward are followed."""
+    defs: dict[str, tuple[Path, ast.FunctionDef, int]] = {}
+    classes: set[str] = set()
+    for f in _call_files():
+        mod = _dotted(f)
+        for stmt in ast.parse(f.read_text(), str(f)).body:
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs[f"{mod}:{stmt.name}"] = (f, stmt, 0)
+            elif isinstance(stmt, ast.ClassDef):
+                classes.add(f"{mod}:{stmt.name}")
+                for s in stmt.body:
+                    if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                        defs[f"{mod}:{stmt.name}.{s.name}"] = (f, s, 0 if _is_static(s) else 1)
+    return defs, classes
+
+
+def _defaults(fn: ast.FunctionDef) -> tuple[list[str], dict[str, ast.expr]]:
+    """The positional parameter names and {name: default} of the
+    defaulted ones, keyword-only included."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    out = dict(zip(pos[len(pos) - len(a.defaults) :], a.defaults))
+    out.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None)
+    return pos, out
+
+
+def _bindings(f: Path, tree: ast.AST, modules: set[str]) -> dict[str, str]:
+    """Local name -> "pkg.mod" for an imported module, "pkg.mod:name"
+    for a name imported from one."""
+    out: dict[str, str] = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                out[a.asname or a.name.split(".")[0]] = a.name if a.asname else a.name.split(".")[0]
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                pkg = _package_of(f)
+                base = ".".join(pkg[: len(pkg) - (node.level - 1)] + ([node.module] if node.module else []))
+            else:
+                base = node.module or ""
+            for a in node.names:
+                sub = f"{base}.{a.name}"
+                out[a.asname or a.name] = sub if sub in modules else f"{base}:{a.name}"
+    return out
+
+
+def _last_name(e: ast.expr) -> str | None:
+    return e.id if isinstance(e, ast.Name) else e.attr if isinstance(e, ast.Attribute) else None
+
+
+def _same_value(value: ast.expr, default: ast.expr) -> bool:
+    """A passed value equals the default: the same literal or expression,
+    or the same named constant reached by another path."""
+    if ast.dump(value) == ast.dump(default):
+        return True
+    name = _last_name(value)
+    return name is not None and name == _last_name(default) and bool(_CONSTANT.fullmatch(name))
+
+
+class _CallScan:
+    """Records, for each defaulted parameter of a definition in the
+    scopes, which sides ("test", "prod") pass it a non-default value.
+
+    A callee is resolved through imports, module attributes and local
+    aliases (`score = f if x else g` makes `score(...)` a call of
+    both); an attribute call on anything else is a call of every method
+    of that name. A `**d` argument passes the keys of the dict literal
+    or `dict(...)` call `d` is bound to; a `**kwargs` a function got is
+    followed to the callees it forwards to; any other `*` or `**`
+    argument passes every parameter it could reach."""
+
+    def __init__(self):
+        self.modules = {_dotted(f) for f in _call_files()}
+        self.defs, self.classes = _definitions()
+        self.sig = {k: _defaults(fn) for k, (_, fn, _) in self.defs.items()}
+        self.methods: dict[str, list[str]] = defaultdict(list)
+        for k in self.defs:
+            if "." in k.split(":")[1]:
+                self.methods[k.rsplit(".", 1)[1]].append(k)
+        self.uses: dict[tuple[str, str], set[str]] = defaultdict(set)
+        self.forwards: dict[str, list[str]] = defaultdict(list)
+        self.pending: list[tuple[str, str, ast.expr | None, str]] = []
+
+    def _callable(self, target: str) -> list[tuple[str, int]]:
+        if target in self.defs:
+            return [(target, 0)]
+        if target in self.classes and f"{target}.__init__" in self.defs:
+            return [(f"{target}.__init__", 1)]
+        return []
+
+    def _module(self, e: ast.expr, bind: dict[str, str]) -> str | None:
+        parts = []
+        while isinstance(e, ast.Attribute):
+            parts.insert(0, e.attr)
+            e = e.value
+        if not isinstance(e, ast.Name) or ":" in bind.get(e.id, ":"):
+            return None
+        name = ".".join([bind[e.id], *parts])
+        return name if name in self.modules else None
+
+    def targets(self, e, mod, bind, aliases, depth=0) -> list[tuple[str, int]]:
+        if depth > 3:
+            return []
+        if isinstance(e, ast.IfExp):
+            return self.targets(e.body, mod, bind, aliases, depth + 1) + self.targets(
+                e.orelse, mod, bind, aliases, depth + 1
+            )
+        if isinstance(e, ast.Name):
+            out = [t for v in aliases.get(e.id, ()) for t in self.targets(v, mod, bind, aliases, depth + 1)]
+            return out + self._callable(bind.get(e.id, f"{mod}:{e.id}"))
+        if isinstance(e, ast.Attribute):
+            owner = self._module(e.value, bind)
+            if owner is not None:
+                return self._callable(f"{owner}:{e.attr}")
+            return [(k, self.defs[k][2]) for k in self.methods.get(e.attr, ())]
+        return []
+
+    def record(self, key: str, name: str, value: ast.expr | None, side: str) -> None:
+        """value None: an unknown value, so not the default."""
+        pos, defaults = self.sig[key]
+        if name in defaults:
+            if value is None or not _same_value(value, defaults[name]):
+                self.uses[(key, name)].add(side)
+        elif name not in pos and self.defs[key][1].args.kwarg is not None:
+            self.pending.append((key, name, value, side))
+
+    def record_all(self, key: str, side: str, start: int = 0, keywords: bool = True) -> None:
+        pos, defaults = self.sig[key]
+        for name in defaults:
+            if (name in pos and pos.index(name) >= start) or (keywords and name not in pos):
+                self.uses[(key, name)].add(side)
+
+    def scan(self, f: Path) -> None:
+        tree = ast.parse(f.read_text(), str(f))
+        side = "test" if f.is_relative_to(REPO / "tests") else "prod"
+        mod, bind = _dotted(f), _bindings(f, tree, self.modules)
+        aliases: dict[str, list[ast.expr]] = defaultdict(list)
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Assign) and len(n.targets) == 1 and isinstance(n.targets[0], ast.Name):
+                aliases[n.targets[0].id].append(n.value)
+        self._walk(tree, None, mod, bind, aliases, side)
+
+    def _walk(self, node, fn, mod, bind, aliases, side) -> None:
+        """fn: the innermost enclosing def, as (node, its key or None)."""
+        for child in ast.iter_child_nodes(node):
+            inner = fn
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                qual = f"{node.name}.{child.name}" if isinstance(node, ast.ClassDef) else child.name
+                key = f"{mod}:{qual}"
+                inner = (child, key if key in self.defs and self.defs[key][1].lineno == child.lineno else None)
+            if isinstance(child, ast.Call):
+                self._call(child, fn, mod, bind, aliases, side)
+            self._walk(child, inner, mod, bind, aliases, side)
+
+    def _kwargs_of(self, e: ast.expr, aliases) -> dict[str, ast.expr] | None:
+        if isinstance(e, ast.BoolOp):
+            parts = [self._kwargs_of(v, aliases) for v in e.values]
+            return None if None in parts else {k: v for p in parts for k, v in p.items()}
+        if isinstance(e, ast.Dict) and all(isinstance(k, ast.Constant) for k in e.keys):
+            return {k.value: v for k, v in zip(e.keys, e.values)}
+        if isinstance(e, ast.Call) and getattr(e.func, "id", None) == "dict" and not e.args:
+            if all(kw.arg for kw in e.keywords):
+                return {kw.arg: kw.value for kw in e.keywords}
+        if isinstance(e, ast.Name) and aliases.get(e.id):
+            parts = [self._kwargs_of(v, aliases) for v in aliases[e.id]]
+            return None if None in parts else {k: v for p in parts for k, v in p.items()}
+        return None
+
+    def _call(self, call: ast.Call, fn, mod, bind, aliases, side) -> None:
+        """A `*args` or `**kwargs` the enclosing def got passes nothing
+        of its own: only the keywords its callers give are followed."""
+        node, owner = fn or (None, None)
+        own_args = node.args.vararg.arg if node and node.args.vararg else None
+        own_kwargs = node.args.kwarg.arg if node and node.args.kwarg else None
+        for key, offset in self.targets(call.func, mod, bind, aliases):
+            pos, _ = self.sig[key]
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    if getattr(arg.value, "id", None) != own_args:
+                        self.record_all(key, side, start=i + offset, keywords=False)
+                    break
+                if i + offset < len(pos):
+                    self.record(key, pos[i + offset], arg, side)
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    self.record(key, kw.arg, kw.value, side)
+                elif own_kwargs and getattr(kw.value, "id", None) == own_kwargs:
+                    if owner is not None:
+                        self.forwards[owner].append(key)
+                elif (passed := self._kwargs_of(kw.value, aliases)) is not None:
+                    for name, value in passed.items():
+                        self.record(key, name, value, side)
+                else:
+                    self.record_all(key, side, start=len(call.args) + offset)
+
+    def result(self) -> dict[tuple[str, str], set[str]]:
+        """Follow each keyword a `**kwargs` parameter took to the
+        callees that function forwards it to."""
+        seen = set()
+        while self.pending:
+            key, name, value, side = self.pending.pop()
+            for target in self.forwards.get(key, ()):
+                if (target, name, id(value), side) not in seen:
+                    seen.add((target, name, id(value), side))
+                    self.record(target, name, value, side)
+        return self.uses
+
+
+def _test_only_parameters() -> dict[str, str]:
+    """"module:qualname(parameter)" -> "file:line" for each defaulted
+    parameter that only tests give a non-default value."""
+    scan = _CallScan()
+    for f in _call_files():
+        scan.scan(f)
+    out = {}
+    for (key, name), sides in scan.result().items():
+        f, fn, _ = scan.defs[key]
+        if sides == {"test"} and any(f.is_relative_to(REPO / d) for d in _PARAM_SCOPES):
+            out[f"{key.removeprefix(PKG + '.')}({name})"] = f"{f.relative_to(REPO)}:{fn.lineno}"
+    return out
+
+
+def test_every_defaulted_parameter_has_a_production_caller():
+    """A defaulted parameter that only tests set selects a path
+    production never runs: delete the branch, or list the parameter in
+    SEAMS with why a test needs it. Equality, as above."""
+    flagged = _test_only_parameters()
+    new = sorted(f"{where} {k}" for k, where in flagged.items() if k not in SEAMS)
+    assert not new, "set to a non-default value only by tests:\n" + "\n".join(new)
+    stale = sorted(set(SEAMS) - set(flagged))
+    assert not stale, f"listed in SEAMS but set by production or gone: {stale}"

@@ -14,10 +14,8 @@ def _classify(spark, title, lang):
     ).collect()[0].t
 
 
-def _keep(spark, text, lang, min_chars=64):
-    r = spark.range(1).select(
-        rules.keep_drop(F.lit(text), F.lit(lang), min_chars=min_chars).alias("r")
-    ).collect()[0].r
+def _keep(spark, text, lang):
+    r = spark.range(1).select(rules.keep_drop(F.lit(text), F.lit(lang)).alias("r")).collect()[0].r
     return r.keep, r.drop_reason
 
 

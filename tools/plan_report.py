@@ -182,7 +182,10 @@ def main() -> None:
         else:
             df = qs[qname](spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        out.append(f"\n## {name}\n\n{note}\n\n```\n{plan[:4000]}\n```\n")
+        # cut each node's line, not the plan: a cap on the whole text
+        # lost every node below the clips pipeline's long projections
+        lines = "\n".join(line[:400] for line in plan.splitlines())
+        out.append(f"\n## {name}\n\n{note}\n\n```\n{lines}\n```\n")
 
     os.makedirs("BENCH", exist_ok=True)
     with open("BENCH/PLANS.md", "w") as f:
