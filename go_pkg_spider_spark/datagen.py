@@ -159,11 +159,8 @@ def make_row(i: int) -> tuple[str, bytes, int, int, str, str]:
     return (clip_id_for(i), blob, sr, dur_ms, codec, transcript)
 
 
-def generate_clips_df(spark, n_rows: int, num_partitions: int | None = None):
-    """Distributed deterministic generation: spark.range -> mapInArrow
-    building the same rows as make_row(i) (pure function of index, so
-    the table is identical regardless of partitioning)."""
-    import pyarrow as pa
+def clips_schema():
+    """The clips table's Spark schema (the module docstring's columns)."""
     from pyspark.sql.types import (
         BinaryType,
         IntegerType,
@@ -172,7 +169,7 @@ def generate_clips_df(spark, n_rows: int, num_partitions: int | None = None):
         StructType,
     )
 
-    schema = StructType(
+    return StructType(
         [
             StructField("clip_id", StringType()),
             StructField("bytes", BinaryType()),
@@ -183,24 +180,16 @@ def generate_clips_df(spark, n_rows: int, num_partitions: int | None = None):
         ]
     )
 
-    def gen(batches):
-        for batch in batches:
-            ids = batch.column("id").to_pylist()
-            rows = [make_row(int(i)) for i in ids]
-            cols = list(zip(*rows)) if rows else [[], [], [], [], [], []]
-            yield pa.record_batch(
-                {
-                    "clip_id": pa.array(cols[0], pa.string()),
-                    "bytes": pa.array(cols[1], pa.binary()),
-                    "sr_hz": pa.array(cols[2], pa.int32()),
-                    "dur_ms": pa.array(cols[3], pa.int32()),
-                    "codec": pa.array(cols[4], pa.string()),
-                    "transcript": pa.array(cols[5], pa.string()),
-                }
-            )
+
+def generate_clips_df(spark, n_rows: int, num_partitions: int | None = None):
+    """Distributed deterministic generation: spark.range -> mapInArrow
+    building the same rows as make_row(i) (pure function of index, so
+    the table is identical regardless of partitioning)."""
+    from .session import map_rows
 
     parts = num_partitions or spark.sparkContext.defaultParallelism
-    return spark.range(0, n_rows, numPartitions=parts).mapInArrow(gen, schema)
+    ids = spark.range(0, n_rows, numPartitions=parts)
+    return map_rows(ids, lambda i: [make_row(i)], clips_schema())
 
 
 # Binary-payload tables need SMALL parquet row groups: a reader buffers a
@@ -226,19 +215,11 @@ def write_clips_parquet(path: str, n_rows: int, start: int = 0) -> None:
     deterministic row index — rows [start, start+n_rows) — so a
     disjoint-id ingest increment for the incremental dedup path is one
     call (make_row is a pure function of the index)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from .session import arrow_table
+
     rows = [make_row(start + i) for i in range(n_rows)]
-    cols = list(zip(*rows))
-    table = pa.table(
-        {
-            "clip_id": pa.array(cols[0], pa.string()),
-            "bytes": pa.array(cols[1], pa.binary()),
-            "sr_hz": pa.array(cols[2], pa.int32()),
-            "dur_ms": pa.array(cols[3], pa.int32()),
-            "codec": pa.array(cols[4], pa.string()),
-            "transcript": pa.array(cols[5], pa.string()),
-        }
+    pq.write_table(
+        arrow_table(rows, clips_schema()), path, row_group_size=CLIPS_ROW_GROUP_SIZE
     )
-    pq.write_table(table, path, row_group_size=CLIPS_ROW_GROUP_SIZE)

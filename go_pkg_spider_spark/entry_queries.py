@@ -2171,7 +2171,7 @@ def charset_guess_docs(spark, sf_dir):
     frequency-weighted try-decode cascade over the CharsetLangMap
     encodings, lang.go:27-38) plus the header/html alias folds
     (charset.go:196-222) and conflict rules (charset.go:70-106),
-    through the production sniff_charset_udf pandas UDF against 34
+    through the production sniff_charset_udf Arrow UDF against 34
     by-construction truth rows (fixtures/charset_fixtures.py) — the
     last 8 are adversarial boundary rows (measured 0.25/0.25 guess-
     order tie, exact-0.2 gate edge, mixed-script, garbage-valid decode
@@ -2219,7 +2219,7 @@ def audio_decode_docs(spark, sf_dir):
     come from the fused.fused_model_arrow_udf Arrow UDF (NULL
     langid/ppl inputs), the decode verdict run_pipeline acts on; every
     scalar comes from the audio_features.extract_audio_features
-    mapInPandas. Reference analog: the
+    mapInArrow. Reference analog: the
     transcode stage http.go:157-170 whose charset half is gated by
     charset_rules_docs; decode is not SQL-expressible, so the oracle
     is the frozen-literal pattern (simtext_argmax_docs).
@@ -2292,7 +2292,7 @@ def audio_fp_docs(spark, sf_dir):
     """Robust audio fingerprint + cross-codec near-dup grouping under
     the hard gate (round 8): the Haitsma&Kalker-2002 spectro-temporal
     sign fingerprint (operators/audio_fp.py) pushed through the REAL
-    production operators (fingerprint_clips mapInPandas ->
+    production operators (fingerprint_clips mapInArrow ->
     audio_neardup_groups pigeonhole-block LSH -> connected
     components) over 15 by-construction fixtures — one clip
     re-encoded SIX ways (WAV/FLAC/AIFF containers, 24-bit
@@ -2366,7 +2366,7 @@ def _audio_subfp_oracle_sql() -> str:
 def audio_subfp_docs(spark, sf_dir):
     """The noise-robust SUB-fingerprint matching tier under the hard
     gate (late round 8), pinned side-by-side with the fp64 tier it
-    upgrades: ONE fingerprint pass (fingerprint_clips_full mapInPandas
+    upgrades: ONE fingerprint pass (fingerprint_clips_full mapInArrow
     — packed subfp stream + active-position coarse (cell, value)
     blocking probes retained, <= 8 KiB/clip) feeds BOTH
     audio_subfp_neardup_groups (shared-probe blocking ->
@@ -2477,7 +2477,7 @@ def audio_increment_docs(spark, sf_dir):
     ]
     # Round 9: ONE fingerprint pass over the union, split by clip_id
     # afterwards (ids are disjoint by construction; fingerprinting is
-    # row-local) — the two separate mapInPandas passes each paid their
+    # row-local) — the two separate mapInArrow passes each paid their
     # own stage+checkpoint latency for a handful of clips. Semantics
     # identical: same rows reach the same per-clip computation.
     base_ids = [r[0] for r in base_rows]

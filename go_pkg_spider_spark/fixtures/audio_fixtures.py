@@ -8,8 +8,8 @@ This is the simtext_argmax_docs pattern applied to the north-star's
 audio leg (reference analog: the transcode stage http.go:157-170,
 whose charset half is already value-gated via charset_rules_docs):
 the DuckDB oracle returns EXPECTED as a literal truth table and the
-Spark query must reproduce it through the real pandas-UDF /
-mapInPandas operators, so the driver hash now gates the decode
+Spark query must reproduce it through the real Arrow UDF /
+mapInArrow operators, so the driver hash now gates the decode
 invariant that was previously pytest-only.
 
 Determinism rules:

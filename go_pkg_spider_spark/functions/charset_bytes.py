@@ -1,6 +1,6 @@
 """Byte-level charset detection — the full Charset() flow
 (/root/reference/charset.go:38-101) for binary text payloads, as a
-vectorized pandas UDF.
+per-row Arrow UDF.
 
 Decision order (charset.go semantics):
 1. valid UTF-8 -> ("UTF-8", "valid") fast path          charset.go:43-47
@@ -20,9 +20,9 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
+
+from ..session import row_udf
 
 try:  # optional, import-gated (X5 model slot)
     import charset_normalizer as _cn  # type: ignore
@@ -258,7 +258,8 @@ SNIFF_SCHEMA = StructType(
 )
 
 
-@F.pandas_udf(SNIFF_SCHEMA)
-def sniff_charset_udf(data: pd.Series, declared: pd.Series) -> pd.DataFrame:
-    rows = [sniff_charset(b, d) for b, d in zip(data, declared)]
-    return pd.DataFrame(rows, columns=["charset", "charset_pos", "decoded_text"])
+# bytes(): the decode attempts call bytes.decode, which a zero-copy
+# memoryview lacks
+sniff_charset_udf = row_udf(
+    lambda b, d: sniff_charset(None if b is None else bytes(b), d), SNIFF_SCHEMA
+)

@@ -13,9 +13,9 @@ from __future__ import annotations
 
 from difflib import SequenceMatcher
 
-import pandas as pd
-from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from ..session import row_udf
 
 BEST_MATCH_SCHEMA = StructType(
     [
@@ -31,15 +31,13 @@ def similarity_ratio(a: str | None, b: str | None) -> float:
     return SequenceMatcher(None, a, b).ratio()
 
 
-@F.pandas_udf(BEST_MATCH_SCHEMA)
-def best_match_udf(candidates: pd.Series, target: pd.Series) -> pd.DataFrame:
-    rows = []
-    for cands, t in zip(candidates, target):
-        best, best_r = None, 0.0
-        # Arrow hands arrays as numpy ndarrays — no truthiness
-        for c in (cands if cands is not None else []):
-            r = similarity_ratio(c, t)
-            if r > best_r:
-                best, best_r = c, r
-        rows.append((best, round(best_r, 6)))
-    return pd.DataFrame(rows, columns=["best", "ratio"])
+def best_match(cands, t) -> tuple:
+    best, best_r = None, 0.0
+    for c in cands or []:
+        r = similarity_ratio(c, t)
+        if r > best_r:
+            best, best_r = c, r
+    return best, round(best_r, 6)
+
+
+best_match_udf = row_udf(best_match, BEST_MATCH_SCHEMA)

@@ -123,17 +123,15 @@ class Catalog:
         pq.write_table(arrow_table(rows, schema), tmp)
         os.replace(tmp, os.path.join(path, name))
 
-    def read(self, table: str, schema: StructType | None = None) -> DataFrame:
+    def read(self, table: str, schema: StructType) -> DataFrame:
         """schema (parquet only; an Iceberg table carries its own): the
         known table schema, partition columns included, e.g. the one a
-        stage's done row records (StageRunner.read). Without it Spark
-        starts a job to infer the schema from the files' footers. With
-        it there is no such job, and a table dir holding no data files
-        reads as empty instead of failing."""
+        stage's done row records (StageRunner.read). Spark starts no
+        job to infer it from the files' footers, and a table dir
+        holding no data files reads as empty instead of failing."""
         if self.use_iceberg:
             return self.spark.read.table(self._ident(table))
-        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
-        return reader.parquet(self._path(table))
+        return self.spark.read.schema(schema).parquet(self._path(table))
 
     def read_rows(self, table: str, schema: StructType) -> list[Row]:
         """Every row of a small table (a manifest) in `schema`'s column
@@ -147,7 +145,7 @@ class Catalog:
         if not self.exists(table):
             return []
         if self.use_iceberg:
-            df = self.read(table)
+            df = self.read(table, schema)
             return df.select(
                 *[
                     F.col(f.name)

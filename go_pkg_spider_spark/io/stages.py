@@ -19,8 +19,9 @@ table. The stage manifest follows ManifestedRun's protocol
   reads a stage table with it, so no stage read starts a Spark job to
   infer the schema. With the driver-side manifest I/O
   (io/manifest.py), a fully resumed chain starts no Spark job at all.
-  A done row older than the column has no schema; its table is read by
-  inference, so such a root resumes without rerunning anything.
+  A done row older than the column has no schema and is not a resume
+  point: its stage reruns, and a cross-root read of it
+  (run_audio_dedup.read_committed) fails, naming the root and stage.
 - A committed stage is reusable ONLY if its LATEST manifest row
   (manifest.latest_rows) is `done` with the SAME parameter fingerprint
   (params_sig) as the current invocation. Older rows never count:
@@ -245,14 +246,10 @@ STAGE_MANIFEST_SCHEMA = StructType(
 )
 
 
-def read_stage(cat, stage: str, schema: str | None):
+def read_stage(cat, stage: str, schema: str):
     """A committed stage table, read with `schema`, the JSON schema its
-    done row records, so the read starts no schema-inference job. A
-    done row written before the schema was recorded has none: that
-    table's schema is inferred (Catalog.read without a schema)."""
-    return cat.read(
-        stage, schema=StructType.fromJson(json.loads(schema)) if schema else None
-    )
+    done row records, so the read starts no schema-inference job."""
+    return cat.read(stage, StructType.fromJson(json.loads(schema)))
 
 
 class StageRunner:
@@ -303,14 +300,15 @@ class StageRunner:
 
     def _done_stages(self) -> dict:
         """{stage: its latest manifest row}, for the stages whose latest
-        row is done with the stage's params_sig (and, for a histogram
-        stage, carries the histogram)."""
+        row is done with the stage's params_sig and a recorded schema
+        (and, for a histogram stage, carries the histogram)."""
         rows = read_manifest(self.cat, self.manifest_table, STAGE_MANIFEST_SCHEMA)
         return {
             s: r
             for s, r in latest_rows(rows, "stage").items()
             if r.status == "done"
             and (r.metrics or {}).get("params_sig") == self._sig_for(s)
+            and r.schema is not None
             and (s not in self._histograms or r.histogram is not None)
         }
 
@@ -398,7 +396,7 @@ class StageRunner:
     def read(self, stage: str):
         """The committed stage table, read with the schema its commit in
         this run or the done row it resumed from records."""
-        return read_stage(self.cat, stage, self._schemas.get(stage))
+        return read_stage(self.cat, stage, self._schemas[stage])
 
     def histogram(self, stage: str) -> dict:
         """{value: rows} of a histogram stage, from its commit in this

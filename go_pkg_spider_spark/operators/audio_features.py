@@ -11,16 +11,13 @@ decodes for real — wav/pcm in operators/decode.py, flac via the own
 bitstream decoder in operators/flac.py.
 
 Frame shape follows the standard 25ms/10ms speech convention; batch
-shape: one mapInPandas pass, PCM dropped in-stage (never crosses a
+shape: one mapInArrow pass, PCM dropped in-stage (never crosses a
 shuffle — SURVEY.md §4.3).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     ArrayType,
@@ -31,6 +28,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import map_rows
 from .decode import decode_blob
 
 FRAME_MS = 25
@@ -121,7 +119,7 @@ def _spectral(pcm: np.ndarray, sr: int) -> tuple[float, float]:
 
 def features_for_clip(cid, blob, codec, sr_hz) -> tuple:
     """One AUDIO_FEATURES_SCHEMA row for one clip — the pure per-row
-    kernel shared by the mapInPandas operator and the frozen-truth
+    kernel shared by the mapInArrow operator and the frozen-truth
     audio oracle fixtures (fixtures/audio_fixtures.py), so the gate
     exercises the exact production code path."""
     pcm, sr_dec, err = decode_blob(blob, codec, sr_hz)
@@ -154,27 +152,12 @@ def features_for_clip(cid, blob, codec, sr_hz) -> tuple:
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
     """clips -> per-clip scalars and frame/spectral features. One
-    mapInPandas pass; output rows carry bounded arrays (MAX_FRAMES cap —
+    mapInArrow pass; output rows carry bounded arrays (MAX_FRAMES cap —
     the work-bound discipline of the reference's 2048-char/64-tag
     caps)."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                features_for_clip(
-                    cid,
-                    blob,
-                    codec,
-                    int(sr) if not pd.isna(sr) else None,
-                )
-                for cid, blob, codec, sr in zip(
-                    b["clip_id"], b["bytes"], b["codec"], b["sr_hz"]
-                )
-            ]
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields]
-            )
-
-    return df.select("clip_id", "bytes", "codec", "sr_hz").mapInPandas(
-        compute, AUDIO_FEATURES_SCHEMA
+    return map_rows(
+        df.select("clip_id", "bytes", "codec", "sr_hz"),
+        lambda *row: [features_for_clip(*row)],
+        AUDIO_FEATURES_SCHEMA,
     )

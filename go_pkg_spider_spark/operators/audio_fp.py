@@ -17,7 +17,7 @@ downstream group machinery as text near-dup (operators/dedup.py
 simhash pigeonhole blocks -> operators/components.py components).
 
 Scale shape (SURVEY.md §4.3 confinement): decode + fingerprint run in
-ONE mapInPandas stage — PCM never crosses a shuffle; only (clip_id,
+ONE mapInArrow stage — PCM never crosses a shuffle; only (clip_id,
 fp64, n_subfp, flags) leave, ~20 bytes/clip. Grouping shuffles once
 on (block_idx, 8-bit block value) with capped buckets, then O(log n)
 component rounds. A stationary clip (silence, constant tone) has zero
@@ -45,10 +45,7 @@ public-domain Steele/Lea/Vigna mix); no RNG, no library slots.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -62,6 +59,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..session import map_rows
 from .audio_features import linear_resample
 from .bucketing import capped_buckets, pair_array
 from .components import connected_components
@@ -398,26 +396,14 @@ AUDIO_FP_SCHEMA = StructType(
 
 def _fingerprint(df: DataFrame, schema: StructType) -> DataFrame:
     """clips(clip_id, bytes, codec, sr_hz) -> the leading fields of
-    _fp_row_full that `schema` names, in one mapInPandas pass; PCM and
+    _fp_row_full that `schema` names, in one mapInArrow pass; PCM and
     the per-frame spectra die inside the stage (the
     extract_audio_features confinement shape)."""
-    cols = schema.fieldNames()
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = [
-                _fp_row_full(
-                    b.clip_id.iloc[i],
-                    b.bytes.iloc[i],
-                    b.codec.iloc[i],
-                    None if pd.isna(b.sr_hz.iloc[i]) else int(b.sr_hz.iloc[i]),
-                )[: len(cols)]
-                for i in range(len(b))
-            ]
-            yield pd.DataFrame.from_records(rows, columns=cols)
-
-    return df.select("clip_id", "bytes", "codec", "sr_hz").mapInPandas(
-        compute, schema
+    width = len(schema.fields)
+    return map_rows(
+        df.select("clip_id", "bytes", "codec", "sr_hz"),
+        lambda *row: [_fp_row_full(*row)[:width]],
+        schema,
     )
 
 
@@ -440,7 +426,7 @@ def fingerprint_clips_full(df: DataFrame) -> DataFrame:
     """fingerprint_clips plus the packed subfp stream (<= 8 KiB/clip)
     and the positional blocking probes — the input of the noise-robust
     sub-fingerprint matcher (audio_subfp_pairs). Same single
-    mapInPandas confinement; the stream is ~400x smaller than the PCM
+    mapInArrow confinement; the stream is ~400x smaller than the PCM
     it summarizes, so retaining it does not reopen the payload-shuffle
     problem the fp64 projection exists to avoid."""
     return _fingerprint(df, AUDIO_FP_FULL_SCHEMA)
@@ -609,7 +595,7 @@ def audio_subfp_pairs(
     common element of the two (ascending) probe arrays emits it
     (the audio_fp_pairs trick, computable from the bucket members'
     own vectors). Candidates then join back to the packed streams
-    (id-keyed, pair volume only) and verify in one mapInPandas. Cost
+    (id-keyed, pair volume only) and verify in one mapInArrow. Cost
     per clip: <= 2*FP_PROBE_N blocking rows + an 8 KiB stream that
     moves only for candidate endpoints."""
     elig = fpf.filter(F.col("err").isNull() & ~F.col("fp_degenerate"))
@@ -666,7 +652,7 @@ def verify_pairs(
     """Stream-verify candidate (id_a, id_b) pairs: join each side back
     to its packed sub-fingerprint stream (id-keyed, pair volume only),
     score bit-set Jaccard at the best shift-scanned alignment +
-    overlap ratio in one mapInPandas, keep pairs passing both
+    overlap ratio in one mapInArrow, keep pairs passing both
     thresholds — the H&K verify step, shared by the subfp tier and
     the composed job's fp64-candidate verification. The scan also
     un-breaks a measured fp64-tier false NEGATIVE: an integer-hop
@@ -698,32 +684,17 @@ def verify_pairs(
         "id_b",
     )
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            stats = [
-                subfp_match_stats(b.sub_a.iloc[i], b.sub_b.iloc[i])
-                for i in range(len(b))
-            ]
-            yield pd.DataFrame(
-                {
-                    "id_a": b.id_a,
-                    "id_b": b.id_b,
-                    "jaccard": [s[0] for s in stats],
-                    "overlap_ratio": [s[1] for s in stats],
-                    "shift": pd.array(
-                        [s[2] for s in stats], dtype="int32"
-                    ),
-                }
-            )
-
     # the subfp_pair_passes predicate as column math (kept JVM-side):
     # shifted matches pay the max-statistic penalty
     bar = F.when(
         F.col("shift") == 0, F.lit(min_jaccard)
     ).otherwise(F.lit(min_jaccard + FP_SHIFT_PENALTY))
     return (
-        joined.mapInPandas(verify, _SUBFP_PAIR_SCHEMA)
-        .filter(
+        map_rows(
+            joined.select("id_a", "id_b", "sub_a", "sub_b"),
+            lambda a, b, sa, sb: [(a, b, *subfp_match_stats(sa, sb))],
+            _SUBFP_PAIR_SCHEMA,
+        ).filter(
             (F.col("jaccard") >= bar)
             & (F.col("overlap_ratio") >= min_overlap_ratio)
         )
@@ -1086,7 +1057,7 @@ _SNIPPET_MATCH_SCHEMA = StructType(
 
 def _shingle_key_rows(fpf: DataFrame, id_alias: str) -> DataFrame:
     """(id, key) exploded shingle-key rows for eligible fingerprint
-    rows — one mapInPandas over the packed streams. At corpus scale
+    rows — one mapInArrow over the packed streams. At corpus scale
     this is the stage a production root would COMMIT next to probes
     (it is pure function of the stream); the operator computes it
     inline so fixture-scale callers need no extra table."""
@@ -1094,20 +1065,12 @@ def _shingle_key_rows(fpf: DataFrame, id_alias: str) -> DataFrame:
         "clip_id", "subfps"
     )
 
-    def keys(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids: list[str] = []
-            kk: list[int] = []
-            for i in range(len(b)):
-                ks = snippet_shingle_keys(
-                    unpack_subfps(bytes(b.subfps.iloc[i]))
-                )
-                ids.extend([b.clip_id.iloc[i]] * ks.size)
-                kk.extend(int(k) for k in ks)
-            yield pd.DataFrame({id_alias: ids, "key": pd.array(kk, dtype="int64")})
-
-    return elig.mapInPandas(
-        keys, f"{id_alias} string, key long"
+    return map_rows(
+        elig,
+        lambda cid, packed: [
+            (cid, k) for k in snippet_shingle_keys(unpack_subfps(packed)).tolist()
+        ],
+        StructType([StructField(id_alias, StringType()), StructField("key", LongType())]),
     )
 
 
@@ -1125,7 +1088,7 @@ def audio_snippet_search(
     (>= min_shared — one or two shared pairs are coincidence, see the
     knob comment), hot index keys rank-capped at max_key_matches;
     verify slides each query over each candidate stream once
-    (subfp_best_window) in one mapInPandas at candidate volume. The
+    (subfp_best_window) in one mapInArrow at candidate volume. The
     index stream column moves only for candidate clip ids; queries
     are one ingest batch (small side of every join)."""
     from pyspark.sql.window import Window
@@ -1153,21 +1116,8 @@ def audio_snippet_search(
         index_fpf.select("clip_id", F.col("subfps").alias("hay")), "clip_id"
     )
 
-    def verify(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            stats = [
-                subfp_best_window(bytes(b.hay.iloc[i]), bytes(b.needle.iloc[i]))
-                for i in range(len(b))
-            ]
-            yield pd.DataFrame(
-                {
-                    "qid": b.qid,
-                    "clip_id": b.clip_id,
-                    "jaccard": [s[0] for s in stats],
-                    "pos": pd.array([s[1] for s in stats], dtype="int32"),
-                }
-            )
-
-    return joined.mapInPandas(verify, _SNIPPET_MATCH_SCHEMA).filter(
-        F.col("jaccard") >= F.lit(min_jaccard)
-    )
+    return map_rows(
+        joined.select("qid", "clip_id", "hay", "needle"),
+        lambda qid, cid, hay, needle: [(qid, cid, *subfp_best_window(hay, needle))],
+        _SNIPPET_MATCH_SCHEMA,
+    ).filter(F.col("jaccard") >= F.lit(min_jaccard))

@@ -26,11 +26,11 @@ import hashlib
 import re
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import ArrayType, LongType
 
 from ..functions.tokens import content_hash_md5
+from ..session import row_udf
 from .bucketing import capped_buckets, pair_apply
 
 
@@ -289,26 +289,19 @@ def make_minhash_text_udf(num_hashes: int = 32, shingle_n: int = 3):
     token boundaries F.split(.., " ") would — no \\s/locale dialect in
     Python. Gram SET equality with word_shingles is pinned by test."""
 
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_text_udf(norm_text: pd.Series) -> pd.Series:
-        out = []
-        last = shingle_n - 1
-        for s in norm_text:
-            if s is None:
-                out.append(None)
-                continue
-            toks = [t for t in s.split(" ") if t]
-            if len(toks) < shingle_n:
-                out.append(None)
-                continue
-            grams = {
-                " ".join(toks[i : i + shingle_n]) for i in range(len(toks) - last)
-            }
-            sig = _minhash_sig_np(list(grams), num_hashes)
-            out.append(None if sig is None else sig.tolist())
-        return pd.Series(out, dtype=object)
+    last = shingle_n - 1
 
-    return minhash_text_udf
+    def signature(s):
+        if s is None:
+            return None
+        toks = [t for t in s.split(" ") if t]
+        if len(toks) < shingle_n:
+            return None
+        grams = {" ".join(toks[i : i + shingle_n]) for i in range(len(toks) - last)}
+        sig = _minhash_sig_np(list(grams), num_hashes)
+        return None if sig is None else sig.tolist()
+
+    return row_udf(signature, ArrayType(LongType()))
 
 
 def minhash_lsh_candidates(
@@ -413,22 +406,20 @@ def minhash_lsh_candidates(
 _WS_TOKEN_RE = re.compile(r"[^ \t\n\r\f]+")
 
 
-@F.pandas_udf(LongType())
-def _simhash64_udf(text: pd.Series) -> pd.Series:
-    out = np.zeros(len(text), dtype=np.int64)
-    shifts = np.arange(64, dtype=np.uint64)
-    for i, t in enumerate(text):
-        toks = _WS_TOKEN_RE.findall(t.lower()) if t else []
-        if not toks:
-            out[i] = 0
-            continue
-        hs = np.array(
-            [_hash64_bytes(tok.encode("utf-8")) for tok in toks], dtype=np.uint64
-        )
-        bit_votes = ((hs[:, None] >> shifts[None, :]) & np.uint64(1)).sum(axis=0)
-        bits = (bit_votes * 2 > len(toks)).astype(np.uint64)
-        out[i] = (bits << shifts).sum(dtype=np.uint64).astype(np.int64)
-    return pd.Series(out)
+_SHIFTS = np.arange(64, dtype=np.uint64)
+
+
+def _simhash64_row(t) -> int:
+    toks = _WS_TOKEN_RE.findall(t.lower()) if t else []
+    if not toks:
+        return 0
+    hs = np.array([_hash64_bytes(tok.encode("utf-8")) for tok in toks], dtype=np.uint64)
+    bit_votes = ((hs[:, None] >> _SHIFTS[None, :]) & np.uint64(1)).sum(axis=0)
+    bits = (bit_votes * 2 > len(toks)).astype(np.uint64)
+    return int((bits << _SHIFTS).sum(dtype=np.uint64).astype(np.int64))
+
+
+_simhash64_udf = row_udf(_simhash64_row, LongType())
 
 
 def simhash64(text: Column) -> Column:

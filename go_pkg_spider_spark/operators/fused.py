@@ -25,8 +25,6 @@ passes NULL text.
 
 from __future__ import annotations
 
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import Column, functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -43,6 +41,7 @@ from ..functions.langid import (
     _score_text,
 )
 from ..functions.perplexity import _ppl_one
+from ..session import row_udf
 from .decode import decode_blob
 
 FUSED_SCHEMA = StructType(
@@ -67,83 +66,23 @@ def _fused_row(b, c, s, mt, mk, pt) -> tuple:
     return (pcm is not None, err, model_lang, ppl)
 
 
-def _binary_views(arr):
-    """Zero-copy per-row memoryviews over a pyarrow Binary array (None
-    for null rows). to_pandas()/as_py() copy every ~100KB payload into a
-    fresh Python bytes object — measured ~18ms per 256-row batch, about
-    the cost of the decode work itself; the views cost ~0.07ms."""
-    n = len(arr)
-    bufs = arr.buffers()
-    if bufs[2] is None:
-        return [None] * n
-    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offs = np.frombuffer(bufs[1], dtype=width, count=arr.offset + n + 1)
-    # cast('B'): pyarrow buffers expose format 'b' (SIGNED bytes); the
-    # decoders index lookup tables with these values and must see the
-    # same unsigned 0..255 ints a bytes object yields (ADVICE r5)
-    mv = memoryview(bufs[2]).cast("B")
-    if arr.null_count:
-        nulls = arr.is_null().to_numpy(zero_copy_only=False)
-    else:
-        nulls = None
-    out = []
-    for i in range(n):
-        if nulls is not None and nulls[i]:
-            out.append(None)
-            continue
-        o0, o1 = offs[arr.offset + i], offs[arr.offset + i + 1]
-        out.append(mv[o0:o1])
-    return out
-
-
 def fused_model_arrow_udf(*cols: Column) -> Column:
     """The fused UDF over (bytes, codec, sr_hz, model_text, marker,
-    ppl_text). Each call wraps `_fused_batch` anew, for the active
-    SparkContext: a UDF object keeps the Java function of the first
-    context it was called in, and after a context restart that one
-    reports to a dead accumulator."""
-    return F.arrow_udf(_fused_batch, FUSED_SCHEMA)(*cols)
-
-
-def _fused_batch(
-    blob: pa.Array,
-    codec: pa.Array,
-    sr_hz: pa.Array,
-    model_text: pa.Array,
-    marker: pa.Array,
-    ppl_text: pa.Array,
-) -> pa.Array:
-    """The fused stage on raw Arrow batches: the ~100KB binary payloads
-    are read as zero-copy memoryviews instead of being materialized
-    into a pandas Series of bytes objects (the round-4 profile
-    attributed ~85% of the stage to that serialization; the Arrow
-    transport won the round-5 A/B, BENCH/R5_NOTES.md). One plan node
-    (ArrowEvalPython), row semantics in _fused_row, no pandas on either
-    side."""
-    rows = [
-        _fused_row(b, c, s, mt, mk, pt)
-        for b, c, s, mt, mk, pt in zip(
-            _binary_views(blob),
-            codec.to_pylist(),
-            sr_hz.to_pylist(),
-            model_text.to_pylist(),
-            marker.to_pylist(),
-            ppl_text.to_pylist(),
-        )
-    ]
-    cols = list(zip(*rows)) if rows else [[] for _ in FUSED_SCHEMA.fields]
-    arrow_types = [pa.bool_(), pa.string(), pa.string(), pa.float64()]
-    return pa.StructArray.from_arrays(
-        [pa.array(list(c), t) for c, t in zip(cols, arrow_types)],
-        names=[f.name for f in FUSED_SCHEMA.fields],
-    )
+    ppl_text): `_fused_row` through session.row_udf, a new UDF object
+    per call for the active SparkContext. The ~100KB binary payloads
+    reach it as zero-copy memoryviews instead of Python bytes objects
+    (the round-4 profile attributed ~85% of the stage to that
+    serialization; the Arrow transport won the round-5 A/B,
+    BENCH/R5_NOTES.md). One plan node (ArrowEvalPython), no pandas on
+    either side."""
+    return row_udf(_fused_row, FUSED_SCHEMA)(*cols)
 
 
 def fused_text_udf(model_text: Column, marker: Column, ppl_text: Column) -> Column:
     """The fused UDF with NULL bytes/codec/sr_hz, for callers that have
     text only: decode answers `empty_bytes` before any work, so only
     `model_lang` and `ppl` carry information. The NULL blob is typed
-    binary because `_binary_views` reads a Binary array's buffers."""
+    binary because session.row_udf reads a binary column's buffers."""
     return fused_model_arrow_udf(
         F.lit(None).cast("binary"),
         F.lit(None).cast("string"),

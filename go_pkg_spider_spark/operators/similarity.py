@@ -17,9 +17,12 @@ are computed on the fly (deterministic seeded planes).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
+from ..session import arrow_column, arrow_table, map_rows
 from .bucketing import capped_buckets
 
 # Rows lsh_bucketed_topk returns; oracle_sql_gen.ann_lsh_topk_sql ranks
@@ -181,7 +184,7 @@ def embedding_neardup_pairs(
 
     # Round 9 (guide §4.2 "hand whole batches to vectorized native
     # libraries"): per-bucket pairwise cosine via ONE numpy pass per
-    # bucket inside mapInPandas, replacing ~15us/pair of interpreted
+    # bucket inside mapInArrow, replacing ~15us/pair of interpreted
     # zip_with+aggregate HOF per candidate pair (3.9M pairs at
     # sf1.0). Bit-exactness is engineered, not assumed:
     # - the pairwise dot accumulates as a LEFT FOLD over the dim
@@ -197,51 +200,42 @@ def embedding_neardup_pairs(
     #   could keep survives to the exact Spark-side filter.
     # NULL vectors zero out (d=0 -> cosine 0.0), matching the old
     # when(d > 0, ...).otherwise(0.0) branch.
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"id_a {id_type}, id_b {id_type}, cosine_sim double"
+    id_type = df.schema[id_col].dataType
+    out_schema = StructType(
+        [
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cosine_sim", DoubleType()),
+        ]
+    )
     thr_floor = float(threshold) - (10.0 ** -round_digits)
 
-    def score_buckets(batches):
-        import numpy as _np
-        import pandas as _pd
-
-        for pdf in batches:
-            out_a, out_b, out_c = [], [], []
-            for ms in pdf["ms"]:
-                m = len(ms)
-                if m < 2:
-                    continue
-                ids = [r["id"] for r in ms]
-                dim_v = next(
-                    (len(r["v"]) for r in ms if r["v"] is not None), 0
-                )
-                V = _np.zeros((m, dim_v), dtype=_np.float64)
-                nv = _np.zeros(m, dtype=_np.float64)
-                for i, r in enumerate(ms):
-                    if r["v"] is not None and r["nv"] is not None:
-                        V[i] = _np.asarray(r["v"], dtype=_np.float64)
-                        nv[i] = r["nv"]
-                acc = _np.zeros((m, m), dtype=_np.float64)
-                for k in range(dim_v):  # left fold, ascending k
-                    col = V[:, k]
-                    acc += col[:, None] * col[None, :]
-                d = nv[:, None] * nv[None, :]
-                with _np.errstate(divide="ignore", invalid="ignore"):
-                    cos = _np.where(d > 0, acc / d, 0.0)
-                iu, ju = _np.triu_indices(m, 1)
-                c = cos[iu, ju]
-                keep = c >= thr_floor
-                if keep.any():
-                    out_a.extend(ids[i] for i in iu[keep])
-                    out_b.extend(ids[j] for j in ju[keep])
-                    out_c.extend(c[keep].tolist())
-            yield _pd.DataFrame(
-                {"id_a": out_a, "id_b": out_b, "cosine_sim": out_c}
-            )
+    def score_bucket(ms):
+        m = len(ms)
+        if m < 2:
+            return []
+        ids = [r["id"] for r in ms]
+        dim_v = next((len(r["v"]) for r in ms if r["v"] is not None), 0)
+        V = np.zeros((m, dim_v), dtype=np.float64)
+        nv = np.zeros(m, dtype=np.float64)
+        for i, r in enumerate(ms):
+            if r["v"] is not None and r["nv"] is not None:
+                V[i] = np.asarray(r["v"], dtype=np.float64)
+                nv[i] = r["nv"]
+        acc = np.zeros((m, m), dtype=np.float64)
+        for k in range(dim_v):  # left fold, ascending k
+            col = V[:, k]
+            acc += col[:, None] * col[None, :]
+        d = nv[:, None] * nv[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(d > 0, acc / d, 0.0)
+        iu, ju = np.triu_indices(m, 1)
+        c = cos[iu, ju]
+        keep = c >= thr_floor
+        return [(ids[i], ids[j], x) for i, j, x in zip(iu[keep], ju[keep], c[keep].tolist())]
 
     return (
-        buckets.select("ms")
-        .mapInPandas(score_buckets, out_schema)
+        map_rows(buckets.select("ms"), score_bucket, out_schema)
         .select(
             "id_a",
             "id_b",
@@ -339,7 +333,7 @@ def ivf_assign(
       zero Python, whole-stage codegen. (The old sequential when-chain
       nested best_d into itself — exponential expression tree, 177s vs
       <1s at k=8/dim=32 sf0.1; the CLAUDE.md when-chain landmine.)
-    - k > max_literal_k: Arrow-batched pandas-UDF argmin. The centroid
+    - k > max_literal_k: Arrow UDF argmin. The centroid
       matrix rides the UDF closure (shipped once per worker, like a
       broadcast var — k=4096 x dim=64 is 2 MB), distances are one
       (batch x k) GEMM per Arrow batch, and the plan stays O(1) size
@@ -363,20 +357,20 @@ def _ivf_assign_arrow(vec: Column, centroids: list[list[float]]) -> Column:
     within-epsilon near-tie the other way — see ivf_assign). NULL
     vectors yield NULL cells, matching the literal form (np.stack over
     a batch containing None would otherwise kill the task)."""
-    from pyspark.sql.types import IntegerType
-
     C = np.asarray(centroids, dtype=np.float64)
     c_sq = (C * C).sum(axis=1)
 
-    @F.pandas_udf(IntegerType())
-    def assign(batch: pd.Series) -> pd.Series:
-        mask = batch.notna()
-        out = pd.array([None] * len(batch), dtype="Int32")
-        if mask.any():
-            X = np.stack(batch[mask].to_numpy()).astype(np.float64)
+    @F.arrow_udf(IntegerType())
+    def assign(batch: pa.Array) -> pa.Array:
+        vecs = batch.to_pylist()
+        live = [i for i, v in enumerate(vecs) if v is not None]
+        out = [None] * len(vecs)
+        if live:
+            X = np.array([vecs[i] for i in live], dtype=np.float64)
             d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c_sq[None, :]
-            out[mask.to_numpy()] = np.argmin(d, axis=1).astype(np.int32)
-        return pd.Series(out)
+            for i, cell in zip(live, np.argmin(d, axis=1).tolist()):
+                out[i] = cell
+        return arrow_column(out, IntegerType())
 
     return assign(vec)
 
@@ -569,7 +563,7 @@ def ivf_topk_batch_gemm(
     — the shared _probe_cells plan collected to the driver; the query
     batch is broadcast-small BY CONTRACT, it is broadcast whole in the
     join path too), but candidate scoring runs as one numpy matmul per
-    (partition, cell) inside mapInPandas with a LOCAL top-k — so the
+    (partition, cell) inside mapInArrow with a LOCAL top-k — so the
     per-query window shuffles ~partitions x queries x k rows instead of
     every scored pair (500k-index / 2k-query / n_probe=8 measurement:
     ~125M scored pairs -> ~600k local winners, BENCH/BASELINE.md).
@@ -586,7 +580,7 @@ def ivf_topk_batch_gemm(
     identically to the window's tie-break. Index rows with NULL vectors
     or NULL cells are skipped (the join path drops them at the join).
 
-    The index side still never shuffles: mapInPandas consumes scan
+    The index side still never shuffles: mapInArrow consumes scan
     partitions in place (at scale, the cell-partitioned table), and the
     same small-split lesson applies (run_ann_index.py session conf).
 
@@ -600,7 +594,7 @@ def ivf_topk_batch_gemm(
     index passes instead of an unbounded driver collect.
 
     Multi-chunk index reuse (round 8, VERDICT r7 #4): each chunk is a
-    separate mapInPandas branch over the cell-assigned index
+    separate mapInArrow branch over the cell-assigned index
     projection, so a C-chunk serve re-scans (and, when cell_col is
     None, re-computes the cell assignment of) the index C times. When
     more than one chunk exists, the projection is persisted
@@ -634,17 +628,21 @@ def ivf_topk_batch_gemm(
     def make_scorer(bc):
         def score_partition(batches):
             groups: dict[int, list] = {}
-            for pdf in batches:
-                ok = pdf["_cell"].notna() & pdf["_v"].notna()
-                pdf = pdf[ok]
-                for c, grp in pdf.groupby(pdf["_cell"].astype(np.int64)):
-                    if int(c) in bc.value:
-                        groups.setdefault(int(c), []).append(grp)
+            for batch in batches:
+                batch = batch.filter(
+                    pc.and_(batch.column("_cell").is_valid(), batch.column("_v").is_valid())
+                )
+                cells = batch.column("_cell").to_numpy()
+                for c in np.unique(cells).tolist():
+                    if c in bc.value:
+                        groups.setdefault(c, []).append(batch.filter(pa.array(cells == c)))
             out = []
             for c, parts in groups.items():
-                grp = pd.concat(parts, ignore_index=True)
-                ids = grp["_id"].to_numpy()
-                V = np.stack([np.asarray(v, dtype=np.float64) for v in grp["_v"]])
+                grp = pa.Table.from_batches(parts)
+                ids = grp.column("_id").to_numpy()
+                vs = grp.column("_v").combine_chunks()
+                V = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
+                V = V.reshape(len(vs), -1) if V.size else np.zeros((len(vs), 0))
                 vn = np.sqrt((V * V).sum(axis=1))
                 for qid, qv in bc.value[c]:
                     qn = float(np.sqrt((qv * qv).sum()))
@@ -692,18 +690,21 @@ def ivf_topk_batch_gemm(
                             "keeping all in-band rows for parity",
                             file=_sys.stderr,
                         )
-                    out.append(
-                        pd.DataFrame(
-                            {"qid": qid, "_id": ids[band], "_cos": cos[band]}
-                        )
+                    out.extend(
+                        (qid, i, x) for i, x in zip(ids[band].tolist(), cos[band].tolist())
                     )
             if out:
-                yield pd.concat(out, ignore_index=True)
+                yield from arrow_table(out, out_schema).to_batches()
 
         return score_partition
 
-    qid_field = probes.schema[qid_col].dataType.simpleString()
-    id_field = idx.schema["_id"].dataType.simpleString()
+    out_schema = StructType(
+        [
+            StructField("qid", probes.schema[qid_col].dataType),
+            StructField("_id", idx.schema["_id"].dataType),
+            StructField("_cos", DoubleType()),
+        ]
+    )
 
     # (cell -> queries probing it) to every scan task, one CHUNK of the
     # probe batch at a time. qn recomputed in numpy from the SAME
@@ -718,11 +719,7 @@ def ivf_topk_batch_gemm(
         if not per_cell:
             return
         bc = sc.broadcast(per_cell)
-        chunk_dfs.append(
-            idx.mapInPandas(
-                make_scorer(bc), f"qid {qid_field}, _id {id_field}, _cos double"
-            )
-        )
+        chunk_dfs.append(idx.mapInArrow(make_scorer(bc), out_schema))
         per_cell = {}
         n_chunk_rows = 0
 
@@ -735,12 +732,7 @@ def ivf_topk_batch_gemm(
             flush()
     flush()
     if not chunk_dfs:  # empty query batch: empty frame, full schema
-        chunk_dfs.append(
-            idx.limit(0).mapInPandas(
-                make_scorer(sc.broadcast({})),
-                f"qid {qid_field}, _id {id_field}, _cos double",
-            )
-        )
+        chunk_dfs.append(idx.limit(0).mapInArrow(make_scorer(sc.broadcast({})), out_schema))
 
     if len(chunk_dfs) > 1:
         # one cache fill beats C-1 extra index scans (and C-1 repeated

@@ -203,12 +203,20 @@ def latest_done_row(spark, root: str, stage: str):
 def read_committed(spark, root: str, stage: str):
     """`stage` as committed under root, read with the schema its done
     row records (stages.read_stage), so a cross-root read starts no
-    schema-inference job."""
+    schema-inference job. A root whose latest row for the stage is not
+    a done row with a schema (one written before the schema was
+    recorded) is an error: rerunning the batch job on that root
+    recommits the stage."""
     from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.io.stages import read_stage
 
     done = latest_done_row(spark, root, stage)
-    return read_stage(Catalog(spark, root), stage, done.schema if done else None)
+    if done is None or done.schema is None:
+        raise ValueError(
+            f"{root}: stage {stage!r} has no done row with a recorded schema; "
+            "rerun the batch job on this root to recommit it"
+        )
+    return read_stage(Catalog(spark, root), stage, done.schema)
 
 
 def _require_fp_schema(spark, roots) -> None:

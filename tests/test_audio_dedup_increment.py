@@ -10,6 +10,8 @@ the micro-batch id so replays resume instead of double-appending.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from go_pkg_spider_spark.fixtures.audio_fp_fixtures import (
@@ -553,7 +555,7 @@ def test_append_rejects_cross_root_fp_schema_mismatch(spark, tmp_path):
     from go_pkg_spider_spark.io.catalog import Catalog
 
     cat = Catalog(spark, root)
-    mdf = cat.read(rad.AUDIO_DEDUP_MANIFEST_TABLE)
+    mdf = spark.read.parquet(os.path.join(root, rad.AUDIO_DEDUP_MANIFEST_TABLE))
     old_sig = json.dumps({"fp_schema_v": rad._FP_SCHEMA_V - 1}, sort_keys=True)
     tampered = mdf.withColumn(
         "metrics",

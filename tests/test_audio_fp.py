@@ -272,7 +272,7 @@ def test_spark_grouping_matches_brute_force(spark):
 
 
 def test_fingerprint_clips_schema_and_errors(spark):
-    """Typed-error contract through the mapInPandas operator: the
+    """Typed-error contract through the mapInArrow operator: the
     whitelist/empty errors surface in `err`, never as exceptions, and
     NULL sr_hz rides the decoder default (the decode.py contract)."""
     from go_pkg_spider_spark.operators.audio_fp import fingerprint_clips

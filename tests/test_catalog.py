@@ -11,12 +11,16 @@ import os
 import shutil
 
 import pytest
+from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
 from go_pkg_spider_spark.io.catalog import Catalog, iceberg_available
 
 
+T_SCHEMA = StructType([StructField("p", IntegerType()), StructField("v", StringType())])
+
+
 def _rows(cat, table):
-    return sorted((r.p, r.v) for r in cat.read(table).collect())
+    return sorted((r.p, r.v) for r in cat.read(table, T_SCHEMA).collect())
 
 
 def test_partitioned_overwrite_replaces_whole_table(spark, tmp_path):
@@ -96,4 +100,4 @@ def test_an_append_writes_one_data_file(spark, tmp_path):
     assert len(glob.glob(str(tmp_path / "m" / "*.parquet"))) == 1
     append_rows(cat, "m", MANIFEST_SCHEMA, rows)
     assert len(glob.glob(str(tmp_path / "m" / "*.parquet"))) == 2
-    assert sorted(r.bucket for r in cat.read("m").collect()) == [0, 0, 1, 1]
+    assert sorted(r.bucket for r in cat.read("m", MANIFEST_SCHEMA).collect()) == [0, 0, 1, 1]

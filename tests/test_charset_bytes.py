@@ -110,7 +110,7 @@ def test_sniff_charset_fuzz_never_raises():
     """Fuzz contract (the round-8 decoder-fuzz sweep applied to the
     last per-row Python surface): sniff_charset over byte soup +
     arbitrary declared-charset strings must always return the 3-tuple,
-    never raise — it runs inside a pandas UDF whose task dies on any
+    never raise — it runs inside an Arrow UDF whose task dies on any
     exception."""
     from hypothesis import given, settings, strategies as st
 

@@ -171,12 +171,17 @@ def test_star_matches_minlabel_on_random_graphs(spark):
         nodes = list(range(1, n + 1))
         e = spark.createDataFrame(edges, "id_a long, id_b long")
         nd = spark.createDataFrame([(x,) for x in nodes], "id long")
-        # max_iter=50 is above the diameter of any graph here (n <= 40),
-        # so connected_components never falls back to star: without
-        # that bound a fallback would compare star against itself
+        # driver_edge_threshold=0 runs the distributed min-label rounds
+        # (every graph here is far under the default threshold, which
+        # would answer with the driver union-find instead); max_iter=50
+        # is above the diameter of any graph here (n <= 40), so the
+        # rounds never fall back to star: without that bound a fallback
+        # would compare star against itself
         a = {
             r.id: r.component
-            for r in components.connected_components(e, nodes=nd, max_iter=50).collect()
+            for r in components.connected_components(
+                e, nodes=nd, max_iter=50, driver_edge_threshold=0
+            ).collect()
         }
         b = {
             r.id: r.component

@@ -3,7 +3,7 @@
 The decode stage's contract (operators/decode.py, the reference's
 whitelist-means-decoded posture from http.go:141-170) is that every
 payload becomes either a decoded row or a TYPED error row — a crash
-inside the pandas UDF fails the Spark task and, with default retry
+inside a decode UDF fails the Spark task and, with default retry
 settings, eventually the whole 100 TB job. The round-8 self-review
 found one such crash by hand (a crafted zero-sample-rate AIFF); these
 properties systematize that search:
@@ -40,8 +40,8 @@ _SETTINGS = dict(max_examples=250, deadline=None)
 
 def _assert_contract(blob: bytes, codec: str, sr_hz) -> None:
     pcm, sr, err = decode.decode_blob(blob, codec, sr_hz)
-    # the fused stage hands decode_blob a ZERO-COPY memoryview
-    # (operators/fused.py _binary_views); the contract must hold for
+    # every decode UDF hands decode_blob a ZERO-COPY memoryview
+    # (session.binary_views); the contract must hold for
     # both buffer types and agree on the outcome
     pcm_mv, sr_mv, err_mv = decode.decode_blob(memoryview(blob), codec, sr_hz)
     assert err_mv == err and sr_mv == sr

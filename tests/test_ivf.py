@@ -231,7 +231,7 @@ def _rows_set(df):
 
 
 def test_ivf_topk_batch_gemm_matches_join_on_real_corpus(spark):
-    """The GEMM scorer (mapInPandas local top-k + slack band) must
+    """The GEMM scorer (mapInArrow local top-k + slack band) must
     return exactly the join scorer's rows — same qid/rk/id/cosine_sim —
     on the real embeddings table, for several k/n_probe settings."""
     e = _emb(spark)
@@ -368,7 +368,7 @@ def test_ivf_topk_batch_gemm_near_tie_flood_beyond_soft_cap(spark):
 def test_ivf_topk_batch_gemm_uses_precomputed_cell_and_no_index_shuffle(spark):
     """cell_col mode (the run_ann_index serving shape): results match
     the join scorer, and the plan has no Exchange before the
-    mapInPandas scorer (the index is consumed in place; the only
+    mapInArrow scorer (the index is consumed in place; the only
     shuffle is the per-query window)."""
     e = _emb(spark)
     cents = similarity.train_ivf_centroids_distributed(
@@ -391,10 +391,10 @@ def test_ivf_topk_batch_gemm_uses_precomputed_cell_and_no_index_shuffle(spark):
     )
     assert _rows_set(join_out) == _rows_set(gemm_out)
     plan = gemm_out._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" in plan
-    # the tree prints top-down, so the text AFTER MapInPandas is the
+    assert "MapInArrow" in plan
+    # the tree prints top-down, so the text AFTER MapInArrow is the
     # subtree below it (the index side): scan-only, no Exchange
-    assert "Exchange" not in plan.split("MapInPandas")[-1]
+    assert "Exchange" not in plan.split("MapInArrow")[-1]
 
 
 def test_ivf_topk_batch_null_query_vector_yields_no_rows(spark):

@@ -26,6 +26,12 @@ from go_pkg_spider_spark.io.manifest import (
 )
 
 
+def _table(cat, table):
+    """`table` under cat's root, with the schema Spark infers from its
+    files."""
+    return cat.spark.read.parquet(os.path.join(cat.root, table))
+
+
 def _transform(df):
     return pipeline.run_pipeline(df)
 
@@ -42,7 +48,7 @@ def _commit_one_bucket(spark, cat, clips, bucket, num_buckets, table="decisions"
     cat.write(_transform(part), f"{table}/bucket={bucket}")
     hist = {
         r.drop_reason or "": r["count"]
-        for r in cat.read(f"{table}/bucket={bucket}").groupBy("drop_reason").count().collect()
+        for r in _table(cat, f"{table}/bucket={bucket}").groupBy("drop_reason").count().collect()
     }
     row = [
         (
@@ -84,10 +90,10 @@ def test_resume_after_crash_matches_uninterrupted(spark, clips_path, tmp_path):
     assert s == {"buckets_run": 2, "buckets_skipped": 1}
 
     a_rows = sorted(
-        tuple(r) for b in range(3) for r in cat_a.read(f"decisions/bucket={b}").collect()
+        tuple(r) for b in range(3) for r in _table(cat_a, f"decisions/bucket={b}").collect()
     )
     b_rows = sorted(
-        tuple(r) for b in range(3) for r in cat_b.read(f"decisions/bucket={b}").collect()
+        tuple(r) for b in range(3) for r in _table(cat_b, f"decisions/bucket={b}").collect()
     )
     assert a_rows == b_rows and len(a_rows) == clips.count()
 
@@ -98,7 +104,7 @@ def test_manifest_metrics(spark, clips_path, tmp_path):
     ManifestedRun(spark, cat, num_buckets=2, run_id="m").run(
         clips, _transform, "decisions"
     )
-    rows = cat.read(MANIFEST_TABLE).filter(F.col("status") == "done").collect()
+    rows = _table(cat, MANIFEST_TABLE).filter(F.col("status") == "done").collect()
     assert len(rows) == 2
     assert sum(r.input_rows for r in rows) == clips.count()
     assert all(r.status == "done" and r.wall_sec > 0 for r in rows)
@@ -106,7 +112,7 @@ def test_manifest_metrics(spark, clips_path, tmp_path):
     for r in rows:
         hist = {
             x.drop_reason or "": x["count"]
-            for x in cat.read(f"decisions/bucket={r.bucket}")
+            for x in _table(cat, f"decisions/bucket={r.bucket}")
             .groupBy("drop_reason").count().collect()
         }
         assert r.drop_histogram == hist
@@ -214,7 +220,7 @@ def test_same_second_tie_is_not_done(spark, clips_path, tmp_path):
 
 def _latest_status(cat) -> dict[int, str]:
     latest = {}
-    for r in cat.read(MANIFEST_TABLE).collect():
+    for r in _table(cat, MANIFEST_TABLE).collect():
         key = (r.committed_at_unix, r.seq)
         if r.bucket not in latest or key > latest[r.bucket][0]:
             latest[r.bucket] = (key, r.status)
@@ -230,17 +236,17 @@ def test_emptied_bucket_is_cleared(spark, clips_path, tmp_path):
     ManifestedRun(spark, cat, 3, "a", params={"min_chars": 64}).run(
         clips, lambda df: pipeline.run_pipeline(df, min_chars=64), "decisions"
     )
-    assert cat.read("decisions").filter(F.col("bucket") == 1).count() > 0
+    assert _table(cat, "decisions").filter(F.col("bucket") == 1).count() > 0
 
     subset = clips.filter(bucket_of(F.col("clip_id"), 3) != 1)
     s = ManifestedRun(spark, cat, 3, "b", params={"min_chars": 256}).run(
         subset, lambda df: pipeline.run_pipeline(df, min_chars=256), "decisions"
     )
     assert s == {"buckets_run": 3, "buckets_skipped": 0}
-    out = cat.read("decisions")
+    out = _table(cat, "decisions")
     assert out.filter(F.col("bucket") == 1).count() == 0
     assert out.count() == subset.count()
-    done = cat.read(MANIFEST_TABLE).filter(
+    done = _table(cat, MANIFEST_TABLE).filter(
         (F.col("run_id") == "b") & (F.col("status") == "done")
     )
     row = done.filter(F.col("bucket") == 1).collect()
@@ -255,7 +261,7 @@ def test_empty_input_commits_every_bucket(spark, clips_path, tmp_path):
     cat = Catalog(spark, str(tmp_path / "z"))
     s = ManifestedRun(spark, cat, 2, "z").run(clips, _transform, "decisions")
     assert s == {"buckets_run": 2, "buckets_skipped": 0}
-    rows = cat.read(MANIFEST_TABLE).filter(F.col("status") == "done").collect()
+    rows = _table(cat, MANIFEST_TABLE).filter(F.col("status") == "done").collect()
     assert sorted((r.bucket, r.input_rows) for r in rows) == [(0, 0), (1, 0)]
 
 
@@ -292,8 +298,8 @@ def test_multi_wave_crash_then_resume(spark, clips_path, tmp_path, monkeypatch):
     assert s == {"buckets_run": 3, "buckets_skipped": 2}
     assert _latest_status(cat_b) == {b: "done" for b in range(5)}
 
-    a_rows = sorted(tuple(r) for r in cat_a.read("decisions").collect())
-    b_rows = sorted(tuple(r) for r in cat_b.read("decisions").collect())
+    a_rows = sorted(tuple(r) for r in _table(cat_a, "decisions").collect())
+    b_rows = sorted(tuple(r) for r in _table(cat_b, "decisions").collect())
     assert a_rows == b_rows and len(a_rows) == clips.count()
 
 

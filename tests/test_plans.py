@@ -96,14 +96,32 @@ def test_entry_evaluates_the_guards_once(spark):
     assert plan.count(ZH_LICENCE_BLACKLIST_RE) == 1
 
 
+# every module that defines a Python UDF or map function
+UDF_MODULES = (
+    "operators.fused",
+    "operators.dedup",
+    "operators.similarity",
+    "operators.audio_fp",
+    "operators.audio_features",
+    "functions.charset_bytes",
+    "functions.simtext",
+    "datagen",
+)
+
+
 def test_fused_import_leaves_pandas_out():
-    """The fused UDF's import chain is pandas-free, so its Arrow UDF
-    worker never pays for loading pandas."""
+    """Importing the fused UDF's module, or any other module that
+    defines a Python UDF or map function, loads no pandas: unpickling a
+    package UDF puts no pandas import on a Python worker. (pyarrow
+    16.1 still imports pandas on its own, at the first `pa.array` built
+    from Python objects, which every Arrow UDF's output does.)"""
     import subprocess
     import sys
 
     code = (
-        "import sys, go_pkg_spider_spark.operators.fused; "
+        "import importlib, sys\n"
+        f"for m in {UDF_MODULES!r}:\n"
+        "    importlib.import_module('go_pkg_spider_spark.' + m)\n"
         "print('pandas' in sys.modules)"
     )
     out = subprocess.run(
@@ -121,14 +139,14 @@ def test_embedding_neardup_no_join_no_python(spark):
     """Bucket-collect pair generation: no self-join (the old sig==sig
     join re-executed the hyperplane projection on both sides), no
     row-at-a-time Python, one groupBy exchange. Round 9: in-bucket
-    scoring moved to ONE MapInPandas (numpy left-fold cosine, bit-
+    scoring moved to ONE MapInArrow (numpy left-fold cosine, bit-
     identical to the old HOF fold — see similarity.py) — the plan must
     hold exactly one Python stage and still no join."""
     plan = _plan(entry.queries()["embedding_neardup_pairs"](spark, SF))
     for bad in ("SortMergeJoin", "BroadcastHashJoin", "CartesianProduct",
                 "ArrowEvalPython", "BatchEvalPython"):
         assert bad not in plan, bad
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
 
 
 def test_q3_topk_no_global_sort(spark):
@@ -241,7 +259,7 @@ def test_spread_small_scan_guard_semantics(spark, tmp_path):
 
 def test_audio_fp_confinement(spark):
     """Round 8 fingerprint leg: decode + FFT + fingerprint run in ONE
-    MapInPandas stage with zero Exchange — PCM and per-frame spectra
+    MapInArrow stage with zero Exchange — PCM and per-frame spectra
     never cross a shuffle; only ~20 bytes/clip leave the stage. The
     grouping side shuffles exactly once on the pigeonhole blocks
     before the component rounds."""
@@ -255,7 +273,7 @@ def test_audio_fp_confinement(spark):
         F.col("fid").cast("string").alias("clip_id"), "bytes", "codec", "sr_hz"
     )
     plan = _plan(fingerprint_clips(df))
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "Exchange" not in plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 

@@ -321,6 +321,45 @@ def test_driver_built_frames_go_through_local_frame():
     assert not stale, f"allowlisted but calling no createDataFrame: {stale}"
 
 
+# Names that put a Python stage on the pandas transport.
+_PANDAS_TRANSPORT = {"pandas_udf", "mapInPandas", "applyInPandas", "toPandas"}
+
+
+def _pandas_uses(f: Path) -> list[str]:
+    """`line: what` for each pandas transport name f mentions and each
+    import of pandas (or a pandas submodule) in f."""
+    hits = []
+    for n in ast.walk(ast.parse(f.read_text(), str(f))):
+        if isinstance(n, ast.Import):
+            mods = [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom) and not n.level:
+            mods = [n.module or ""]
+        else:
+            mods = []
+        hits += [f"{n.lineno}: import {m}" for m in mods if m.split(".")[0] == "pandas"]
+        name = n.attr if isinstance(n, ast.Attribute) else getattr(n, "id", None)
+        if name in _PANDAS_TRANSPORT:
+            hits.append(f"{n.lineno}: {name}")
+    return hits
+
+
+def test_udfs_are_arrow_only():
+    """Every Python stage of the package and the jobs is Arrow in and
+    Arrow out (`F.arrow_udf` / `mapInArrow`, through the row adapter in
+    session.py), and no module imports pandas. Fails on `pandas_udf`,
+    `mapInPandas`, `applyInPandas`, `toPandas` or an import of pandas.
+    Not covered, and not a UDF transport: `io.catalog` still loads
+    pandas on the driver, through `pyarrow.dataset`, and the oracle
+    gate (tools/check_oracles.py) compares its frames in pandas."""
+    hits = [
+        f"{f.relative_to(REPO)}:{hit}"
+        for d in (PKG, "jobs")
+        for f in sorted((REPO / d).rglob("*.py"))
+        for hit in _pandas_uses(f)
+    ]
+    assert not hits, "pandas in the package or jobs:\n" + "\n".join(hits)
+
+
 # "module:function(parameter)" -> why a defaulted parameter stays
 # although only tests give it a value other than its default: a seam,
 # kept so a test can select a path at fixture size.

@@ -24,7 +24,7 @@ def _chain(spark, cat, run_id, src):
     if not runner.resumable("a"):
         runner.commit("a", spark.range(4).withColumn("v", F.lit(src)))
     if not runner.resumable("b"):
-        runner.commit("b", cat.read("a").withColumn("w", F.col("v") * 10))
+        runner.commit("b", runner.read("a").withColumn("w", F.col("v") * 10))
     return runner.summary
 
 
@@ -59,7 +59,7 @@ def test_crash_mid_commit_reruns_stage(spark, tmp_path):
 
     s3 = _chain(spark, catalog(), "r3", src=2)
     assert (s3["stages_run"], s3["stages_skipped"]) == (1, 1)
-    assert {r.w for r in Catalog(spark, root).read("b").collect()} == {20}
+    assert {r.w for r in spark.read.parquet(f"{root}/b").collect()} == {20}
 
     rows = sorted(spark.read.parquet(f"{root}/{MANIFEST}").collect(), key=lambda r: r.seq)
     assert [(r.stage, r.run_id, r.status) for r in rows] == [
@@ -76,6 +76,31 @@ def test_crash_mid_commit_reruns_stage(spark, tmp_path):
     assert MANIFEST not in written
 
 
+def test_done_row_without_schema_reruns_its_stage(spark, tmp_path):
+    """A done row that records no schema (written before the schema
+    column existed) is not a resume point: its stage reruns, and with
+    it every stage downstream. A cross-root read of such a stage fails
+    and names the root and the stage."""
+    from go_pkg_spider_spark.io.manifest import append_rows
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+    from jobs.run_audio_dedup import AUDIO_DEDUP_MANIFEST_TABLE, read_committed
+
+    root = str(tmp_path / "legacy")
+    cat = Catalog(spark, root)
+    _chain(spark, cat, "r1", src=1)
+    done_a = latest_rows(
+        spark.read.parquet(f"{root}/{MANIFEST}").collect(), "stage"
+    )["a"]
+    legacy = {"stage": "a", "status": "done", "rows": 4, "metrics": done_a.metrics}
+    append_rows(cat, MANIFEST, STAGE_MANIFEST_SCHEMA, [legacy])
+    s2 = _chain(spark, cat, "r2", src=1)
+    assert (s2["stages_run"], s2["stages_skipped"]) == (2, 0)
+
+    append_rows(cat, AUDIO_DEDUP_MANIFEST_TABLE, STAGE_MANIFEST_SCHEMA, [legacy])
+    with pytest.raises(ValueError, match=f"{root}: stage 'a' has no done row"):
+        read_committed(spark, root, "a")
+
+
 def test_done_rows_count_the_committed_tables(spark, tmp_path):
     """The done row's `rows` comes from the write itself; it must equal
     a count of the table on disk, also for a stage that comes out
@@ -89,7 +114,10 @@ def test_done_rows_count_the_committed_tables(spark, tmp_path):
     )
     rows = spark.read.parquet(str(tmp_path / "counted" / MANIFEST)).collect()
     done = {r.stage: r.rows for r in rows if r.status == "done"}
-    assert done == {s: cat.read(s).count() for s in ("full", "empty", "parted")}
+    assert done == {
+        s: spark.read.parquet(str(tmp_path / "counted" / s)).count()
+        for s in ("full", "empty", "parted")
+    }
     assert done == {"full": 37, "empty": 0, "parted": 23}
     assert runner.summary["stage_rows"] == done
 
@@ -111,11 +139,12 @@ def test_histogram_is_counted_during_the_write_and_resumed(spark, tmp_path):
             v = F.when(F.col("id") < 3, "a").otherwise("c").alias("v")
             runner.commit("h", spark.range(10).select(v))
         if not runner.resumable("empty"):
-            runner.commit("empty", cat.read("h").filter(F.col("v") == "b"))
+            runner.commit("empty", runner.read("h").filter(F.col("v") == "b"))
         return runner
 
     first = run("r1")
-    grouped = {r.v: r["count"] for r in cat.read("h").groupBy("v").count().collect()}
+    h = spark.read.parquet(str(tmp_path / "hist" / "h"))
+    grouped = {r.v: r["count"] for r in h.groupBy("v").count().collect()}
     assert first.histogram("h") == grouped == {"a": 3, "c": 7}
     assert first.histogram("empty") == {}
     again = run("r2")

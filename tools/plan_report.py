@@ -63,7 +63,7 @@ REPORT = [
         "Multi-band hyperplane LSH near-dups: bucket-collect pair "
         "generation — no join operator, one groupBy Exchange on "
         "(band, bits); round 9: in-bucket pairwise cosine runs in ONE "
-        "MapInPandas (numpy left-fold, bit-identical to the old HOF "
+        "MapInArrow (numpy left-fold, bit-identical to the old HOF "
         "fold — similarity.py).",
         "embedding_neardup_pairs",
     ),
@@ -147,7 +147,7 @@ REPORT = [
     (
         "ann_ivf_batch_topk_gemm",
         "GEMM serving scorer: the index side is consumed in place by ONE "
-        "MapInPandas (no Exchange below it — one numpy matmul per "
+        "MapInArrow (no Exchange below it — one numpy matmul per "
         "(partition, cell) + local top-k/slack band), so the per-query "
         "window Exchange moves ~partitions x queries x k rows instead of "
         "every scored pair (~200x fewer at 500k/2k; 7.3x faster serve, "
