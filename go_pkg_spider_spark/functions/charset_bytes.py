@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.sql import Column
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..session import row_udf
@@ -258,8 +259,13 @@ SNIFF_SCHEMA = StructType(
 )
 
 
-# bytes(): the decode attempts call bytes.decode, which a zero-copy
-# memoryview lacks
-sniff_charset_udf = row_udf(
-    lambda b, d: sniff_charset(None if b is None else bytes(b), d), SNIFF_SCHEMA
-)
+def _sniff_row(b, declared) -> tuple:
+    # bytes(): the decode attempts call bytes.decode, which a zero-copy
+    # memoryview lacks
+    return sniff_charset(None if b is None else bytes(b), declared)
+
+
+def sniff_charset_udf(*cols) -> Column:
+    """sniff_charset over (data binary, declared string) columns, as a
+    SNIFF_SCHEMA struct."""
+    return row_udf(_sniff_row, SNIFF_SCHEMA)(*cols)

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from difflib import SequenceMatcher
 
+from pyspark.sql import Column
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..session import row_udf
@@ -40,4 +41,7 @@ def best_match(cands, t) -> tuple:
     return best, round(best_r, 6)
 
 
-best_match_udf = row_udf(best_match, BEST_MATCH_SCHEMA)
+def best_match_udf(*cols) -> Column:
+    """best_match over (candidates array<string>, target string)
+    columns, as a BEST_MATCH_SCHEMA struct."""
+    return row_udf(best_match, BEST_MATCH_SCHEMA)(*cols)

@@ -419,13 +419,10 @@ def _simhash64_row(t) -> int:
     return int((bits << _SHIFTS).sum(dtype=np.uint64).astype(np.int64))
 
 
-_simhash64_udf = row_udf(_simhash64_row, LongType())
-
-
 def simhash64(text: Column) -> Column:
     """64-bit SimHash (Charikar 2002) of the token multiset: per-bit
     majority vote over token hashes. Arrow-batched numpy — the pure
     column form (64 bit-lanes of zip_with per token) measured ~8ms/doc
     because the codegen expression is O(64 * tokens); one numpy
     matrix-vote per batch is ~100x cheaper."""
-    return _simhash64_udf(text)
+    return row_udf(_simhash64_row, LongType())(text)

@@ -20,9 +20,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
-from ..session import arrow_column, arrow_table, map_rows
+from ..session import vector_matrix
 from .bucketing import capped_buckets
 
 # Rows lsh_bucketed_topk returns; oracle_sql_gen.ann_lsh_topk_sql ranks
@@ -210,32 +211,47 @@ def embedding_neardup_pairs(
     )
     thr_floor = float(threshold) - (10.0 ** -round_digits)
 
-    def score_bucket(ms):
-        m = len(ms)
-        if m < 2:
-            return []
-        ids = [r["id"] for r in ms]
-        dim_v = next((len(r["v"]) for r in ms if r["v"] is not None), 0)
-        V = np.zeros((m, dim_v), dtype=np.float64)
-        nv = np.zeros(m, dtype=np.float64)
-        for i, r in enumerate(ms):
-            if r["v"] is not None and r["nv"] is not None:
-                V[i] = np.asarray(r["v"], dtype=np.float64)
-                nv[i] = r["nv"]
-        acc = np.zeros((m, m), dtype=np.float64)
-        for k in range(dim_v):  # left fold, ascending k
-            col = V[:, k]
-            acc += col[:, None] * col[None, :]
-        d = nv[:, None] * nv[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(d > 0, acc / d, 0.0)
-        iu, ju = np.triu_indices(m, 1)
-        c = cos[iu, ju]
-        keep = c >= thr_floor
-        return [(ids[i], ids[j], x) for i, j, x in zip(iu[keep], ju[keep], c[keep].tolist())]
+    arrow_schema = to_arrow_schema(out_schema)
+
+    def score_buckets(batches):
+        for batch in batches:
+            # every member of the batch's buckets as one matrix; a
+            # bucket is a run of rows [s, e) of it
+            ms = batch.column(0)
+            member = dict(zip((f.name for f in ms.type.value_type), ms.flatten().flatten()))
+            V, live = vector_matrix(member["v"])
+            live &= member["nv"].is_valid().to_numpy(zero_copy_only=False)
+            V[~live] = 0.0
+            nv = np.where(live, member["nv"].to_numpy(zero_copy_only=False), 0.0)
+            ends = np.cumsum(pc.list_value_length(ms).fill_null(0).to_numpy())
+            ia, ib, cs = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)], [np.zeros(0)]
+            for s, e in zip([0, *ends[:-1].tolist()], ends.tolist()):
+                m = e - s
+                if m < 2:
+                    continue
+                Vb, nb = V[s:e], nv[s:e]
+                acc = np.zeros((m, m), dtype=np.float64)
+                for k in range(V.shape[1]):  # left fold, ascending k
+                    col = Vb[:, k]
+                    acc += col[:, None] * col[None, :]
+                d = nb[:, None] * nb[None, :]
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = np.where(d > 0, acc / d, 0.0)
+                iu, ju = np.triu_indices(m, 1)
+                c = cos[iu, ju]
+                keep = c >= thr_floor
+                ia.append(s + iu[keep])
+                ib.append(s + ju[keep])
+                cs.append(c[keep])
+            ids = member["id"]
+            a, b = ids.take(np.concatenate(ia)), ids.take(np.concatenate(ib))
+            yield pa.RecordBatch.from_arrays(
+                [a, b, pa.array(np.concatenate(cs))], schema=arrow_schema
+            )
 
     return (
-        map_rows(buckets.select("ms"), score_bucket, out_schema)
+        buckets.select("ms")
+        .mapInArrow(score_buckets, out_schema)
         .select(
             "id_a",
             "id_b",
@@ -362,15 +378,13 @@ def _ivf_assign_arrow(vec: Column, centroids: list[list[float]]) -> Column:
 
     @F.arrow_udf(IntegerType())
     def assign(batch: pa.Array) -> pa.Array:
-        vecs = batch.to_pylist()
-        live = [i for i, v in enumerate(vecs) if v is not None]
-        out = [None] * len(vecs)
-        if live:
-            X = np.array([vecs[i] for i in live], dtype=np.float64)
+        X, live = vector_matrix(batch)
+        cells = np.zeros(len(batch), dtype=np.int32)
+        if live.any():
+            X = X[live]
             d = (X * X).sum(axis=1)[:, None] - 2.0 * (X @ C.T) + c_sq[None, :]
-            for i, cell in zip(live, np.argmin(d, axis=1).tolist()):
-                out[i] = cell
-        return arrow_column(out, IntegerType())
+            cells[live] = np.argmin(d, axis=1)
+        return pa.array(cells, mask=~live)
 
     return assign(vec)
 
@@ -636,13 +650,12 @@ def ivf_topk_batch_gemm(
                 for c in np.unique(cells).tolist():
                     if c in bc.value:
                         groups.setdefault(c, []).append(batch.filter(pa.array(cells == c)))
-            out = []
+            qids, q_of, ids_of, cos_of = [], [], [], []
             for c, parts in groups.items():
-                grp = pa.Table.from_batches(parts)
-                ids = grp.column("_id").to_numpy()
-                vs = grp.column("_v").combine_chunks()
-                V = vs.flatten().to_numpy(zero_copy_only=False).astype(np.float64)
-                V = V.reshape(len(vs), -1) if V.size else np.zeros((len(vs), 0))
+                grp = pa.Table.from_batches(parts).combine_chunks()
+                id_col = grp.column("_id").chunk(0)
+                ids = id_col.to_numpy(zero_copy_only=False)
+                V = vector_matrix(grp.column("_v").chunk(0))[0]
                 vn = np.sqrt((V * V).sum(axis=1))
                 for qid, qv in bc.value[c]:
                     qn = float(np.sqrt((qv * qv).sum()))
@@ -690,11 +703,19 @@ def ivf_topk_batch_gemm(
                             "keeping all in-band rows for parity",
                             file=_sys.stderr,
                         )
-                    out.extend(
-                        (qid, i, x) for i, x in zip(ids[band].tolist(), cos[band].tolist())
-                    )
-            if out:
-                yield from arrow_table(out, out_schema).to_batches()
+                    q_of.append(np.full(len(band), len(qids)))
+                    qids.append(qid)
+                    ids_of.append(id_col.take(band))
+                    cos_of.append(cos[band])
+            if qids:
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        pa.array(qids, arrow_schema.field("qid").type).take(np.concatenate(q_of)),
+                        pa.concat_arrays(ids_of),
+                        pa.array(np.concatenate(cos_of)),
+                    ],
+                    schema=arrow_schema,
+                )
 
         return score_partition
 
@@ -705,6 +726,7 @@ def ivf_topk_batch_gemm(
             StructField("_cos", DoubleType()),
         ]
     )
+    arrow_schema = to_arrow_schema(out_schema)
 
     # (cell -> queries probing it) to every scan task, one CHUNK of the
     # probe batch at a time. qn recomputed in numpy from the SAME

@@ -205,7 +205,7 @@ def read_committed(spark, root: str, stage: str):
     row records (stages.read_stage), so a cross-root read starts no
     schema-inference job. A root whose latest row for the stage is not
     a done row with a schema (one written before the schema was
-    recorded) is an error: rerunning the batch job on that root
+    recorded) is an error: rerunning the run that wrote that root
     recommits the stage."""
     from go_pkg_spider_spark.io.catalog import Catalog
     from go_pkg_spider_spark.io.stages import read_stage
@@ -214,7 +214,9 @@ def read_committed(spark, root: str, stage: str):
     if done is None or done.schema is None:
         raise ValueError(
             f"{root}: stage {stage!r} has no done row with a recorded schema; "
-            "rerun the batch job on this root to recommit it"
+            "rerun the run that wrote this root (the batch job for a base "
+            "root, its --append run for an increments/<run_id> root) to "
+            "recommit it"
         )
     return read_stage(Catalog(spark, root), stage, done.schema)
 
@@ -250,11 +252,10 @@ def _require_fp_schema(spark, roots) -> None:
             )
 
 
-def _increment_roots(output_root: str) -> list[str]:
-    """Committed increment roots under output_root/increments, sorted
-    by name. Only increments whose DECISIONS stage committed count —
-    a crashed half-written increment is invisible to readers and its
-    re-run resumes from its own manifest."""
+def _started_increment_roots(output_root: str) -> list[str]:
+    """Increment roots under output_root/increments whose decisions
+    write has at least started (Spark creates the directory when the
+    write begins), sorted by name."""
     base = os.path.join(output_root, "increments")
     if not os.path.isdir(base):
         return []
@@ -263,6 +264,18 @@ def _increment_roots(output_root: str) -> list[str]:
         for d in os.listdir(base)
         if os.path.isdir(os.path.join(base, d, "decisions"))
     )
+
+
+def _increment_roots(spark, output_root: str) -> list[str]:
+    """Committed increment roots under output_root/increments, sorted
+    by name: those whose latest DECISIONS row is done. A crashed
+    half-written increment is invisible to readers and its re-run
+    resumes from its own manifest."""
+    return [
+        r
+        for r in _started_increment_roots(output_root)
+        if latest_done_row(spark, r, "decisions") is not None
+    ]
 
 
 def read_all_fingerprints(spark, output_root: str, inc_roots=None):
@@ -275,7 +288,7 @@ def read_all_fingerprints(spark, output_root: str, inc_roots=None):
     mid-run."""
     df = read_committed(spark, output_root, "fingerprints")
     if inc_roots is None:
-        inc_roots = _increment_roots(output_root)
+        inc_roots = _increment_roots(spark, output_root)
     for root in inc_roots:
         df = df.unionByName(read_committed(spark, root, "fingerprints"))
     return df
@@ -287,7 +300,7 @@ def read_all_decisions(spark, output_root: str, inc_roots=None):
     as in read_all_fingerprints."""
     df = read_committed(spark, output_root, "decisions")
     if inc_roots is None:
-        inc_roots = _increment_roots(output_root)
+        inc_roots = _increment_roots(spark, output_root)
     for root in inc_roots:
         df = df.unionByName(read_committed(spark, root, "decisions"))
     return df
@@ -362,7 +375,7 @@ def run_audio_dedup_increment(
         # the batch against its own prior fingerprints and attach to
         # its own stale decisions.
         index_incs = [
-            r for r in _increment_roots(output_root) if r != inc_root
+            r for r in _increment_roots(spark, output_root) if r != inc_root
         ]
         _require_fp_schema(spark, [output_root, *index_incs])
         index_fp = read_all_fingerprints(
@@ -460,7 +473,7 @@ def run_audio_dedup_compact(
         raise ValueError(
             f"no committed run_audio_dedup state under {source_root!r}"
         )
-    inc_roots = _increment_roots(source_root)
+    inc_roots = _increment_roots(spark, source_root)
 
     params: dict = {
         "compacted_from": source_root,

@@ -143,7 +143,7 @@ def cmd_audio_dedup(args) -> dict:
     only state (foreachBatch holds none, so no unbounded-state dial
     applies here)."""
     from run_audio_dedup import (
-        _increment_roots,
+        _started_increment_roots,
         latest_done_row,
         run_audio_dedup_increment,
     )
@@ -181,7 +181,7 @@ def cmd_audio_dedup(args) -> dict:
         q.stop()
 
     prefix = os.path.join(args.dedup_root, "increments", args.stream_id + "-")
-    inc_roots = [r for r in _increment_roots(args.dedup_root) if r.startswith(prefix)]
+    inc_roots = [r for r in _started_increment_roots(args.dedup_root) if r.startswith(prefix)]
     # each increment's decisions commit recorded its rows and histogram
     # in its done row: sum those, read no table back
     hist: Counter = Counter()

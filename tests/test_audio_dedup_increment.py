@@ -265,6 +265,44 @@ def test_increment_rerun_resumes(spark, tmp_path):
     assert read_all_decisions(spark, root).count() == 3
 
 
+def test_crashed_increment_is_invisible_to_readers(spark, tmp_path):
+    """An increment whose decisions commit crashed (its latest decisions
+    row is `running`, and its decisions directory exists, since Spark
+    makes it when the write starts) is not committed: the reads of the
+    committed state and the next --append leave it out instead of
+    failing on it."""
+    import jobs.run_audio_dedup as rad
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import append_rows
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+
+    rows = _rows_by_id()
+    root = str(tmp_path / "root")
+    run_audio_dedup(
+        spark, _df(spark, [rows["a0"], rows["b0"]]), root,
+        run_id="base", tier="subfp",
+    )
+    for run_id, cid in (("inc1", "a1"), ("inc2", "a2")):
+        run_audio_dedup_increment(
+            spark, _df(spark, [rows[cid]]), root, run_id=run_id, tier="subfp"
+        )
+    inc1, inc2 = (os.path.join(root, "increments", r) for r in ("inc1", "inc2"))
+    append_rows(
+        Catalog(spark, inc2),
+        rad.AUDIO_DEDUP_MANIFEST_TABLE,
+        STAGE_MANIFEST_SCHEMA,
+        [{"stage": "decisions", "status": "running", "run_id": "inc2"}],
+    )
+    assert rad._started_increment_roots(root) == [inc1, inc2]
+    assert rad._increment_roots(spark, root) == [inc1]
+    assert sorted(_decisions(spark, root)) == ["a0", "a1", "b0"]
+    s = run_audio_dedup_increment(
+        spark, _df(spark, [rows["a4"]]), root, run_id="inc3", tier="subfp"
+    )
+    assert s["stages_run"] == 4
+    assert sorted(_decisions(spark, root)) == ["a0", "a1", "a4", "b0"]
+
+
 def test_cross_root_reads_start_no_schema_job(spark, tmp_path, jobs_of):
     """The reads an increment makes of the committed state (every
     root's fingerprints, then every root's decisions) take each table's

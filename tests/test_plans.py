@@ -96,32 +96,15 @@ def test_entry_evaluates_the_guards_once(spark):
     assert plan.count(ZH_LICENCE_BLACKLIST_RE) == 1
 
 
-# every module that defines a Python UDF or map function
-UDF_MODULES = (
-    "operators.fused",
-    "operators.dedup",
-    "operators.similarity",
-    "operators.audio_fp",
-    "operators.audio_features",
-    "functions.charset_bytes",
-    "functions.simtext",
-    "datagen",
-)
-
-
 def test_fused_import_leaves_pandas_out():
-    """Importing the fused UDF's module, or any other module that
-    defines a Python UDF or map function, loads no pandas: unpickling a
-    package UDF puts no pandas import on a Python worker. (pyarrow
-    16.1 still imports pandas on its own, at the first `pa.array` built
-    from Python objects, which every Arrow UDF's output does.)"""
+    """The fused UDF's import chain is pandas-free: unpickling it puts
+    no pandas import on a Python worker. (pyarrow 16.1 still imports
+    pandas itself at the first `pa.array` built from Python objects.)"""
     import subprocess
     import sys
 
     code = (
-        "import importlib, sys\n"
-        f"for m in {UDF_MODULES!r}:\n"
-        "    importlib.import_module('go_pkg_spider_spark.' + m)\n"
+        "import sys, go_pkg_spider_spark.operators.fused; "
         "print('pandas' in sys.modules)"
     )
     out = subprocess.run(

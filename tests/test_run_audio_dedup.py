@@ -160,8 +160,12 @@ class _Built(Exception):
 def test_params_sig_goldens(spark, tmp_path, monkeypatch, mode):
     """Each mode builds its StageRunner with the golden params_sig. The
     job stops as soon as the runner exists, so no stage runs; the
-    source root is a committed-looking layout with one increment."""
+    source root is a committed-looking layout with one increment (its
+    manifest's latest decisions row is done)."""
     from go_pkg_spider_spark.io import stages
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import append_rows
+    from jobs.run_audio_dedup import AUDIO_DEDUP_MANIFEST_TABLE
 
     class Capture(stages.StageRunner):
         def __init__(self, *a, **k):
@@ -173,6 +177,12 @@ def test_params_sig_goldens(spark, tmp_path, monkeypatch, mode):
     for d in (root / "decisions", root / "increments" / "inc1" / "decisions"):
         d.mkdir(parents=True)
         (d / "_SUCCESS").touch()
+    append_rows(
+        Catalog(spark, str(root / "increments" / "inc1")),
+        AUDIO_DEDUP_MANIFEST_TABLE,
+        stages.STAGE_MANIFEST_SCHEMA,
+        [{"stage": "decisions", "status": "done"}],
+    )
     src, target = str(root), str(tmp_path / "target")
     calls = {
         "batch_fp64": lambda: run_audio_dedup(spark, None, src),

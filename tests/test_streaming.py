@@ -427,7 +427,7 @@ def test_run_streaming_cli_audio_dedup_summary_and_restart(spark, tmp_path, monk
         "--max-files-per-trigger", "1", "--available-now",
     ]
     s1 = _run_streaming_cli(argv)
-    incs = _increment_roots(root)
+    incs = _increment_roots(spark, root)
     assert s1["increments"] == len(incs) == 2
     grouped = Counter()
     for inc in incs:
@@ -438,7 +438,7 @@ def test_run_streaming_cli_audio_dedup_summary_and_restart(spark, tmp_path, monk
     assert grouped["drop_audio_dup"] == 2  # a1 -> a0, x1 -> x0
 
     s2 = _run_streaming_cli(argv)  # restart: the checkpoint consumed both files
-    assert _increment_roots(root) == incs
+    assert _increment_roots(spark, root) == incs
     assert s2 == s1
 
     # a decisions done row written before histograms were recorded (a
