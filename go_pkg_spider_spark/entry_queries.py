@@ -606,9 +606,10 @@ def ann_ivf_batch_topk(spark, sf_dir):
     """Multi-query IVF ANN (similarity.ivf_topk_batch): the 3
     smallest-id embeddings queried as a BATCH against the same
     SQL-reproducible trained index as ann_ivf_topk_embeddings — probe
-    cells broadcast onto the cell-assigned index, one equi-join, one
-    per-query top-k window. This is the serving shape
-    jobs/run_ann_index.py materializes at scale."""
+    cells broadcast to the index scan, one numpy matmul per (partition,
+    cell) with a local top-k inside mapInArrow, one per-query top-k
+    window. This is the serving shape jobs/run_ann_index.py runs at
+    scale."""
     e = _t(spark, sf_dir, "embeddings", spread=True, pin=True).withColumn(
         "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
     )
@@ -624,43 +625,6 @@ def ann_ivf_batch_topk(spark, sf_dir):
         .select(F.col("vec_id").alias("qid"), "embedding")
     )
     return similarity.ivf_topk_batch(
-        e,
-        queries,
-        "embedding",
-        "vec_id",
-        "qid",
-        cents,
-        k=10,
-        n_probe=4,
-        round_digits=4,
-    )
-
-
-@query(
-    "ann_ivf_batch_topk_gemm",
-    oracle_sql_gen.ann_ivf_batch_topk_sql(_EMB_DIM, n_queries=3),
-)
-def ann_ivf_batch_topk_gemm(spark, sf_dir):
-    """The GEMM serving scorer (similarity.ivf_topk_batch_gemm) under
-    the same oracle as the join scorer — the two are bit-identical by
-    the slack-band contract (one numpy matmul per (partition, cell)
-    with a local top-k that keeps every candidate within a rounding
-    quantum of the kth best, so accumulation-order differences cannot
-    change the rounded global top-k). Same trained index, same query
-    batch as ann_ivf_batch_topk."""
-    e = _t(spark, sf_dir, "embeddings", spread=True, pin=True).withColumn(
-        "embedding", F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    )
-    cents = similarity.train_ivf_centroids_distributed(
-        e, "embedding", "vec_id", k=8, iters=1
-    )
-    queries = (
-        e.filter(F.col("embedding").isNotNull())  # oracle e-CTE parity
-        .orderBy("vec_id")
-        .limit(3)
-        .select(F.col("vec_id").alias("qid"), "embedding")
-    )
-    return similarity.ivf_topk_batch_gemm(
         e,
         queries,
         "embedding",

@@ -29,6 +29,15 @@ from .bucketing import capped_buckets
 # Rows lsh_bucketed_topk returns; oracle_sql_gen.ann_lsh_topk_sql ranks
 # the same number.
 LSH_TOPK = 10
+# lsh_bucketed_topk's signature width and Hamming prune radius
+LSH_PLANES = 8
+LSH_MAX_HAMMING_BITS = 2
+# embedding_neardup_pairs' banding: NEARDUP_BANDS bands of
+# NEARDUP_PLANES_PER_BAND sign bits each
+NEARDUP_BANDS = 4
+NEARDUP_PLANES_PER_BAND = 8
+# LCG seed of _seeded_planes; the oracle SQL inlines the same planes
+PLANE_SEED = 42
 
 
 def lit_double_array(vec) -> Column:
@@ -85,10 +94,11 @@ def brute_force_topk(
     )
 
 
-def _seeded_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
-    """Deterministic pseudo-random hyperplanes (LCG; no numpy needed at
-    plan-build time — these fold into literals)."""
-    state = seed * 6364136223846793005 + 1442695040888963407
+def _seeded_planes(dim: int, n_planes: int) -> list[list[float]]:
+    """Deterministic pseudo-random hyperplanes (LCG seeded with
+    PLANE_SEED; no numpy needed at plan-build time — these fold into
+    literals)."""
+    state = PLANE_SEED * 6364136223846793005 + 1442695040888963407
     planes = []
     for _ in range(n_planes):
         row = []
@@ -118,21 +128,19 @@ def lsh_bucketed_topk(
     vec_col: str,
     id_col: str,
     query: list[float],
-    n_planes: int = 8,
-    max_hamming_bits: int = 2,
     round_digits: int = 6,
 ) -> DataFrame:
-    """ANN: prune to vectors whose hyperplane signature is within
-    `max_hamming_bits` of the query's, then exact-cosine top-LSH_TOPK on
-    the survivors. Recall/probe tradeoff via n_planes/max_hamming_bits."""
+    """ANN: prune to vectors whose LSH_PLANES-bit hyperplane signature
+    is within LSH_MAX_HAMMING_BITS of the query's, then exact-cosine
+    top-LSH_TOPK on the survivors."""
     dim = len(query)
-    planes = _seeded_planes(dim, n_planes)
+    planes = _seeded_planes(dim, LSH_PLANES)
     qbits = 0
     for i, p in enumerate(planes):
         if sum(px * qx for px, qx in zip(p, query)) >= 0:
             qbits |= 1 << i
     sig = hyperplane_bits(F.col(vec_col), planes)
-    pruned = df.filter(F.bit_count(sig.bitwiseXOR(F.lit(qbits))) <= max_hamming_bits)
+    pruned = df.filter(F.bit_count(sig.bitwiseXOR(F.lit(qbits))) <= LSH_MAX_HAMMING_BITS)
     return brute_force_topk(pruned, vec_col, id_col, query, LSH_TOPK, round_digits)
 
 
@@ -142,15 +150,14 @@ def embedding_neardup_pairs(
     id_col: str,
     dim: int,
     threshold: float = 0.95,
-    bands: int = 4,
-    planes_per_band: int = 8,
     round_digits: int = 6,
     max_bucket_size: int = 1024,
 ) -> DataFrame:
-    """Near-duplicate vector pairs via MULTI-BAND hyperplane LSH: bands
-    of planes_per_band sign bits each; a pair is a candidate when it
-    agrees on ALL bits of at least one band (recall grows with bands,
-    precision with planes_per_band — the banded-LSH tradeoff, MMDS ch.3).
+    """Near-duplicate vector pairs via MULTI-BAND hyperplane LSH:
+    NEARDUP_BANDS bands of NEARDUP_PLANES_PER_BAND sign bits each; a
+    pair is a candidate when it agrees on ALL bits of at least one band
+    (recall grows with bands, precision with planes per band — the
+    banded-LSH tradeoff, MMDS ch.3).
     Exact cosine verifies candidates.
 
     Plan shape: NO driver action at build time (dim is a parameter — the
@@ -162,13 +169,12 @@ def embedding_neardup_pairs(
 
     max_bucket_size bounds hot buckets (bounded task memory; overflow
     counted per bucket — operators/bucketing.py)."""
-    all_planes = _seeded_planes(dim, bands * planes_per_band)
+    ppb = NEARDUP_PLANES_PER_BAND
+    all_planes = _seeded_planes(dim, NEARDUP_BANDS * ppb)
     band_sigs = F.array(
         *[
-            hyperplane_bits(
-                F.col(vec_col), all_planes[b * planes_per_band : (b + 1) * planes_per_band]
-            )
-            for b in range(bands)
+            hyperplane_bits(F.col(vec_col), all_planes[b * ppb : (b + 1) * ppb])
+            for b in range(NEARDUP_BANDS)
         ]
     )
     # norms ride the member struct: computed ONCE per (row, band)
@@ -438,11 +444,10 @@ def _probe_cells(
     centroids: list[list[float]],
     n_probe: int,
 ) -> DataFrame:
-    """(qid, _qv, _qn, cell) — one row per (query, probed cell), the
-    query side shared by BOTH serving scorers so probe selection is
-    bit-identical between them. Ties break to the LOWEST cell id
-    (struct array_sort on (dist, cell)); NULL query vectors are dropped
-    (their centroid distances are NULL — probe order would be
+    """(qid, _qv, cell) — one row per (query, probed cell), the query
+    side of ivf_topk_batch. Ties break to the LOWEST cell id (struct
+    array_sort on (dist, cell)); NULL query vectors are dropped (their
+    centroid distances are NULL — probe order would be
     engine-defined)."""
     from ..functions.expr_utils import let_col
 
@@ -457,95 +462,23 @@ def _probe_cells(
     return queries_df.select(
         F.col(qid_col),
         F.col(vec_col).alias("_qv"),
-        norm(F.col(vec_col)).alias("_qn"),
         let_col(dist_structs, lambda d: F.slice(F.array_sort(d), 1, n_probe)).alias(
             "_pr"
         ),
     ).select(
         qid_col,
         "_qv",
-        "_qn",
         F.explode(F.transform(F.col("_pr"), lambda t: t["cell"])).alias("cell"),
     )
 
 
-def ivf_topk_batch(
-    index_df: DataFrame,
-    queries_df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    qid_col: str,
-    centroids: list[list[float]],
-    k: int = 10,
-    n_probe: int = 4,
-    round_digits: int = 6,
-    cell_col: str | None = None,
-) -> DataFrame:
-    """Multi-query IVF ANN as ONE equi-join plan — the serving shape of
-    jobs/run_ann_index.py (a query BATCH against a trained index, vs
-    ivf_topk's single driver-side query vector).
-
-    Scale story (100 TB index, thousands of queries):
-    - the index side is assigned to its coarse cell and, in production,
-      read from the table run_ann_index materializes partitioned by
-      `cell` — the cell equi-join then prunes at the scan (partition
-      pruning), exactly like ivf_topk's single-cell filter;
-    - the query side explodes to n_probe rows per query and BROADCASTS
-      onto the index: no shuffle of the index ever happens;
-    - per-pair cosine reuses pre-join norms (`_vn`/`_qn` computed once
-      per row per side — the embedding_neardup norm-hoist lesson, round
-      4), so the join adds only the O(dim) dot product;
-    - per-query top-k is a row_number window over the scored candidate
-      subset (bounded by n_queries x probed-cell sizes), partitioned by
-      query id — the only data-dependent shuffle in the plan.
-
-    Probe selection ties break to the LOWEST cell id (struct array_sort
-    on (dist, cell)), and result ties to the lowest candidate id after
-    rounding — both mirrored bit-for-bit by the DuckDB oracle
-    (oracle_sql_gen.ann_ivf_batch_topk_sql). Callers cast vec columns
-    to double first (like every oracle-twinned ANN entry).
-
-    cell_col: name of a PRECOMPUTED assignment column on index_df (the
-    table jobs/run_ann_index.py materializes — at scale, partitioned by
-    it so the probe join prunes whole partitions). Default None
-    recomputes the assignment inline with ivf_assign."""
-    from pyspark.sql import Window
-
-    probes = _probe_cells(queries_df, vec_col, qid_col, centroids, n_probe)
-    cell = (
-        F.col(cell_col).cast("int")
-        if cell_col is not None
-        else ivf_assign(F.col(vec_col), centroids)
-    )
-    idx = index_df.select(
-        F.col(id_col),
-        F.col(vec_col).alias("_v"),
-        norm(F.col(vec_col)).alias("_vn"),
-        cell.alias("cell"),
-    )
-    joined = idx.join(F.broadcast(probes), "cell")
-    den = F.col("_vn") * F.col("_qn")
-    cos = F.when(den > 0, dot(F.col("_v"), F.col("_qv")) / den).otherwise(F.lit(0.0))
-    scored = joined.select(
-        F.col(qid_col),
-        F.col(id_col),
-        F.round(cos, round_digits).alias("cosine_sim"),
-    )
-    w = Window.partitionBy(qid_col).orderBy(F.desc("cosine_sim"), F.col(id_col))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(qid_col, "rk", id_col, "cosine_sim")
-    )
-
-
 # chunk-persisted index projections awaiting release (see
-# ivf_topk_batch_gemm's multi-chunk index reuse note)
+# ivf_topk_batch's multi-chunk index reuse note)
 _SERVE_CACHES: list = []
 
 
 def release_serve_caches() -> int:
-    """Unpersist every index projection ivf_topk_batch_gemm cached for
+    """Unpersist every index projection ivf_topk_batch cached for
     a multi-chunk serve. Call AFTER materializing the returned frame
     (the serve stage and the streaming foreachBatch do); returns the
     number of caches released. SCOPE CONTRACT: the registry is
@@ -560,7 +493,7 @@ def release_serve_caches() -> int:
     return n
 
 
-def ivf_topk_batch_gemm(
+def ivf_topk_batch(
     index_df: DataFrame,
     queries_df: DataFrame,
     vec_col: str,
@@ -573,30 +506,41 @@ def ivf_topk_batch_gemm(
     cell_col: str | None = None,
     max_probe_rows_per_chunk: int = 100_000,
 ) -> DataFrame:
-    """ivf_topk_batch's GEMM scorer: same probe selection (bit-identical
-    — the shared _probe_cells plan collected to the driver; the query
-    batch is broadcast-small BY CONTRACT, it is broadcast whole in the
-    join path too), but candidate scoring runs as one numpy matmul per
-    (partition, cell) inside mapInArrow with a LOCAL top-k — so the
-    per-query window shuffles ~partitions x queries x k rows instead of
-    every scored pair (500k-index / 2k-query / n_probe=8 measurement:
-    ~125M scored pairs -> ~600k local winners, BENCH/BASELINE.md).
+    """Multi-query IVF ANN — the serving shape of jobs/run_ann_index.py
+    (a query BATCH against a trained index, vs ivf_topk's single
+    driver-side query vector).
 
-    Parity contract vs the join path (asserted on real corpora in
-    tests/test_ivf): identical (qid, rk, id, cosine_sim) rows. The only
-    theoretical divergence is double accumulation order (GEMM pairwise
-    vs HOF sequential) surfacing through the round_digits rounding; the
-    local top-k therefore keeps a FULL SLACK BAND — every candidate
-    within one rounding quantum (10^-round_digits) of the local kth
-    best — so no row that could round into the global top-k is dropped
-    before the exact Spark-side round + window. Exact score ties (e.g.
-    a zero-norm flood scoring 0.0) are resolved by id inside the band,
-    identically to the window's tie-break. Index rows with NULL vectors
-    or NULL cells are skipped (the join path drops them at the join).
+    Probes: _probe_cells picks each query's n_probe nearest cells (ties
+    to the LOWEST cell id) and the probe rows are collected to the
+    driver — the query batch is broadcast-small by contract. Candidate
+    scoring runs as one numpy matmul per (partition, cell) inside
+    mapInArrow with a LOCAL top-k, so the per-query window shuffles
+    ~partitions x queries x k rows instead of every scored pair
+    (500k-index / 2k-query / n_probe=8 measurement: ~125M scored pairs
+    -> ~600k local winners, BENCH/BASELINE.md). Result ties break to
+    the lowest candidate id after rounding; both tie rules are mirrored
+    bit-for-bit by the DuckDB oracle (oracle_sql_gen.
+    ann_ivf_batch_topk_sql). Callers cast vec columns to double first
+    (like every oracle-twinned ANN entry).
 
-    The index side still never shuffles: mapInArrow consumes scan
-    partitions in place (at scale, the cell-partitioned table), and the
-    same small-split lesson applies (run_ann_index.py session conf).
+    Rounding contract: the numpy matmul accumulates each dot product in
+    another order than the oracle's and ivf_topk's sequential sums, so
+    the raw cosines can differ in the last bits. The local top-k
+    therefore keeps a FULL SLACK BAND — every candidate within one
+    rounding quantum (10^-round_digits) of the local kth best — so no
+    row that could round into the global top-k is dropped before the
+    exact Spark-side round + window. Exact score ties (e.g. a zero-norm
+    flood scoring 0.0) are resolved by id inside the band, identically
+    to the window's tie-break. Index rows with NULL vectors or NULL
+    cells are skipped; NULL query vectors return no rows.
+
+    The index side never shuffles: mapInArrow consumes scan partitions
+    in place (at scale, the cell-partitioned table), and the small-split
+    lesson applies (run_ann_index.py session conf).
+
+    cell_col: name of a PRECOMPUTED assignment column on index_df (the
+    table jobs/run_ann_index.py materializes, partitioned by it).
+    Default None recomputes the assignment inline with ivf_assign.
 
     Driver-memory bound (round-7, VERDICT r6 #4): the probe batch is
     streamed to the driver via toLocalIterator and broadcast in chunks
@@ -617,7 +561,7 @@ def ivf_topk_batch_gemm(
     (measured: BENCH/BASELINE.md round-8 section). The cache is scoped
     to the returned plan: callers that materialize once (every oracled
     entry, the serve stage) should release it afterwards via
-    release_serve_caches(spark) — jobs/run_ann_index.py does. At an
+    release_serve_caches() — jobs/run_ann_index.py does. At an
     index far larger than cluster storage-memory the cache degrades to
     disk-spill reads, which is the same order as the repeated columnar
     scan it replaces."""
@@ -697,7 +641,7 @@ def ivf_topk_batch_gemm(
                         import sys as _sys
 
                         print(
-                            f"ivf_topk_batch_gemm: slack band {len(band)} "
+                            f"ivf_topk_batch: slack band {len(band)} "
                             f"rows exceeds soft cap {band_cap} "
                             f"(qid={qid!r}, cell={c}) — near-tie flood, "
                             "keeping all in-band rows for parity",
@@ -729,8 +673,7 @@ def ivf_topk_batch_gemm(
     arrow_schema = to_arrow_schema(out_schema)
 
     # (cell -> queries probing it) to every scan task, one CHUNK of the
-    # probe batch at a time. qn recomputed in numpy from the SAME
-    # collected vector the join path would use; norms only gate the
+    # probe batch at a time. Norms are numpy's; they only gate the
     # zero-denominator case (exact 0 either way).
     chunk_dfs = []
     per_cell: dict[int, list] = {}

@@ -25,7 +25,13 @@ data, so oracle_sql() stays a static dict.
 from __future__ import annotations
 
 from .operators.dedup import minhash_params
-from .operators.similarity import _seeded_planes
+from .operators.similarity import (
+    LSH_MAX_HAMMING_BITS,
+    LSH_PLANES,
+    NEARDUP_BANDS,
+    NEARDUP_PLANES_PER_BAND,
+    _seeded_planes,
+)
 
 MOD64 = "18446744073709551616::HUGEINT"  # 2^64
 
@@ -138,13 +144,11 @@ def ann_lsh_topk_sql(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     k: int = 10,
-    n_planes: int = 8,
-    max_hamming_bits: int = 2,
     round_digits: int = 4,
 ) -> str:
     """Hyperplane-LSH pruned ANN top-k (similarity.lsh_bucketed_topk)."""
     dim = len(query_vec)
-    planes = _seeded_planes(dim, n_planes)
+    planes = _seeded_planes(dim, LSH_PLANES)
     qbits = 0
     for i, p in enumerate(planes):
         if sum(px * qx for px, qx in zip(p, query_vec)) >= 0:
@@ -158,7 +162,7 @@ def ann_lsh_topk_sql(
     )
     SELECT {id_col}, round(list_cosine_similarity(v, {q}), {round_digits}) AS cosine_sim
     FROM sig
-    WHERE bit_count(xor(s::BIGINT, {qbits}::BIGINT)) <= {max_hamming_bits}
+    WHERE bit_count(xor(s::BIGINT, {qbits}::BIGINT)) <= {LSH_MAX_HAMMING_BITS}
     ORDER BY cosine_sim DESC, {id_col}
     LIMIT {k}
     """
@@ -302,17 +306,16 @@ def embedding_neardup_sql(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     threshold: float = 0.25,
-    bands: int = 4,
-    planes_per_band: int = 8,
     round_digits: int = 4,
 ) -> str:
     """Multi-band hyperplane near-dup pairs (similarity.
     embedding_neardup_pairs): candidates share ALL sign bits of at least
     one band; exact cosine verifies."""
-    all_planes = _seeded_planes(dim, bands * planes_per_band)
+    ppb = NEARDUP_PLANES_PER_BAND
+    all_planes = _seeded_planes(dim, NEARDUP_BANDS * ppb)
     band_sigs = ", ".join(
-        hyperplane_sig_expr("v", all_planes[b * planes_per_band : (b + 1) * planes_per_band])
-        for b in range(bands)
+        hyperplane_sig_expr("v", all_planes[b * ppb : (b + 1) * ppb])
+        for b in range(NEARDUP_BANDS)
     )
     return f"""
     WITH e AS (
@@ -321,7 +324,7 @@ def embedding_neardup_sql(
       SELECT id, v, [{band_sigs}] AS sigs FROM e
     ), sig AS (
       SELECT id, v, b, sigs[b + 1] AS bits
-      FROM s4 CROSS JOIN unnest(range(0, {bands})) AS t(b)
+      FROM s4 CROSS JOIN unnest(range(0, {NEARDUP_BANDS})) AS t(b)
     )
     SELECT DISTINCT a.id AS id_a, b.id AS id_b,
            round(list_cosine_similarity(a.v, b.v), {round_digits}) AS cosine_sim

@@ -28,6 +28,8 @@ from ..schemas import CLIPS_SCHEMA
 # Digits the served cosine is rounded to: run_ann_index's default, so a
 # stream over a committed index returns the rows its batch top-k does.
 SERVE_ROUND_DIGITS = 6
+# The precomputed cell column of run_ann_index's committed index table.
+SERVE_CELL_COL = "cell"
 
 
 def read_clips_stream(spark: SparkSession, input_path: str, max_files_per_trigger: int = 8) -> DataFrame:
@@ -128,22 +130,19 @@ def stream_ann_topk(
     qid_col: str = "qid",
     k: int = 10,
     n_probe: int = 4,
-    cell_col: str | None = "cell",
     available_now: bool = False,
     event_time_col: str | None = None,
     dedup_watermark: str = "10 minutes",
-    scorer: str = "join",
     allow_unbounded_state: bool = False,
 ) -> StreamingQuery:
     """Online ANN serving: micro-batches of query vectors against the
     STATIC cell-partitioned index committed by jobs/run_ann_index.py.
     Each trigger runs the unchanged batch serving operator
-    (similarity.ivf_topk_batch, or its bit-identical GEMM scorer
-    with scorer="gemm") inside foreachBatch — the stream-static
-    join shape: the micro-batch's probes broadcast onto the index, so a
-    trigger scans only the probed cells (partition pruning against the
-    committed layout), and per-query top-k rows are independent of
-    batching, making stream output == batch output row-for-row.
+    (similarity.ivf_topk_batch over the index's precomputed
+    SERVE_CELL_COL) inside foreachBatch — the stream-static shape: the
+    micro-batch's probes are broadcast to the index scan, and per-query
+    top-k rows are independent of batching, making stream output ==
+    batch output row-for-row.
     Serve-once per qid (state-store backed): with `event_time_col` set,
     dropDuplicatesWithinWatermark bounds the dedup state to the
     `dedup_watermark` horizon — REQUIRED for a continuous deployment,
@@ -162,14 +161,8 @@ def stream_ann_topk(
         allow_unbounded_state, "stream_ann_topk",
     )
 
-    score = (
-        similarity.ivf_topk_batch_gemm
-        if scorer == "gemm"
-        else similarity.ivf_topk_batch
-    )
-
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        out = score(
+        out = similarity.ivf_topk_batch(
             index_df,
             batch_df,
             vec_col,
@@ -179,10 +172,10 @@ def stream_ann_topk(
             k=k,
             n_probe=n_probe,
             round_digits=SERVE_ROUND_DIGITS,
-            cell_col=cell_col,
+            cell_col=SERVE_CELL_COL,
         )
         out.write.mode("overwrite").parquet(f"{output_path}/batch_id={batch_id}")
-        # a GEMM micro-batch larger than the probe-chunk cap persists
+        # a micro-batch larger than the probe-chunk cap persists
         # the index projection for its chunks — release it now that the
         # batch is written, or a continuous stream pins one cache per
         # trigger forever (round-8 self-review finding)

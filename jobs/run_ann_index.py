@@ -22,13 +22,13 @@ Scale/resume design:
 - `index` commits (id, cell, vector) PARTITIONED BY cell — unlike the
   dedup chain's small derived tables, the index IS the product (the
   distributed analog of Faiss IVF lists): a copy of the corpus
-  clustered so that a probe-cell equi-join prunes whole partitions at
-  the scan (broadcast join on the partition column -> dynamic
-  partition pruning).
+  clustered by cell, so a serve-time scan task reads few cells and
+  scores each as one matmul.
 - `topk` (only when --queries is given) reads the committed index and
   serves the batch with similarity.ivf_topk_batch(cell_col="cell") —
-  probes broadcast onto the index, per-query top-k window; results
-  land in the `topk` table, one row per (query id, rank).
+  probes broadcast to the index scan, one numpy matmul per (partition,
+  cell) with a local top-k, per-query top-k window; results land in
+  the `topk` table, one row per (query id, rank).
 - The params_sig covers every knob INCLUDING a CONTENT fingerprint of
   the queries path (file count + bytes + max mtime — overwriting the
   batch in place invalidates topk): a new query batch against the same
@@ -137,7 +137,6 @@ def _run_ann_index_locked(
     topk: int = 10,
     n_probe: int = 4,
     round_digits: int = 6,
-    scorer: str = "join",
 ) -> dict:
     from pyspark.sql import functions as F
     from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
@@ -261,7 +260,6 @@ def _run_ann_index_locked(
                 "topk": topk,
                 "n_probe": n_probe,
                 "round_digits": round_digits,
-                "scorer": scorer,
             },
             run_id,
         )
@@ -271,17 +269,7 @@ def _run_ann_index_locked(
             q = queries.withColumn(
                 vec_col, F.transform(F.col(vec_col), lambda x: x.cast("double"))
             ).select(F.col(query_id_col).alias("qid"), F.col(vec_col))
-            # "gemm": numpy matmul per (partition, cell) with local
-            # top-k — identical rows (parity-tested incl. tie floods),
-            # ~600k window rows instead of ~125M scored pairs at the
-            # 500k/2k-query measurement. "join" remains the default:
-            # it is the oracle-twinned pure-JVM plan.
-            score = (
-                similarity.ivf_topk_batch_gemm
-                if scorer == "gemm"
-                else similarity.ivf_topk_batch
-            )
-            result = score(
+            result = similarity.ivf_topk_batch(
                 runner.read("index"),
                 q,
                 vec_col,
@@ -294,7 +282,7 @@ def _run_ann_index_locked(
                 cell_col="cell",
             )
             topk_runner.commit("topk", result)
-            # release any index projection the GEMM scorer persisted
+            # release any index projection the scorer persisted
             # for a multi-chunk probe batch (the commit materialized it)
             similarity.release_serve_caches()
         for k_, v in topk_runner.summary.items():
@@ -319,20 +307,18 @@ def main() -> None:
     p.add_argument("--topk", type=int, default=10)
     p.add_argument("--n-probe", type=int, default=4)
     p.add_argument("--round-digits", type=int, default=6)
-    p.add_argument("--scorer", choices=("join", "gemm"), default="join")
     args = p.parse_args()
 
     from go_pkg_spider_spark.session import get_spark
 
-    # Small scan splits: the serve join fans every index row out to
-    # ~n_queries x n_probe / n_cells scored pairs (each an O(dim) HOF
-    # dot product), so per-byte scan cost is orders above a plain
-    # column scan — at the default 128m splits a compact index
-    # bin-packs into a handful of tasks and the scoring stage runs at
-    # ~2 cores regardless of local[N] (measured on the 500k x 64-dim
-    # index = 256MB: serve 356s before, see BENCH/BASELINE.md sf1 ANN
-    # section for the after). At 100TB the index has abundant splits
-    # and this conf is a no-op for parallelism.
+    # Small scan splits: the serve step scores every index row against
+    # ~n_queries x n_probe / n_cells probing queries, so per-byte scan
+    # cost is far above a plain column scan — at the default 128m
+    # splits a compact index bin-packs into a handful of tasks and the
+    # scoring stage runs at ~2 cores regardless of local[N] (measured
+    # with the earlier per-pair scorer on the 500k x 64-dim index =
+    # 256MB, BENCH/BASELINE.md sf1 ANN section). At 100TB the index has
+    # abundant splits and this conf is a no-op for parallelism.
     spark = get_spark(
         app_name=f"ann-index-{args.run_id}",
         extra_conf={
@@ -357,7 +343,6 @@ def main() -> None:
         topk=args.topk,
         n_probe=args.n_probe,
         round_digits=args.round_digits,
-        scorer=args.scorer,
     )
     print(json.dumps(summary))
     spark.stop()

@@ -13,7 +13,7 @@ same production-drive standard).
     spark-submit ... jobs/run_streaming.py ann-topk \\
         --queries /data/query_landing --index-root /data/ann \\
         --output /data/topk_stream --checkpoint /data/ckpt/ann \\
-        --scorer gemm --available-now
+        --available-now
 
 Restart/exactly-once posture (the reference's resume contract,
 spider_news.go:15 `seen`, recast on Spark state): the CHECKPOINT
@@ -118,7 +118,6 @@ def cmd_ann_topk(args) -> dict:
         qid_col=args.qid_col,
         k=args.topk,
         n_probe=args.n_probe,
-        scorer=args.scorer,
         available_now=args.available_now,
         event_time_col=args.event_time_col,
         dedup_watermark=args.dedup_watermark,
@@ -306,7 +305,6 @@ def main() -> None:
     ann.add_argument("--qid-col", default="qid")
     ann.add_argument("--topk", type=int, default=10)
     ann.add_argument("--n-probe", type=int, default=4)
-    ann.add_argument("--scorer", choices=("join", "gemm"), default="join")
     _common(ann)
 
     ad = sub.add_parser("audio-dedup")

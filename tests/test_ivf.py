@@ -99,64 +99,91 @@ def test_ivf_assign_arrow_null_vector_yields_null_cell(spark):
         assert got[1] == 0 and got[3] == 1, max_k
 
 
-def test_ivf_topk_batch_matches_single_query_loop(spark):
-    """Cross-validation: the one-join batch operator must return, for
-    every query, exactly the rows the single-query ivf_topk returns
-    with the same centroids/k/n_probe (independent implementations:
-    per-query filter+TakeOrdered vs broadcast-join+window)."""
-    e = _emb(spark)
-    cents = similarity.train_ivf_centroids_distributed(
-        e, "embedding", "vec_id", k=8, iters=1
-    )
-    qrows = e.orderBy("vec_id").limit(3).collect()
-    queries = spark.createDataFrame(
-        [(r.vec_id, r.embedding) for r in qrows], "qid long, embedding array<double>"
-    )
-    batch = similarity.ivf_topk_batch(
-        e, queries, "embedding", "vec_id", "qid", cents, k=5, n_probe=3,
-        round_digits=4,
-    ).collect()
-    got = {
-        qid: [(r.rk, r.vec_id, r.cosine_sim) for r in sorted(
-            (x for x in batch if x.qid == qid), key=lambda x: x.rk
-        )]
-        for qid in {r.qid for r in batch}
+def _rows_set(df):
+    return {
+        (r[0], r[1], r[2], r[3])
+        for r in df.select("qid", "rk", "vec_id", "cosine_sim").collect()
     }
-    for r in qrows:
-        want = [
-            (i + 1, w.vec_id, w.cosine_sim)
-            for i, w in enumerate(
-                similarity.ivf_topk(
-                    e, "embedding", "vec_id", [float(x) for x in r.embedding],
-                    cents, k=5, n_probe=3, round_digits=4,
-                ).collect()
-            )
-        ]
-        assert got[r.vec_id] == want, f"qid={r.vec_id}"
 
 
-def test_ivf_topk_batch_plan_broadcasts_probes(spark):
-    """Scale pins: the probe side is broadcast (no shuffle of the
-    index for the join) and the plan contains no cartesian product;
-    the only Exchange partitions the scored candidates by query id for
-    the per-query top-k window."""
+def _single_query_rows(index_df, queries, cents, k, n_probe, round_digits=6):
+    """Reference for ivf_topk_batch: each non-NULL query served alone by
+    ivf_topk (per-query filter + TakeOrdered), as (qid, rk, id,
+    cosine_sim) rows. A NULL query vector contributes no rows."""
+    return {
+        (q.qid, rk, w.vec_id, w.cosine_sim)
+        for q in queries.collect()
+        if q.embedding is not None
+        for rk, w in enumerate(
+            similarity.ivf_topk(
+                index_df, "embedding", "vec_id", [float(x) for x in q.embedding],
+                cents, k=k, n_probe=n_probe, round_digits=round_digits,
+            ).collect(),
+            1,
+        )
+    }
+
+
+def test_ivf_topk_batch_matches_single_query_loop(spark):
+    """Cross-validation: the batch operator must return, for every
+    query, exactly the rows the single-query ivf_topk returns with the
+    same centroids/k/n_probe (independent implementations: per-query
+    filter+TakeOrdered vs numpy matmul + local slack band + window).
+    Inputs: the real corpus at several k/n_probe settings; an exact-tie
+    flood (zero-norm index vectors all score 0.0, resolved by id inside
+    the local band) with NULL index and query vectors; and a near-tie
+    flood of more than band_cap DISTINCT raw cosines inside one rounding
+    quantum, whose winning LOWEST id holds the WORST raw score (ADVICE
+    r6 #2: capping the band before the quantum filter dropped it)."""
     e = _emb(spark)
     cents = similarity.train_ivf_centroids_distributed(
         e, "embedding", "vec_id", k=8, iters=1
     )
-    queries = e.orderBy("vec_id").limit(3).select(
+    real_q = e.orderBy("vec_id").limit(5).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
-    plan = (
-        similarity.ivf_topk_batch(
-            e, queries, "embedding", "vec_id", "qid", cents, k=5, n_probe=3
-        )
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+
+    flood_idx = spark.createDataFrame(
+        [(i, [0.0, 0.0, 0.0]) for i in range(20)]  # zero-norm flood
+        + [(100 + i, [1.0 * i, 1.0, 0.5]) for i in range(5)]
+        + [(900, None)],
+        "vec_id long, embedding array<double>",
     )
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
+    flood_q = spark.createDataFrame(
+        [(1, [2.0, 1.0, 0.5]), (2, [0.1, -0.2, 0.3]), (3, None)],
+        "qid long, embedding array<double>",
+    )
+    flood_cents = [[0.0, 0.0, 0.0], [3.0, 1.0, 0.5]]
+
+    n = 200  # > band_cap = max(8*k, 128) at k=1
+    # id 0 gets the largest eps (worst raw cosine); all cosines are
+    # distinct doubles within ~2e-8 of each other (one 1e-6 quantum)
+    tie_idx = spark.createDataFrame(
+        [(i, [1.0, (n - 1 - i) * 1e-6]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    tie_q = spark.createDataFrame([(1, [1.0, 0.0])], "qid long, embedding array<double>")
+    tie_cents = [[1.0, 0.0], [-1.0, 0.0]]
+
+    cases = [
+        (e, real_q, cents, 5, 3, 4),
+        (e, real_q, cents, 5, 3, 6),
+        (e, real_q, cents, 10, 8, 6),
+        (e, real_q, cents, 1, 1, 6),
+        (flood_idx, flood_q, flood_cents, 5, 1, 6),
+        (flood_idx, flood_q, flood_cents, 8, 2, 6),
+        (tie_idx, tie_q, tie_cents, 1, 1, 6),
+    ]
+    for i, (idx, queries, cs, k, p, rd) in enumerate(cases):
+        got = _rows_set(
+            similarity.ivf_topk_batch(
+                idx, queries, "embedding", "vec_id", "qid", cs, k=k, n_probe=p,
+                round_digits=rd,
+            )
+        )
+        assert got == _single_query_rows(idx, queries, cs, k, p, rd), (i, k, p, rd)
+    # the near-tie winner is the id tie-break winner, not the best-raw row
+    assert got == {(1, 1, 0, 1.0)}
 
 
 def test_trainer_seed_spread_survives_cluster_sorted_input(spark):
@@ -223,60 +250,6 @@ def test_ivf_recall_contract_at_default_probe(spark):
     assert by_probe[1]["probed_frac"] < by_probe[4]["probed_frac"]
 
 
-def _rows_set(df):
-    return {
-        (r[0], r[1], r[2], r[3])
-        for r in df.select("qid", "rk", "vec_id", "cosine_sim").collect()
-    }
-
-
-def test_ivf_topk_batch_gemm_matches_join_on_real_corpus(spark):
-    """The GEMM scorer (mapInArrow local top-k + slack band) must
-    return exactly the join scorer's rows — same qid/rk/id/cosine_sim —
-    on the real embeddings table, for several k/n_probe settings."""
-    e = _emb(spark)
-    cents = similarity.train_ivf_centroids_distributed(
-        e, "embedding", "vec_id", k=8, iters=1
-    )
-    queries = e.orderBy("vec_id").limit(5).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    for k, p in ((5, 3), (10, 8), (1, 1)):
-        join_out = similarity.ivf_topk_batch(
-            e, queries, "embedding", "vec_id", "qid", cents, k=k, n_probe=p,
-        )
-        gemm_out = similarity.ivf_topk_batch_gemm(
-            e, queries, "embedding", "vec_id", "qid", cents, k=k, n_probe=p,
-        )
-        assert _rows_set(join_out) == _rows_set(gemm_out), (k, p)
-
-
-def test_ivf_topk_batch_gemm_degenerate_ties_and_nulls(spark):
-    """Exact-tie floods and NULL rows: zero-norm index vectors all
-    score 0.0 (resolved by id inside the GEMM local band, identically
-    to the window tie-break); NULL index vectors and NULL query
-    vectors contribute nothing — both scorers must agree row-for-row."""
-    rows = (
-        [(i, [0.0, 0.0, 0.0]) for i in range(20)]  # zero-norm flood
-        + [(100 + i, [1.0 * i, 1.0, 0.5]) for i in range(5)]
-        + [(900, None)]
-    )
-    idx = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [[0.0, 0.0, 0.0], [3.0, 1.0, 0.5]]
-    queries = spark.createDataFrame(
-        [(1, [2.0, 1.0, 0.5]), (2, [0.1, -0.2, 0.3]), (3, None)],
-        "qid long, embedding array<double>",
-    )
-    for k, p in ((5, 1), (8, 2)):
-        join_out = similarity.ivf_topk_batch(
-            idx, queries, "embedding", "vec_id", "qid", cents, k=k, n_probe=p,
-        )
-        gemm_out = similarity.ivf_topk_batch_gemm(
-            idx, queries, "embedding", "vec_id", "qid", cents, k=k, n_probe=p,
-        )
-        assert _rows_set(join_out) == _rows_set(gemm_out), (k, p)
-
-
 def test_trainer_ignores_null_vectors(spark):
     """ADVICE r6 #4: NULL vectors must not participate in md5-order
     seeding or the Lloyd step (the oracle's e CTE filters them first) —
@@ -299,7 +272,7 @@ def test_trainer_ignores_null_vectors(spark):
     assert c1 == c2
 
 
-def test_ivf_topk_batch_gemm_chunked_probe_batches_identical(spark):
+def test_ivf_topk_batch_chunked_probe_batches_identical(spark):
     """VERDICT r6 #4: the probe batch is broadcast in bounded chunks.
     Serving a query frame whose probe rows exceed the per-chunk cap
     (cap=2 forces 5 queries x 3 probes into 8 chunks, splitting probe
@@ -313,7 +286,7 @@ def test_ivf_topk_batch_gemm_chunked_probe_batches_identical(spark):
     queries = e.orderBy("vec_id").limit(5).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
-    whole = similarity.ivf_topk_batch_gemm(
+    whole = similarity.ivf_topk_batch(
         e, queries, "embedding", "vec_id", "qid", cents, k=5, n_probe=3,
     )
     # single-chunk serve: no persist (plan snapshot taken BEFORE the
@@ -321,7 +294,7 @@ def test_ivf_topk_batch_gemm_chunked_probe_batches_identical(spark):
     whole_plan = whole._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryTableScan" not in whole_plan
     whole_rows = _rows_set(whole)
-    chunked = similarity.ivf_topk_batch_gemm(
+    chunked = similarity.ivf_topk_batch(
         e, queries, "embedding", "vec_id", "qid", cents, k=5, n_probe=3,
         max_probe_rows_per_chunk=2,
     )
@@ -332,42 +305,16 @@ def test_ivf_topk_batch_gemm_chunked_probe_batches_identical(spark):
     assert "InMemoryTableScan" in chunked._jdf.queryExecution().executedPlan().toString()
     assert similarity.release_serve_caches() == 1
     assert similarity.release_serve_caches() == 0
-    empty = similarity.ivf_topk_batch_gemm(
+    empty = similarity.ivf_topk_batch(
         e, queries.limit(0), "embedding", "vec_id", "qid", cents, k=5, n_probe=3,
     )
     assert empty.count() == 0
     assert [f.name for f in empty.schema.fields] == ["qid", "rk", "vec_id", "cosine_sim"]
 
 
-def test_ivf_topk_batch_gemm_near_tie_flood_beyond_soft_cap(spark):
-    """ADVICE r6 #2 regression: >band_cap DISTINCT raw cosines inside
-    one rounding quantum (all round to 1.0), with the winning LOWEST id
-    deliberately holding the WORST raw score in the band — the old
-    cap-before-quantum-filter truncation dropped it and broke parity
-    with the join scorer; the full-band path must keep it."""
-    n = 200  # > band_cap = max(8*k, 128) at k=1
-    # id 0 gets the largest eps (worst raw cosine); all cosines are
-    # distinct doubles within ~2e-8 of each other (one 1e-6 quantum)
-    rows = [(i, [1.0, (n - 1 - i) * 1e-6]) for i in range(n)]
-    idx = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cents = [[1.0, 0.0], [-1.0, 0.0]]
-    queries = spark.createDataFrame(
-        [(1, [1.0, 0.0])], "qid long, embedding array<double>"
-    )
-    join_out = similarity.ivf_topk_batch(
-        idx, queries, "embedding", "vec_id", "qid", cents, k=1, n_probe=1,
-    )
-    gemm_out = similarity.ivf_topk_batch_gemm(
-        idx, queries, "embedding", "vec_id", "qid", cents, k=1, n_probe=1,
-    )
-    assert _rows_set(join_out) == _rows_set(gemm_out)
-    # and the winner is the id tie-break winner, not the best-raw row
-    assert gemm_out.collect()[0].vec_id == 0
-
-
-def test_ivf_topk_batch_gemm_uses_precomputed_cell_and_no_index_shuffle(spark):
+def test_ivf_topk_batch_uses_precomputed_cell_and_no_index_shuffle(spark):
     """cell_col mode (the run_ann_index serving shape): results match
-    the join scorer, and the plan has no Exchange before the
+    the single-query loop, and the plan has no Exchange before the
     mapInArrow scorer (the index is consumed in place; the only
     shuffle is the per-query window)."""
     e = _emb(spark)
@@ -381,16 +328,12 @@ def test_ivf_topk_batch_gemm_uses_precomputed_cell_and_no_index_shuffle(spark):
     queries = e.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
-    join_out = similarity.ivf_topk_batch(
+    out = similarity.ivf_topk_batch(
         indexed, queries, "embedding", "vec_id", "qid", cents,
         k=5, n_probe=3, cell_col="cell",
     )
-    gemm_out = similarity.ivf_topk_batch_gemm(
-        indexed, queries, "embedding", "vec_id", "qid", cents,
-        k=5, n_probe=3, cell_col="cell",
-    )
-    assert _rows_set(join_out) == _rows_set(gemm_out)
-    plan = gemm_out._jdf.queryExecution().executedPlan().toString()
+    assert _rows_set(out) == _single_query_rows(e, queries, cents, 5, 3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
     # the tree prints top-down, so the text AFTER MapInArrow is the
     # subtree below it (the index side): scan-only, no Exchange

@@ -371,7 +371,7 @@ SEAMS: dict[str, str] = {
     "io.stages:run_lease(ttl_sec)": "a lease that expires within the test's wait",
     "operators.similarity:ivf_assign(max_literal_k)":
         "the Arrow argmin form at a fixture's k of 8 centroids",
-    "operators.similarity:ivf_topk_batch_gemm(max_probe_rows_per_chunk)":
+    "operators.similarity:ivf_topk_batch(max_probe_rows_per_chunk)":
         "a multi-chunk serve over a few fixture queries",
     "operators.dedup:ngram_jaccard_pairs(max_group_size)":
         "the group cap and its drop count on a fixture corpus",

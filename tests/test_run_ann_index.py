@@ -160,3 +160,50 @@ def test_stage_reads_use_the_recorded_schemas(spark, tmp_path, stage_reads):
         * 2
     )
     assert spark.read.parquet(f"{root}/index").columns[-1] == "cell"
+
+
+def test_root_committed_with_a_scorer_reruns_only_topk(spark, tmp_path):
+    """The topk params once carried a "scorer" key (the serve step had
+    two interchangeable scorers). A root whose topk done row records
+    that older params_sig does not resume topk: topk reruns once while
+    centroids and index resume, and the next identical run resumes all
+    three stages."""
+    import json
+
+    from go_pkg_spider_spark.io.catalog import Catalog
+    from go_pkg_spider_spark.io.manifest import append_rows, latest_rows, read_manifest
+    from go_pkg_spider_spark.io.stages import STAGE_MANIFEST_SCHEMA
+    from jobs.run_ann_index import ANN_MANIFEST_TABLE
+
+    emb = _emb(spark)
+    root = str(tmp_path / "ann")
+    kw = dict(n_cells=4, iters=1, queries_sig="q1", query_id_col="qid", topk=3, n_probe=2)
+    run_ann_index(spark, emb, root, queries=_queries(emb), **kw)
+
+    cat = Catalog(spark, root)
+    table = ANN_MANIFEST_TABLE + "_topk"
+    done = latest_rows(read_manifest(cat, table, STAGE_MANIFEST_SCHEMA), "stage")["topk"]
+    old_sig = json.dumps(
+        {**json.loads(done.metrics["params_sig"]), "scorer": "join"}, sort_keys=True
+    )
+    append_rows(
+        cat,
+        table,
+        STAGE_MANIFEST_SCHEMA,
+        [
+            {
+                "stage": "topk",
+                "status": "done",
+                "rows": done.rows,
+                "metrics": {**done.metrics, "params_sig": old_sig},
+                "run_id": "old",
+                "schema": done.schema,
+            }
+        ],
+    )
+
+    s = run_ann_index(spark, emb, root, queries=_queries(emb), **kw)
+    assert (s["stages_run"], s["stages_skipped"]) == (1, 2)
+    assert s["stage_rows"]["topk"] == 3 * 3
+    s = run_ann_index(spark, emb, root, queries=_queries(emb), **kw)
+    assert (s["stages_run"], s["stages_skipped"]) == (0, 3)

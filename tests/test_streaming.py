@@ -109,14 +109,11 @@ def test_sessionize_subsecond_gap_parity(spark):
 import pytest
 
 
-@pytest.mark.parametrize("scorer", ["join", "gemm"])
-def test_stream_ann_topk_matches_batch(spark, tmp_path, scorer):
+def test_stream_ann_topk_matches_batch(spark, tmp_path):
     """Online ANN serving == batch serving row-for-row: query vectors
     arriving in two waves (with a duplicate qid across waves) against
     the committed cell-partitioned index produce exactly the rows the
-    batch JOIN operator returns for the distinct query set — for both
-    streaming scorers (the gemm parametrization cross-checks the GEMM
-    path against the join truth through the streaming stack)."""
+    batch operator returns for the distinct query set."""
     from go_pkg_spider_spark.operators import similarity
     from jobs.run_ann_index import _centroids_from_table, run_ann_index
 
@@ -158,7 +155,6 @@ def test_stream_ann_topk_matches_batch(spark, tmp_path, scorer):
         k=5,
         n_probe=3,
         available_now=True,
-        scorer=scorer,
         allow_unbounded_state=True,  # bounded availableNow replay
     )
     q.awaitTermination(300)
@@ -371,7 +367,7 @@ def test_run_streaming_cli_ann_topk(spark, tmp_path):
         "--output", str(tmp_path / "topk"),
         "--checkpoint", str(tmp_path / "ckpt_ann"),
         "--available-now", "--allow-unbounded-state",
-        "--topk", "3", "--n-probe", "2", "--scorer", "gemm",
+        "--topk", "3", "--n-probe", "2",
     ]
     s1 = _run_streaming_cli(base)
     assert s1["sink_rows"] == 15  # 5 queries x k=3

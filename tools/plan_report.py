@@ -137,22 +137,13 @@ REPORT = [
     ),
     (
         "ann_ivf_batch_topk",
-        "Batch IVF ANN serving: the exploded (qid, cell) probes are "
-        "BROADCAST onto the cell-assigned index (BroadcastHashJoin, no "
-        "index shuffle, no cartesian); the only Exchange partitions the "
-        "scored candidate subset by query id for the per-query top-k "
-        "window. Norms computed once per side pre-join.",
-        "ann_ivf_batch_topk",
-    ),
-    (
-        "ann_ivf_batch_topk_gemm",
-        "GEMM serving scorer: the index side is consumed in place by ONE "
+        "Batch IVF ANN serving: the index side is consumed in place by ONE "
         "MapInArrow (no Exchange below it — one numpy matmul per "
-        "(partition, cell) + local top-k/slack band), so the per-query "
-        "window Exchange moves ~partitions x queries x k rows instead of "
-        "every scored pair (~200x fewer at 500k/2k; 7.3x faster serve, "
-        "bit-identical to the join scorer).",
-        "ann_ivf_batch_topk_gemm",
+        "(partition, cell) against the driver-broadcast probes + local "
+        "top-k/slack band), so the per-query window Exchange moves "
+        "~partitions x queries x k rows instead of every scored pair "
+        "(~200x fewer at 500k/2k).",
+        "ann_ivf_batch_topk",
     ),
 ]
 
