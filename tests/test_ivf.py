@@ -124,65 +124,90 @@ def _single_query_rows(index_df, queries, cents, k, n_probe, round_digits=6):
     }
 
 
+def _assert_matches_single_query_loop(idx, queries, cents, cases):
+    """ivf_topk_batch must return, for every (k, n_probe, round_digits)
+    case, exactly the single-query loop's rows; returns the last
+    case's rows."""
+    for k, p, rd in cases:
+        got = _rows_set(
+            similarity.ivf_topk_batch(
+                idx, queries, "embedding", "vec_id", "qid", cents, k=k,
+                n_probe=p, round_digits=rd,
+            )
+        )
+        assert got == _single_query_rows(idx, queries, cents, k, p, rd), (k, p, rd)
+    return got
+
+
 def test_ivf_topk_batch_matches_single_query_loop(spark):
     """Cross-validation: the batch operator must return, for every
     query, exactly the rows the single-query ivf_topk returns with the
     same centroids/k/n_probe (independent implementations: per-query
-    filter+TakeOrdered vs numpy matmul + local slack band + window).
-    Inputs: the real corpus at several k/n_probe settings; an exact-tie
-    flood (zero-norm index vectors all score 0.0, resolved by id inside
-    the local band) with NULL index and query vectors; and a near-tie
-    flood of more than band_cap DISTINCT raw cosines inside one rounding
-    quantum, whose winning LOWEST id holds the WORST raw score (ADVICE
-    r6 #2: capping the band before the quantum filter dropped it)."""
+    filter+TakeOrdered vs numpy matmul + local slack band + window)."""
     e = _emb(spark)
     cents = similarity.train_ivf_centroids_distributed(
         e, "embedding", "vec_id", k=8, iters=1
     )
-    real_q = e.orderBy("vec_id").limit(5).select(
+    queries = e.orderBy("vec_id").limit(3).select(
         F.col("vec_id").alias("qid"), "embedding"
     )
+    _assert_matches_single_query_loop(e, queries, cents, [(5, 3, 4)])
 
-    flood_idx = spark.createDataFrame(
+
+def test_ivf_topk_batch_gemm_matches_join_on_real_corpus(spark):
+    """The matmul scorer (mapInArrow local top-k + slack band) must
+    return exactly the per-query rows — same qid/rk/id/cosine_sim — on
+    the real embeddings table, for several k/n_probe settings."""
+    e = _emb(spark)
+    cents = similarity.train_ivf_centroids_distributed(
+        e, "embedding", "vec_id", k=8, iters=1
+    )
+    queries = e.orderBy("vec_id").limit(5).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    _assert_matches_single_query_loop(
+        e, queries, cents, [(5, 3, 6), (10, 8, 6), (1, 1, 6)]
+    )
+
+
+def test_ivf_topk_batch_gemm_degenerate_ties_and_nulls(spark):
+    """Exact-tie floods and NULL rows: zero-norm index vectors all
+    score 0.0 (resolved by id inside the local band, identically to the
+    single-query TakeOrdered tie-break); NULL index vectors and NULL
+    query vectors contribute nothing."""
+    idx = spark.createDataFrame(
         [(i, [0.0, 0.0, 0.0]) for i in range(20)]  # zero-norm flood
         + [(100 + i, [1.0 * i, 1.0, 0.5]) for i in range(5)]
         + [(900, None)],
         "vec_id long, embedding array<double>",
     )
-    flood_q = spark.createDataFrame(
+    queries = spark.createDataFrame(
         [(1, [2.0, 1.0, 0.5]), (2, [0.1, -0.2, 0.3]), (3, None)],
         "qid long, embedding array<double>",
     )
-    flood_cents = [[0.0, 0.0, 0.0], [3.0, 1.0, 0.5]]
+    cents = [[0.0, 0.0, 0.0], [3.0, 1.0, 0.5]]
+    _assert_matches_single_query_loop(idx, queries, cents, [(5, 1, 6), (8, 2, 6)])
 
+
+def test_ivf_topk_batch_gemm_near_tie_flood_beyond_soft_cap(spark):
+    """ADVICE r6 #2 regression: >band_cap DISTINCT raw cosines inside
+    one rounding quantum (all round to 1.0), with the winning LOWEST id
+    deliberately holding the WORST raw score in the band — capping the
+    band before the quantum filter dropped it; the full-band path must
+    keep it."""
     n = 200  # > band_cap = max(8*k, 128) at k=1
     # id 0 gets the largest eps (worst raw cosine); all cosines are
     # distinct doubles within ~2e-8 of each other (one 1e-6 quantum)
-    tie_idx = spark.createDataFrame(
+    idx = spark.createDataFrame(
         [(i, [1.0, (n - 1 - i) * 1e-6]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    tie_q = spark.createDataFrame([(1, [1.0, 0.0])], "qid long, embedding array<double>")
-    tie_cents = [[1.0, 0.0], [-1.0, 0.0]]
-
-    cases = [
-        (e, real_q, cents, 5, 3, 4),
-        (e, real_q, cents, 5, 3, 6),
-        (e, real_q, cents, 10, 8, 6),
-        (e, real_q, cents, 1, 1, 6),
-        (flood_idx, flood_q, flood_cents, 5, 1, 6),
-        (flood_idx, flood_q, flood_cents, 8, 2, 6),
-        (tie_idx, tie_q, tie_cents, 1, 1, 6),
-    ]
-    for i, (idx, queries, cs, k, p, rd) in enumerate(cases):
-        got = _rows_set(
-            similarity.ivf_topk_batch(
-                idx, queries, "embedding", "vec_id", "qid", cs, k=k, n_probe=p,
-                round_digits=rd,
-            )
-        )
-        assert got == _single_query_rows(idx, queries, cs, k, p, rd), (i, k, p, rd)
-    # the near-tie winner is the id tie-break winner, not the best-raw row
+    queries = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "qid long, embedding array<double>"
+    )
+    cents = [[1.0, 0.0], [-1.0, 0.0]]
+    got = _assert_matches_single_query_loop(idx, queries, cents, [(1, 1, 6)])
+    # the winner is the id tie-break winner, not the best-raw row
     assert got == {(1, 1, 0, 1.0)}
 
 
